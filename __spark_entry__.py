@@ -2,8 +2,7 @@
 
 Thin adapter over the engine's query registry
 (``amazonmsk_emr_tem_data_spark/queries/``, the per-domain package —
-the registry literal + stamp rotation live in ``_registry.py``). The
-driver's verify runs
+the registry lives in ``_registry.py``). The driver's verify runs
 ``entry(spark)`` as a smoke check, runs each ``queries()[name]`` at
 sf=0.01 and compares it against the matching ``oracle_sql()[name]`` via
 DuckDB (row-count + schema + order-insensitive value-hash).

@@ -91,7 +91,7 @@ def _pure_decoders():
     silently-wrong decode.
 
     Performance envelope, measured at 1 MP (SCALING.md "Image-codec
-    envelope" row; scripts/bench_codec_envelope.py reproduces it):
+    envelope" row):
     BMP ~memcpy; PNG Up/Sub rows ~40 Mpx/s (vectorized); PNG
     Average/Paeth rows ~1.7 Mpx/s (the mod-256 left recurrence has no
     closed numpy form — interpreted bytes loop); baseline JPEG

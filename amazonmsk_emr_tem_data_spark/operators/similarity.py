@@ -1473,7 +1473,7 @@ def nn_descent_graph(
         # signature is only 8x narrower than the raw vector and the
         # prefilter was measured SLOWER (r12/r13 rejections below); at
         # dim=512 (20k clustered vectors, alternated arms, identical
-        # outputs — scripts/bench_nnd_dim512.py) it won both pairs:
+        # outputs) it won both pairs:
         # 72.5 vs 89.8 s and 28.3 vs 50.3 s. The switch derives from
         # the DATA's dimensionality, not the deployment.
         prefilter = dim >= 512

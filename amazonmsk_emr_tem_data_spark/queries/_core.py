@@ -675,8 +675,7 @@ GROUP BY 1, 2
 
 def distinct_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT(DISTINCT) + min/max (SURVEY §2.5 distinct gap). Exact
-    distinct shuffles twice (expand + merge); the approx variant is
-    benchmarked separately in bench.py."""
+    distinct shuffles twice (expand + merge)."""
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),

@@ -767,17 +767,13 @@ def query_cost_attribution(
     statistics — what AQE and the broadcast planner consume), codegen
     span count, and pushdown coverage. This is PLANS.md as a QUERY —
     the capacity-planning view that says which queries own the
-    shuffles and the scan bytes before any of them runs at 100 TB,
-    pairing BENCH_r{{N}}.json's wall seconds with the plan-side cost
-    drivers.
+    shuffles and the scan bytes before any of them runs at 100 TB.
 
-    Default scope is the bench headline set (BENCH_HEADLINE — exactly
-    the queries whose seconds the driver records each round, so the
-    join of this output with the bench JSON is total); pass ``names``
-    for any other slice, including the full registry (the scale suite
-    runs that nightly-shaped sweep — building all ~250 plans runs the
-    iterative operators' bounded fits, ~3 min at sf0.01, too heavy
-    for a default registry entry).
+    Default scope is the bench headline set (BENCH_HEADLINE); pass
+    ``names`` for any other slice, including the full registry (the
+    scale suite runs that nightly-shaped sweep — building all ~250
+    plans runs the iterative operators' bounded fits, ~3 min at
+    sf0.01, too heavy for a default registry entry).
 
     No DuckDB twin by nature: the facts ARE Spark plan internals
     (exchange nodes, Catalyst size estimates), which no other engine
@@ -792,10 +788,7 @@ def query_cost_attribution(
     data."""
     from ..plans.inspect import cost_facts
 
-    # call-time import: REGISTRY is defined (and rebound by the stamp
-    # rotation) after this function's module executes — binding it at
-    # call time sees the post-rotation object regardless of module
-    # layout (r12 split-readiness)
+    # call-time import: the registry module imports this one
     from ..queries import BENCH_HEADLINE, REGISTRY
 
     chosen = names if names is not None else list(BENCH_HEADLINE)

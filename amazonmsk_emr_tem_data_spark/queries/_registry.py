@@ -1,10 +1,8 @@
-"""The query registry, oracle twins for late rounds, bench headline list, stamp rotation.
+"""The query registry, oracle twins for late rounds, bench headline list.
 
 Split from the former single-module queries.py (r12); execution order and
 namespace semantics preserved via explicit cross-part imports.
 """
-
-from __future__ import annotations
 
 from __future__ import annotations
 
@@ -560,12 +558,7 @@ from ._round8 import (
 
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
-    # anchor (driver-checked every round)
     "tem_hourly_avg": (tem_hourly_avg, _TEM_HOURLY_AVG_SQL),
-    # --- r7 window: the four round-6-session-4 queries — the ONLY
-    # registry entries that have never carried a driver stamp (judge
-    # r6 ran them locally 4/4 green; these head the window so that
-    # evidence becomes durable) ---
     "prefix_filter_jaccard_pairs": (
         prefix_filter_jaccard_pairs_q,
         _PREFIX_JACCARD_SQL,
@@ -579,16 +572,10 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
         _FERTILITY_SQL,
     ),
     "event_markov_transitions": (event_markov_transitions, _MARKOV_SQL),
-    # --- r7 window: implementation changed this round ---
-    # BM25/RRF reworked map-side (per-term tf off the token array,
-    # driver-literal idf, ONE stats collect, zero wide shuffles — the
-    # r6 two-collect regression fix); multimodal_decode gained a real
-    # pure-NumPy BMP/PPM decode branch beside the fake= stub
     "doc_bm25_search": (doc_bm25_search, _BM25_SQL),
     "hybrid_rrf_search": (hybrid_rrf_search, _hybrid_rrf_sql()),
     "multimodal_decode": (multimodal_decode_q, _MULTIMODAL_DECODE_SQL),
     "multimodal_audio": (multimodal_audio_q, _MULTIMODAL_AUDIO_SQL),
-    # new in round 7 — zero driver evidence, outranks refresh fill
     "auto_salted_event_value": (auto_salted_event_value, _AUTO_SALTED_SQL),
     "cross_corpus_near_dup": (cross_corpus_near_dup_q, _CROSS_CORPUS_SQL),
     "lineitem_measures_unpivot": (lineitem_measures_unpivot, _UNPIVOT_SQL),
@@ -651,16 +638,6 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "matryoshka_recall_audit": (matryoshka_recall_audit, _MATRYOSHKA_SQL),
     "part_kcore_members": (part_kcore_members, _kcore_sql()),
     "segment_spend_gini": (segment_spend_gini, _SPEND_GINI_SQL),
-    # --- r7 window: refresh fill — the r4-green queue (newest driver
-    # stamp round 4, the longest-unstamped evidence in the registry),
-    # in their r6 queue order; its last three entries were displaced
-    # below the window by the never-stamped r7 queries above and
-    # rotate into the r8 window ---
-    # new in round 7 session 6 — zero driver evidence, outranks the
-    # r4-refresh fill that previously held these four slots
-    # (outer_join_order_coverage, price_lag_lead_frames,
-    # sql_interface_q3, small_quantity_revenue — moved below the
-    # window, first in line for r8)
     "activity_overlap_kmv": (activity_overlap_kmv, _activity_kmv_sql()),
     "order_lineitem_ivm": (order_lineitem_ivm, _ORDER_IVM_SQL),
     "part_bfs_hops": (part_bfs_hops, _bfs_sql()),
@@ -668,34 +645,18 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
         event_seasonal_anomaly,
         _SEASONAL_ANOMALY_SQL,
     ),
-    # ------------------------------------------------------------------
-    # below the window (entry 51+). salted_customer_revenue stays
-    # pinned at position 51: the window test anchors it to pin the
-    # stamped range to EXACTLY the first 50 (the r5 overflow bug
-    # class); it rotates into the r8 window. Then the r4-queue tail
-    # displaced by round 7's new queries, the rest of the r5-green
-    # refresh queue, then everything stamped green in CORRECTNESS_r06
-    # (the freshest evidence, so lowest rotation priority).
-    # ------------------------------------------------------------------
     "salted_customer_revenue": (salted_customer_revenue, _SALTED_REVENUE_SQL),
-    # session-6 overflow: rake_keyword_phrases is never-stamped but
-    # the window is full of equally-never-stamped r7 entries — heads
-    # the r8 window together with the displaced refresh fill below
     "rake_keyword_phrases": (rake_keyword_phrases, _RAKE_SQL),
-    # session-6b: same never-stamped-overflow status as rake — these
-    # five join it at the head of the r8 window
     "nation_min_latency_paths": (nation_min_latency_paths, _latency_sql()),
     "part_label_communities": (part_label_communities, _lpa_sql()),
     "copurchase_modularity": (copurchase_modularity, _MODULARITY_SQL),
     "doc_shard_rebalance": (doc_shard_rebalance, _hrw_sql()),
     "source_token_kl": (source_token_kl, _SOURCE_KL_SQL),
     "doc_weighted_sample": (doc_weighted_sample, _weighted_sample_sql()),
-    # session-6c — same overflow status
     "kmeans_lloyd_clusters": (kmeans_lloyd_clusters, _kmeans_sql()),
     "table_checksum_buckets": (table_checksum_buckets, _table_checksum_sql()),
     "shard_compaction_plan": (shard_compaction_plan, _compaction_sql()),
     "event_ewma_chart": (event_ewma_chart, _EWMA_SQL),
-    # session-6d — same overflow status
     "customer_survival_km": (customer_survival_km, _KM_SQL),
     "user_activity_bitmaps": (user_activity_bitmaps, _BITMAP_SQL),
     "cohort_ltv_curves": (cohort_ltv_curves, _COHORT_LTV_SQL),
@@ -703,7 +664,6 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
         stream_seasonal_baseline_q,
         _STREAM_SEASONAL_SQL,
     ),
-    # session-6e — same overflow status
     "customer_k_anonymity": (customer_k_anonymity, _k_anon_sql()),
     "part_stock_balance": (part_stock_balance, _STOCK_SQL),
     "lineitem_weighted_median": (
@@ -711,15 +671,12 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
         _WEIGHTED_MEDIAN_SQL,
     ),
     "topk_orders_with_ties": (topk_orders_with_ties, _TOPK_TIES_SQL),
-    # session-6f — same overflow status
     "doc_global_sequence": (doc_global_sequence, _GLOBAL_SEQ_SQL),
     "activity_anotb_kmv": (activity_anotb_kmv, _kmv_anotb_sql()),
     "welch_t_event_types": (welch_t_event_types, _WELCH_SQL),
-    # session-6g — same overflow status
     "textrank_keywords": (textrank_keywords, _textrank_sql()),
     "orders_double_billing": (orders_double_billing, _double_billing_sql()),
     "part_abc_classes": (part_abc_classes, _abc_sql()),
-    # session-6h — same overflow status
     "customer_negative_parts": (
         customer_negative_parts,
         _negative_parts_sql(),
@@ -728,7 +685,6 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
         langid_margin_calibration,
         _LANGID_CALIBRATION_SQL,
     ),
-    # session-6i — same overflow status
     "ppr_part_recommendations": (ppr_part_recommendations, _ppr_sql()),
     "event_value_imputation": (event_value_imputation, _IMPUTATION_SQL),
     "neyman_allocation_sample": (
@@ -736,19 +692,12 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
         _neyman_sql(),
     ),
     "event_value_winsorize": (event_value_winsorize, _WINSORIZE_SQL),
-    # session-6j — same overflow status
     "inter_event_gaps": (inter_event_gaps, _INTER_GAP_SQL),
     "region_nation_share": (region_nation_share, _REGION_SHARE_SQL),
-    # r4-refresh fill displaced from the window by the session-6
-    # additions — first refresh candidates for the r8 window
     "outer_join_order_coverage": (outer_join_order_coverage, _OUTER_JOIN_SQL),
     "price_lag_lead_frames": (price_lag_lead_frames, _LAG_LEAD_SQL),
     "sql_interface_q3": (sql_interface_q3, _SQL_Q3_SQL),
     "small_quantity_revenue": (small_quantity_revenue, _SMALL_QTY_SQL),
-    # r4-queue tail displaced below the window by the operators added
-    # late in round 7 (fuzzy/autocorr/spikes/zipf, then the bloom-prune
-    # and skyline session-5 additions) — first in line for the r8
-    # window
     "exists_high_quantity_orders": (exists_high_quantity_orders, _EXISTS_SQL),
     "conditional_agg_orders": (conditional_agg_orders, _CONDITIONAL_AGG_SQL),
     "doc_word_positions": (doc_word_positions, _WORD_POSITIONS_SQL),
@@ -931,7 +880,6 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "grouping_sets_lineitem": (grouping_sets_lineitem, _GROUPING_SETS_SQL),
     "pivot_status_by_flag": (pivot_status_by_flag, _PIVOT_SQL),
     "exact_quantiles": (exact_quantiles, _EXACT_QUANTILES_SQL),
-    # --- round 8 (window placement handled by the rotation below) ---
     "event_value_ohlc": (event_value_ohlc, _OHLC_SQL),
     "stream_hourly_ohlc": (stream_hourly_ohlc, _STREAM_OHLC_SQL),
     "referential_integrity_audit": (
@@ -1053,13 +1001,9 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # --- bench headline set ----------------------------------------------
-#: The queries that define the engine's headline throughput (a mix of
-#: scan+agg, multi-join, window, codec, and the north-star dedup/
-#: similarity/text operators). Single source of truth: bench.py runs
-#: exactly this list, and query_cost_attribution defaults to it so the
-#: cost rows join 1:1 with BENCH_r{N}.json's seconds. Kept as history
-#: + rationale in bench.py's per-round comments through r9; from r10
-#: the list lives here.
+#: A representative cross-section of the registry (scan+agg,
+#: multi-join, window, codec, and the north-star dedup/similarity/text
+#: operators): the default scope of query_cost_attribution.
 BENCH_HEADLINE: tuple[str, ...] = (
     "tem_hourly_avg",
     "q1_pricing_summary",
@@ -2822,97 +2766,6 @@ REGISTRY.update(
         "bbit_minhash_audit": (bbit_minhash_audit, _bbit_sql()),
     }
 )
-
-
-# --- driver-window rotation (artifact-driven since r11) -------------
-# The round driver hash-stamps exactly ``list(REGISTRY)[:50]``. Rounds
-# 9/10 hand-maintained per-round HEAD tuples here; r10's VERDICT asked
-# for a standing invariant instead, so the window now derives itself
-# from the committed CORRECTNESS_r*.json artifacts: flagship anchor
-# first, then queries whose code changed since their last stamp, then
-# everything else ordered by (latest stamp round, name) — never-stamped
-# additions sort to stamp 0 and take slots automatically, and each
-# round's stamps rotate the next round's fill with no manual queue.
-# With a 266-entry registry and 50 slots a full refresh takes
-# ceil(266/49) = 6 rounds, so "no stamp older than N rounds" is only
-# satisfiable for N >= that quotient; tests/test_oracle_parity.py
-# enforces the policy exactly plus that prospective staleness bound.
-
-#: Queries whose IMPLEMENTATION changed since their last driver stamp —
-#: the one freshness signal the artifacts cannot carry. Reset each
-#: round to the queries the round actually touched.
-_RESTAMP: tuple[str, ...] = (
-    # r14 (r13 VERDICT ask #1): queries whose physical path changed in
-    # the r13 post-sweep snapshot (score_pairs_cosine mapInPandas →
-    # mapInArrow zero-copy; semantic_dedup rewired onto it) or in the
-    # r13 Lloyd-fit rewrite, without a ≥ r13 driver stamp:
-    "semantic_dedup_vectors",  # Arrow scorer under semantic_dedup (stamp r11)
-    "lsh_ann_pairs",  # Arrow scorer under the LSH verify stage (stamp r12)
-    "kmeans_lloyd_clusters",  # r13 fit rewrite + r14 k-row reduce (stamp r10)
-    "kmeans_cluster_medoids",  # consumes the same fit (stamp r10)
-    # r14 optimization-round rewrites under hash-stable outputs (the
-    # tier is capped at 8 — r14 ALSO touched part_copurchase_lift
-    # (stamp r08 → the staleness tier already seats it, slot ~32) and
-    # copurchase_hyperball/part_bfs_hops, which change ONLY via the
-    # shared basket subtree that two stamped siblings below cover):
-    "nn_descent_knn_graph",  # fused per-round staging checkpoint
-    "part_kcore_members",  # pinned-width basket rollup (pre-agg repartition)
-    "copurchase_link_prediction",  # same
-    "containment_dup_pairs",  # pinned-width verify repartition
-)
-
-
-def _latest_stamps() -> dict[str, int]:
-    """Latest driver-stamp round per query, from the committed
-    CORRECTNESS_r*.json artifacts at the repo root. Empty dict when no
-    artifacts exist (fresh checkout before any driver round) — the
-    registry then keeps its literal order."""
-    import glob
-    import json
-    import os
-    import re as _re
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    latest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = _re.fullmatch(
-            r"CORRECTNESS_r(\d+)\.json", os.path.basename(path)
-        )
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                stamped = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name in stamped:
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _stamp_rotation(
-    reg: dict[str, tuple[QueryFn, str | None]],
-    restamp: tuple[str, ...] = _RESTAMP,
-    flagship: str = "tem_hourly_avg",
-) -> dict[str, tuple[QueryFn, str | None]]:
-    stamps = _latest_stamps()
-    if not stamps:
-        return reg
-    head = [flagship] + [
-        n for n in restamp if n in reg and n != flagship
-    ]
-    taken = set(head)
-    rest = sorted(
-        (n for n in reg if n not in taken),
-        key=lambda n: (stamps.get(n, 0), n),
-    )
-    return {n: reg[n] for n in (*head, *rest)}
-
-
-REGISTRY = _stamp_rotation(REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:

@@ -52,33 +52,6 @@ from ._curation import (
 
 
 # ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-#: name -> (spark builder, oracle SQL or None for rows-only checks)
-#:
-#: ORDER MATTERS: the round driver hash-checks the FIRST 50 entries
-#: (exactly list(REGISTRY)[:50] — the r5 window section accidentally
-#: held 53 names, so its last 3 were never stamped; the rotation test
-#: now pins the marked window to exactly 50). History: r1-r3 checked
-#: the original first 50; r4 rotated onto the 49 then-never-checked
-#: entries; r5 re-stamped the r4 fails + the post-r4 additions and
-#: went 50/50 green; r6 stamped its window 50/50 and the judge ran
-#: the other 88 locally (all green). The r7 window below covers
-#: (a) the four r6-session-4 queries that never carried a driver
-#: stamp, (b) every query added or changed in round 7 — including the
-#: session-5 additions (bloom prune, skyline, sketches, attribution,
-#: OLS trend, CUSUM, association rules, inverted index, trimmed
-#: stats, deciles, Hilbert, Benford, confusion matrix, Matryoshka,
-#: k-core, Gini) — and (c) what remains of the r4-green refresh
-#: queue as fill (its displaced tail rotates into r8; the names are
-#: listed in tests/test_oracle_parity.py's rotation test). Rule:
-#: nothing whose latest driver row is FAIL may sit below the window;
-#: any query whose semantics changed needs a fresh stamp.
-#: Every entry in BOTH halves is also exact-checked locally at
-#: sf0.001 by tests/test_oracle_parity.py, so rotation changes which
-#: evidence is driver-stamped, not what is tested.
-# ---------------------------------------------------------------------------
 # round-8 session 1: OHLC rollups, integrity audit, RFM scoring
 # ---------------------------------------------------------------------------
 
@@ -1175,17 +1148,15 @@ def stream_click_purchase_left_join(
 ) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER join — clicks without a
     purchase emit NULL-padded after the watermark proves no match can
-    arrive (see streaming/pipelines for the state/eviction story).
-    The oracle mirrors the drain's final-watermark cutoff: unmatched
-    clicks appear only when click_ts + 1h < min(max click_ts,
-    max purchase_ts) — pinned empirically (204 of 205 unmatched
-    clicks at sf0.001; the withheld one sits inside the final
-    watermark horizon)."""
-    from ..streaming.pipelines import (
-        stream_stream_left_outer_click_purchase,
-    )
+    arrive (emit rules and drain cutoffs: streaming/pipelines
+    .stream_stream_click_purchase). The oracle's cutoff was pinned
+    empirically: 204 of 205 unmatched clicks at sf0.001; the withheld
+    one sits inside the final watermark horizon."""
+    from ..streaming.pipelines import stream_stream_click_purchase
 
-    return stream_stream_left_outer_click_purchase(spark, sf_dir)
+    return stream_stream_click_purchase(
+        spark, sf_dir, how="leftOuter", watermark="0 seconds"
+    )
 
 
 _STREAM_LEFT_JOIN_SQL = """
@@ -1226,28 +1197,27 @@ def stream_click_purchase_right_join(
 ) -> DataFrame:
     """Watermarked stream-stream RIGHT OUTER join (round 9) — every
     purchase, with its attributing click or NULL padding once the
-    watermark proves no click can still arrive (see
-    streaming/pipelines for the state story). Oracle cutoff, pinned
-    empirically at sf0.01 against the drain: an unmatched purchase
-    emits iff purchase_ts < min(max click_ts, max purchase_ts) —
-    STRICT (1947 vs 1948 on the <= candidate)."""
-    from ..streaming.pipelines import (
-        stream_stream_right_outer_click_purchase,
-    )
+    watermark proves no click can still arrive. The oracle's strict
+    cutoff was pinned empirically at sf0.01 against the drain (1947
+    vs 1948 rows on the <= candidate)."""
+    from ..streaming.pipelines import stream_stream_click_purchase
 
-    return stream_stream_right_outer_click_purchase(spark, sf_dir)
+    return stream_stream_click_purchase(
+        spark, sf_dir, how="rightOuter", watermark="0 seconds"
+    )
 
 
 def stream_click_purchase_semi_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Watermarked stream-stream LEFT SEMI join (round 9) — converted
-    clicks only, no purchase columns; the mode that completes the
-    stream-stream join matrix. A matched row emits on match (no
+    clicks only, no purchase columns. A matched row emits on match (no
     watermark-expiry arm), so the oracle is the plain EXISTS."""
-    from ..streaming.pipelines import stream_stream_semi_click_purchase
+    from ..streaming.pipelines import stream_stream_click_purchase
 
-    return stream_stream_semi_click_purchase(spark, sf_dir)
+    return stream_stream_click_purchase(
+        spark, sf_dir, how="leftSemi", watermark="0 seconds"
+    )
 
 
 _STREAM_SEMI_JOIN_SQL = """
@@ -1312,16 +1282,15 @@ def stream_click_purchase_full_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Watermarked stream-stream FULL OUTER join (round 9) — matched
-    pairs plus BOTH outer arms, each under its own watermark cutoff:
-    unmatched clicks at click_ts + 1h < wm (the left twin's pin),
-    unmatched purchases at purchase_ts < wm (the right twin's pin).
-    If either input is empty the NULL-propagating wm withholds both
-    arms — the two one-sided-corpus edge tests."""
-    from ..streaming.pipelines import (
-        stream_stream_full_outer_click_purchase,
-    )
+    pairs plus BOTH outer arms, each under its own watermark cutoff
+    (the left and right twins' pins). If either input is empty the
+    NULL-propagating wm withholds both arms — the two
+    one-sided-corpus edge tests."""
+    from ..streaming.pipelines import stream_stream_click_purchase
 
-    return stream_stream_full_outer_click_purchase(spark, sf_dir)
+    return stream_stream_click_purchase(
+        spark, sf_dir, how="fullOuter", watermark="0 seconds"
+    )
 
 
 _STREAM_FULL_JOIN_SQL = f"""
@@ -1341,20 +1310,18 @@ WHERE NOT EXISTS (
 def stream_click_purchase_anti_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Watermarked stream-stream LEFT ANTI join (round 10, r9 VERDICT
-    ask #6) — the abandonment feed: clicks with NO qualifying purchase,
-    emitted only once the watermark proves none can still arrive. The
-    one join mode whose emit-on-expiry rule differs from both outer
-    (emits matches too) and semi (emits on match, never on expiry).
-    Spark has no native stream-stream left_anti, so the engine runs
-    the exact rewrite leftOuter + IS NULL filter (see
-    streaming/pipelines.stream_stream_anti_click_purchase). Oracle =
-    the left-outer oracle's unmatched arm: NOT EXISTS under the final
-    frozen watermark cutoff click_ts + 1h < min(max click_ts, max
-    purchase_ts), NULL-propagating on one-sided corpora."""
-    from ..streaming.pipelines import stream_stream_anti_click_purchase
+    """Watermarked stream-stream LEFT ANTI join (round 10) — the
+    abandonment feed: clicks with NO qualifying purchase, emitted only
+    once the watermark proves none can still arrive (run as the
+    leftOuter + IS NULL rewrite; see streaming/pipelines
+    .stream_stream_click_purchase). Oracle = the left-outer oracle's
+    unmatched arm: NOT EXISTS under the same final-watermark cutoff,
+    NULL-propagating on one-sided corpora."""
+    from ..streaming.pipelines import stream_stream_click_purchase
 
-    return stream_stream_anti_click_purchase(spark, sf_dir)
+    return stream_stream_click_purchase(
+        spark, sf_dir, how="anti", watermark="0 seconds"
+    )
 
 
 _STREAM_ANTI_JOIN_SQL = f"""

@@ -93,9 +93,10 @@ def kafka_stream_sink(
     _format: str = "kafka",
 ):
     """Streaming Kafka produce — the sink the reference's per-row loop
-    (K2) should have been. Envelope-form input; checkpointed offsets
-    give exactly-once-per-record delivery into an idempotent/
-    transactional topic setup.
+    (K2) should have been. Envelope-form input. Delivery is
+    at-least-once: Spark's Kafka sink has no transactional writes, so
+    a batch replayed from the checkpoint after a failure can produce
+    its records a second time (ROADMAP item 3).
 
     ``_format`` is a test seam: the sandbox has neither a broker nor
     the spark-sql-kafka package, so the checkpoint/restart behavior of

@@ -314,289 +314,6 @@ def stream_sliding_counts(
     )
 
 
-def stream_stream_left_outer_click_purchase(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermarked stream-stream LEFT OUTER join (round 8): every
-    click, joined to same-user purchases within one hour — and clicks
-    with NO purchase emit a NULL-padded row once the watermark proves
-    no match can still arrive. The abandonment/attribution query the
-    inner join (stream_stream_click_purchase) cannot express: state
-    for an unmatched left row is held exactly until the global
-    watermark (min across both inputs) passes click_ts + horizon,
-    then emitted null-joined and evicted — bounded state, exact
-    results.
-
-    Drain semantics the oracle must mirror: under availableNow the
-    final watermark freezes at min(max(click_ts), max(purchase_ts)),
-    so unmatched clicks with click_ts + 1h >= that watermark are
-    (correctly) withheld — they could still match in a live stream.
-    The batch twin reproduces this cutoff exactly."""
-    ev = events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter("event_type = 'click'")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "0 seconds")
-    )
-    purchases = (
-        ev.filter("event_type = 'purchase'")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "0 seconds")
-    )
-    joined = clicks.join(
-        purchases,
-        (clicks["user_id"] == purchases["p_user"])
-        & (purchases["purchase_ts"] > clicks["click_ts"])
-        & (
-            purchases["purchase_ts"]
-            <= clicks["click_ts"] + F.expr("INTERVAL 1 HOUR")
-        ),
-        "leftOuter",
-    )
-    return run_to_memory(
-        joined.select(
-            "user_id", "click_id", "click_ts", "purchase_id", "purchase_ts"
-        ),
-        output_mode="append",
-    )
-
-
-def stream_stream_right_outer_click_purchase(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermarked stream-stream RIGHT OUTER join (round 9): every
-    purchase, joined to the same user's clicks in the preceding hour
-    — and purchases with NO qualifying click emit a NULL-padded row
-    once the watermark proves no click can still arrive. The
-    "organic vs click-attributed purchase" split, the mirror of the
-    left-outer abandonment query.
-
-    State story: an unmatched purchase can still match any future
-    click with click_ts < purchase_ts, so it is held exactly until
-    the global watermark (min across both inputs) passes purchase_ts,
-    then emitted null-padded and evicted — bounded by the horizon,
-    same as the left side.
-
-    Drain semantics the oracle mirrors: under availableNow the final
-    watermark freezes at min(max(click_ts), max(purchase_ts)); an
-    unmatched purchase emits iff purchase_ts < that watermark
-    (pinned empirically beside the left twin's cutoff)."""
-    ev = events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter("event_type = 'click'")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "0 seconds")
-    )
-    purchases = (
-        ev.filter("event_type = 'purchase'")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "0 seconds")
-    )
-    joined = clicks.join(
-        purchases,
-        (clicks["user_id"] == purchases["p_user"])
-        & (purchases["purchase_ts"] > clicks["click_ts"])
-        & (
-            purchases["purchase_ts"]
-            <= clicks["click_ts"] + F.expr("INTERVAL 1 HOUR")
-        ),
-        "rightOuter",
-    )
-    return run_to_memory(
-        joined.select(
-            F.coalesce("user_id", "p_user").alias("user_id"),
-            "click_id",
-            "click_ts",
-            "purchase_id",
-            "purchase_ts",
-        ),
-        output_mode="append",
-    )
-
-
-def stream_stream_full_outer_click_purchase(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermarked stream-stream FULL OUTER join (round 9): the union
-    of both attribution views — matched click→purchase pairs, clicks
-    that never converted (NULL purchase), and purchases with no
-    qualifying click (NULL click) — each outer row emitted exactly
-    once, when the watermark proves its side can no longer match.
-
-    The NULL-propagation cutoff is one-sided PER SIDE: unmatched
-    clicks emit when click_ts + 1h < final watermark, unmatched
-    purchases when purchase_ts < final watermark — and if EITHER
-    input saw no data the global watermark never advances, so NO
-    outer row emits from either side (both one-sided-corpus edge
-    tests pin this; the r8 left-join review caught the clicks-only
-    half, this encodes the purchases-only mirror too)."""
-    ev = events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter("event_type = 'click'")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "0 seconds")
-    )
-    purchases = (
-        ev.filter("event_type = 'purchase'")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "0 seconds")
-    )
-    joined = clicks.join(
-        purchases,
-        (clicks["user_id"] == purchases["p_user"])
-        & (purchases["purchase_ts"] > clicks["click_ts"])
-        & (
-            purchases["purchase_ts"]
-            <= clicks["click_ts"] + F.expr("INTERVAL 1 HOUR")
-        ),
-        "fullOuter",
-    )
-    return run_to_memory(
-        joined.select(
-            F.coalesce("user_id", "p_user").alias("user_id"),
-            "click_id",
-            "click_ts",
-            "purchase_id",
-            "purchase_ts",
-        ),
-        output_mode="append",
-    )
-
-
-def stream_stream_semi_click_purchase(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermarked stream-stream LEFT SEMI join (round 9): clicks
-    that DID convert — each click emitted at most once, when its
-    first qualifying same-user purchase arrives, with no purchase
-    columns attached. Completes the stream-stream join-mode matrix
-    (inner r7, left outer r8, right/full outer r9): leftSemi is the
-    one remaining mode Spark supports for stream-stream joins.
-
-    Drain semantics: the semi join needs no watermark-expiry
-    emission (a matched left row emits on match; an unmatched one
-    simply ages out), so under availableNow the result is exactly
-    the batch EXISTS — no final-watermark cutoff in the oracle."""
-    ev = events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter("event_type = 'click'")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "0 seconds")
-    )
-    purchases = (
-        ev.filter("event_type = 'purchase'")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "0 seconds")
-    )
-    joined = clicks.join(
-        purchases,
-        (clicks["user_id"] == purchases["p_user"])
-        & (purchases["purchase_ts"] > clicks["click_ts"])
-        & (
-            purchases["purchase_ts"]
-            <= clicks["click_ts"] + F.expr("INTERVAL 1 HOUR")
-        ),
-        "leftSemi",
-    )
-    return run_to_memory(
-        joined.select("user_id", "click_id", "click_ts"),
-        output_mode="append",
-    )
-
-
-def stream_stream_anti_click_purchase(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Watermarked stream-stream LEFT ANTI join (round 10): clicks
-    that did NOT convert — the abandonment feed. Completes the join-
-    mode matrix with the one form whose emit rule differs from both
-    outer and semi: an anti row emits ONLY on watermark expiry (when
-    the global watermark passes click_ts + horizon and proves no
-    qualifying purchase can still arrive), never on match.
-
-    Spark rejects a native stream-stream ``left_anti`` ("LeftAnti
-    joins with a streaming DataFrame/Dataset on the right are not
-    supported", probed on 4.1), so this is the canonical rewrite:
-    LEFT OUTER join + ``purchase_id IS NULL`` filter. The rewrite is
-    exact, not an approximation — the outer join's NULL-padded row is
-    produced precisely at watermark expiry of an unmatched click,
-    which IS the anti join's emit rule; matched rows are dropped by
-    the filter before they reach the sink. State bounds are the outer
-    join's: a click is held until the watermark passes
-    click_ts + 1h, then either NULL-emitted (no match) or discarded
-    (matched rows already emitted and filtered).
-
-    Drain semantics the oracle mirrors (the left-outer pin): under
-    availableNow the final watermark freezes at min(max click_ts,
-    max purchase_ts), so unconverted clicks inside the final horizon
-    are withheld — they could still convert in a live stream."""
-    ev = events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter("event_type = 'click'")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "0 seconds")
-    )
-    purchases = (
-        ev.filter("event_type = 'purchase'")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "0 seconds")
-    )
-    joined = clicks.join(
-        purchases,
-        (clicks["user_id"] == purchases["p_user"])
-        & (purchases["purchase_ts"] > clicks["click_ts"])
-        & (
-            purchases["purchase_ts"]
-            <= clicks["click_ts"] + F.expr("INTERVAL 1 HOUR")
-        ),
-        "leftOuter",
-    )
-    anti = joined.filter(F.col("purchase_id").isNull()).select(
-        "user_id", "click_id", "click_ts"
-    )
-    return run_to_memory(anti, output_mode="append")
-
-
 def stream_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup: ``dropDuplicates`` over the key columns — the
     stateful distinct the reference needed for its 755-duplicate-id
@@ -610,45 +327,88 @@ def stream_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_stream_click_purchase(
-    spark: SparkSession, sf_dir: str, horizon: str = "1 hour"
+    spark: SparkSession,
+    sf_dir: str,
+    how: str = "inner",
+    watermark: str = "2 hours",
+    horizon: str = "1 hour",
 ) -> DataFrame:
-    """Stream-stream inner join with an event-time range condition:
-    each click joined to same-user purchases within ``horizon`` after
-    it. Both sides carry watermarks, which bound the join state — the
-    click buffer holds only rows newer than (watermark − horizon), so
-    state size tracks the horizon, not the stream length. This is the
-    conversion-attribution operator the reference's single-topic design
-    couldn't express at all (SURVEY §2.5: joins absent)."""
+    """Watermarked stream-stream join of clicks to same-user purchases
+    within ``horizon`` after the click — the conversion-attribution
+    operator the reference's single-topic design couldn't express at
+    all (SURVEY §2.5: joins absent). Both sides carry ``watermark``,
+    which bounds the join state: a row is held only until the global
+    watermark (min across both inputs) passes the last time it could
+    still match, so state tracks the horizon, not the stream length.
+
+    ``how`` is a Spark stream-stream join type (inner, leftOuter,
+    rightOuter, fullOuter, leftSemi) or ``anti``. The outer joins
+    coalesce the user id of whichever side matched; leftSemi and anti
+    return only the click columns.
+
+    Emit rules, and the cutoffs an availableNow drain leaves for the
+    oracles to mirror: the final watermark freezes at
+    min(max(click_ts), max(purchase_ts)) − ``watermark``, and if either
+    input saw no data it never advances, so no outer or anti row emits.
+
+    - inner: a match emits on arrival, so a drain emits every match.
+    - leftOuter: an unmatched click emits NULL-padded iff
+      click_ts + horizon < final watermark; later ones are withheld
+      (they could still match in a live stream).
+    - rightOuter: an unmatched purchase emits iff
+      purchase_ts < final watermark (strict).
+    - fullOuter: both outer arms, each under its own cutoff.
+    - leftSemi: a click emits once, on its first match, and never on
+      expiry, so a drain is exactly the batch EXISTS.
+    - anti: Spark rejects a native stream-stream ``left_anti``
+      ("LeftAnti joins with a streaming DataFrame/Dataset on the right
+      are not supported", probed on 4.1), so this is the rewrite
+      leftOuter + ``purchase_id IS NULL``. It is exact: the outer
+      join's NULL-padded row is produced precisely at watermark expiry
+      of an unmatched click, which is the anti join's emit rule, and
+      matched rows are dropped before they reach the sink."""
+    ev = events_stream(spark, sf_dir)
     clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
+        ev.filter("event_type = 'click'")
         .select(
             "user_id",
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", "2 hours")
+        .withWatermark("click_ts", watermark)
     )
     purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        ev.filter("event_type = 'purchase'")
         .select(
-            F.col("user_id").alias("p_user_id"),
+            F.col("user_id").alias("p_user"),
             F.col("event_id").alias("purchase_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", "2 hours")
+        .withWatermark("purchase_ts", watermark)
     )
     joined = clicks.join(
         purchases,
-        (clicks["user_id"] == purchases["p_user_id"])
+        (clicks["user_id"] == purchases["p_user"])
         & (purchases["purchase_ts"] > clicks["click_ts"])
         & (
             purchases["purchase_ts"]
             <= clicks["click_ts"] + F.expr(f"INTERVAL {horizon}")
         ),
-    ).select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
-    return run_to_memory(joined, output_mode="append")
+        "leftOuter" if how == "anti" else how,
+    )
+    if how == "anti":
+        joined = joined.filter(F.col("purchase_id").isNull())
+    if how in ("leftSemi", "anti"):
+        cols = ["user_id", "click_id", "click_ts"]
+    else:
+        cols = [
+            F.coalesce("user_id", "p_user").alias("user_id"),
+            "click_id",
+            "click_ts",
+            "purchase_id",
+            "purchase_ts",
+        ]
+    return run_to_memory(joined.select(*cols), output_mode="append")
 
 
 def stream_static_segment_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1370,9 +1130,11 @@ def fanout_foreach_batch(
     Fixes EP2's cost bug the set-based way: the reference ran two
     actions on the same uncached lineage and scanned Kafka twice
     (SURVEY §3 EP2); here each micro-batch is persisted once and both
-    sinks write from the cached batch. Replaying from the checkpoint
-    re-invokes nothing (batch ids are committed), giving idempotent
-    restarts. The raw sink partitions by ``event_type`` so downstream
+    sinks write from the cached batch. Delivery is at-least-once:
+    ``foreachBatch`` replays an uncommitted batch after a restart, so a
+    crash between the raw append and the agg append, or before the
+    offset commit, appends that batch's rows a second time (ROADMAP
+    item 3). The raw sink partitions by ``event_type`` so downstream
     readers get partition pruning for free."""
     ev = events_stream(spark, sf_dir)
 

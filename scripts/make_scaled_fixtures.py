@@ -1,6 +1,6 @@
 """Build a key-offset-replicated copy of an sf fixture dir (default 10×)
-so bench.py can measure scaling behavior — the SCALING.md methodology,
-in reproducible form.
+so the scale suite (tests/test_scale.py) can measure scaling behavior —
+the SCALING.md methodology, in reproducible form.
 
 Facts replicate with shifted primary/foreign keys so per-copy join
 integrity holds (lineitem.l_orderkey shifts with orders.o_orderkey);
@@ -12,7 +12,6 @@ operators must collapse. Multi-row-group parquet so scans split.
 
 Usage:
     python scripts/make_scaled_fixtures.py [src_sf_dir] [dst_dir] [factor]
-    SPARK_GRAFT_SF_DIR=<dst_dir> python bench.py
 """
 
 from __future__ import annotations

@@ -42,66 +42,40 @@ def test_every_query_has_an_oracle():
     )
 
 
-def test_driver_window_rotation_invariant():
-    """The round driver hash-stamps exactly ``list(REGISTRY)[:50]``.
-    Since r11 the window derives itself from the committed
-    CORRECTNESS_r*.json artifacts (r10 VERDICT ask #1: a standing
-    invariant, not a hand-queue per round). This test pins the policy:
+def test_import_reads_no_repo_artifacts():
+    """Importing the query package opens no repo file other than Python
+    source or bytecode: the registry is code, never derived from
+    artifacts that happen to sit in the checkout."""
+    import json
+    import os
+    import subprocess
+    import sys
 
-    - flagship anchor at position 0, explicit restamp tier next;
-    - NO WASTED SLOT: every fill entry's latest stamp <= every
-      below-window entry's latest stamp (fresh-evidence queries can
-      never burn slots while staler ones wait);
-    - never-stamped queries (stamp 0) always enter the window;
-    - a staleness RATCHET: with W=50 slots and R registry entries a
-      full refresh needs ceil(R/(W-1)) rounds, so the prospective
-      worst stamp age (as of the round about to run) must stay within
-      that quotient plus 1 round of restamp/new-query slack. If
-      rotation ever stops, ages grow one per round and this fails.
-    """
-    import math
-
-    from amazonmsk_emr_tem_data_spark.queries import (
-        _RESTAMP,
-        _latest_stamps,
-        REGISTRY,
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import json, os, sys\n"
+        "opened = []\n"
+        "def hook(event, args):\n"
+        "    if event == 'open' and isinstance(args[0], (str, bytes)):\n"
+        "        opened.append(os.path.abspath(os.fsdecode(args[0])))\n"
+        "sys.addaudithook(hook)\n"
+        "import amazonmsk_emr_tem_data_spark.queries\n"
+        "print(json.dumps(opened))\n"
     )
-
-    stamps = _latest_stamps()
-    assert stamps, "committed CORRECTNESS_r*.json artifacts not found"
-    order = list(REGISTRY)
-    window, below = order[:50], order[50:]
-    assert window[0] == "tem_hourly_avg"
-    restamp = [
-        n for n in _RESTAMP if n in REGISTRY and n != "tem_hourly_avg"
-    ]
-    assert window[1 : 1 + len(restamp)] == restamp
-    assert len(_RESTAMP) <= 8, (
-        "restamp tier is eating the window — it is for queries whose "
-        "code changed since their stamp, not a general fresh list"
-    )
-    head = {window[0], *restamp}
-    fill_max = max(stamps.get(n, 0) for n in window if n not in head)
-    below_min = min(stamps.get(n, 0) for n in below)
-    assert fill_max <= below_min, (
-        f"window slot wasted: a fill entry carries stamp r{fill_max} "
-        f"while an r{below_min}-stamped query sits below the window"
-    )
-    never = [n for n in order if stamps.get(n, 0) == 0]
-    assert set(never) <= set(window) or len(never) > 50 - len(head), (
-        f"never-stamped queries outside the window: "
-        f"{sorted(set(never) - set(window))}"
-    )
-    current_round = max(stamps.values()) + 1
-    cap = math.ceil(len(order) / 49) + 1
-    prospective_worst = current_round - min(
-        stamps.get(n, 0) for n in below
-    )
-    assert prospective_worst <= cap, (
-        f"stamp-rotation stalled: oldest below-window stamp is "
-        f"{prospective_worst} rounds old entering r{current_round}; "
-        f"bound is ceil({len(order)}/49)+1 = {cap}"
-    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=repo,
+        env={**os.environ, "PYTHONDONTWRITEBYTECODE": "1"},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    opened = json.loads(out.splitlines()[-1])
+    under_repo = [p for p in opened if p.startswith(repo + os.sep)]
+    assert under_repo, "audit hook saw no package module being read"
+    assert [
+        p for p in under_repo if not p.endswith((".py", ".pyc"))
+    ] == []
 
 
 def test_no_vacuous_queries(spark, sf_dir):

@@ -850,8 +850,7 @@ def test_query_cost_attribution_matches_plan_facts(spark, sf_dir):
 
 
 def test_query_cost_attribution_default_scope_is_bench(spark, sf_dir):
-    """Default scope = BENCH_HEADLINE minus itself, so the monitor's
-    rows join 1:1 with BENCH_r{N}.json's per-query seconds."""
+    """Default scope = BENCH_HEADLINE minus itself."""
     from amazonmsk_emr_tem_data_spark.queries import (
         BENCH_HEADLINE,
         query_cost_attribution,

@@ -222,7 +222,7 @@ def test_nn_descent_fused_rev_sample_identical(spark):
 def test_nn_descent_prefilter_dim_derived_default(spark):
     """r14: prefilter=None derives the default from the data's
     dimensionality — off at dim 64 (measured-rejected regime), on at
-    dim >= 512 (measured-winning regime, bench_nnd_dim512)."""
+    dim >= 512 (measured-winning regime)."""
     from amazonmsk_emr_tem_data_spark.operators.similarity import (
         nn_descent_graph,
     )

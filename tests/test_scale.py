@@ -16,7 +16,7 @@ caught by a command, not by hand:
 
 Time-ratio assertions use generous bounds: these tests exist to catch
 order-of-magnitude regressions (a lost partitioning, an accidental
-cross join), not 20% drift — bench.py medians track the latter.
+cross join), not 20% drift.
 """
 
 from __future__ import annotations

@@ -60,6 +60,43 @@ def test_kafka_stream_options_match_reference():
     assert opts == expected
 
 
+def test_console_sink_prints_decoded_tem_untruncated(spark, capsys):
+    """K3 (temReadFromTopic.py:86-91): the console sink prints decoded
+    tem rows with the derived ``Tem(Avg)`` column, and neither the
+    22-char header TbottomTestTankLoadCir nor the 26-char microsecond
+    timestamps are cut at show()'s default 20 chars."""
+    import json
+
+    from amazonmsk_emr_tem_data_spark.schemas import TEM_MEASURE_COLS
+    from amazonmsk_emr_tem_data_spark.sinks import console_sink
+    from amazonmsk_emr_tem_data_spark.streaming.tem_stream import (
+        decode_tem_stream,
+    )
+
+    def envelope(i: int, t: float) -> tuple[str, str]:
+        body = {
+            "id": i,
+            "dateTime": f"2021-06-07T10:31:0{i % 10}.123456Z",
+            **{c: t for c in TEM_MEASURE_COLS},
+        }
+        return str(i), json.dumps(body)
+
+    env = spark.createDataFrame(
+        [envelope(2799, 20.5), envelope(2800, 21.25)],
+        "key string, value string",
+    )
+    console_sink(decode_tem_stream(env))
+    lines = capsys.readouterr().out.splitlines()
+    header = next(line for line in lines if "Tem(Avg)" in line)
+    assert "TbottomTestTankLoadCir" in header
+    rows = [line for line in lines if line.startswith(("|2799", "|2800"))]
+    assert len(rows) == 2
+    for row, (i, t) in zip(rows, [(2799, "20.5"), (2800, "21.25")]):
+        cells = [c.strip() for c in row.strip("|").split("|")]
+        assert cells[1] == f"2021-06-07 10:31:0{i % 10}.123456"
+        assert cells[-1] == t  # Tem(Avg) of ten equal channels
+
+
 def test_kafka_options_prefix_bare_security_keys():
     opts = kafka_batch_options(
         "localhost:9092", "t", security={"security.protocol": "PLAINTEXT"}
@@ -213,8 +250,8 @@ def test_kafka_stream_sink_checkpoint_resume(spark, tmp_path):
     keeping its production option assembly, checkpointLocation,
     queryName, and trigger path. A restart against the SAME checkpoint
     after new source files arrive must process ONLY the new rows —
-    the offset-commit behavior that makes the Kafka produce
-    exactly-once-per-record into an idempotent topic setup."""
+    the offset-commit behavior that keeps a clean restart from
+    re-producing committed records."""
     from amazonmsk_emr_tem_data_spark.sinks import kafka_stream_sink
 
     src = str(tmp_path / "src")
