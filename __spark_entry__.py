@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 Thin adapter over the engine's query registry
-(``amazonmsk_emr_tem_data_spark/queries/``, the per-domain package —
+(``amazonmsk_emr_tem_data_spark/queries/``, one ``QUERIES`` table per module;
 the registry lives in ``_registry.py``). The driver's verify runs
 ``entry(spark)`` as a smoke check, runs each ``queries()[name]`` at
 sf=0.01 and compares it against the matching ``oracle_sql()[name]`` via
@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from amazonmsk_emr_tem_data_spark import queries as q  # noqa: E402
+from amazonmsk_emr_tem_data_spark import queries as registry  # noqa: E402
+from amazonmsk_emr_tem_data_spark.queries import _core as q  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -32,9 +33,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return q.queries()
+    return registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
-    return q.oracle_sql()
+    return registry.oracle_sql()

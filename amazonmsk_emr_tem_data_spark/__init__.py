@@ -11,7 +11,6 @@ remaining fully testable on ``local[N]``.
 Layout
 ------
 - ``session``    SparkSession factory (AQE, Arrow, UTC, tuned shuffle)
-- ``config``     runtime configuration (replaces the reference's SSM lookups)
 - ``schemas``    the single shared schema module (reference declared its
                  26-col schema four times by hand; see SURVEY.md §1.3)
 - ``sources``    file/Kafka/replay sources

@@ -3,7 +3,9 @@
 Each entry pairs an idiomatic-PySpark builder ``(spark, sf_dir) ->
 DataFrame`` with (where SQL-expressible) a DuckDB oracle SQL string over
 the same parquet tables. This is the engine's operator coverage for
-SURVEY.md §2 plus the north-star extensions (§7.1 M4).
+SURVEY.md §2 plus the north-star extensions (§7.1 M4). Each domain
+module declares its queries once, in its ``QUERIES`` table;
+``_registry.REGISTRY`` merges the tables.
 
 Cross-engine determinism rules (applied uniformly):
 
@@ -32,695 +34,7 @@ bounds pressure to spill, not OOM. Callers that need the memory back
 own `spark.catalog.clearCache()`.
 """
 
-from __future__ import annotations
-
-from collections.abc import Callable
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
-
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
-from ..sources.files import ensure_parallelism, load_table
 from ._core import QueryFn
-from ._core import (
-    _cents,
-    dec_sum,
-    dec_avg,
-    _ranked_topk,
-    _dsum,
-    _davg,
-    disc_price_cents,
-    charge_cents,
-    sum_disc_price,
-    sum_charge,
-    _EP100,
-    _DISC_PRICE_CENTS_SQL,
-    _CHARGE_CENTS_SQL,
-    _SUM_DISC_PRICE_SQL,
-    _SUM_CHARGE_SQL,
-    tem_hourly_avg,
-    _TEM_HOURLY_AVG_SQL,
-    tem_horizontal_avg,
-    _TEM_HORIZONTAL_AVG_SQL,
-    lineitem_measures_unpivot,
-    _UNPIVOT_SQL,
-    envelope_roundtrip,
-    _ENVELOPE_ROUNDTRIP_SQL,
-    q1_pricing_summary,
-    _Q1_SQL,
-    filter_project_scan,
-    _FILTER_PROJECT_SQL,
-    revenue_by_segment,
-    _REVENUE_BY_SEGMENT_SQL,
-    nation_revenue,
-    _NATION_REVENUE_SQL,
-    topk_orders_per_priority,
-    _TOPK_ORDERS_SQL,
-    running_total_per_customer,
-    _RUNNING_TOTAL_SQL,
-    rollup_lineitem_status,
-    _ROLLUP_SQL,
-    cube_order_status,
-    _CUBE_SQL,
-    customers_with_orders,
-    _SEMI_JOIN_SQL,
-    customers_without_orders,
-    _ANTI_JOIN_SQL,
-    set_ops_customers,
-    _SET_OPS_SQL,
-    union_event_slices,
-    _UNION_SLICES_SQL,
-    dedup_first_event,
-    _DEDUP_FIRST_SQL,
-    case_bucket_quantity,
-    _CASE_BUCKET_SQL,
-    orders_by_month,
-    _ORDERS_BY_MONTH_SQL,
-    part_name_stats,
-    _PART_NAME_SQL,
-    json_props_extract,
-    _JSON_PROPS_SQL,
-    distinct_users_per_type,
-    _DISTINCT_USERS_SQL,
-    top10_lineitems,
-    _TOP10_SQL,
-    stream_tumbling_hourly,
-    _STREAM_TUMBLING_SQL,
-    stream_sliding_2h,
-    _STREAM_SLIDING_SQL,
-    stream_distinct_users,
-    _STREAM_DISTINCT_SQL,
-    stream_click_purchase_join,
-    _STREAM_SS_JOIN_SQL,
-    stream_dedup_watermark,
-    _STREAM_DEDUP_WM_SQL,
-    stream_doc_quality_q,
-    stream_token_heavy_hitters_q,
-    stream_session_windows_q,
-    _SESSION_SQL_BODY,
-    _STREAM_SESSION_SQL,
-    sessionize_events,
-    session_incident_overlap,
-    _SESSION_OVERLAP_SQL,
-    event_markov_transitions,
-    _MARKOV_SQL,
-)
-from ._northstar import (
-    _NORM_SQL,
-    _TOKS_SQL,
-    _HASH64_SQL,
-    doc_text_features,
-    _DOC_TEXT_FEATURES_SQL,
-    tokenizer_fertility_by_lang,
-    _FERTILITY_SQL,
-    doc_quality_langid,
-    _QUALITY_SQL_PARTS,
-    _DOC_QUALITY_LANGID_SQL,
-    doc_fingerprint_groups_q,
-    _DOC_FINGERPRINT_SQL,
-    doc_exact_dedup_q,
-    _DOC_EXACT_DEDUP_SQL,
-    _JACCARD_PAIRS_SQL,
-    ngram_jaccard_pairs_q,
-    minhash_lsh_pairs_q,
-    cross_corpus_near_dup_q,
-    _CROSS_CORPUS_SQL,
-    prefix_filter_jaccard_pairs_q,
-    containment_dup_pairs,
-    _CONTAINMENT_SQL,
-    _PREFIX_JACCARD_SQL,
-    simhash_pairs_q,
-    _SIMHASH_BIT_SUMS,
-    _SIMHASH_SK_TERMS,
-    _SIMHASH_PAIRS_SQL,
-    simhash_bit_bias,
-    _SIMHASH_BIT_BIAS_SQL,
-    embedding_dimension_profile,
-    _EMB_DIM_PROFILE_SQL,
-    doc_rolling_fingerprint,
-    _ROLLING_SQL,
-    corpus_ngram_diversity,
-    _NGRAM_DIVERSITY_SQL,
-    corpus_snapshot_diff,
-    _SNAPSHOT_DIFF_SQL,
-    gopher_quality_filter,
-    _GOPHER_FILTER_SQL,
-    corpus_source_drift,
-    _tvd_ppm,
-    event_value_drift,
-    _EVENT_VALUE_DRIFT_SQL,
-    _SOURCE_DRIFT_SQL,
-    _dense_hourly_counts,
-    _DENSE_HOURLY_CTES,
-    event_hourly_autocorr,
-    _AUTOCORR_SQL,
-    event_rate_spikes,
-    _RATE_SPIKES_SQL,
-    token_zipf_profile,
-    _ZIPF_SQL,
-    token_heavy_hitters_cms,
-    _CMS_SQL,
-    _STREAM_CMS_SQL,
-    doc_winnowing_fingerprints,
-    winnowing_match_pairs_q,
-    _WINNOWING_CTES,
-    _WINNOWING_PAIRS_SQL,
-    _WINNOWING_SQL,
-    fuzzy_dup_verify_pairs,
-    _FUZZY_PAIRS_SQL,
-    _COS_SQL,
-    embedding_cosine_topk,
-    _EMB_TOPK_SQL,
-    embedding_knn_join_q,
-    _EMB_KNN_SQL,
-    embedding_near_dup_pairs_q,
-    _EMB_NEAR_DUP_SQL,
-    lsh_ann_pairs_q,
-    ivf_topk_q,
-    multimodal_meta,
-    _MULTIMODAL_META_SQL,
-    multimodal_decode_q,
-    multimodal_audio_q,
-    multimodal_frames_q,
-    bpe_vocab_merges,
-    doc_bpe_segmentation,
-    multimodal_near_dup_q,
-)
-from ._timeseries import (
-    asof_latest_order,
-    _ASOF_SQL,
-    range_join_order_events,
-    _RANGE_JOIN_SQL,
-    grouping_sets_lineitem,
-    _GROUPING_SETS_SQL,
-    pivot_status_by_flag,
-    _PIVOT_SQL,
-    approx_sketches,
-    _APPROX_SKETCHES_SQL,
-    exact_quantiles,
-    _EXACT_QUANTILES_SQL,
-    outer_join_order_coverage,
-    _OUTER_JOIN_SQL,
-    price_lag_lead_frames,
-    _LAG_LEAD_SQL,
-    sql_interface_q3,
-    _SQL_Q3_SQL,
-    salted_customer_revenue,
-    _SALTED_REVENUE_SQL,
-    auto_salted_event_value,
-    _AUTO_SALTED_SQL,
-    small_quantity_revenue,
-    _SMALL_QTY_SQL,
-    exists_high_quantity_orders,
-    _EXISTS_SQL,
-    conditional_agg_orders,
-    _CONDITIONAL_AGG_SQL,
-    doc_word_positions,
-    _WORD_POSITIONS_SQL,
-    order_price_distribution,
-    _PRICE_DISTRIBUTION_SQL,
-    systematic_sample_revenue,
-    _SYSTEMATIC_SAMPLE_SQL,
-    doc_regex_extract,
-    _REGEX_EXTRACT_SQL,
-    embedding_stats,
-    _EMBEDDING_STATS_SQL,
-    embedding_label_outliers,
-    _LABEL_OUTLIERS_SQL,
-    dedup_clusters_q,
-    _JACCARD_PAIR_CTES,
-    _CC_CTES,
-    _DEDUP_CLUSTERS_SQL,
-    _bucket_split,
-    cluster_safe_split,
-    _CLUSTER_SPLIT_SQL,
-    customer_order_histogram,
-    _CUSTOMER_ORDER_HIST_SQL,
-    top_supplier_revenue,
-    _TOP_SUPPLIER_SQL,
-    large_quantity_orders,
-    _LARGE_ORDERS_SQL,
-    nation_trade_flows,
-    _NATION_TRADE_SQL,
-    idle_rich_customers,
-    _IDLE_RICH_SQL,
-    promo_revenue_share,
-    _PROMO_SHARE_SQL,
-    disjunctive_predicate_revenue,
-    _DISJUNCTIVE_SQL,
-    supplier_revenue_share,
-    _SUPPLIER_SHARE_SQL,
-    stratified_sample_docs,
-    _STRATIFIED_SAMPLE_SQL,
-    doc_repetition_filter,
-    _DOC_REPETITION_SQL,
-)
-from ._tpch_corpus import (
-    returned_item_revenue,
-    _RETURNED_ITEM_SQL,
-    priority_lines_by_returnflag,
-    _PRIORITY_LINES_SQL,
-    cheapest_supplier_per_part,
-    _CHEAPEST_SUPPLIER_SQL,
-    supplier_counts_by_part_attrs,
-    _SUPPLIER_COUNTS_SQL,
-    sole_blame_suppliers,
-    _SOLE_BLAME_SQL,
-    _span_pos_hashes,
-    _SPAN_HASH_CTES,
-    doc_dup_span_frac,
-    _DUP_SPAN_SQL,
-    doc_unigram_logprob,
-    _UNIGRAM_LOGPROB_SQL,
-    corpus_vocab_stats,
-    _VOCAB_STATS_SQL,
-    token_cooccurrence_lift,
-    _COOCCURRENCE_LIFT_SQL,
-    doc_pii_redaction,
-    _PII_SQL,
-    embedding_int8_quantize,
-    _INT8_QUANT_SQL,
-    doc_decontamination,
-    _DECONTAMINATION_SQL,
-    doc_sequence_packing,
-    _SEQUENCE_PACKING_SQL,
-    props_variant_extract,
-    _PROPS_VARIANT_SQL,
-    recursive_cte_depths,
-    _RECURSIVE_DEPTHS_SQL,
-    doc_chunking,
-    _DOC_CHUNKING_SQL,
-    event_funnel,
-    _EVENT_FUNNEL_SQL,
-    retention_cohorts,
-    _RETENTION_COHORTS_SQL,
-    semantic_dedup_vectors,
-    _UNIT_SQL,
-    _ASSIGN_SQL,
-    _kmeans_cte_chain,
-    _semdedup_sql,
-    _SEMDEDUP_SQL,
-    _ivf_topk_sql,
-    _IVF_TOPK_SQL,
-    _BYTE_SQL,
-    _MULTIMODAL_DECODE_SQL,
-    _MULTIMODAL_AUDIO_SQL,
-    _MULTIMODAL_NEAR_DUP_SQL,
-    _MULTIMODAL_FRAMES_SQL,
-    _bpe_chain_sql,
-    _bpe_merges_sql,
-    _bpe_segmentation_sql,
-    _BPE_MERGES_SQL,
-    _BPE_SEGMENTATION_SQL,
-    forecast_revenue_change,
-    _FORECAST_REVENUE_SQL,
-    nation_market_share,
-    _NATION_MARKET_SHARE_SQL,
-    product_profit_by_nation_year,
-    _PRODUCT_PROFIT_SQL,
-    heavy_shipper_suppliers,
-    _HEAVY_SHIPPER_SQL,
-)
-from ._curation import (
-    doc_corpus_split,
-    _CORPUS_SPLIT_SQL,
-    doc_leakage_safe_split,
-    _LEAKAGE_SPLIT_SQL,
-    corpus_length_histogram,
-    _LENGTH_HISTOGRAM_SQL,
-    doc_shuffle_shards,
-    _SHUFFLE_SHARDS_SQL,
-    corpus_mixture_plan,
-    _MIXTURE_PLAN_SQL,
-    _QUALITY_SCORE_SQL,
-    doc_quality_selection,
-    _QUALITY_SELECTION_SQL,
-    _curation_stages,
-    _curation_sharded,
-    corpus_curation_pipeline,
-    _curation_stage_ctes,
-    _CURATION_STAGE_CTES,
-    _CURATION_SPLIT_CTE,
-    _CURATION_PIPELINE_SQL,
-    curation_funnel_report,
-    _CURATION_FUNNEL_SQL,
-    packing_efficiency_report,
-    _PACKING_EFFICIENCY_SQL,
-    tokenizer_throughput_by_source,
-    _TOKENIZER_THROUGHPUT_SQL,
-    query_cost_attribution,
-    decontamination_rate_by_source,
-    _DECONTAM_RATE_SQL,
-    _BM25_TERMS,
-    _BM25_TERMS_SQL,
-    _bm25_per_doc_tf,
-    doc_bm25_search,
-    _bm25_sql,
-    _BM25_SQL,
-    corpus_tfidf_topterms,
-    _TFIDF_TOPTERMS_SQL,
-    event_value_outliers,
-    _EVENT_OUTLIERS_SQL,
-    events_upsert_latest,
-    _UPSERT_LATEST_SQL,
-)
-from ._graph_ann import (
-    embedding_pq_adc_topk,
-    _PQ_DIST2_SQL,
-    _pq_subspace_chain,
-    _pq_adc_sql,
-    _PQ_ADC_SQL,
-    embedding_ivfpq_topk,
-    _ivfpq_sql,
-    tem_gap_fill_hourly,
-    _GAP_FILL_SQL,
-    event_value_outliers_mad,
-    _MAD_OUTLIERS_SQL,
-    data_quality_audit,
-    _DATA_QUALITY_SQL,
-    events_table_profile,
-    _TABLE_PROFILE_SQL,
-    page_graph_clustering,
-    _PAGE_CLUSTERING_SQL,
-    user_type_scd2,
-    _SCD2_SQL,
-    stratified_fixed_k_sample,
-    _FIXED_K_SAMPLE_SQL,
-    doc_quality_sort_shards,
-    _QUALITY_SORT_SHARDS_SQL,
-    _page_stream,
-    _page_transitions,
-    page_rank_pages,
-    _pagerank_iteration_sql,
-    _PAGERANK_SQL,
-    doc_near_dedup_keep_best,
-    _KEEP_BEST_SQL,
-    doc_bigram_lm_quality,
-    _BIGRAM_LM_SQL,
-    semantic_decontamination,
-    _SEMANTIC_DECONTAM_SQL,
-    corpus_mixture_resample,
-    _MIXTURE_RESAMPLE_SQL,
-    stream_static_segment_spend_q,
-    _STREAM_STATIC_SQL,
-    _ZORDER_PART_RANGE,
-    _ZORDER_SUPP_RANGE,
-    zorder_layout_stats,
-    _zorder_sql,
-    _DSIR_BUCKETS,
-    dsir_importance_select,
-    _dsir_sql,
-    embedding_pq_rerank_topk,
-    _pq_rerank_sql,
-    doc_dup_span_removal,
-    _DUP_SPAN_REMOVAL_SQL,
-    _INCR_CUTOFF,
-    orders_incremental_agg,
-    _INCR_AGG_SQL,
-    key_skew_report,
-    _key_skew_sql,
-    _query_tfidf_ranks,
-    hybrid_rrf_search,
-    _hybrid_rrf_sql,
-    bloom_prune_join,
-    _BLOOM_PRUNE_SQL,
-    part_skyline,
-    _PART_SKYLINE_SQL,
-    user_distinct_sketch,
-    _SKETCH_H_SQL,
-    _SKETCH_REGS_CTES,
-    _DISTINCT_SKETCH_SQL,
-    stream_user_distinct_sketch_q,
-    _STREAM_SKETCH_SQL,
-    value_quantile_histogram,
-    _QUANTILE_HIST_SQL,
-    purchase_attribution,
-    _ATTRIBUTION_SQL,
-    nation_revenue_trend,
-    _NATION_TREND_SQL,
-    event_cusum_changepoint,
-    _CUSUM_SQL,
-    session_association_rules,
-    _ASSOC_RULES_SQL,
-    corpus_inverted_index,
-    _INVERTED_INDEX_SQL,
-    event_value_trimmed_stats,
-    _TRIMMED_STATS_SQL,
-    customer_spend_deciles,
-    _SPEND_DECILES_SQL,
-    hilbert_layout_stats,
-    _hilbert_sql,
-    _BENFORD_EXPECTED_PPM,
-    orders_benford_profile,
-    _BENFORD_SQL,
-    langid_confusion_matrix,
-    _LANGID_SCORED_CTE,
-    _LANGID_PRED_CASE,
-    _LANGID_CONFUSION_SQL,
-    matryoshka_recall_audit,
-    _MATRYOSHKA_SQL,
-    part_kcore_members,
-    _kcore_round_sql,
-    _kcore_sql,
-    segment_spend_gini,
-    _SPEND_GINI_SQL,
-    _KMV_K,
-    _KMV_DOMAIN,
-    _kmv_pairs_staged,
-    activity_overlap_kmv,
-    _KMV_H_SQL,
-    _kmv_pairs_ctes,
-    _kmv_est_union_sql,
-    _activity_kmv_sql,
-    order_lineitem_ivm,
-    _ORDER_IVM_SQL,
-    part_bfs_hops,
-    _repeat_copurchase_edges_w,
-    _repeat_copurchase_edges,
-    _knn_sparsify_edges,
-    _BFS_EDGES_CTES,
-    _bfs_round_sql,
-    _bfs_sql,
-    event_seasonal_anomaly,
-    _SEASONAL_ANOMALY_SQL,
-    rake_keyword_phrases,
-    _RAKE_SQL,
-)
-from ._analytics import (
-    nation_min_latency_paths,
-    _LATENCY_EDGES_CTES,
-    _latency_sql,
-    part_label_communities,
-    _lpa_round_sql,
-    _lpa_sql,
-    copurchase_modularity,
-    _MODULARITY_SQL,
-    _HRW_OLD,
-    doc_shard_rebalance,
-    _hrw_sql,
-    source_token_kl,
-    _SOURCE_KL_SQL,
-    doc_weighted_sample,
-    _weighted_sample_sql,
-    _KMEANS_K,
-    _KMEANS_ROUNDS,
-    _EMB_DIM,
-    _kmeans_fit_centroids,
-    kmeans_lloyd_clusters,
-    _KM_GRID_SUMS,
-    _KM_GRID_MEANS,
-    _km_round_sql,
-    _kmeans_chain_sql,
-    _kmeans_sql,
-    table_checksum_buckets,
-    _TCB_FP,
-    _TCB_H,
-    _table_checksum_sql,
-    shard_compaction_plan,
-    _compaction_sql,
-    event_ewma_chart,
-    _EWMA_LAG_NUM,
-    _EWMA_LAG_DEN,
-    _EWMA_SQL,
-    customer_survival_km,
-    _KM_SQL,
-    user_activity_bitmaps,
-    _BITMAP_SQL,
-    cohort_ltv_curves,
-    _COHORT_LTV_SQL,
-    stream_seasonal_baseline_q,
-    _STREAM_SEASONAL_SQL,
-    customer_k_anonymity,
-    _k_anon_sql,
-    part_stock_balance,
-    _STOCK_SQL,
-    lineitem_weighted_median,
-    _WEIGHTED_MEDIAN_SQL,
-    topk_orders_with_ties,
-    _TOPK_TIES_SQL,
-    doc_global_sequence,
-    _GLOBAL_SEQ_SQL,
-    activity_anotb_kmv,
-    _kmv_anotb_sql,
-    welch_t_event_types,
-    _WELCH_SQL,
-    textrank_keywords,
-    _textrank_sql,
-    orders_double_billing,
-    _double_billing_sql,
-    part_abc_classes,
-    _abc_sql,
-    customer_negative_parts,
-    _negative_parts_sql,
-    langid_margin_calibration,
-    _LANGID_CALIBRATION_SQL,
-    ppr_part_recommendations,
-    _ppr_iteration_sql,
-    _ppr_sql,
-    event_value_imputation,
-    _IMPUTATION_SQL,
-    neyman_allocation_sample,
-    _neyman_sql,
-    event_value_winsorize,
-    _winsorize_cut_sql,
-    _WINSORIZE_SQL,
-    inter_event_gaps,
-    _INTER_GAP_SQL,
-    region_nation_share,
-    _REGION_SHARE_SQL,
-)
-from ._round8 import (
-    _event_order_key,
-    _EVENT_KEY_SQL,
-    event_value_ohlc,
-    _OHLC_SQL,
-    stream_hourly_ohlc,
-    _STREAM_OHLC_SQL,
-    referential_integrity_audit,
-    _ri_rel_sql,
-    _RI_AUDIT_SQL,
-    customer_rfm_segments,
-    _RFM_SQL,
-    _basket_pairs,
-    _BASKET_PAIRS_CTE,
-    part_copurchase_lift,
-    _copurchase_lift_sql,
-    open_orders_daily,
-    _OPEN_ORDERS_SQL,
-    bot_regularity_score,
-    _bot_regularity_sql,
-    copurchase_link_prediction,
-    _link_prediction_sql,
-    ann_recall_audit,
-    _ann_recall_sql,
-    doc_gibberish_filter,
-    _GIBBERISH_SQL,
-    token_burstiness,
-    _BURSTINESS_SQL,
-    orders_priority_drift,
-    _PRIORITY_DRIFT_SQL,
-    stream_click_purchase_left_join,
-    _STREAM_LEFT_JOIN_SQL,
-    stream_click_purchase_right_join,
-    stream_click_purchase_semi_join,
-    _STREAM_SEMI_JOIN_SQL,
-    _STREAM_WM_CTES,
-    _STREAM_RIGHT_ARMS_SQL,
-    _STREAM_RIGHT_JOIN_SQL,
-    stream_click_purchase_full_join,
-    _STREAM_FULL_JOIN_SQL,
-    stream_click_purchase_anti_join,
-    _STREAM_ANTI_JOIN_SQL,
-    dedup_graph_degree_histogram,
-    _DEGREE_HIST_SQL,
-    order_fulfillment_latency,
-    _FULFILLMENT_SQL,
-    event_type_percentiles,
-    _type_pct_cut_sql,
-    _TYPE_PERCENTILES_SQL,
-    part_supplier_hhi,
-    _PART_HHI_SQL,
-    quantile_normalize_quality,
-    _quantile_norm_sql,
-    phrase_search,
-    _phrase_search_sql,
-    session_coherent_sample,
-    _session_sample_sql,
-    user_churn_labels,
-    _churn_sql,
-    mmr_diverse_topk,
-    _mmr_sql,
-    discount_quantity_regression,
-    _REGRESSION_SQL,
-    copurchase_clustering_coefficient,
-    _clustering_coeff_sql,
-    orders_seasonality_dow,
-    _SEASONALITY_DOW_SQL,
-    daily_revenue_rolling_7d,
-    _ROLLING_7D_SQL,
-    conversion_latency_quantiles,
-    _conversion_cut_sql,
-    _CONVERSION_LATENCY_SQL,
-    doc_dedup_rate_by_source,
-    _DEDUP_RATE_SQL,
-    order_basket_size_histogram,
-    _BASKET_HIST_SQL,
-)
-from ._registry import (
-    REGISTRY,
-    BENCH_HEADLINE,
-    embedding_hard_negatives,
-    _HARD_NEG_SQL,
-    nn_descent_knn_graph,
-    _nn_descent_sql,
-    embedding_top_eigenvector,
-    _eigvec_parts,
-    _eigvec_sql,
-    _MOJIBAKE_PATTERNS,
-    doc_mojibake_audit,
-    _MOJIBAKE_SQL,
-    kmeans_cluster_medoids,
-    _kmeans_medoids_sql,
-    embedding_spectral_outliers,
-    _spectral_outliers_sql,
-    customer_l_diversity,
-    _l_diversity_sql,
-    embedding_label_centroid_drift,
-    _LABEL_DRIFT_SQL,
-    running_distinct_users,
-    _RUNNING_DISTINCT_SQL,
-    session_event_trigrams,
-    _trigram_sql,
-    incremental_curation_delta,
-    _CURATION_DELTA_SQL,
-    part_harmonic_centrality,
-    _harmonic_sql,
-    ivfpq_persisted_topk,
-    copurchase_hyperball,
-    _hyperball_sql,
-    dedup_signal_agreement,
-    _SIGNAL_AGREEMENT_SQL,
-    _AES_JMAX,
-    weighted_priority_sample,
-    _aes_keyed_docs,
-    _aes_key_cols,
-    stratified_priority_sample,
-    stream_priority_sample_q,
-    _aes_sql,
-    _stratified_aes_sql,
-    _BBIT_K,
-    _BBIT_THRESHOLD,
-    bbit_minhash_audit,
-    _bbit_sql,
-    _ANN_INGEST_THRESHOLD,
-    _persisted_ann_model,
-    stream_ann_ingest_dedup,
-    _ann_ingest_sql,
-    queries,
-    oracle_sql,
-)
+from ._registry import BENCH_HEADLINE, REGISTRY, oracle_sql, queries
+
+__all__ = ["BENCH_HEADLINE", "QueryFn", "REGISTRY", "oracle_sql", "queries"]

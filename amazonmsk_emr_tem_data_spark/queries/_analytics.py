@@ -1,31 +1,20 @@
-"""Round-7 analytics sessions: paths, communities, k-means, survival, audits, sampling.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""Round-7 analytics sessions: paths, communities, k-means, survival, audits, sampling."""
 
 from __future__ import annotations
 
-from __future__ import annotations
-
-from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
-from ._core import QueryFn
 from ._core import (
+    QueryFn,
     _DISC_PRICE_CENTS_SQL,
     _cents,
     _ranked_topk,
@@ -50,7 +39,6 @@ from ._graph_ann import (
     _pagerank_iteration_sql,
     _repeat_copurchase_edges,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -3364,3 +3352,54 @@ SELECT region, nation,
        END AS region_share_ppm
 FROM staged
 """
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "nation_min_latency_paths": (nation_min_latency_paths, _latency_sql()),
+    "part_label_communities": (part_label_communities, _lpa_sql()),
+    "copurchase_modularity": (copurchase_modularity, _MODULARITY_SQL),
+    "doc_shard_rebalance": (doc_shard_rebalance, _hrw_sql()),
+    "source_token_kl": (source_token_kl, _SOURCE_KL_SQL),
+    "doc_weighted_sample": (doc_weighted_sample, _weighted_sample_sql()),
+    "kmeans_lloyd_clusters": (kmeans_lloyd_clusters, _kmeans_sql()),
+    "table_checksum_buckets": (table_checksum_buckets, _table_checksum_sql()),
+    "shard_compaction_plan": (shard_compaction_plan, _compaction_sql()),
+    "event_ewma_chart": (event_ewma_chart, _EWMA_SQL),
+    "customer_survival_km": (customer_survival_km, _KM_SQL),
+    "user_activity_bitmaps": (user_activity_bitmaps, _BITMAP_SQL),
+    "cohort_ltv_curves": (cohort_ltv_curves, _COHORT_LTV_SQL),
+    "stream_seasonal_baseline": (
+        stream_seasonal_baseline_q,
+        _STREAM_SEASONAL_SQL,
+    ),
+    "customer_k_anonymity": (customer_k_anonymity, _k_anon_sql()),
+    "part_stock_balance": (part_stock_balance, _STOCK_SQL),
+    "lineitem_weighted_median": (
+        lineitem_weighted_median,
+        _WEIGHTED_MEDIAN_SQL,
+    ),
+    "topk_orders_with_ties": (topk_orders_with_ties, _TOPK_TIES_SQL),
+    "doc_global_sequence": (doc_global_sequence, _GLOBAL_SEQ_SQL),
+    "activity_anotb_kmv": (activity_anotb_kmv, _kmv_anotb_sql()),
+    "welch_t_event_types": (welch_t_event_types, _WELCH_SQL),
+    "textrank_keywords": (textrank_keywords, _textrank_sql()),
+    "orders_double_billing": (orders_double_billing, _double_billing_sql()),
+    "part_abc_classes": (part_abc_classes, _abc_sql()),
+    "customer_negative_parts": (
+        customer_negative_parts,
+        _negative_parts_sql(),
+    ),
+    "langid_margin_calibration": (
+        langid_margin_calibration,
+        _LANGID_CALIBRATION_SQL,
+    ),
+    "ppr_part_recommendations": (ppr_part_recommendations, _ppr_sql()),
+    "event_value_imputation": (event_value_imputation, _IMPUTATION_SQL),
+    "neyman_allocation_sample": (
+        neyman_allocation_sample,
+        _neyman_sql(),
+    ),
+    "event_value_winsorize": (event_value_winsorize, _WINSORIZE_SQL),
+    "inter_event_gaps": (inter_event_gaps, _INTER_GAP_SQL),
+    "region_nation_share": (region_nation_share, _REGION_SHARE_SQL),
+}

@@ -1,25 +1,19 @@
-"""Determinism helpers, flagship tem parity, relational core (SURVEY §2.3-2.5), streaming drains.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
-
-from __future__ import annotations
+"""Determinism helpers, flagship tem parity, relational core (SURVEY §2.3-2.5), streaming drains."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.codec import from_kafka_envelope, to_kafka_envelope
 from ..functions.tem import horizontal_mean
 from ..schemas import EVENTS_SCHEMA
 from ..sources.files import ensure_parallelism, load_table
+
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -1034,3 +1028,48 @@ SELECT from_type, to_type, n,
        n / CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT) AS prob
 FROM trans
 """
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "tem_hourly_avg": (tem_hourly_avg, _TEM_HOURLY_AVG_SQL),
+    "event_markov_transitions": (event_markov_transitions, _MARKOV_SQL),
+    "lineitem_measures_unpivot": (lineitem_measures_unpivot, _UNPIVOT_SQL),
+    "session_incident_overlap": (
+        session_incident_overlap,
+        _SESSION_OVERLAP_SQL,
+    ),
+    "stream_tumbling_hourly": (stream_tumbling_hourly, _STREAM_TUMBLING_SQL),
+    "stream_sliding_2h": (stream_sliding_2h, _STREAM_SLIDING_SQL),
+    "stream_session_windows": (stream_session_windows_q, _STREAM_SESSION_SQL),
+    "stream_click_purchase_join": (
+        stream_click_purchase_join,
+        _STREAM_SS_JOIN_SQL,
+    ),
+    "tem_horizontal_avg": (tem_horizontal_avg, _TEM_HORIZONTAL_AVG_SQL),
+    "envelope_roundtrip": (envelope_roundtrip, _ENVELOPE_ROUNDTRIP_SQL),
+    "q1_pricing_summary": (q1_pricing_summary, _Q1_SQL),
+    "filter_project_scan": (filter_project_scan, _FILTER_PROJECT_SQL),
+    "revenue_by_segment": (revenue_by_segment, _REVENUE_BY_SEGMENT_SQL),
+    "nation_revenue": (nation_revenue, _NATION_REVENUE_SQL),
+    "topk_orders_per_priority": (topk_orders_per_priority, _TOPK_ORDERS_SQL),
+    "running_total_per_customer": (
+        running_total_per_customer,
+        _RUNNING_TOTAL_SQL,
+    ),
+    "rollup_lineitem_status": (rollup_lineitem_status, _ROLLUP_SQL),
+    "cube_order_status": (cube_order_status, _CUBE_SQL),
+    "customers_with_orders": (customers_with_orders, _SEMI_JOIN_SQL),
+    "set_ops_customers": (set_ops_customers, _SET_OPS_SQL),
+    "union_event_slices": (union_event_slices, _UNION_SLICES_SQL),
+    "dedup_first_event": (dedup_first_event, _DEDUP_FIRST_SQL),
+    "case_bucket_quantity": (case_bucket_quantity, _CASE_BUCKET_SQL),
+    "orders_by_month": (orders_by_month, _ORDERS_BY_MONTH_SQL),
+    "part_name_stats": (part_name_stats, _PART_NAME_SQL),
+    "json_props_extract": (json_props_extract, _JSON_PROPS_SQL),
+    "distinct_users_per_type": (distinct_users_per_type, _DISTINCT_USERS_SQL),
+    "top10_lineitems": (top10_lineitems, _TOP10_SQL),
+    "customers_without_orders": (customers_without_orders, _ANTI_JOIN_SQL),
+    "stream_distinct_users": (stream_distinct_users, _STREAM_DISTINCT_SQL),
+    "stream_dedup_watermark": (stream_dedup_watermark, _STREAM_DEDUP_WM_SQL),
+    "sessionize_events": (sessionize_events, _SESSION_SQL_BODY),
+}

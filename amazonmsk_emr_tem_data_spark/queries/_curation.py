@@ -1,33 +1,17 @@
-"""Corpus curation: splits, shuffle shards, mixture plans, quality selection, cost attribution.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""Corpus curation: splits, shuffle shards, mixture plans, quality selection, cost attribution."""
 
 from __future__ import annotations
 
-from __future__ import annotations
-
-from collections.abc import Callable
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
-from ._core import QueryFn
-from ._core import (
-    _ranked_topk,
-)
+from ._core import QueryFn, _ranked_topk
 from ._northstar import (
     _HASH64_SQL,
     _NORM_SQL,
@@ -37,7 +21,6 @@ from ._northstar import (
 from ._timeseries import (
     _bucket_split,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -1256,3 +1239,44 @@ SELECT event_id, ts, user_id, event_type, value, props FROM (
   FROM merged) t
 WHERE rn = 1
 """
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "doc_bm25_search": (doc_bm25_search, _BM25_SQL),
+    "doc_corpus_split": (doc_corpus_split, _CORPUS_SPLIT_SQL),
+    "doc_shuffle_shards": (doc_shuffle_shards, _SHUFFLE_SHARDS_SQL),
+    "corpus_mixture_plan": (corpus_mixture_plan, _MIXTURE_PLAN_SQL),
+    "doc_quality_selection": (doc_quality_selection, _QUALITY_SELECTION_SQL),
+    "event_value_outliers": (event_value_outliers, _EVENT_OUTLIERS_SQL),
+    "events_upsert_latest": (events_upsert_latest, _UPSERT_LATEST_SQL),
+    "doc_leakage_safe_split": (doc_leakage_safe_split, _LEAKAGE_SPLIT_SQL),
+    "corpus_length_histogram": (
+        corpus_length_histogram,
+        _LENGTH_HISTOGRAM_SQL,
+    ),
+    "corpus_curation_pipeline": (
+        corpus_curation_pipeline,
+        _CURATION_PIPELINE_SQL,
+    ),
+    "corpus_tfidf_topterms": (corpus_tfidf_topterms, _TFIDF_TOPTERMS_SQL),
+    "curation_funnel_report": (
+        curation_funnel_report,
+        _CURATION_FUNNEL_SQL,
+    ),
+    "decontamination_rate_by_source": (
+        decontamination_rate_by_source,
+        _DECONTAM_RATE_SQL,
+    ),
+    "tokenizer_throughput_by_source": (
+        tokenizer_throughput_by_source,
+        _TOKENIZER_THROUGHPUT_SQL,
+    ),
+    # rows-only by nature: the facts are Spark plan internals
+    # (exchange counts, Catalyst size estimates) no other engine can
+    # recompute; contract-tested in tests/test_plans.py instead.
+    "query_cost_attribution": (query_cost_attribution, None),
+    "packing_efficiency_report": (
+        packing_efficiency_report,
+        _PACKING_EFFICIENCY_SQL,
+    ),
+}

@@ -1,31 +1,18 @@
-"""Link-graph rank, keep-best dedup, PQ-ADC, KMV overlap, IVM, incremental curation.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""Link-graph rank, keep-best dedup, PQ-ADC, KMV overlap, IVM, incremental curation."""
 
 from __future__ import annotations
-
-from __future__ import annotations
-
-from collections.abc import Callable
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
-from ._core import QueryFn
 from ._core import (
+    QueryFn,
     _DISC_PRICE_CENTS_SQL,
     _cents,
     _dsum,
@@ -59,7 +46,6 @@ from ._curation import (
     _bm25_sql,
     doc_bm25_search,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -4207,3 +4193,86 @@ GROUP BY 1
 ORDER BY score_micro DESC, n_occurrences DESC, phrase ASC
 LIMIT 50
 """
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "hybrid_rrf_search": (hybrid_rrf_search, _hybrid_rrf_sql()),
+    "bloom_prune_join": (bloom_prune_join, _BLOOM_PRUNE_SQL),
+    "part_skyline": (part_skyline, _PART_SKYLINE_SQL),
+    "user_distinct_sketch": (user_distinct_sketch, _DISTINCT_SKETCH_SQL),
+    "stream_user_distinct_sketch": (
+        stream_user_distinct_sketch_q,
+        _STREAM_SKETCH_SQL,
+    ),
+    "value_quantile_histogram": (
+        value_quantile_histogram,
+        _QUANTILE_HIST_SQL,
+    ),
+    "purchase_attribution": (purchase_attribution, _ATTRIBUTION_SQL),
+    "nation_revenue_trend": (nation_revenue_trend, _NATION_TREND_SQL),
+    "event_cusum_changepoint": (event_cusum_changepoint, _CUSUM_SQL),
+    "session_association_rules": (
+        session_association_rules,
+        _ASSOC_RULES_SQL,
+    ),
+    "corpus_inverted_index": (corpus_inverted_index, _INVERTED_INDEX_SQL),
+    "event_value_trimmed_stats": (
+        event_value_trimmed_stats,
+        _TRIMMED_STATS_SQL,
+    ),
+    "customer_spend_deciles": (customer_spend_deciles, _SPEND_DECILES_SQL),
+    "hilbert_layout_stats": (hilbert_layout_stats, _hilbert_sql()),
+    "orders_benford_profile": (orders_benford_profile, _BENFORD_SQL),
+    "langid_confusion_matrix": (
+        langid_confusion_matrix,
+        _LANGID_CONFUSION_SQL,
+    ),
+    "matryoshka_recall_audit": (matryoshka_recall_audit, _MATRYOSHKA_SQL),
+    "part_kcore_members": (part_kcore_members, _kcore_sql()),
+    "segment_spend_gini": (segment_spend_gini, _SPEND_GINI_SQL),
+    "activity_overlap_kmv": (activity_overlap_kmv, _activity_kmv_sql()),
+    "order_lineitem_ivm": (order_lineitem_ivm, _ORDER_IVM_SQL),
+    "part_bfs_hops": (part_bfs_hops, _bfs_sql()),
+    "event_seasonal_anomaly": (
+        event_seasonal_anomaly,
+        _SEASONAL_ANOMALY_SQL,
+    ),
+    "rake_keyword_phrases": (rake_keyword_phrases, _RAKE_SQL),
+    "page_rank_pages": (page_rank_pages, _PAGERANK_SQL),
+    "doc_near_dedup_keep_best": (doc_near_dedup_keep_best, _KEEP_BEST_SQL),
+    "doc_bigram_lm_quality": (doc_bigram_lm_quality, _BIGRAM_LM_SQL),
+    "semantic_decontamination": (
+        semantic_decontamination,
+        _SEMANTIC_DECONTAM_SQL,
+    ),
+    "corpus_mixture_resample": (
+        corpus_mixture_resample,
+        _MIXTURE_RESAMPLE_SQL,
+    ),
+    "embedding_pq_adc_topk": (embedding_pq_adc_topk, _PQ_ADC_SQL),
+    "doc_quality_sort_shards": (
+        doc_quality_sort_shards,
+        _QUALITY_SORT_SHARDS_SQL,
+    ),
+    "embedding_ivfpq_topk": (embedding_ivfpq_topk, _ivfpq_sql()),
+    "page_graph_clustering": (page_graph_clustering, _PAGE_CLUSTERING_SQL),
+    "user_type_scd2": (user_type_scd2, _SCD2_SQL),
+    "stratified_fixed_k_sample": (
+        stratified_fixed_k_sample,
+        _FIXED_K_SAMPLE_SQL,
+    ),
+    "data_quality_audit": (data_quality_audit, _DATA_QUALITY_SQL),
+    "events_table_profile": (events_table_profile, _TABLE_PROFILE_SQL),
+    "tem_gap_fill_hourly": (tem_gap_fill_hourly, _GAP_FILL_SQL),
+    "event_value_outliers_mad": (event_value_outliers_mad, _MAD_OUTLIERS_SQL),
+    "stream_static_segment_spend": (
+        stream_static_segment_spend_q,
+        _STREAM_STATIC_SQL,
+    ),
+    "zorder_layout_stats": (zorder_layout_stats, _zorder_sql()),
+    "dsir_importance_select": (dsir_importance_select, _dsir_sql()),
+    "embedding_pq_rerank_topk": (embedding_pq_rerank_topk, _pq_rerank_sql()),
+    "doc_dup_span_removal": (doc_dup_span_removal, _DUP_SPAN_REMOVAL_SQL),
+    "orders_incremental_agg": (orders_incremental_agg, _INCR_AGG_SQL),
+    "key_skew_report": (key_skew_report, _key_skew_sql()),
+}

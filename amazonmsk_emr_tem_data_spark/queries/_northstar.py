@@ -1,34 +1,22 @@
-"""North-star operators: text analysis, dedup, similarity, multimodal (M4).
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""North-star operators: text analysis, dedup, similarity, multimodal (M4)."""
 
 from __future__ import annotations
 
-from __future__ import annotations
-
-from collections.abc import Callable
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
-from ._core import QueryFn
 from ._core import (
+    QueryFn,
     _ranked_topk,
+    stream_doc_quality_q,
+    stream_token_heavy_hitters_q,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -1710,3 +1698,58 @@ def multimodal_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     return media_near_dup_pairs(with_binary_payload(docs), threshold=0.995)
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "prefix_filter_jaccard_pairs": (
+        prefix_filter_jaccard_pairs_q,
+        _PREFIX_JACCARD_SQL,
+    ),
+    "tokenizer_fertility_by_lang": (
+        tokenizer_fertility_by_lang,
+        _FERTILITY_SQL,
+    ),
+    "cross_corpus_near_dup": (cross_corpus_near_dup_q, _CROSS_CORPUS_SQL),
+    "doc_winnowing_fingerprints": (
+        doc_winnowing_fingerprints,
+        _WINNOWING_SQL,
+    ),
+    "corpus_ngram_diversity": (corpus_ngram_diversity, _NGRAM_DIVERSITY_SQL),
+    "gopher_quality_filter": (gopher_quality_filter, _GOPHER_FILTER_SQL),
+    "corpus_source_drift": (corpus_source_drift, _SOURCE_DRIFT_SQL),
+    "token_heavy_hitters_cms": (token_heavy_hitters_cms, _CMS_SQL),
+    "containment_dup_pairs": (containment_dup_pairs, _CONTAINMENT_SQL),
+    "stream_token_heavy_hitters": (
+        stream_token_heavy_hitters_q,
+        _STREAM_CMS_SQL,
+    ),
+    "corpus_snapshot_diff": (corpus_snapshot_diff, _SNAPSHOT_DIFF_SQL),
+    "event_value_drift": (event_value_drift, _EVENT_VALUE_DRIFT_SQL),
+    "winnowing_match_pairs": (winnowing_match_pairs_q, _WINNOWING_PAIRS_SQL),
+    "fuzzy_dup_verify_pairs": (fuzzy_dup_verify_pairs, _FUZZY_PAIRS_SQL),
+    "event_hourly_autocorr": (event_hourly_autocorr, _AUTOCORR_SQL),
+    "event_rate_spikes": (event_rate_spikes, _RATE_SPIKES_SQL),
+    "token_zipf_profile": (token_zipf_profile, _ZIPF_SQL),
+    "stream_doc_quality": (stream_doc_quality_q, _DOC_QUALITY_LANGID_SQL),
+    "doc_text_features": (doc_text_features, _DOC_TEXT_FEATURES_SQL),
+    "doc_quality_langid": (doc_quality_langid, _DOC_QUALITY_LANGID_SQL),
+    "doc_fingerprint_groups": (doc_fingerprint_groups_q, _DOC_FINGERPRINT_SQL),
+    "doc_rolling_fingerprint": (doc_rolling_fingerprint, _ROLLING_SQL),
+    "doc_exact_dedup": (doc_exact_dedup_q, _DOC_EXACT_DEDUP_SQL),
+    "ngram_jaccard_pairs": (ngram_jaccard_pairs_q, _JACCARD_PAIRS_SQL),
+    "minhash_lsh_pairs": (minhash_lsh_pairs_q, _JACCARD_PAIRS_SQL),
+    "simhash_pairs": (simhash_pairs_q, _SIMHASH_PAIRS_SQL),
+    "embedding_cosine_topk": (embedding_cosine_topk, _EMB_TOPK_SQL),
+    "embedding_knn_join": (embedding_knn_join_q, _EMB_KNN_SQL),
+    "embedding_near_dup_pairs": (
+        embedding_near_dup_pairs_q,
+        _EMB_NEAR_DUP_SQL,
+    ),
+    "lsh_ann_pairs": (lsh_ann_pairs_q, _EMB_NEAR_DUP_SQL),
+    "multimodal_meta": (multimodal_meta, _MULTIMODAL_META_SQL),
+    "simhash_bit_bias": (simhash_bit_bias, _SIMHASH_BIT_BIAS_SQL),
+    "embedding_dimension_profile": (
+        embedding_dimension_profile,
+        _EMB_DIM_PROFILE_SQL,
+    ),
+}

@@ -1,1003 +1,49 @@
-"""The query registry, oracle twins for late rounds, bench headline list.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""Late-round queries, the bench headline list, and REGISTRY: the merge
+of every domain module's QUERIES table."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
+from . import (
+    _analytics,
+    _core,
+    _curation,
+    _graph_ann,
+    _northstar,
+    _round8,
+    _timeseries,
+    _tpch_corpus,
+)
 from ._core import QueryFn
-from ._core import (
-    _ANTI_JOIN_SQL,
-    _CASE_BUCKET_SQL,
-    _CUBE_SQL,
-    _DEDUP_FIRST_SQL,
-    _DISTINCT_USERS_SQL,
-    _ENVELOPE_ROUNDTRIP_SQL,
-    _FILTER_PROJECT_SQL,
-    _JSON_PROPS_SQL,
-    _MARKOV_SQL,
-    _NATION_REVENUE_SQL,
-    _ORDERS_BY_MONTH_SQL,
-    _PART_NAME_SQL,
-    _Q1_SQL,
-    _REVENUE_BY_SEGMENT_SQL,
-    _ROLLUP_SQL,
-    _RUNNING_TOTAL_SQL,
-    _SEMI_JOIN_SQL,
-    _SESSION_OVERLAP_SQL,
-    _SESSION_SQL_BODY,
-    _SET_OPS_SQL,
-    _STREAM_DEDUP_WM_SQL,
-    _STREAM_DISTINCT_SQL,
-    _STREAM_SESSION_SQL,
-    _STREAM_SLIDING_SQL,
-    _STREAM_SS_JOIN_SQL,
-    _STREAM_TUMBLING_SQL,
-    _TEM_HORIZONTAL_AVG_SQL,
-    _TEM_HOURLY_AVG_SQL,
-    _TOP10_SQL,
-    _TOPK_ORDERS_SQL,
-    _UNION_SLICES_SQL,
-    _UNPIVOT_SQL,
-    case_bucket_quantity,
-    cube_order_status,
-    customers_with_orders,
-    customers_without_orders,
-    dedup_first_event,
-    distinct_users_per_type,
-    envelope_roundtrip,
-    event_markov_transitions,
-    filter_project_scan,
-    json_props_extract,
-    lineitem_measures_unpivot,
-    nation_revenue,
-    orders_by_month,
-    part_name_stats,
-    q1_pricing_summary,
-    revenue_by_segment,
-    rollup_lineitem_status,
-    running_total_per_customer,
-    session_incident_overlap,
-    sessionize_events,
-    set_ops_customers,
-    stream_click_purchase_join,
-    stream_dedup_watermark,
-    stream_distinct_users,
-    stream_doc_quality_q,
-    stream_session_windows_q,
-    stream_sliding_2h,
-    stream_token_heavy_hitters_q,
-    stream_tumbling_hourly,
-    tem_horizontal_avg,
-    tem_hourly_avg,
-    top10_lineitems,
-    topk_orders_per_priority,
-    union_event_slices,
-)
 from ._northstar import (
-    _AUTOCORR_SQL,
-    _CMS_SQL,
-    _CONTAINMENT_SQL,
     _COS_SQL,
-    _CROSS_CORPUS_SQL,
-    _DOC_EXACT_DEDUP_SQL,
-    _DOC_FINGERPRINT_SQL,
-    _DOC_QUALITY_LANGID_SQL,
-    _DOC_TEXT_FEATURES_SQL,
-    _EMB_DIM_PROFILE_SQL,
-    _EMB_KNN_SQL,
     _EMB_NEAR_DUP_SQL,
-    _EMB_TOPK_SQL,
-    _EVENT_VALUE_DRIFT_SQL,
-    _FERTILITY_SQL,
-    _FUZZY_PAIRS_SQL,
-    _GOPHER_FILTER_SQL,
     _JACCARD_PAIRS_SQL,
-    _MULTIMODAL_META_SQL,
-    _NGRAM_DIVERSITY_SQL,
-    _NORM_SQL,
-    _PREFIX_JACCARD_SQL,
     _TOKS_SQL,
-    _RATE_SPIKES_SQL,
-    _ROLLING_SQL,
-    _SIMHASH_BIT_BIAS_SQL,
-    _SIMHASH_PAIRS_SQL,
-    _SNAPSHOT_DIFF_SQL,
-    _SOURCE_DRIFT_SQL,
-    _STREAM_CMS_SQL,
-    _WINNOWING_PAIRS_SQL,
-    _WINNOWING_SQL,
-    _ZIPF_SQL,
-    bpe_vocab_merges,
-    containment_dup_pairs,
-    corpus_ngram_diversity,
-    corpus_snapshot_diff,
-    corpus_source_drift,
-    cross_corpus_near_dup_q,
-    doc_bpe_segmentation,
-    doc_exact_dedup_q,
-    doc_fingerprint_groups_q,
-    doc_quality_langid,
-    doc_rolling_fingerprint,
-    doc_text_features,
-    doc_winnowing_fingerprints,
-    embedding_cosine_topk,
-    embedding_dimension_profile,
-    embedding_knn_join_q,
-    embedding_near_dup_pairs_q,
-    event_hourly_autocorr,
-    event_rate_spikes,
-    event_value_drift,
-    fuzzy_dup_verify_pairs,
-    gopher_quality_filter,
-    ivf_topk_q,
-    lsh_ann_pairs_q,
-    minhash_lsh_pairs_q,
-    multimodal_audio_q,
-    multimodal_decode_q,
-    multimodal_frames_q,
-    multimodal_meta,
-    multimodal_near_dup_q,
-    ngram_jaccard_pairs_q,
-    prefix_filter_jaccard_pairs_q,
-    simhash_bit_bias,
-    simhash_pairs_q,
-    token_heavy_hitters_cms,
-    token_zipf_profile,
-    tokenizer_fertility_by_lang,
-    winnowing_match_pairs_q,
-)
-from ._timeseries import (
-    _APPROX_SKETCHES_SQL,
-    _ASOF_SQL,
-    _AUTO_SALTED_SQL,
-    _CLUSTER_SPLIT_SQL,
-    _CONDITIONAL_AGG_SQL,
-    _CUSTOMER_ORDER_HIST_SQL,
-    _DEDUP_CLUSTERS_SQL,
-    _DISJUNCTIVE_SQL,
-    _DOC_REPETITION_SQL,
-    _EMBEDDING_STATS_SQL,
-    _EXACT_QUANTILES_SQL,
-    _EXISTS_SQL,
-    _GROUPING_SETS_SQL,
-    _IDLE_RICH_SQL,
-    _LABEL_OUTLIERS_SQL,
-    _LAG_LEAD_SQL,
-    _LARGE_ORDERS_SQL,
-    _NATION_TRADE_SQL,
-    _OUTER_JOIN_SQL,
-    _PIVOT_SQL,
-    _PRICE_DISTRIBUTION_SQL,
-    _PROMO_SHARE_SQL,
-    _RANGE_JOIN_SQL,
-    _REGEX_EXTRACT_SQL,
-    _SALTED_REVENUE_SQL,
-    _SMALL_QTY_SQL,
-    _SQL_Q3_SQL,
-    _STRATIFIED_SAMPLE_SQL,
-    _SUPPLIER_SHARE_SQL,
-    _SYSTEMATIC_SAMPLE_SQL,
-    _TOP_SUPPLIER_SQL,
-    _WORD_POSITIONS_SQL,
-    approx_sketches,
-    asof_latest_order,
-    auto_salted_event_value,
-    cluster_safe_split,
-    conditional_agg_orders,
-    customer_order_histogram,
-    dedup_clusters_q,
-    disjunctive_predicate_revenue,
-    doc_regex_extract,
-    doc_repetition_filter,
-    doc_word_positions,
-    embedding_label_outliers,
-    embedding_stats,
-    exact_quantiles,
-    exists_high_quantity_orders,
-    grouping_sets_lineitem,
-    idle_rich_customers,
-    large_quantity_orders,
-    nation_trade_flows,
-    order_price_distribution,
-    outer_join_order_coverage,
-    pivot_status_by_flag,
-    price_lag_lead_frames,
-    promo_revenue_share,
-    range_join_order_events,
-    salted_customer_revenue,
-    small_quantity_revenue,
-    sql_interface_q3,
-    stratified_sample_docs,
-    supplier_revenue_share,
-    systematic_sample_revenue,
-    top_supplier_revenue,
-)
-from ._tpch_corpus import (
-    _BPE_MERGES_SQL,
-    _BPE_SEGMENTATION_SQL,
-    _CHEAPEST_SUPPLIER_SQL,
-    _COOCCURRENCE_LIFT_SQL,
-    _DECONTAMINATION_SQL,
-    _DOC_CHUNKING_SQL,
-    _DUP_SPAN_SQL,
-    _EVENT_FUNNEL_SQL,
-    _FORECAST_REVENUE_SQL,
-    _HEAVY_SHIPPER_SQL,
-    _INT8_QUANT_SQL,
-    _IVF_TOPK_SQL,
-    _MULTIMODAL_AUDIO_SQL,
-    _MULTIMODAL_DECODE_SQL,
-    _MULTIMODAL_FRAMES_SQL,
-    _MULTIMODAL_NEAR_DUP_SQL,
-    _NATION_MARKET_SHARE_SQL,
-    _PII_SQL,
-    _PRIORITY_LINES_SQL,
-    _PRODUCT_PROFIT_SQL,
-    _PROPS_VARIANT_SQL,
-    _RECURSIVE_DEPTHS_SQL,
-    _RETENTION_COHORTS_SQL,
-    _RETURNED_ITEM_SQL,
-    _SEMDEDUP_SQL,
-    _SEQUENCE_PACKING_SQL,
-    _SOLE_BLAME_SQL,
-    _SUPPLIER_COUNTS_SQL,
-    _UNIGRAM_LOGPROB_SQL,
-    _VOCAB_STATS_SQL,
-    cheapest_supplier_per_part,
-    corpus_vocab_stats,
-    doc_chunking,
-    doc_decontamination,
-    doc_dup_span_frac,
-    doc_pii_redaction,
-    doc_sequence_packing,
-    doc_unigram_logprob,
-    embedding_int8_quantize,
-    event_funnel,
-    forecast_revenue_change,
-    heavy_shipper_suppliers,
-    nation_market_share,
-    priority_lines_by_returnflag,
-    product_profit_by_nation_year,
-    props_variant_extract,
-    recursive_cte_depths,
-    retention_cohorts,
-    returned_item_revenue,
-    semantic_dedup_vectors,
-    sole_blame_suppliers,
-    supplier_counts_by_part_attrs,
-    token_cooccurrence_lift,
 )
 from ._curation import (
-    _BM25_SQL,
-    _CORPUS_SPLIT_SQL,
-    _CURATION_FUNNEL_SQL,
-    _CURATION_PIPELINE_SQL,
-    _DECONTAM_RATE_SQL,
-    _EVENT_OUTLIERS_SQL,
-    _LEAKAGE_SPLIT_SQL,
-    _LENGTH_HISTOGRAM_SQL,
-    _MIXTURE_PLAN_SQL,
-    _PACKING_EFFICIENCY_SQL,
-    _QUALITY_SELECTION_SQL,
-    _SHUFFLE_SHARDS_SQL,
-    _TFIDF_TOPTERMS_SQL,
-    _TOKENIZER_THROUGHPUT_SQL,
-    _UPSERT_LATEST_SQL,
     _curation_stage_ctes,
     _curation_stages,
-    corpus_curation_pipeline,
-    corpus_length_histogram,
-    corpus_mixture_plan,
-    corpus_tfidf_topterms,
-    curation_funnel_report,
-    decontamination_rate_by_source,
-    doc_bm25_search,
-    doc_corpus_split,
-    doc_leakage_safe_split,
-    doc_quality_selection,
-    doc_shuffle_shards,
-    event_value_outliers,
-    events_upsert_latest,
-    packing_efficiency_report,
-    query_cost_attribution,
-    tokenizer_throughput_by_source,
 )
 from ._graph_ann import (
-    _ASSOC_RULES_SQL,
-    _ATTRIBUTION_SQL,
-    _BENFORD_SQL,
     _BFS_EDGES_CTES,
-    _BIGRAM_LM_SQL,
-    _BLOOM_PRUNE_SQL,
-    _CUSUM_SQL,
-    _DATA_QUALITY_SQL,
-    _DISTINCT_SKETCH_SQL,
-    _DUP_SPAN_REMOVAL_SQL,
-    _FIXED_K_SAMPLE_SQL,
-    _GAP_FILL_SQL,
-    _INCR_AGG_SQL,
-    _INVERTED_INDEX_SQL,
-    _KEEP_BEST_SQL,
-    _LANGID_CONFUSION_SQL,
-    _MAD_OUTLIERS_SQL,
-    _MATRYOSHKA_SQL,
-    _MIXTURE_RESAMPLE_SQL,
-    _NATION_TREND_SQL,
-    _ORDER_IVM_SQL,
-    _PAGERANK_SQL,
-    _PAGE_CLUSTERING_SQL,
-    _PART_SKYLINE_SQL,
-    _PQ_ADC_SQL,
-    _QUALITY_SORT_SHARDS_SQL,
-    _QUANTILE_HIST_SQL,
-    _RAKE_SQL,
-    _SCD2_SQL,
-    _SEASONAL_ANOMALY_SQL,
-    _SEMANTIC_DECONTAM_SQL,
-    _SPEND_DECILES_SQL,
-    _SPEND_GINI_SQL,
-    _STREAM_SKETCH_SQL,
-    _STREAM_STATIC_SQL,
-    _TABLE_PROFILE_SQL,
-    _TRIMMED_STATS_SQL,
-    _activity_kmv_sql,
-    _bfs_sql,
-    _dsir_sql,
-    _hilbert_sql,
-    _hybrid_rrf_sql,
     _ivfpq_sql,
-    _kcore_sql,
-    _key_skew_sql,
-    _pq_rerank_sql,
     _repeat_copurchase_edges,
-    _zorder_sql,
-    activity_overlap_kmv,
-    bloom_prune_join,
-    corpus_inverted_index,
-    corpus_mixture_resample,
-    customer_spend_deciles,
-    data_quality_audit,
-    doc_bigram_lm_quality,
-    doc_dup_span_removal,
-    doc_near_dedup_keep_best,
-    doc_quality_sort_shards,
-    dsir_importance_select,
-    embedding_ivfpq_topk,
-    embedding_pq_adc_topk,
-    embedding_pq_rerank_topk,
-    event_cusum_changepoint,
-    event_seasonal_anomaly,
-    event_value_outliers_mad,
-    event_value_trimmed_stats,
-    events_table_profile,
-    hilbert_layout_stats,
-    hybrid_rrf_search,
-    key_skew_report,
-    langid_confusion_matrix,
-    matryoshka_recall_audit,
-    nation_revenue_trend,
-    order_lineitem_ivm,
-    orders_benford_profile,
-    orders_incremental_agg,
-    page_graph_clustering,
-    page_rank_pages,
-    part_bfs_hops,
-    part_kcore_members,
-    part_skyline,
-    purchase_attribution,
-    rake_keyword_phrases,
-    segment_spend_gini,
-    semantic_decontamination,
-    session_association_rules,
-    stratified_fixed_k_sample,
-    stream_static_segment_spend_q,
-    stream_user_distinct_sketch_q,
-    tem_gap_fill_hourly,
-    user_distinct_sketch,
-    user_type_scd2,
-    value_quantile_histogram,
-    zorder_layout_stats,
 )
 from ._analytics import (
-    _BITMAP_SQL,
-    _COHORT_LTV_SQL,
-    _EWMA_SQL,
-    _GLOBAL_SEQ_SQL,
-    _IMPUTATION_SQL,
-    _INTER_GAP_SQL,
     _KMEANS_K,
     _KMEANS_ROUNDS,
-    _KM_SQL,
-    _LANGID_CALIBRATION_SQL,
-    _MODULARITY_SQL,
-    _REGION_SHARE_SQL,
-    _SOURCE_KL_SQL,
-    _STOCK_SQL,
-    _STREAM_SEASONAL_SQL,
-    _TOPK_TIES_SQL,
-    _WEIGHTED_MEDIAN_SQL,
-    _WELCH_SQL,
-    _WINSORIZE_SQL,
-    _abc_sql,
-    _compaction_sql,
-    _double_billing_sql,
-    _hrw_sql,
-    _k_anon_sql,
     _kmeans_chain_sql,
     _kmeans_fit_centroids,
-    _kmeans_sql,
-    _kmv_anotb_sql,
-    _latency_sql,
-    _lpa_sql,
-    _negative_parts_sql,
-    _neyman_sql,
-    _ppr_sql,
-    _table_checksum_sql,
-    _textrank_sql,
-    _weighted_sample_sql,
-    activity_anotb_kmv,
-    cohort_ltv_curves,
-    copurchase_modularity,
-    customer_k_anonymity,
-    customer_negative_parts,
-    customer_survival_km,
-    doc_global_sequence,
-    doc_shard_rebalance,
-    doc_weighted_sample,
-    event_ewma_chart,
-    event_value_imputation,
-    event_value_winsorize,
-    inter_event_gaps,
-    kmeans_lloyd_clusters,
-    langid_margin_calibration,
-    lineitem_weighted_median,
-    nation_min_latency_paths,
-    neyman_allocation_sample,
-    orders_double_billing,
-    part_abc_classes,
-    part_label_communities,
-    part_stock_balance,
-    ppr_part_recommendations,
-    region_nation_share,
-    shard_compaction_plan,
-    source_token_kl,
-    stream_seasonal_baseline_q,
-    table_checksum_buckets,
-    textrank_keywords,
-    topk_orders_with_ties,
-    user_activity_bitmaps,
-    welch_t_event_types,
 )
-from ._round8 import (
-    _BASKET_HIST_SQL,
-    _BURSTINESS_SQL,
-    _CONVERSION_LATENCY_SQL,
-    _DEDUP_RATE_SQL,
-    _DEGREE_HIST_SQL,
-    _FULFILLMENT_SQL,
-    _GIBBERISH_SQL,
-    _OHLC_SQL,
-    _OPEN_ORDERS_SQL,
-    _PART_HHI_SQL,
-    _PRIORITY_DRIFT_SQL,
-    _REGRESSION_SQL,
-    _RFM_SQL,
-    _RI_AUDIT_SQL,
-    _ROLLING_7D_SQL,
-    _SEASONALITY_DOW_SQL,
-    _STREAM_ANTI_JOIN_SQL,
-    _STREAM_FULL_JOIN_SQL,
-    _STREAM_LEFT_JOIN_SQL,
-    _STREAM_OHLC_SQL,
-    _STREAM_RIGHT_JOIN_SQL,
-    _STREAM_SEMI_JOIN_SQL,
-    _TYPE_PERCENTILES_SQL,
-    _ann_recall_sql,
-    _bot_regularity_sql,
-    _churn_sql,
-    _clustering_coeff_sql,
-    _copurchase_lift_sql,
-    _link_prediction_sql,
-    _mmr_sql,
-    _phrase_search_sql,
-    _quantile_norm_sql,
-    _session_sample_sql,
-    ann_recall_audit,
-    bot_regularity_score,
-    conversion_latency_quantiles,
-    copurchase_clustering_coefficient,
-    copurchase_link_prediction,
-    customer_rfm_segments,
-    daily_revenue_rolling_7d,
-    dedup_graph_degree_histogram,
-    discount_quantity_regression,
-    doc_dedup_rate_by_source,
-    doc_gibberish_filter,
-    event_type_percentiles,
-    event_value_ohlc,
-    mmr_diverse_topk,
-    open_orders_daily,
-    order_basket_size_histogram,
-    order_fulfillment_latency,
-    orders_priority_drift,
-    orders_seasonality_dow,
-    part_copurchase_lift,
-    part_supplier_hhi,
-    phrase_search,
-    quantile_normalize_quality,
-    referential_integrity_audit,
-    session_coherent_sample,
-    stream_click_purchase_anti_join,
-    stream_click_purchase_full_join,
-    stream_click_purchase_left_join,
-    stream_click_purchase_right_join,
-    stream_click_purchase_semi_join,
-    stream_hourly_ohlc,
-    token_burstiness,
-    user_churn_labels,
-)
-
-
-
-REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
-    "tem_hourly_avg": (tem_hourly_avg, _TEM_HOURLY_AVG_SQL),
-    "prefix_filter_jaccard_pairs": (
-        prefix_filter_jaccard_pairs_q,
-        _PREFIX_JACCARD_SQL,
-    ),
-    "token_cooccurrence_lift": (
-        token_cooccurrence_lift,
-        _COOCCURRENCE_LIFT_SQL,
-    ),
-    "tokenizer_fertility_by_lang": (
-        tokenizer_fertility_by_lang,
-        _FERTILITY_SQL,
-    ),
-    "event_markov_transitions": (event_markov_transitions, _MARKOV_SQL),
-    "doc_bm25_search": (doc_bm25_search, _BM25_SQL),
-    "hybrid_rrf_search": (hybrid_rrf_search, _hybrid_rrf_sql()),
-    "multimodal_decode": (multimodal_decode_q, _MULTIMODAL_DECODE_SQL),
-    "multimodal_audio": (multimodal_audio_q, _MULTIMODAL_AUDIO_SQL),
-    "auto_salted_event_value": (auto_salted_event_value, _AUTO_SALTED_SQL),
-    "cross_corpus_near_dup": (cross_corpus_near_dup_q, _CROSS_CORPUS_SQL),
-    "lineitem_measures_unpivot": (lineitem_measures_unpivot, _UNPIVOT_SQL),
-    "doc_winnowing_fingerprints": (
-        doc_winnowing_fingerprints,
-        _WINNOWING_SQL,
-    ),
-    "corpus_ngram_diversity": (corpus_ngram_diversity, _NGRAM_DIVERSITY_SQL),
-    "gopher_quality_filter": (gopher_quality_filter, _GOPHER_FILTER_SQL),
-    "corpus_source_drift": (corpus_source_drift, _SOURCE_DRIFT_SQL),
-    "token_heavy_hitters_cms": (token_heavy_hitters_cms, _CMS_SQL),
-    "containment_dup_pairs": (containment_dup_pairs, _CONTAINMENT_SQL),
-    "embedding_label_outliers": (embedding_label_outliers, _LABEL_OUTLIERS_SQL),
-    "stream_token_heavy_hitters": (
-        stream_token_heavy_hitters_q,
-        _STREAM_CMS_SQL,
-    ),
-    "session_incident_overlap": (
-        session_incident_overlap,
-        _SESSION_OVERLAP_SQL,
-    ),
-    "corpus_snapshot_diff": (corpus_snapshot_diff, _SNAPSHOT_DIFF_SQL),
-    "event_value_drift": (event_value_drift, _EVENT_VALUE_DRIFT_SQL),
-    "cluster_safe_split": (cluster_safe_split, _CLUSTER_SPLIT_SQL),
-    "winnowing_match_pairs": (winnowing_match_pairs_q, _WINNOWING_PAIRS_SQL),
-    "fuzzy_dup_verify_pairs": (fuzzy_dup_verify_pairs, _FUZZY_PAIRS_SQL),
-    "event_hourly_autocorr": (event_hourly_autocorr, _AUTOCORR_SQL),
-    "event_rate_spikes": (event_rate_spikes, _RATE_SPIKES_SQL),
-    "token_zipf_profile": (token_zipf_profile, _ZIPF_SQL),
-    "bloom_prune_join": (bloom_prune_join, _BLOOM_PRUNE_SQL),
-    "part_skyline": (part_skyline, _PART_SKYLINE_SQL),
-    "user_distinct_sketch": (user_distinct_sketch, _DISTINCT_SKETCH_SQL),
-    "stream_user_distinct_sketch": (
-        stream_user_distinct_sketch_q,
-        _STREAM_SKETCH_SQL,
-    ),
-    "value_quantile_histogram": (
-        value_quantile_histogram,
-        _QUANTILE_HIST_SQL,
-    ),
-    "purchase_attribution": (purchase_attribution, _ATTRIBUTION_SQL),
-    "nation_revenue_trend": (nation_revenue_trend, _NATION_TREND_SQL),
-    "event_cusum_changepoint": (event_cusum_changepoint, _CUSUM_SQL),
-    "session_association_rules": (
-        session_association_rules,
-        _ASSOC_RULES_SQL,
-    ),
-    "corpus_inverted_index": (corpus_inverted_index, _INVERTED_INDEX_SQL),
-    "event_value_trimmed_stats": (
-        event_value_trimmed_stats,
-        _TRIMMED_STATS_SQL,
-    ),
-    "customer_spend_deciles": (customer_spend_deciles, _SPEND_DECILES_SQL),
-    "hilbert_layout_stats": (hilbert_layout_stats, _hilbert_sql()),
-    "orders_benford_profile": (orders_benford_profile, _BENFORD_SQL),
-    "langid_confusion_matrix": (
-        langid_confusion_matrix,
-        _LANGID_CONFUSION_SQL,
-    ),
-    "matryoshka_recall_audit": (matryoshka_recall_audit, _MATRYOSHKA_SQL),
-    "part_kcore_members": (part_kcore_members, _kcore_sql()),
-    "segment_spend_gini": (segment_spend_gini, _SPEND_GINI_SQL),
-    "activity_overlap_kmv": (activity_overlap_kmv, _activity_kmv_sql()),
-    "order_lineitem_ivm": (order_lineitem_ivm, _ORDER_IVM_SQL),
-    "part_bfs_hops": (part_bfs_hops, _bfs_sql()),
-    "event_seasonal_anomaly": (
-        event_seasonal_anomaly,
-        _SEASONAL_ANOMALY_SQL,
-    ),
-    "salted_customer_revenue": (salted_customer_revenue, _SALTED_REVENUE_SQL),
-    "rake_keyword_phrases": (rake_keyword_phrases, _RAKE_SQL),
-    "nation_min_latency_paths": (nation_min_latency_paths, _latency_sql()),
-    "part_label_communities": (part_label_communities, _lpa_sql()),
-    "copurchase_modularity": (copurchase_modularity, _MODULARITY_SQL),
-    "doc_shard_rebalance": (doc_shard_rebalance, _hrw_sql()),
-    "source_token_kl": (source_token_kl, _SOURCE_KL_SQL),
-    "doc_weighted_sample": (doc_weighted_sample, _weighted_sample_sql()),
-    "kmeans_lloyd_clusters": (kmeans_lloyd_clusters, _kmeans_sql()),
-    "table_checksum_buckets": (table_checksum_buckets, _table_checksum_sql()),
-    "shard_compaction_plan": (shard_compaction_plan, _compaction_sql()),
-    "event_ewma_chart": (event_ewma_chart, _EWMA_SQL),
-    "customer_survival_km": (customer_survival_km, _KM_SQL),
-    "user_activity_bitmaps": (user_activity_bitmaps, _BITMAP_SQL),
-    "cohort_ltv_curves": (cohort_ltv_curves, _COHORT_LTV_SQL),
-    "stream_seasonal_baseline": (
-        stream_seasonal_baseline_q,
-        _STREAM_SEASONAL_SQL,
-    ),
-    "customer_k_anonymity": (customer_k_anonymity, _k_anon_sql()),
-    "part_stock_balance": (part_stock_balance, _STOCK_SQL),
-    "lineitem_weighted_median": (
-        lineitem_weighted_median,
-        _WEIGHTED_MEDIAN_SQL,
-    ),
-    "topk_orders_with_ties": (topk_orders_with_ties, _TOPK_TIES_SQL),
-    "doc_global_sequence": (doc_global_sequence, _GLOBAL_SEQ_SQL),
-    "activity_anotb_kmv": (activity_anotb_kmv, _kmv_anotb_sql()),
-    "welch_t_event_types": (welch_t_event_types, _WELCH_SQL),
-    "textrank_keywords": (textrank_keywords, _textrank_sql()),
-    "orders_double_billing": (orders_double_billing, _double_billing_sql()),
-    "part_abc_classes": (part_abc_classes, _abc_sql()),
-    "customer_negative_parts": (
-        customer_negative_parts,
-        _negative_parts_sql(),
-    ),
-    "langid_margin_calibration": (
-        langid_margin_calibration,
-        _LANGID_CALIBRATION_SQL,
-    ),
-    "ppr_part_recommendations": (ppr_part_recommendations, _ppr_sql()),
-    "event_value_imputation": (event_value_imputation, _IMPUTATION_SQL),
-    "neyman_allocation_sample": (
-        neyman_allocation_sample,
-        _neyman_sql(),
-    ),
-    "event_value_winsorize": (event_value_winsorize, _WINSORIZE_SQL),
-    "inter_event_gaps": (inter_event_gaps, _INTER_GAP_SQL),
-    "region_nation_share": (region_nation_share, _REGION_SHARE_SQL),
-    "outer_join_order_coverage": (outer_join_order_coverage, _OUTER_JOIN_SQL),
-    "price_lag_lead_frames": (price_lag_lead_frames, _LAG_LEAD_SQL),
-    "sql_interface_q3": (sql_interface_q3, _SQL_Q3_SQL),
-    "small_quantity_revenue": (small_quantity_revenue, _SMALL_QTY_SQL),
-    "exists_high_quantity_orders": (exists_high_quantity_orders, _EXISTS_SQL),
-    "conditional_agg_orders": (conditional_agg_orders, _CONDITIONAL_AGG_SQL),
-    "doc_word_positions": (doc_word_positions, _WORD_POSITIONS_SQL),
-    "order_price_distribution": (
-        order_price_distribution,
-        _PRICE_DISTRIBUTION_SQL,
-    ),
-    "systematic_sample_revenue": (
-        systematic_sample_revenue,
-        _SYSTEMATIC_SAMPLE_SQL,
-    ),
-    "doc_regex_extract": (doc_regex_extract, _REGEX_EXTRACT_SQL),
-    "embedding_stats": (embedding_stats, _EMBEDDING_STATS_SQL),
-    "dedup_clusters": (dedup_clusters_q, _DEDUP_CLUSTERS_SQL),
-    "customer_order_histogram": (
-        customer_order_histogram,
-        _CUSTOMER_ORDER_HIST_SQL,
-    ),
-    "top_supplier_revenue": (top_supplier_revenue, _TOP_SUPPLIER_SQL),
-    "large_quantity_orders": (large_quantity_orders, _LARGE_ORDERS_SQL),
-    "nation_trade_flows": (nation_trade_flows, _NATION_TRADE_SQL),
-    "idle_rich_customers": (idle_rich_customers, _IDLE_RICH_SQL),
-    "doc_repetition_filter": (doc_repetition_filter, _DOC_REPETITION_SQL),
-    "promo_revenue_share": (promo_revenue_share, _PROMO_SHARE_SQL),
-    "disjunctive_predicate_revenue": (
-        disjunctive_predicate_revenue,
-        _DISJUNCTIVE_SQL,
-    ),
-    "supplier_revenue_share": (supplier_revenue_share, _SUPPLIER_SHARE_SQL),
-    "cheapest_supplier_per_part": (
-        cheapest_supplier_per_part,
-        _CHEAPEST_SUPPLIER_SQL,
-    ),
-    "supplier_counts_by_part_attrs": (
-        supplier_counts_by_part_attrs,
-        _SUPPLIER_COUNTS_SQL,
-    ),
-    "sole_blame_suppliers": (sole_blame_suppliers, _SOLE_BLAME_SQL),
-    "forecast_revenue_change": (
-        forecast_revenue_change,
-        _FORECAST_REVENUE_SQL,
-    ),
-    "nation_market_share": (nation_market_share, _NATION_MARKET_SHARE_SQL),
-    "product_profit_by_nation_year": (
-        product_profit_by_nation_year,
-        _PRODUCT_PROFIT_SQL,
-    ),
-    "heavy_shipper_suppliers": (heavy_shipper_suppliers, _HEAVY_SHIPPER_SQL),
-    "doc_unigram_logprob": (doc_unigram_logprob, _UNIGRAM_LOGPROB_SQL),
-    "corpus_vocab_stats": (corpus_vocab_stats, _VOCAB_STATS_SQL),
-    "doc_pii_redaction": (doc_pii_redaction, _PII_SQL),
-    "embedding_int8_quantize": (embedding_int8_quantize, _INT8_QUANT_SQL),
-    "doc_chunking": (doc_chunking, _DOC_CHUNKING_SQL),
-    "recursive_cte_depths": (recursive_cte_depths, _RECURSIVE_DEPTHS_SQL),
-    "semantic_dedup_vectors": (semantic_dedup_vectors, _SEMDEDUP_SQL),
-    "event_funnel": (event_funnel, _EVENT_FUNNEL_SQL),
-    "retention_cohorts": (retention_cohorts, _RETENTION_COHORTS_SQL),
-    "props_variant_extract": (props_variant_extract, _PROPS_VARIANT_SQL),
-    "doc_sequence_packing": (doc_sequence_packing, _SEQUENCE_PACKING_SQL),
-    "doc_decontamination": (doc_decontamination, _DECONTAMINATION_SQL),
-    "doc_dup_span_frac": (doc_dup_span_frac, _DUP_SPAN_SQL),
-    "stratified_sample_docs": (stratified_sample_docs, _STRATIFIED_SAMPLE_SQL),
-    "priority_lines_by_returnflag": (
-        priority_lines_by_returnflag,
-        _PRIORITY_LINES_SQL,
-    ),
-    "returned_item_revenue": (returned_item_revenue, _RETURNED_ITEM_SQL),
-    "range_join_order_events": (range_join_order_events, _RANGE_JOIN_SQL),
-    "doc_corpus_split": (doc_corpus_split, _CORPUS_SPLIT_SQL),
-    "doc_shuffle_shards": (doc_shuffle_shards, _SHUFFLE_SHARDS_SQL),
-    "corpus_mixture_plan": (corpus_mixture_plan, _MIXTURE_PLAN_SQL),
-    "doc_quality_selection": (doc_quality_selection, _QUALITY_SELECTION_SQL),
-    "doc_bpe_segmentation": (doc_bpe_segmentation, _BPE_SEGMENTATION_SQL),
-    "event_value_outliers": (event_value_outliers, _EVENT_OUTLIERS_SQL),
-    "events_upsert_latest": (events_upsert_latest, _UPSERT_LATEST_SQL),
-    "stream_tumbling_hourly": (stream_tumbling_hourly, _STREAM_TUMBLING_SQL),
-    "stream_sliding_2h": (stream_sliding_2h, _STREAM_SLIDING_SQL),
-    "stream_session_windows": (stream_session_windows_q, _STREAM_SESSION_SQL),
-    "stream_click_purchase_join": (
-        stream_click_purchase_join,
-        _STREAM_SS_JOIN_SQL,
-    ),
-    "ivf_topk": (ivf_topk_q, _IVF_TOPK_SQL),
-    "bpe_vocab_merges": (bpe_vocab_merges, _BPE_MERGES_SQL),
-    "multimodal_frames": (multimodal_frames_q, _MULTIMODAL_FRAMES_SQL),
-    "multimodal_near_dup": (multimodal_near_dup_q, _MULTIMODAL_NEAR_DUP_SQL),
-    "doc_leakage_safe_split": (doc_leakage_safe_split, _LEAKAGE_SPLIT_SQL),
-    "corpus_length_histogram": (
-        corpus_length_histogram,
-        _LENGTH_HISTOGRAM_SQL,
-    ),
-    "tem_horizontal_avg": (tem_horizontal_avg, _TEM_HORIZONTAL_AVG_SQL),
-    "envelope_roundtrip": (envelope_roundtrip, _ENVELOPE_ROUNDTRIP_SQL),
-    "q1_pricing_summary": (q1_pricing_summary, _Q1_SQL),
-    "filter_project_scan": (filter_project_scan, _FILTER_PROJECT_SQL),
-    "revenue_by_segment": (revenue_by_segment, _REVENUE_BY_SEGMENT_SQL),
-    "nation_revenue": (nation_revenue, _NATION_REVENUE_SQL),
-    "topk_orders_per_priority": (topk_orders_per_priority, _TOPK_ORDERS_SQL),
-    "running_total_per_customer": (
-        running_total_per_customer,
-        _RUNNING_TOTAL_SQL,
-    ),
-    "rollup_lineitem_status": (rollup_lineitem_status, _ROLLUP_SQL),
-    "cube_order_status": (cube_order_status, _CUBE_SQL),
-    "customers_with_orders": (customers_with_orders, _SEMI_JOIN_SQL),
-    "set_ops_customers": (set_ops_customers, _SET_OPS_SQL),
-    "union_event_slices": (union_event_slices, _UNION_SLICES_SQL),
-    "dedup_first_event": (dedup_first_event, _DEDUP_FIRST_SQL),
-    "case_bucket_quantity": (case_bucket_quantity, _CASE_BUCKET_SQL),
-    "orders_by_month": (orders_by_month, _ORDERS_BY_MONTH_SQL),
-    "part_name_stats": (part_name_stats, _PART_NAME_SQL),
-    "json_props_extract": (json_props_extract, _JSON_PROPS_SQL),
-    "distinct_users_per_type": (distinct_users_per_type, _DISTINCT_USERS_SQL),
-    "top10_lineitems": (top10_lineitems, _TOP10_SQL),
-    "customers_without_orders": (customers_without_orders, _ANTI_JOIN_SQL),
-    "approx_sketches": (approx_sketches, _APPROX_SKETCHES_SQL),
-    "corpus_curation_pipeline": (
-        corpus_curation_pipeline,
-        _CURATION_PIPELINE_SQL,
-    ),
-    "page_rank_pages": (page_rank_pages, _PAGERANK_SQL),
-    "doc_near_dedup_keep_best": (doc_near_dedup_keep_best, _KEEP_BEST_SQL),
-    "doc_bigram_lm_quality": (doc_bigram_lm_quality, _BIGRAM_LM_SQL),
-    "semantic_decontamination": (
-        semantic_decontamination,
-        _SEMANTIC_DECONTAM_SQL,
-    ),
-    "corpus_mixture_resample": (
-        corpus_mixture_resample,
-        _MIXTURE_RESAMPLE_SQL,
-    ),
-    "embedding_pq_adc_topk": (embedding_pq_adc_topk, _PQ_ADC_SQL),
-    "doc_quality_sort_shards": (
-        doc_quality_sort_shards,
-        _QUALITY_SORT_SHARDS_SQL,
-    ),
-    "embedding_ivfpq_topk": (embedding_ivfpq_topk, _ivfpq_sql()),
-    "page_graph_clustering": (page_graph_clustering, _PAGE_CLUSTERING_SQL),
-    "user_type_scd2": (user_type_scd2, _SCD2_SQL),
-    "stratified_fixed_k_sample": (
-        stratified_fixed_k_sample,
-        _FIXED_K_SAMPLE_SQL,
-    ),
-    "data_quality_audit": (data_quality_audit, _DATA_QUALITY_SQL),
-    "events_table_profile": (events_table_profile, _TABLE_PROFILE_SQL),
-    "tem_gap_fill_hourly": (tem_gap_fill_hourly, _GAP_FILL_SQL),
-    "event_value_outliers_mad": (event_value_outliers_mad, _MAD_OUTLIERS_SQL),
-    "corpus_tfidf_topterms": (corpus_tfidf_topterms, _TFIDF_TOPTERMS_SQL),
-    "stream_static_segment_spend": (
-        stream_static_segment_spend_q,
-        _STREAM_STATIC_SQL,
-    ),
-    "zorder_layout_stats": (zorder_layout_stats, _zorder_sql()),
-    "dsir_importance_select": (dsir_importance_select, _dsir_sql()),
-    "embedding_pq_rerank_topk": (embedding_pq_rerank_topk, _pq_rerank_sql()),
-    "doc_dup_span_removal": (doc_dup_span_removal, _DUP_SPAN_REMOVAL_SQL),
-    "orders_incremental_agg": (orders_incremental_agg, _INCR_AGG_SQL),
-    "key_skew_report": (key_skew_report, _key_skew_sql()),
-    "stream_distinct_users": (stream_distinct_users, _STREAM_DISTINCT_SQL),
-    "stream_dedup_watermark": (stream_dedup_watermark, _STREAM_DEDUP_WM_SQL),
-    "stream_doc_quality": (stream_doc_quality_q, _DOC_QUALITY_LANGID_SQL),
-    "doc_text_features": (doc_text_features, _DOC_TEXT_FEATURES_SQL),
-    "doc_quality_langid": (doc_quality_langid, _DOC_QUALITY_LANGID_SQL),
-    "doc_fingerprint_groups": (doc_fingerprint_groups_q, _DOC_FINGERPRINT_SQL),
-    "doc_rolling_fingerprint": (doc_rolling_fingerprint, _ROLLING_SQL),
-    "doc_exact_dedup": (doc_exact_dedup_q, _DOC_EXACT_DEDUP_SQL),
-    "ngram_jaccard_pairs": (ngram_jaccard_pairs_q, _JACCARD_PAIRS_SQL),
-    "minhash_lsh_pairs": (minhash_lsh_pairs_q, _JACCARD_PAIRS_SQL),
-    "simhash_pairs": (simhash_pairs_q, _SIMHASH_PAIRS_SQL),
-    "embedding_cosine_topk": (embedding_cosine_topk, _EMB_TOPK_SQL),
-    "embedding_knn_join": (embedding_knn_join_q, _EMB_KNN_SQL),
-    "embedding_near_dup_pairs": (
-        embedding_near_dup_pairs_q,
-        _EMB_NEAR_DUP_SQL,
-    ),
-    "lsh_ann_pairs": (lsh_ann_pairs_q, _EMB_NEAR_DUP_SQL),
-    "multimodal_meta": (multimodal_meta, _MULTIMODAL_META_SQL),
-    "asof_latest_order": (asof_latest_order, _ASOF_SQL),
-    "sessionize_events": (sessionize_events, _SESSION_SQL_BODY),
-    "grouping_sets_lineitem": (grouping_sets_lineitem, _GROUPING_SETS_SQL),
-    "pivot_status_by_flag": (pivot_status_by_flag, _PIVOT_SQL),
-    "exact_quantiles": (exact_quantiles, _EXACT_QUANTILES_SQL),
-    "event_value_ohlc": (event_value_ohlc, _OHLC_SQL),
-    "stream_hourly_ohlc": (stream_hourly_ohlc, _STREAM_OHLC_SQL),
-    "referential_integrity_audit": (
-        referential_integrity_audit,
-        _RI_AUDIT_SQL,
-    ),
-    "customer_rfm_segments": (customer_rfm_segments, _RFM_SQL),
-    "part_copurchase_lift": (part_copurchase_lift, _copurchase_lift_sql()),
-    "open_orders_daily": (open_orders_daily, _OPEN_ORDERS_SQL),
-    "bot_regularity_score": (bot_regularity_score, _bot_regularity_sql()),
-    "copurchase_link_prediction": (
-        copurchase_link_prediction,
-        _link_prediction_sql(),
-    ),
-    "ann_recall_audit": (ann_recall_audit, _ann_recall_sql()),
-    "doc_gibberish_filter": (doc_gibberish_filter, _GIBBERISH_SQL),
-    "token_burstiness": (token_burstiness, _BURSTINESS_SQL),
-    "orders_priority_drift": (orders_priority_drift, _PRIORITY_DRIFT_SQL),
-    "event_type_percentiles": (
-        event_type_percentiles,
-        _TYPE_PERCENTILES_SQL,
-    ),
-    "part_supplier_hhi": (part_supplier_hhi, _PART_HHI_SQL),
-    "quantile_normalize_quality": (
-        quantile_normalize_quality,
-        _quantile_norm_sql(),
-    ),
-    "stream_click_purchase_left_join": (
-        stream_click_purchase_left_join,
-        _STREAM_LEFT_JOIN_SQL,
-    ),
-    "stream_click_purchase_right_join": (
-        stream_click_purchase_right_join,
-        _STREAM_RIGHT_JOIN_SQL,
-    ),
-    "stream_click_purchase_full_join": (
-        stream_click_purchase_full_join,
-        _STREAM_FULL_JOIN_SQL,
-    ),
-    "stream_click_purchase_semi_join": (
-        stream_click_purchase_semi_join,
-        _STREAM_SEMI_JOIN_SQL,
-    ),
-    "stream_click_purchase_anti_join": (
-        stream_click_purchase_anti_join,
-        _STREAM_ANTI_JOIN_SQL,
-    ),
-    "curation_funnel_report": (
-        curation_funnel_report,
-        _CURATION_FUNNEL_SQL,
-    ),
-    "decontamination_rate_by_source": (
-        decontamination_rate_by_source,
-        _DECONTAM_RATE_SQL,
-    ),
-    "tokenizer_throughput_by_source": (
-        tokenizer_throughput_by_source,
-        _TOKENIZER_THROUGHPUT_SQL,
-    ),
-    # rows-only by nature: the facts are Spark plan internals
-    # (exchange counts, Catalyst size estimates) no other engine can
-    # recompute; contract-tested in tests/test_plans.py instead.
-    "query_cost_attribution": (query_cost_attribution, None),
-    "packing_efficiency_report": (
-        packing_efficiency_report,
-        _PACKING_EFFICIENCY_SQL,
-    ),
-    "dedup_graph_degree_histogram": (
-        dedup_graph_degree_histogram,
-        _DEGREE_HIST_SQL,
-    ),
-    "order_fulfillment_latency": (
-        order_fulfillment_latency,
-        _FULFILLMENT_SQL,
-    ),
-    "simhash_bit_bias": (simhash_bit_bias, _SIMHASH_BIT_BIAS_SQL),
-    "embedding_dimension_profile": (
-        embedding_dimension_profile,
-        _EMB_DIM_PROFILE_SQL,
-    ),
-    "phrase_search": (phrase_search, _phrase_search_sql()),
-    "session_coherent_sample": (
-        session_coherent_sample,
-        _session_sample_sql(),
-    ),
-    "user_churn_labels": (user_churn_labels, _churn_sql()),
-    "mmr_diverse_topk": (mmr_diverse_topk, _mmr_sql()),
-    "discount_quantity_regression": (
-        discount_quantity_regression,
-        _REGRESSION_SQL,
-    ),
-    "copurchase_clustering_coefficient": (
-        copurchase_clustering_coefficient,
-        _clustering_coeff_sql(),
-    ),
-    "orders_seasonality_dow": (
-        orders_seasonality_dow,
-        _SEASONALITY_DOW_SQL,
-    ),
-    "daily_revenue_rolling_7d": (
-        daily_revenue_rolling_7d,
-        _ROLLING_7D_SQL,
-    ),
-    "conversion_latency_quantiles": (
-        conversion_latency_quantiles,
-        _CONVERSION_LATENCY_SQL,
-    ),
-    "doc_dedup_rate_by_source": (
-        doc_dedup_rate_by_source,
-        _DEDUP_RATE_SQL,
-    ),
-    "order_basket_size_histogram": (
-        order_basket_size_histogram,
-        _BASKET_HIST_SQL,
-    ),
-}
-
-
 
 
 # --- bench headline set ----------------------------------------------
@@ -1986,55 +1032,6 @@ FROM (SELECT DISTINCT src FROM f0) s LEFT JOIN (
     return "".join(parts)
 
 
-REGISTRY.update(
-    {
-        "embedding_hard_negatives": (
-            embedding_hard_negatives,
-            _HARD_NEG_SQL,
-        ),
-        "part_harmonic_centrality": (
-            part_harmonic_centrality,
-            _harmonic_sql(),
-        ),
-        "session_event_trigrams": (
-            session_event_trigrams,
-            _trigram_sql(),
-        ),
-        "incremental_curation_delta": (
-            incremental_curation_delta,
-            _CURATION_DELTA_SQL,
-        ),
-        "customer_l_diversity": (
-            customer_l_diversity,
-            _l_diversity_sql(),
-        ),
-        "embedding_label_centroid_drift": (
-            embedding_label_centroid_drift,
-            _LABEL_DRIFT_SQL,
-        ),
-        "running_distinct_users": (
-            running_distinct_users,
-            _RUNNING_DISTINCT_SQL,
-        ),
-        "kmeans_cluster_medoids": (
-            kmeans_cluster_medoids,
-            _kmeans_medoids_sql(),
-        ),
-        "embedding_spectral_outliers": (
-            embedding_spectral_outliers,
-            _spectral_outliers_sql(),
-        ),
-        "nn_descent_knn_graph": (
-            nn_descent_knn_graph,
-            _nn_descent_sql(),
-        ),
-        "embedding_top_eigenvector": (
-            embedding_top_eigenvector,
-            _eigvec_sql(),
-        ),
-        "doc_mojibake_audit": (doc_mojibake_audit, _MOJIBAKE_SQL),
-    }
-)
 
 
 # --- round 11 ---------------------------------------------------------
@@ -2280,16 +1277,6 @@ GROUP BY 1
 """
 
 
-REGISTRY.update(
-    {
-        "ivfpq_persisted_topk": (ivfpq_persisted_topk, _ivfpq_sql()),
-        "copurchase_hyperball": (copurchase_hyperball, _hyperball_sql()),
-        "dedup_signal_agreement": (
-            dedup_signal_agreement,
-            _SIGNAL_AGREEMENT_SQL,
-        ),
-    }
-)
 
 
 # --- round 12 ---------------------------------------------------------
@@ -2745,27 +1732,89 @@ FROM af LEFT JOIN dup d ON d.vec_id = af.vec_id"""
     )
 
 
-REGISTRY.update(
-    {
-        "weighted_priority_sample": (
-            weighted_priority_sample,
-            _aes_sql(),
-        ),
-        "stream_ann_ingest_dedup": (
-            stream_ann_ingest_dedup,
-            _ann_ingest_sql(),
-        ),
-        "stratified_priority_sample": (
-            stratified_priority_sample,
-            _stratified_aes_sql(),
-        ),
-        "stream_priority_sample": (
-            stream_priority_sample_q,
-            _aes_sql(),
-        ),
-        "bbit_minhash_audit": (bbit_minhash_audit, _bbit_sql()),
-    }
-)
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "embedding_hard_negatives": (
+        embedding_hard_negatives,
+        _HARD_NEG_SQL,
+    ),
+    "part_harmonic_centrality": (
+        part_harmonic_centrality,
+        _harmonic_sql(),
+    ),
+    "session_event_trigrams": (
+        session_event_trigrams,
+        _trigram_sql(),
+    ),
+    "incremental_curation_delta": (
+        incremental_curation_delta,
+        _CURATION_DELTA_SQL,
+    ),
+    "customer_l_diversity": (
+        customer_l_diversity,
+        _l_diversity_sql(),
+    ),
+    "embedding_label_centroid_drift": (
+        embedding_label_centroid_drift,
+        _LABEL_DRIFT_SQL,
+    ),
+    "running_distinct_users": (
+        running_distinct_users,
+        _RUNNING_DISTINCT_SQL,
+    ),
+    "kmeans_cluster_medoids": (
+        kmeans_cluster_medoids,
+        _kmeans_medoids_sql(),
+    ),
+    "embedding_spectral_outliers": (
+        embedding_spectral_outliers,
+        _spectral_outliers_sql(),
+    ),
+    "nn_descent_knn_graph": (
+        nn_descent_knn_graph,
+        _nn_descent_sql(),
+    ),
+    "embedding_top_eigenvector": (
+        embedding_top_eigenvector,
+        _eigvec_sql(),
+    ),
+    "doc_mojibake_audit": (doc_mojibake_audit, _MOJIBAKE_SQL),
+    "ivfpq_persisted_topk": (ivfpq_persisted_topk, _ivfpq_sql()),
+    "copurchase_hyperball": (copurchase_hyperball, _hyperball_sql()),
+    "dedup_signal_agreement": (
+        dedup_signal_agreement,
+        _SIGNAL_AGREEMENT_SQL,
+    ),
+    "weighted_priority_sample": (
+        weighted_priority_sample,
+        _aes_sql(),
+    ),
+    "stream_ann_ingest_dedup": (
+        stream_ann_ingest_dedup,
+        _ann_ingest_sql(),
+    ),
+    "stratified_priority_sample": (
+        stratified_priority_sample,
+        _stratified_aes_sql(),
+    ),
+    "stream_priority_sample": (
+        stream_priority_sample_q,
+        _aes_sql(),
+    ),
+    "bbit_minhash_audit": (bbit_minhash_audit, _bbit_sql()),
+}
+
+
+REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+    **_core.QUERIES,
+    **_northstar.QUERIES,
+    **_timeseries.QUERIES,
+    **_tpch_corpus.QUERIES,
+    **_curation.QUERIES,
+    **_graph_ann.QUERIES,
+    **_analytics.QUERIES,
+    **_round8.QUERIES,
+    **QUERIES,
+}
 
 
 def queries() -> dict[str, QueryFn]:

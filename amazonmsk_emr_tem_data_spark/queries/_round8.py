@@ -1,35 +1,19 @@
-"""Round-8 sessions: OHLC, market-basket, ANN audit, percentiles, phrase search, OLS, windows.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""Round-8 sessions: OHLC, market-basket, ANN audit, percentiles, phrase search, OLS, windows."""
 
 from __future__ import annotations
 
-from __future__ import annotations
-
-from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
-from ._core import QueryFn
-from ._core import (
-    _cents,
-    _dsum,
-    _ranked_topk,
-)
+from ._core import QueryFn, _cents, _dsum, _ranked_topk
 from ._northstar import (
     _COS_SQL,
     _EMB_KNN_SQL,
@@ -48,7 +32,6 @@ from ._tpch_corpus import (
 from ._curation import (
     _QUALITY_SCORE_SQL,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -2825,3 +2808,97 @@ SELECT k, n_orders,
        CAST(n_orders * k * (k - 1) // 2 AS BIGINT) AS pair_cost
 FROM hist
 """
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "event_value_ohlc": (event_value_ohlc, _OHLC_SQL),
+    "stream_hourly_ohlc": (stream_hourly_ohlc, _STREAM_OHLC_SQL),
+    "referential_integrity_audit": (
+        referential_integrity_audit,
+        _RI_AUDIT_SQL,
+    ),
+    "customer_rfm_segments": (customer_rfm_segments, _RFM_SQL),
+    "part_copurchase_lift": (part_copurchase_lift, _copurchase_lift_sql()),
+    "open_orders_daily": (open_orders_daily, _OPEN_ORDERS_SQL),
+    "bot_regularity_score": (bot_regularity_score, _bot_regularity_sql()),
+    "copurchase_link_prediction": (
+        copurchase_link_prediction,
+        _link_prediction_sql(),
+    ),
+    "ann_recall_audit": (ann_recall_audit, _ann_recall_sql()),
+    "doc_gibberish_filter": (doc_gibberish_filter, _GIBBERISH_SQL),
+    "token_burstiness": (token_burstiness, _BURSTINESS_SQL),
+    "orders_priority_drift": (orders_priority_drift, _PRIORITY_DRIFT_SQL),
+    "event_type_percentiles": (
+        event_type_percentiles,
+        _TYPE_PERCENTILES_SQL,
+    ),
+    "part_supplier_hhi": (part_supplier_hhi, _PART_HHI_SQL),
+    "quantile_normalize_quality": (
+        quantile_normalize_quality,
+        _quantile_norm_sql(),
+    ),
+    "stream_click_purchase_left_join": (
+        stream_click_purchase_left_join,
+        _STREAM_LEFT_JOIN_SQL,
+    ),
+    "stream_click_purchase_right_join": (
+        stream_click_purchase_right_join,
+        _STREAM_RIGHT_JOIN_SQL,
+    ),
+    "stream_click_purchase_full_join": (
+        stream_click_purchase_full_join,
+        _STREAM_FULL_JOIN_SQL,
+    ),
+    "stream_click_purchase_semi_join": (
+        stream_click_purchase_semi_join,
+        _STREAM_SEMI_JOIN_SQL,
+    ),
+    "stream_click_purchase_anti_join": (
+        stream_click_purchase_anti_join,
+        _STREAM_ANTI_JOIN_SQL,
+    ),
+    "dedup_graph_degree_histogram": (
+        dedup_graph_degree_histogram,
+        _DEGREE_HIST_SQL,
+    ),
+    "order_fulfillment_latency": (
+        order_fulfillment_latency,
+        _FULFILLMENT_SQL,
+    ),
+    "phrase_search": (phrase_search, _phrase_search_sql()),
+    "session_coherent_sample": (
+        session_coherent_sample,
+        _session_sample_sql(),
+    ),
+    "user_churn_labels": (user_churn_labels, _churn_sql()),
+    "mmr_diverse_topk": (mmr_diverse_topk, _mmr_sql()),
+    "discount_quantity_regression": (
+        discount_quantity_regression,
+        _REGRESSION_SQL,
+    ),
+    "copurchase_clustering_coefficient": (
+        copurchase_clustering_coefficient,
+        _clustering_coeff_sql(),
+    ),
+    "orders_seasonality_dow": (
+        orders_seasonality_dow,
+        _SEASONALITY_DOW_SQL,
+    ),
+    "daily_revenue_rolling_7d": (
+        daily_revenue_rolling_7d,
+        _ROLLING_7D_SQL,
+    ),
+    "conversion_latency_quantiles": (
+        conversion_latency_quantiles,
+        _CONVERSION_LATENCY_SQL,
+    ),
+    "doc_dedup_rate_by_source": (
+        doc_dedup_rate_by_source,
+        _DEDUP_RATE_SQL,
+    ),
+    "order_basket_size_histogram": (
+        order_basket_size_histogram,
+        _BASKET_HIST_SQL,
+    ),
+}

@@ -1,31 +1,18 @@
-"""Time-series joins (as-of/range), grouping sets/pivot, sketches, subqueries, sampling.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""Time-series joins (as-of/range), grouping sets/pivot, sketches, subqueries, sampling."""
 
 from __future__ import annotations
-
-from __future__ import annotations
-
-from collections.abc import Callable
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
-from ._core import QueryFn
 from ._core import (
+    QueryFn,
     _DISC_PRICE_CENTS_SQL,
     _SUM_DISC_PRICE_SQL,
     _cents,
@@ -38,7 +25,6 @@ from ._northstar import (
     _HASH64_SQL,
     _TOKS_SQL,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -1527,3 +1513,51 @@ SELECT f.doc_id, f.n_tokens, f.dup_bigram_frac, f.dup_trigram_frac,
        (f.dup_bigram_frac <= 0.04 AND tf.top_token_frac <= 0.10) AS keep
 FROM feat f JOIN tf USING (doc_id)
 """
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "auto_salted_event_value": (auto_salted_event_value, _AUTO_SALTED_SQL),
+    "embedding_label_outliers": (embedding_label_outliers, _LABEL_OUTLIERS_SQL),
+    "cluster_safe_split": (cluster_safe_split, _CLUSTER_SPLIT_SQL),
+    "salted_customer_revenue": (salted_customer_revenue, _SALTED_REVENUE_SQL),
+    "outer_join_order_coverage": (outer_join_order_coverage, _OUTER_JOIN_SQL),
+    "price_lag_lead_frames": (price_lag_lead_frames, _LAG_LEAD_SQL),
+    "sql_interface_q3": (sql_interface_q3, _SQL_Q3_SQL),
+    "small_quantity_revenue": (small_quantity_revenue, _SMALL_QTY_SQL),
+    "exists_high_quantity_orders": (exists_high_quantity_orders, _EXISTS_SQL),
+    "conditional_agg_orders": (conditional_agg_orders, _CONDITIONAL_AGG_SQL),
+    "doc_word_positions": (doc_word_positions, _WORD_POSITIONS_SQL),
+    "order_price_distribution": (
+        order_price_distribution,
+        _PRICE_DISTRIBUTION_SQL,
+    ),
+    "systematic_sample_revenue": (
+        systematic_sample_revenue,
+        _SYSTEMATIC_SAMPLE_SQL,
+    ),
+    "doc_regex_extract": (doc_regex_extract, _REGEX_EXTRACT_SQL),
+    "embedding_stats": (embedding_stats, _EMBEDDING_STATS_SQL),
+    "dedup_clusters": (dedup_clusters_q, _DEDUP_CLUSTERS_SQL),
+    "customer_order_histogram": (
+        customer_order_histogram,
+        _CUSTOMER_ORDER_HIST_SQL,
+    ),
+    "top_supplier_revenue": (top_supplier_revenue, _TOP_SUPPLIER_SQL),
+    "large_quantity_orders": (large_quantity_orders, _LARGE_ORDERS_SQL),
+    "nation_trade_flows": (nation_trade_flows, _NATION_TRADE_SQL),
+    "idle_rich_customers": (idle_rich_customers, _IDLE_RICH_SQL),
+    "doc_repetition_filter": (doc_repetition_filter, _DOC_REPETITION_SQL),
+    "promo_revenue_share": (promo_revenue_share, _PROMO_SHARE_SQL),
+    "disjunctive_predicate_revenue": (
+        disjunctive_predicate_revenue,
+        _DISJUNCTIVE_SQL,
+    ),
+    "supplier_revenue_share": (supplier_revenue_share, _SUPPLIER_SHARE_SQL),
+    "stratified_sample_docs": (stratified_sample_docs, _STRATIFIED_SAMPLE_SQL),
+    "range_join_order_events": (range_join_order_events, _RANGE_JOIN_SQL),
+    "approx_sketches": (approx_sketches, _APPROX_SKETCHES_SQL),
+    "asof_latest_order": (asof_latest_order, _ASOF_SQL),
+    "grouping_sets_lineitem": (grouping_sets_lineitem, _GROUPING_SETS_SQL),
+    "pivot_status_by_flag": (pivot_status_by_flag, _PIVOT_SQL),
+    "exact_quantiles": (exact_quantiles, _EXACT_QUANTILES_SQL),
+}

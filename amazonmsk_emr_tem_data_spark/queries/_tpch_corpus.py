@@ -1,31 +1,18 @@
-"""Round-2 TPC-H parity shapes + corpus LM-quality operators.
-
-Split from the former single-module queries.py (r12); execution order and
-namespace semantics preserved via explicit cross-part imports.
-"""
+"""Round-2 TPC-H parity shapes + corpus LM-quality operators."""
 
 from __future__ import annotations
 
-from __future__ import annotations
-
-from collections.abc import Callable
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.codec import from_kafka_envelope, to_kafka_envelope
-from ..functions.tem import horizontal_mean
-from ..schemas import EVENTS_SCHEMA
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
-from ._core import QueryFn
 from ._core import (
+    QueryFn,
     _DISC_PRICE_CENTS_SQL,
     _EP100,
     _cents,
@@ -36,8 +23,14 @@ from ._northstar import (
     _COS_SQL,
     _HASH64_SQL,
     _TOKS_SQL,
+    bpe_vocab_merges,
+    doc_bpe_segmentation,
+    ivf_topk_q,
+    multimodal_audio_q,
+    multimodal_decode_q,
+    multimodal_frames_q,
+    multimodal_near_dup_q,
 )
-
 
 
 # ---------------------------------------------------------------------------
@@ -1782,3 +1775,55 @@ WHERE s.s_suppkey IN (
         > 3 * CAST(total_grid AS DECIMAL(38,0))
 )
 """
+
+
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    "token_cooccurrence_lift": (
+        token_cooccurrence_lift,
+        _COOCCURRENCE_LIFT_SQL,
+    ),
+    "multimodal_decode": (multimodal_decode_q, _MULTIMODAL_DECODE_SQL),
+    "multimodal_audio": (multimodal_audio_q, _MULTIMODAL_AUDIO_SQL),
+    "cheapest_supplier_per_part": (
+        cheapest_supplier_per_part,
+        _CHEAPEST_SUPPLIER_SQL,
+    ),
+    "supplier_counts_by_part_attrs": (
+        supplier_counts_by_part_attrs,
+        _SUPPLIER_COUNTS_SQL,
+    ),
+    "sole_blame_suppliers": (sole_blame_suppliers, _SOLE_BLAME_SQL),
+    "forecast_revenue_change": (
+        forecast_revenue_change,
+        _FORECAST_REVENUE_SQL,
+    ),
+    "nation_market_share": (nation_market_share, _NATION_MARKET_SHARE_SQL),
+    "product_profit_by_nation_year": (
+        product_profit_by_nation_year,
+        _PRODUCT_PROFIT_SQL,
+    ),
+    "heavy_shipper_suppliers": (heavy_shipper_suppliers, _HEAVY_SHIPPER_SQL),
+    "doc_unigram_logprob": (doc_unigram_logprob, _UNIGRAM_LOGPROB_SQL),
+    "corpus_vocab_stats": (corpus_vocab_stats, _VOCAB_STATS_SQL),
+    "doc_pii_redaction": (doc_pii_redaction, _PII_SQL),
+    "embedding_int8_quantize": (embedding_int8_quantize, _INT8_QUANT_SQL),
+    "doc_chunking": (doc_chunking, _DOC_CHUNKING_SQL),
+    "recursive_cte_depths": (recursive_cte_depths, _RECURSIVE_DEPTHS_SQL),
+    "semantic_dedup_vectors": (semantic_dedup_vectors, _SEMDEDUP_SQL),
+    "event_funnel": (event_funnel, _EVENT_FUNNEL_SQL),
+    "retention_cohorts": (retention_cohorts, _RETENTION_COHORTS_SQL),
+    "props_variant_extract": (props_variant_extract, _PROPS_VARIANT_SQL),
+    "doc_sequence_packing": (doc_sequence_packing, _SEQUENCE_PACKING_SQL),
+    "doc_decontamination": (doc_decontamination, _DECONTAMINATION_SQL),
+    "doc_dup_span_frac": (doc_dup_span_frac, _DUP_SPAN_SQL),
+    "priority_lines_by_returnflag": (
+        priority_lines_by_returnflag,
+        _PRIORITY_LINES_SQL,
+    ),
+    "returned_item_revenue": (returned_item_revenue, _RETURNED_ITEM_SQL),
+    "doc_bpe_segmentation": (doc_bpe_segmentation, _BPE_SEGMENTATION_SQL),
+    "ivf_topk": (ivf_topk_q, _IVF_TOPK_SQL),
+    "bpe_vocab_merges": (bpe_vocab_merges, _BPE_MERGES_SQL),
+    "multimodal_frames": (multimodal_frames_q, _MULTIMODAL_FRAMES_SQL),
+    "multimodal_near_dup": (multimodal_near_dup_q, _MULTIMODAL_NEAR_DUP_SQL),
+}

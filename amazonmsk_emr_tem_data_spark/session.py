@@ -44,20 +44,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r13: AQE's coalesced-partition floor, env-overridable. A 64k
-        # floor was BUILT, A/B-MEASURED, and REJECTED as the default:
-        # it widens byte-light CPU-dense post-shuffle stages (the 1 MB
-        # default ran nn_descent's three hottest stages — 2.0-4.1 s of
-        # compute each — on <= 2 tasks), and a 9-query subset A/B read
-        # 19.5 s vs 21.1 s in its favor, but the full-bench A/B read
-        # 65.7 s (1m) vs 76.5 s (64k) with erratic 2-4x swings on
-        # Arrow-heavy queries (ivf_topk 1.2-10.2 s across repeats —
-        # python-worker fan-out churn). Default stays Spark's 1m; a
-        # cluster profile can override via env.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

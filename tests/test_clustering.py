@@ -152,7 +152,7 @@ def test_part_kcore_fixture_converges_within_rounds(spark, sf_dir):
     produces a deeper cascade, this fails before a half-peeled result
     ships as green."""
     from amazonmsk_emr_tem_data_spark.operators.graph import kcore
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._graph_ann import (
         _knn_sparsify_edges,
         _repeat_copurchase_edges_w,
     )
@@ -287,7 +287,9 @@ def test_kmeans_inertia_monotone_nonincreasing(spark, sf_dir):
     so allow that much slack — a real regression (wrong argmin, wrong
     centroid denominator, swapped rounds) moves inertia by orders of
     magnitude more."""
-    from amazonmsk_emr_tem_data_spark.queries import kmeans_lloyd_clusters
+    from amazonmsk_emr_tem_data_spark.queries._analytics import (
+        kmeans_lloyd_clusters,
+    )
 
     def inertia(rounds):
         rows = kmeans_lloyd_clusters(spark, sf_dir, rounds=rounds).collect()

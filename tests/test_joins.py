@@ -5,7 +5,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from amazonmsk_emr_tem_data_spark.operators.joins import asof_join, range_join
-from amazonmsk_emr_tem_data_spark.queries import approx_sketches
+from amazonmsk_emr_tem_data_spark.queries._timeseries import approx_sketches
 from amazonmsk_emr_tem_data_spark.sources.files import load_table
 
 

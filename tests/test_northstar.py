@@ -1104,7 +1104,9 @@ def test_int8_quantize_bounds_and_reconstruction(spark, emb):
         assert -127 <= r["qmin"] <= r["qmax"] <= 127
         assert r["scale"] > 0
     # reconstruction cosine must be high for 64-dim int8
-    from amazonmsk_emr_tem_data_spark.queries import embedding_int8_quantize
+    from amazonmsk_emr_tem_data_spark.queries._tpch_corpus import (
+        embedding_int8_quantize,
+    )
 
     recon = embedding_int8_quantize(
         spark, "/root/testdata/sf0.001"
@@ -1218,7 +1220,9 @@ def test_quality_sort_shards_concatenation_is_global_order(spark, sf_dir):
     """The operator's whole point: reading shard 0..S-1, each in
     (quality desc, doc_id) order, must reproduce the exact global
     descending-quality order, with near-balanced shard sizes."""
-    from amazonmsk_emr_tem_data_spark.queries import doc_quality_sort_shards
+    from amazonmsk_emr_tem_data_spark.queries._graph_ann import (
+        doc_quality_sort_shards,
+    )
 
     rows = sorted(
         [tuple(r) for r in doc_quality_sort_shards(spark, sf_dir).collect()],
@@ -1493,7 +1497,9 @@ def test_cluster_safe_split_never_straddles_near_dups(spark, sf_dir):
     from amazonmsk_emr_tem_data_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
-    from amazonmsk_emr_tem_data_spark.queries import cluster_safe_split
+    from amazonmsk_emr_tem_data_spark.queries._timeseries import (
+        cluster_safe_split,
+    )
     from amazonmsk_emr_tem_data_spark.sources.files import load_table
 
     split = {

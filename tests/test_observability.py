@@ -5,12 +5,16 @@ sparsifier that part_kcore_members peels."""
 
 from pyspark.sql import functions as F
 
-from amazonmsk_emr_tem_data_spark.queries import (
-    REGISTRY,
-    _knn_sparsify_edges,
+from amazonmsk_emr_tem_data_spark.queries import REGISTRY
+from amazonmsk_emr_tem_data_spark.queries._graph_ann import _knn_sparsify_edges
+from amazonmsk_emr_tem_data_spark.queries._curation import (
     corpus_curation_pipeline,
     curation_funnel_report,
+)
+from amazonmsk_emr_tem_data_spark.queries._round8 import (
     dedup_graph_degree_histogram,
+)
+from amazonmsk_emr_tem_data_spark.queries._northstar import (
     embedding_dimension_profile,
     simhash_bit_bias,
 )
@@ -86,7 +90,7 @@ def test_packing_report_matches_pipeline_pack_ids(spark, sf_dir):
     and its token totals must reconcile with the pipeline rows."""
     from collections import defaultdict
 
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._curation import (
         packing_efficiency_report,
     )
 

@@ -78,6 +78,66 @@ def test_import_reads_no_repo_artifacts():
     ] == []
 
 
+def test_query_modules_have_no_unused_imports():
+    """Every name a query module imports is read somewhere in that
+    module (or listed in its ``__all__``), and ``from __future__`` is
+    imported at most once: no module re-exports names it does not use."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "amazonmsk_emr_tem_data_spark/queries"
+    )
+    problems = []
+    for path in sorted(pkg.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        loaded = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                getattr(t, "id", None) == "__all__" for t in node.targets
+            ):
+                loaded |= set(ast.literal_eval(node.value))
+        futures = 0
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                futures += 1
+                if futures > 1:
+                    problems.append(f"{path.name}:{node.lineno} __future__")
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for alias in node.names:
+                    bound = alias.asname or alias.name.split(".")[0]
+                    if bound not in loaded:
+                        problems.append(f"{path.name}:{node.lineno} {bound}")
+    assert problems == []
+
+
+def test_query_tables_partition_the_registry():
+    """Each query is declared in exactly one domain module's QUERIES
+    table, and REGISTRY is exactly their union."""
+    import importlib
+
+    modules = (
+        "_core", "_northstar", "_timeseries", "_tpch_corpus", "_curation",
+        "_graph_ann", "_analytics", "_round8", "_registry",
+    )
+    seen: dict[str, str] = {}
+    merged = {}
+    for mod in modules:
+        table = importlib.import_module(
+            f"amazonmsk_emr_tem_data_spark.queries.{mod}"
+        ).QUERIES
+        dup = {name: seen[name] for name in table if name in seen}
+        assert not dup, f"{mod} redeclares queries from {dup}"
+        seen.update(dict.fromkeys(table, mod))
+        merged.update(table)
+    assert merged == REGISTRY
+
+
 def test_no_vacuous_queries(spark, sf_dir):
     """Every registry query must match >= 1 row at sf0.001 — NO
     exemptions. A 0-row result makes any oracle comparison vacuously

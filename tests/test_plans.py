@@ -457,9 +457,8 @@ def test_incremental_agg_cutoff_invariance(spark, sf_dir):
     # cent-grid SUM merge by addition exactly.
     from collections import Counter
 
-    from amazonmsk_emr_tem_data_spark import queries as Q
-    # patch the DEFINING module (r12 package split): the query function
-    # resolves _INCR_CUTOFF from its own module globals at call time
+    # patch the DEFINING module: the query function resolves
+    # _INCR_CUTOFF from its own module globals at call time
     from amazonmsk_emr_tem_data_spark.queries import _graph_ann as Qm
 
     ref = None
@@ -468,7 +467,7 @@ def test_incremental_agg_cutoff_invariance(spark, sf_dir):
         for cutoff in ("1900-01-01", "1996-01-01", "1997-06-15", "2100-01-01"):
             Qm._INCR_CUTOFF = cutoff
             got = Counter(
-                tuple(r) for r in Q.orders_incremental_agg(spark, sf_dir).collect()
+                tuple(r) for r in Qm.orders_incremental_agg(spark, sf_dir).collect()
             )
             if ref is None:
                 ref = got
@@ -822,8 +821,8 @@ def test_query_cost_attribution_matches_plan_facts(spark, sf_dir):
     instead of a DuckDB twin), and the no-cartesian invariant must
     hold over whatever slice it reports."""
     from amazonmsk_emr_tem_data_spark.plans.inspect import plan_facts
-    from amazonmsk_emr_tem_data_spark.queries import (
-        REGISTRY,
+    from amazonmsk_emr_tem_data_spark.queries import REGISTRY
+    from amazonmsk_emr_tem_data_spark.queries._curation import (
         query_cost_attribution,
     )
 
@@ -851,8 +850,8 @@ def test_query_cost_attribution_matches_plan_facts(spark, sf_dir):
 
 def test_query_cost_attribution_default_scope_is_bench(spark, sf_dir):
     """Default scope = BENCH_HEADLINE minus itself."""
-    from amazonmsk_emr_tem_data_spark.queries import (
-        BENCH_HEADLINE,
+    from amazonmsk_emr_tem_data_spark.queries import BENCH_HEADLINE
+    from amazonmsk_emr_tem_data_spark.queries._curation import (
         query_cost_attribution,
     )
 

@@ -738,7 +738,9 @@ def test_hourly_autocorr_matches_reference(spark, cells, tmp_path_factory):
     the zero-variance → NULL guard) under any type/hour layout."""
     import math
 
-    from amazonmsk_emr_tem_data_spark.queries import event_hourly_autocorr
+    from amazonmsk_emr_tem_data_spark.queries._northstar import (
+        event_hourly_autocorr,
+    )
 
     d = str(tmp_path_factory.mktemp("autocorr"))
     _write_events(cells, d)
@@ -790,7 +792,9 @@ def test_rate_spikes_match_reference(spark, cells, tmp_path_factory):
     """event_rate_spikes must equal the integer Python reference:
     trailing-24-row baselines over the dense grid (partial baselines
     in the first day), the truncated-ppm ratio, and the 2.5× flag."""
-    from amazonmsk_emr_tem_data_spark.queries import event_rate_spikes
+    from amazonmsk_emr_tem_data_spark.queries._northstar import (
+        event_rate_spikes,
+    )
 
     d = str(tmp_path_factory.mktemp("spikes"))
     _write_events(cells, d)
@@ -828,7 +832,9 @@ def test_zipf_profile_matches_reference(spark, toks, tmp_path_factory):
     tie-broken ranks, bit-length buckets, exact per-bucket sums."""
     from hashlib import md5
 
-    from amazonmsk_emr_tem_data_spark.queries import token_zipf_profile
+    from amazonmsk_emr_tem_data_spark.queries._northstar import (
+        token_zipf_profile,
+    )
 
     d = str(tmp_path_factory.mktemp("zipf"))
     spark.createDataFrame(
@@ -1023,7 +1029,7 @@ def test_quantile_histogram_bound_holds(spark, vals, tmp_path_factory):
     (floor-division bins, not truncation)."""
     import math
 
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._graph_ann import (
         value_quantile_histogram,
     )
 
@@ -1066,7 +1072,9 @@ def test_cusum_changepoint_matches_reference(spark, cells, tmp_path_factory):
     the argmax is the final hour (n == i)."""
     import math
 
-    from amazonmsk_emr_tem_data_spark.queries import event_cusum_changepoint
+    from amazonmsk_emr_tem_data_spark.queries._graph_ann import (
+        event_cusum_changepoint,
+    )
 
     d = str(tmp_path_factory.mktemp("cusum"))
     rows, eid = [], 0
@@ -1129,7 +1137,7 @@ def test_association_rules_match_bruteforce(spark, rows, tmp_path_factory):
     Python sessionizes with the same strictly-greater-than 30-min gap,
     builds per-session type sets, and checks every ordered pair's
     truncated-ppm metrics."""
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._graph_ann import (
         session_association_rules,
     )
 
@@ -1233,7 +1241,7 @@ def test_neyman_waterfill_meets_budget_under_saturation(spark, tmp_path):
     absorb the other 197."""
     import pandas as pd
 
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._analytics import (
         neyman_allocation_sample,
     )
 
@@ -1257,7 +1265,9 @@ def test_textrank_vocab_cap_identity_and_bound(spark, sf_dir):
     (the registry/oracle contract is the default None path); a small
     cap must rank only top-frequency words (r7 VERDICT ask #7 — the
     cap bounds the 100x vocab-graph iteration cost)."""
-    from amazonmsk_emr_tem_data_spark.queries import textrank_keywords
+    from amazonmsk_emr_tem_data_spark.queries._analytics import (
+        textrank_keywords,
+    )
 
     from amazonmsk_emr_tem_data_spark.functions.text import tokens
     from amazonmsk_emr_tem_data_spark.sources.files import load_table

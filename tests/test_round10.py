@@ -328,10 +328,8 @@ def test_curation_delta_reconciles_with_direct_chains(spark, sf_dir):
     |curated(new)| — the membership identity the delta is built on."""
     from pyspark.sql import functions as F
 
-    from amazonmsk_emr_tem_data_spark.queries import (
-        _curation_stages,
-        load_table,
-    )
+    from amazonmsk_emr_tem_data_spark.queries._curation import _curation_stages
+    from amazonmsk_emr_tem_data_spark.sources.files import load_table
 
     rows = REGISTRY["incremental_curation_delta"][0](
         spark, sf_dir

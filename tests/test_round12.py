@@ -65,8 +65,10 @@ def test_ivfpq_cache_keyed_on_content(spark, tmp_path):
     results, not the first dataset's (r11 ADVICE medium #2)."""
     import duckdb
 
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._graph_ann import (
         embedding_ivfpq_topk,
+    )
+    from amazonmsk_emr_tem_data_spark.queries._registry import (
         ivfpq_persisted_topk,
     )
 
@@ -101,7 +103,7 @@ def test_weighted_priority_sample_semantics(spark):
 
     import duckdb
 
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._registry import (
         weighted_priority_sample,
     )
 
@@ -403,7 +405,7 @@ def test_priority_sample_merge_and_replay_idempotent(spark, tmp_path):
     disjoint micro-batches (any order) WITH one batch replayed lands
     on exactly the batch sampler's top-n — top-n-by-deterministic-key
     is an idempotent, commutative merge."""
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._registry import (
         weighted_priority_sample,
     )
     from amazonmsk_emr_tem_data_spark.sources.files import load_table
@@ -435,7 +437,7 @@ def test_aes_key_planted_weight_edges(spark):
     _AES_JMAX cap — and every key stays in (0, 1]."""
     import math
 
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._registry import (
         _AES_JMAX,
         _aes_key_cols,
     )
@@ -474,7 +476,9 @@ def test_bbit_minhash_identical_docs_saturate(spark, tmp_path):
     exactly 1.0 (1e6 ppm); estimates are always within [0, 1e6]."""
     import duckdb
 
-    from amazonmsk_emr_tem_data_spark.queries import bbit_minhash_audit
+    from amazonmsk_emr_tem_data_spark.queries._registry import (
+        bbit_minhash_audit,
+    )
 
     d = tmp_path / "sfb"
     d.mkdir()

@@ -50,7 +50,7 @@ def test_reservoir_crashed_overwrite_keeps_prior_state(spark, tmp_path):
     reservoir. A torn (uncommitted) generation dir left next to a
     committed one is invisible to readers and replaced by the replay,
     and the final state equals the batch sampler's answer."""
-    from amazonmsk_emr_tem_data_spark.queries import (
+    from amazonmsk_emr_tem_data_spark.queries._registry import (
         weighted_priority_sample,
     )
     from amazonmsk_emr_tem_data_spark.streaming.pipelines import (

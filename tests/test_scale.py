@@ -181,8 +181,8 @@ def test_query_cost_attribution_full_registry(spark):
     query reports a real scan estimate. ~2-3 min (the iterative
     operators run their bounded fits during plan construction), hence
     -m scale."""
-    from amazonmsk_emr_tem_data_spark.queries import (
-        REGISTRY,
+    from amazonmsk_emr_tem_data_spark.queries import REGISTRY
+    from amazonmsk_emr_tem_data_spark.queries._curation import (
         query_cost_attribution,
     )
 

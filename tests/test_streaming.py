@@ -16,7 +16,10 @@ from amazonmsk_emr_tem_data_spark.streaming.pipelines import (
     events_stream,
     run_to_memory,
 )
-from amazonmsk_emr_tem_data_spark.streaming.tem_stream import decode_tem_stream
+from amazonmsk_emr_tem_data_spark.streaming.tem_stream import (
+    decode_tem_stream,
+    start_tem_console_query,
+)
 
 CSV2 = "/root/reference/data/csv2.csv"
 
@@ -39,6 +42,40 @@ def test_ep3_stream_decode_equals_batch(spark):
     got = sorted(map(tuple, result.collect()))
     want = sorted(map(tuple, expected.collect()))
     assert got == want
+
+
+def test_ep3_console_query_drains_envelopes_and_checkpoints(spark, tmp_path):
+    """EP3's sink config (03_temStreamEveryMin.py): the named console
+    query decodes every landed envelope once and commits its first
+    micro-batch to the checkpoint."""
+    import os
+    from datetime import datetime
+
+    from amazonmsk_emr_tem_data_spark.schemas import TEM_MEASURE_COLS
+
+    measures = len(TEM_MEASURE_COLS)
+    rows = [
+        (2799 + i, datetime(2021, 6, 7, 10, 31, i), *[20.0 + i] * measures)
+        for i in range(5)
+    ]
+    env_dir = str(tmp_path / "env")
+    to_kafka_envelope(
+        spark.createDataFrame(rows, tem_schema()), key_col="id"
+    ).write.parquet(env_dir)
+    env_stream = (
+        spark.readStream.schema("key string, value string").parquet(env_dir)
+    )
+    checkpoint = str(tmp_path / "checkpoint")
+    query = start_tem_console_query(
+        env_stream, checkpoint, trigger_interval="1 second"
+    )
+    try:
+        query.processAllAvailable()
+        assert query.name == "streaming_to_console"
+        assert sum(p["numInputRows"] for p in query.recentProgress) == len(rows)
+        assert os.path.exists(os.path.join(checkpoint, "commits", "0"))
+    finally:
+        query.stop()
 
 
 def test_events_stream_is_streaming_and_typed(spark, sf_dir):
