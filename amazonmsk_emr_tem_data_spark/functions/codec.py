@@ -24,7 +24,7 @@ at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,9 +60,3 @@ def from_kafka_envelope(df: DataFrame, schema: T.StructType) -> DataFrame:
         .select(F.from_json(F.col("value"), schema, _JSON_OPTS).alias("data"))
         .select("data.*")
     )
-
-
-def envelope_value_expr(df: DataFrame) -> Column:
-    """The bare ``to_json(struct(*))`` expression, for sinks that build
-    their own projection."""
-    return F.to_json(F.struct(*[F.col(c) for c in df.columns]), _JSON_OPTS)

@@ -132,19 +132,3 @@ def bloom_might_contain(
         word = F.element_at(arr, (F.shiftright(bit, 6) + 1).cast("int"))
         cond = cond & (word.bitwiseAND(_mask_for(bit)) != 0)
     return cond
-
-
-def bloom_semi_prune(
-    fact: DataFrame,
-    keys: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Prune ``fact`` to rows whose ``fact_key`` PROBABLY appears in
-    ``keys`` (no false negatives, bounded false positives). Callers
-    that need exact semantics follow with the real join — which now
-    shuffles only the surviving sliver."""
-    words = build_bloom_words(keys, dim_key, m_bits, k)
-    return fact.filter(bloom_might_contain(words, F.col(fact_key), k))

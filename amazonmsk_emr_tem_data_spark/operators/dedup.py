@@ -100,15 +100,6 @@ def gram_array(toks: Column | str, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", w)))
 
 
-def shingle_array(text_col: Column | str = "text", k: int = 3) -> Column:
-    """Distinct word-k-gram shingles of normalized text, as a single
-    column expression. Convenient for one-off use, but the gram lambda
-    re-evaluates the tokenize subtree per position (see gram_array) —
-    inside a per-document hot path, stage the tokens and use
-    gram_array instead."""
-    return F.array_distinct(gram_array(tokens(text_col), k))
-
-
 def shingled(df: DataFrame, id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """Shingling is the CPU-dense map of the dedup stack — spread it
     across all cores even when the scan under-splits, and stage the

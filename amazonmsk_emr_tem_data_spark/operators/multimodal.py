@@ -43,15 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Metadata struct carried beside every payload column.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("byte_len", T.LongType()),
-        T.StructField("sha256", T.StringType()),
-    ]
-)
-
 
 def with_binary_payload(
     df: DataFrame, source_col: str = "text", mime: str = "application/octet-stream"

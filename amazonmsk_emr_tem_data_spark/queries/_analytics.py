@@ -8,6 +8,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.order_stats import lower_quantiles, running_sum
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
@@ -562,6 +563,9 @@ LIMIT {k}
 _KMEANS_K = 8
 _KMEANS_ROUNDS = 3
 _EMB_DIM = 64
+#: Partial rows per Lloyd round (partitions × k) above which the round
+#: reduce runs as a k-row Spark aggregate instead of a driver collect.
+_KMEANS_COLLECT_MAX_ROWS = 32768
 
 
 def _kmeans_fit_centroids(
@@ -597,14 +601,9 @@ def _kmeans_fit_centroids(
     # and the fixed (s/1e9)/n division sequence — are bit-identical
     # (pinned by test; the oracle hash covers the collect path, the
     # forced-aggregate test covers the other).
-    import os
-
     from ..sources.files import plan_partitions
 
-    max_rows = int(
-        os.environ.get("SPARK_GRAFT_KMEANS_COLLECT_MAX_ROWS", "32768")
-    )
-    wide = plan_partitions(emb) * _KMEANS_K > max_rows
+    wide = plan_partitions(emb) * _KMEANS_K > _KMEANS_COLLECT_MAX_ROWS
     sums = ", ".join(f"sum(s{i}) AS s{i}" for i in range(_EMB_DIM))
     for _ in range(rounds):
         part = lloyd_round_partials(emb, centroids, with_grid=True)
@@ -1621,24 +1620,19 @@ FROM balanced GROUP BY 1
 
 def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact weighted median unit price per return flag (r7
-    session-6e), TWO-PHASE: the smallest price whose cumulative
-    QUANTITY weight reaches half the flag's total — the
-    volume-weighted robust center a plain median misses and AVG gets
-    wrong under outliers.
+    session-6e): the smallest price whose cumulative QUANTITY weight
+    reaches half the flag's total — the volume-weighted robust center
+    a plain median misses and AVG gets wrong under outliers.
 
-    Phase shape is the classic distributed exact median: (1) a $100
-    price-bucket weight histogram (map-side-combinable, ≤ |flags|·
-    |buckets| rows), (2) locate each flag's MEDIAN BUCKET and its
-    preceding cumulative weight on that tiny table, (3) broadcast the
-    3-row locator back and sort ONLY the median bucket's rows. The
-    naive one-window version sorts the whole table in |flags|=3
-    partitions — measured 4.1× at 10× and unbounded at 100 TB; here
-    the full-data pass is a combine-all-the-way aggregate and the
-    residual sort touches ~1/|buckets| of one flag.
+    Computed by operators/order_stats.lower_quantiles over $100 price
+    buckets, so the full-data pass is a combine-all-the-way histogram
+    and only the median bucket's rows are sorted. The naive one-window
+    version sorts the whole table in |flags|=3 partitions — measured
+    4.1× at 10× and unbounded at 100 TB.
 
-    Exactness: the rank threshold compares 2·cum ≥ tot in integers at
-    both phases (no halving division); price/weight ride the cent
-    grid; buckets floor-divide non-negative prices."""
+    Exactness: the rank threshold compares 2·cum ≥ tot in integers (no
+    halving division); price/weight ride the cent grid; buckets
+    floor-divide non-negative prices."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         _cents("l_extendedprice").alias("price_cents"),
@@ -1646,64 +1640,21 @@ def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
     ).withColumn("bkt", F.expr("price_cents div 10000"))
-    hist = li.groupBy("l_returnflag", "bkt").agg(
-        F.sum("w_centi").alias("bw")
+    med = lower_quantiles(
+        li,
+        by=["l_returnflag"],
+        bucket=["bkt"],
+        order=["price_cents", "l_orderkey", "l_linenumber"],
+        value="price_cents",
+        cuts={"med": (1, 2)},
+        weight="w_centi",
     )
-    wb = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy("l_returnflag")
-    cum = hist.select(
+    return med.select(
         "l_returnflag",
-        "bkt",
-        "bw",
-        F.sum("bw").over(wb).alias("cumb"),
-        F.sum("bw").over(wt).alias("totw"),
-    )
-    locator = (
-        cum.filter(F.lit(2) * F.col("cumb") >= F.col("totw"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.min(F.struct("bkt", "cumb", "bw", "totw")).alias("m")
-        )
-        .select(
-            F.col("l_returnflag").alias("rf"),
-            F.col("m.bkt").alias("mb"),
-            (F.col("m.cumb") - F.col("m.bw")).alias("cum_before"),
-            F.col("m.totw").alias("totw"),
-        )
-    )
-    picked = li.join(
-        F.broadcast(locator),
-        (li["l_returnflag"] == locator["rf"])
-        & (li["bkt"] == locator["mb"]),
-    ).select(
-        li["l_returnflag"].alias("flag"),
-        "price_cents",
-        "w_centi",
-        "l_orderkey",
-        "l_linenumber",
-        "cum_before",
-        "totw",
-    )
-    win = (
-        Window.partitionBy("flag")
-        .orderBy("price_cents", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    hits = picked.select(
-        "flag",
-        "price_cents",
-        "totw",
-        (F.col("cum_before") + F.sum("w_centi").over(win)).alias("cumw"),
-    ).filter(F.lit(2) * F.col("cumw") >= F.col("totw"))
-    return hits.groupBy(F.col("flag").alias("l_returnflag")).agg(
-        (
-            F.min("price_cents").cast("double") / F.lit(100.0)
-        ).alias("weighted_median_price"),
-        F.max("totw").alias("total_weight_centi"),
+        (F.col("med").cast("double") / F.lit(100.0)).alias(
+            "weighted_median_price"
+        ),
+        F.col("total").alias("total_weight_centi"),
     )
 
 
@@ -1805,62 +1756,32 @@ def doc_global_sequence(
     spark: SparkSession, sf_dir: str, bucket_width: int = 512
 ) -> DataFrame:
     """Stable global row numbers over (source, doc_id) order (r7
-    session-6f), TWO-PHASE: Spark's row_number() over an unpartitioned
-    window runs in ONE task (the classic global-sort trap), and
+    session-6f): Spark's row_number() over an unpartitioned window runs
+    in ONE task (the classic global-sort trap), and
     monotonically_increasing_id is partition-layout-dependent — this
-    is the scalable deterministic alternative. Phase 1 counts rows per
-    order-aligned bucket (source, doc_id div 512) — buckets are
-    contiguous slices of the global order, so a cumulative count over
-    the TINY bucket-metadata table yields each bucket's starting
-    offset; phase 2 broadcasts the offsets back and numbers rows
-    within their bucket (partitioned window). seq = offset +
-    within-bucket rank, identical to a global row_number — the same
-    two-phase shape as the weighted median and every
-    distributed-sort-order assignment (zipWithIndex does this
-    imperatively).
+    is the scalable deterministic alternative. seq is
+    operators/order_stats.running_sum over order-aligned buckets
+    (source, doc_id div 512), identical to a global row_number
+    (zipWithIndex does the same imperatively); the metadata window is
+    single-partition but |buckets|-bounded (one row per 512 docs).
 
-    All integer; the metadata window is single-partition but
-    |buckets|-bounded (one row per 512 docs). The sort key coalesces
-    a NULL source to '' in BOTH engines: a raw NULL would null-reject
-    the offset equi-join (dropping rows AND shifting every surviving
-    seq) while the oracle's ORDER BY sorts it NULLS LAST — the
-    engine-semantics divergence class the bitmap query guards with
-    user_id >= 0."""
+    The sort key coalesces a NULL source to '' in BOTH engines: a raw
+    NULL would null-reject the offset equi-join (dropping rows AND
+    shifting every surviving seq) while the oracle's ORDER BY sorts it
+    NULLS LAST — the engine-semantics divergence class the bitmap
+    query guards with user_id >= 0."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.coalesce("source", F.lit("")).alias("src_key"),
     ).withColumn("bkt", F.expr(f"doc_id div {bucket_width}"))
-    counts = docs.groupBy("src_key", "bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    wmeta = (
-        Window.orderBy("src_key", "bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = counts.select(
-        F.col("src_key").alias("o_src"),
-        F.col("bkt").alias("o_bkt"),
-        (F.sum("n").over(wmeta) - F.col("n")).alias("offset"),
-    )
-    win = (
-        Window.partitionBy("src_key", "bkt")
-        .orderBy("doc_id")
-    )
-    return (
-        docs.join(
-            F.broadcast(offsets),
-            (docs["src_key"] == offsets["o_src"])
-            & (docs["bkt"] == offsets["o_bkt"]),
-        )
-        .select(
-            "doc_id",
-            "source",
-            (
-                F.col("offset") + F.row_number().over(win).cast("long")
-            ).alias("seq"),
-        )
-    )
+    return running_sum(
+        docs,
+        by=[],
+        bucket=["src_key", "bkt"],
+        order=["src_key", "doc_id"],
+        name="seq",
+    ).select("doc_id", "source", "seq")
 
 
 _GLOBAL_SEQ_SQL = """
@@ -2286,11 +2207,8 @@ def part_abc_classes(
     """ABC (Pareto) inventory classification (r7 session-6g): parts
     ranked by revenue; the first 80% of cumulative revenue is class A,
     the next 15% B, the tail C — the 80/15/5 stocking-policy split.
-    The global revenue-descending cumulative sum uses the TWO-PHASE
-    offset pattern (doc_global_sequence's): revenue-range buckets are
-    contiguous slices of the descending order, so bucket totals +
-    a metadata cumsum give exact starting offsets and the per-part
-    cumulative revenue comes from a bucket-partitioned window — no
+    The global revenue-descending cumulative sum is
+    operators/order_stats.running_sum over revenue-range buckets — no
     one-task global window over parts.
 
     Exactness: per-part revenue sums exactly on the ×10⁴ grid, then
@@ -2309,32 +2227,15 @@ def part_abc_classes(
         # bucket id (negated floor-div of NON-NEGATIVE revenue)
         "bkt", -F.expr(f"rev_units div {bucket_cents}")
     )
-    counts = rev.groupBy("bkt").agg(F.sum("rev_units").alias("brev"))
-    wmeta = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = counts.select(
-        F.col("bkt").alias("o_bkt"),
-        (F.sum("brev").over(wmeta) - F.col("brev")).alias("rev_before"),
-    )
     total = rev.agg(F.sum("rev_units").alias("total_units"))
-    win = (
-        Window.partitionBy("bkt")
-        .orderBy(F.col("rev_units").desc(), F.col("part").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = (
-        rev.join(F.broadcast(offsets), rev["bkt"] == offsets["o_bkt"])
-        .select(
-            "part",
-            "rev_units",
-            "bkt",
-            (F.col("rev_before") + F.sum("rev_units").over(win)).alias(
-                "cum_units"
-            ),
-        )
-        .crossJoin(F.broadcast(total))
-    )
+    cum = running_sum(
+        rev,
+        by=[],
+        bucket=["bkt"],
+        order=[F.col("rev_units").desc(), F.col("part").asc()],
+        name="cum_units",
+        weight="rev_units",
+    ).crossJoin(F.broadcast(total))
     return cum.select(
         "part",
         (F.col("rev_units").cast("double") / F.lit(100.0)).alias(
@@ -2700,12 +2601,11 @@ def event_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     which outliers poison). Emits every event with the filled value
     and a was_imputed flag, so the repair is auditable.
 
-    The median uses the TWO-PHASE shape (lineitem_weighted_median's):
-    a $5-bucket count histogram (map-side combinable), the median
-    bucket located on the tiny histogram, and a within-bucket sort of
-    only that bucket's rows — never a per-type sort of all events
-    (|types| partitions would serialize the table). Lower median =
-    smallest v with 2·rank ≥ n, all integer on the cent grid."""
+    The median is operators/order_stats.lower_quantiles over $5 value
+    buckets: only the median bucket's rows are sorted, never a
+    per-type sort of all events (|types| partitions would serialize
+    the table). Lower median = smallest v with 2·rank ≥ n, all
+    integer on the cent grid."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull()
     )
@@ -2715,55 +2615,14 @@ def event_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cents("value").alias("v_cents"),
         F.expr("CAST(round(value * 100) AS BIGINT) div 500").alias("bkt"),
     )
-    hist = obs.groupBy("event_type", "bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("bn")
-    )
-    wb = (
-        Window.partitionBy("event_type")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "bkt",
-        "bn",
-        F.sum("bn").over(wb).alias("cumn"),
-        F.sum("bn").over(wt).alias("totn"),
-    )
-    locator = (
-        cum.filter(F.lit(2) * F.col("cumn") >= F.col("totn"))
-        .groupBy("event_type")
-        .agg(F.min(F.struct("bkt", "cumn", "bn", "totn")).alias("m"))
-        .select(
-            F.col("event_type").alias("lt"),
-            F.col("m.bkt").alias("mb"),
-            (F.col("m.cumn") - F.col("m.bn")).alias("n_before"),
-            F.col("m.totn").alias("totn"),
-        )
-    )
-    picked = obs.join(
-        F.broadcast(locator),
-        (obs["event_type"] == locator["lt"]) & (obs["bkt"] == locator["mb"]),
-    )
-    win = (
-        Window.partitionBy("lt")
-        .orderBy("v_cents", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    medians = (
-        picked.select(
-            "lt",
-            "v_cents",
-            (F.col("n_before") + F.count(F.lit(1)).over(win)).alias(
-                "rank"
-            ),
-            "totn",
-        )
-        .filter(F.lit(2) * F.col("rank") >= F.col("totn"))
-        .groupBy("lt")
-        .agg(F.min("v_cents").alias("med_cents"))
-    )
+    medians = lower_quantiles(
+        obs,
+        by=["event_type"],
+        bucket=["bkt"],
+        order=["v_cents", "event_id"],
+        value="v_cents",
+        cuts={"med_cents": (1, 2)},
+    ).select(F.col("event_type").alias("lt"), "med_cents")
     return ev.join(
         F.broadcast(medians), ev["event_type"] == medians["lt"], "left"
     ).select(
@@ -3020,11 +2879,9 @@ def event_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimming (event_value_trimmed_stats) or dropping, keeps every row
     while bounding leverage; the third member of the robust-repair
     trio (trim / impute / winsorize). Both cut points come from ONE
-    histogram pass: per ($5-bucket, type) counts locate the p5 and p95
-    buckets on the tiny histogram, within-bucket ranks resolve the
-    exact cent values (the two-phase shape of the median/imputation
-    queries — never a per-type whole-table sort), and the clamp is a
-    broadcast join + least/greatest projection.
+    operators/order_stats.lower_quantiles call over ($5-bucket, type)
+    histograms — never a per-type whole-table sort — and the clamp is
+    a broadcast join + least/greatest projection.
 
     Exactness: cut ranks compare 20·rank ≥ n and 20·rank ≥ 19·n in
     integers (p5/p95 lower quantiles, no float quantile math); values
@@ -3039,66 +2896,14 @@ def event_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cents("value").alias("v_cents"),
         F.expr("CAST(round(value * 100) AS BIGINT) div 500").alias("bkt"),
     )
-    hist = obs.groupBy("event_type", "bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("bn")
-    )
-    wb = (
-        Window.partitionBy("event_type")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "bkt",
-        "bn",
-        F.sum("bn").over(wb).alias("cumn"),
-        F.sum("bn").over(wt).alias("totn"),
-    )
-
-    def cut(num: int, den: int, tag: str) -> DataFrame:
-        """Locate the lower (num/den)-quantile bucket, then the exact
-        value inside it: smallest v with den·rank ≥ num·n."""
-        locator = (
-            cum.filter(
-                F.lit(den) * F.col("cumn") >= F.lit(num) * F.col("totn")
-            )
-            .groupBy("event_type")
-            .agg(F.min(F.struct("bkt", "cumn", "bn", "totn")).alias("m"))
-            .select(
-                F.col("event_type").alias("lt"),
-                F.col("m.bkt").alias("mb"),
-                (F.col("m.cumn") - F.col("m.bn")).alias("n_before"),
-                F.col("m.totn").alias("totn"),
-            )
-        )
-        win = (
-            Window.partitionBy("lt")
-            .orderBy("v_cents", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            obs.join(
-                F.broadcast(locator),
-                (obs["event_type"] == locator["lt"])
-                & (obs["bkt"] == locator["mb"]),
-            )
-            .select(
-                "lt",
-                "v_cents",
-                (
-                    F.col("n_before") + F.count(F.lit(1)).over(win)
-                ).alias("rank"),
-                "totn",
-            )
-            .filter(
-                F.lit(den) * F.col("rank") >= F.lit(num) * F.col("totn")
-            )
-            .groupBy("lt")
-            .agg(F.min("v_cents").alias(tag))
-        )
-
-    cuts = cut(1, 20, "lo_cents").join(cut(19, 20, "hi_cents"), "lt")
+    cuts = lower_quantiles(
+        obs,
+        by=["event_type"],
+        bucket=["bkt"],
+        order=["v_cents", "event_id"],
+        value="v_cents",
+        cuts={"lo_cents": (1, 20), "hi_cents": (19, 20)},
+    ).select(F.col("event_type").alias("lt"), "lo_cents", "hi_cents")
     # GREATEST/LEAST skip NULLs in both engines, so an unguarded clamp
     # would fabricate value_wins = p5 for NULL-valued events; gate on
     # value IS NOT NULL so NULLs pass through as NULL

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.order_stats import running_sum
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
@@ -380,8 +381,8 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     window shuffle on source, one on fingerprint, the (doc, gram-hash)
     shuffle with a broadcast eval-gram join, a map-only split, one
     shuffle on (split, shard), and the packing prefix-sum re-uses that
-    same (split, shard) partitioning via the two-level scan (per-task
-    windows <= 1000 rows, sub-shard offsets broadcast back). At 100 TB
+    same (split, shard) partitioning (operators/order_stats.running_sum
+    over sub-shards: per-task windows <= 1000 rows). At 100 TB
     you would persist the curated set between stages 3 and 5 instead
     of recomputing lineage — a materialization choice, not a plan
     change."""
@@ -392,33 +393,18 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sharded = _curation_sharded(clean)
 
-    # 6. pack each (split, shard) stream: two-level prefix sum so no
-    # task windows more than 1000 rows
-    subtot = sharded.groupBy("split", "shard", "subshard").agg(
-        F.sum("n_tokens").alias("total")
-    )
-    wsub = (
-        Window.partitionBy("split", "shard")
-        .orderBy("subshard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    suboff = subtot.select(
-        "split",
-        "shard",
-        "subshard",
-        F.coalesce(F.sum("total").over(wsub), F.lit(0)).alias("off"),
-    )
-    win = (
-        Window.partitionBy("split", "shard", "subshard")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    # 6. pack each (split, shard) stream: subshards ((pos - 1) div 1000) are
+    # the buckets, so no task windows more than 1000 rows
     return (
-        sharded.join(F.broadcast(suboff), ["split", "shard", "subshard"])
-        .withColumn(
-            "start_token",
-            F.col("off") + F.sum("n_tokens").over(win) - F.col("n_tokens"),
+        running_sum(
+            sharded,
+            by=["split", "shard"],
+            bucket=["subshard"],
+            order=["pos"],
+            name="end_token",
+            weight="n_tokens",
         )
+        .withColumn("start_token", F.col("end_token") - F.col("n_tokens"))
         .select(
             "doc_id",
             "source",

@@ -8,6 +8,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.order_stats import lower_quantiles, running_sum
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
@@ -245,13 +246,12 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness + scale: quintiles are NOT ntile over a single global
     window (the weighted-median lesson — one reducer sorts every
-    customer). Each dimension gets the TWO-PHASE global rank: a
-    bounded histogram (recency days / negated frequency / negated
-    monetary 1000-dollar buckets) whose cumulative offsets broadcast
-    back, plus a within-bucket row_number — rank r in 1..N, quintile
-    = 5 − (r−1)·5 div N for better-is-smaller orderings. Ties break
-    on custkey, so both engines emit identical quintiles even at
-    boundaries."""
+    customer). Each dimension's global rank is an
+    operators/order_stats.running_sum row number over a bounded
+    histogram (recency days / negated frequency / negated monetary
+    1000-dollar buckets) — rank r in 1..N, quintile = 5 − (r−1)·5 div
+    N for better-is-smaller orderings. Ties break on custkey, so both
+    engines emit identical quintiles even at boundaries."""
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy(
         F.col("o_custkey").alias("custkey")
@@ -270,53 +270,19 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("recency_days"),
         "frequency",
         "mon_cents",
+        (-F.col("frequency")).alias("f_bkt"),
+        (-F.expr("mon_cents div 100000")).alias("m_bkt"),
     )
     n_total = base.agg(F.count(F.lit(1)).alias("n_cust"))
-
-    def two_phase_rank(
-        df: DataFrame, bucket: Column, order: list[Column], name: str
-    ) -> DataFrame:
-        b = df.withColumn("__b", bucket)
-        counts = b.groupBy("__b").agg(F.count(F.lit(1)).alias("bn"))
-        wmeta = Window.orderBy("__b").rowsBetween(
-            Window.unboundedPreceding, -1
+    ranked = base
+    for name, bkt, order in (
+        ("r_rank", "recency_days", ["recency_days", "custkey"]),
+        ("f_rank", "f_bkt", [F.col("frequency").desc(), "custkey"]),
+        ("m_rank", "m_bkt", [F.col("mon_cents").desc(), "custkey"]),
+    ):
+        ranked = running_sum(
+            ranked, by=[], bucket=[bkt], order=order, name=name
         )
-        offsets = counts.select(
-            F.col("__b").alias("__ob"),
-            F.coalesce(F.sum("bn").over(wmeta), F.lit(0)).alias(
-                "n_before"
-            ),
-        )
-        win = Window.partitionBy("__b").orderBy(*order)
-        return (
-            b.join(F.broadcast(offsets), b["__b"] == offsets["__ob"])
-            .withColumn(
-                name,
-                (F.col("n_before") + F.row_number().over(win)).cast(
-                    "long"
-                ),
-            )
-            .drop("__b", "__ob", "n_before")
-        )
-
-    ranked = two_phase_rank(
-        base,
-        F.col("recency_days"),
-        [F.col("custkey").asc()],
-        "r_rank",
-    )
-    ranked = two_phase_rank(
-        ranked,
-        -F.col("frequency"),
-        [F.col("frequency").desc(), F.col("custkey").asc()],
-        "f_rank",
-    )
-    ranked = two_phase_rank(
-        ranked,
-        -F.expr("mon_cents div 100000"),
-        [F.col("mon_cents").desc(), F.col("custkey").asc()],
-        "m_rank",
-    )
 
     def quint(rank: str) -> Column:
         return (
@@ -1376,12 +1342,11 @@ def order_fulfillment_latency(
     """Order-fulfillment latency SLO (round 9): per order priority,
     the exact p50 and p95 of days from order date to FIRST shipment —
     the fulfillment-SLA number an ops dashboard publishes, computed
-    exactly on the day grid (gap domain is bounded by the shipping
-    calendar, ~0-130 days, so the histogram-cut percentile needs no
-    bucketing phase: the per-(priority, gap) count relation IS the
-    tiny histogram). Lower-quantile semantics (smallest gap with
-    den·cum ≥ num·n), identical in both engines; all-integer until
-    nothing."""
+    exactly on the day grid by operators/order_stats.lower_quantiles
+    (the gap domain is bounded by the shipping calendar, ~0-130 days,
+    so each day is its own bucket). Lower-quantile semantics (smallest
+    gap with den·cum ≥ num·n), identical in both engines; all-integer
+    until nothing."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     first_ship = li.groupBy("l_orderkey").agg(
@@ -1395,43 +1360,19 @@ def order_fulfillment_latency(
         .cast("long")
         .alias("gap_days"),
     )
-    hist = gaps.groupBy("o_orderpriority", "gap_days").agg(
-        F.count(F.lit(1)).cast("long").alias("bn")
+    pct = lower_quantiles(
+        gaps,
+        by=["o_orderpriority"],
+        bucket=["gap_days"],
+        order=["gap_days"],
+        value="gap_days",
+        cuts={"p50_days": (1, 2), "p95_days": (19, 20)},
     )
-    wb = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("gap_days")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy("o_orderpriority")
-    cum = hist.select(
-        "o_orderpriority",
-        "gap_days",
-        F.sum("bn").over(wb).alias("cumn"),
-        F.sum("bn").over(wt).alias("totn"),
-    )
-
-    def cut(num: int, den: int, tag: str) -> DataFrame:
-        return (
-            cum.filter(
-                F.lit(den) * F.col("cumn") >= F.lit(num) * F.col("totn")
-            )
-            .groupBy("o_orderpriority")
-            .agg(F.min("gap_days").alias(tag))
-        )
-
-    n = gaps.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders")
-    )
-    return (
-        n.join(cut(1, 2, "p50_days"), "o_orderpriority")
-        .join(cut(19, 20, "p95_days"), "o_orderpriority")
-        .select(
-            F.col("o_orderpriority").alias("priority"),
-            "n_orders",
-            "p50_days",
-            "p95_days",
-        )
+    return pct.select(
+        F.col("o_orderpriority").alias("priority"),
+        F.col("total").alias("n_orders"),
+        "p50_days",
+        "p95_days",
     )
 
 
@@ -1471,13 +1412,11 @@ JOIN (SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders
 def event_type_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-type percentile profile (round 8): p25/p50/p75/p95 of
     event value per type — the latency-SLO-style summary every
-    monitoring stack publishes, computed EXACTLY with the two-phase
-    histogram machinery (winsorize's cut locator, generalized to four
-    cuts): per ($5-bucket, type) counts locate each percentile's
-    bucket on the tiny histogram, within-bucket ranks resolve the
-    exact cent value — never a per-type whole-table sort. Lower
-    quantile semantics: smallest v with den·rank ≥ num·n, ties broken
-    by event_id, identical in both engines."""
+    monitoring stack publishes, computed EXACTLY by one
+    operators/order_stats.lower_quantiles call over ($5-bucket, type)
+    histograms — never a per-type whole-table sort. Lower quantile
+    semantics: smallest v with den·rank ≥ num·n, ties broken by
+    event_id, identical in both engines."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull() & F.col("value").isNotNull()
     )
@@ -1487,75 +1426,18 @@ def event_type_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cents("value").alias("v_cents"),
         F.expr("CAST(round(value * 100) AS BIGINT) div 500").alias("bkt"),
     )
-    hist = obs.groupBy("event_type", "bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("bn")
+    tags = {"p25": (1, 4), "p50": (1, 2), "p75": (3, 4), "p95": (19, 20)}
+    pct = lower_quantiles(
+        obs,
+        by=["event_type"],
+        bucket=["bkt"],
+        order=["v_cents", "event_id"],
+        value="v_cents",
+        cuts=tags,
     )
-    wb = (
-        Window.partitionBy("event_type")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy("event_type")
-    cum = hist.select(
+    return pct.select(
         "event_type",
-        "bkt",
-        "bn",
-        F.sum("bn").over(wb).alias("cumn"),
-        F.sum("bn").over(wt).alias("totn"),
-    )
-
-    def cut(num: int, den: int, tag: str) -> DataFrame:
-        locator = (
-            cum.filter(
-                F.lit(den) * F.col("cumn") >= F.lit(num) * F.col("totn")
-            )
-            .groupBy("event_type")
-            .agg(F.min(F.struct("bkt", "cumn", "bn", "totn")).alias("m"))
-            .select(
-                F.col("event_type").alias(f"lt_{tag}"),
-                F.col("m.bkt").alias("mb"),
-                (F.col("m.cumn") - F.col("m.bn")).alias("n_before"),
-                F.col("m.totn").alias("totn"),
-            )
-        )
-        win = (
-            Window.partitionBy(f"lt_{tag}")
-            .orderBy("v_cents", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            obs.join(
-                F.broadcast(locator),
-                (obs["event_type"] == locator[f"lt_{tag}"])
-                & (obs["bkt"] == locator["mb"]),
-            )
-            .select(
-                f"lt_{tag}",
-                "v_cents",
-                (
-                    F.col("n_before") + F.count(F.lit(1)).over(win)
-                ).alias("rank"),
-                "totn",
-            )
-            .filter(
-                F.lit(den) * F.col("rank") >= F.lit(num) * F.col("totn")
-            )
-            .groupBy(f"lt_{tag}")
-            .agg(
-                (F.min("v_cents").cast("double") / F.lit(100.0)).alias(
-                    tag
-                )
-            )
-        )
-
-    out = (
-        cut(1, 4, "p25")
-        .join(cut(1, 2, "p50"), F.col("lt_p25") == F.col("lt_p50"))
-        .join(cut(3, 4, "p75"), F.col("lt_p25") == F.col("lt_p75"))
-        .join(cut(19, 20, "p95"), F.col("lt_p25") == F.col("lt_p95"))
-    )
-    return out.select(
-        F.col("lt_p25").alias("event_type"), "p25", "p50", "p75", "p95"
+        *[(F.col(t).cast("double") / F.lit(100.0)).alias(t) for t in tags],
     )
 
 
@@ -1674,10 +1556,9 @@ def quantile_normalize_quality(
     Mechanics, all rank algebra: within-source rank r of n_s maps to
     global position p = ⌈r·N/n_s⌉ (integer: (r·N + n_s − 1) div n_s),
     and the normalized score is the p-th smallest global score. Both
-    rankings use the TWO-PHASE global numbering (score-bucket
-    histogram + broadcast offsets + within-bucket window — the
-    doc_global_sequence shape), so nothing ever single-task sorts the
-    corpus; the position lookup is a shuffle equi-join on p. The
+    rankings are operators/order_stats.running_sum row numbers over
+    score buckets, so nothing ever single-task sorts the corpus; the
+    position lookup is a shuffle equi-join on p. The
     emitted value is a pass-through copy of an existing score — no
     arithmetic, so cross-engine exactness is inherited from
     quality_score parity."""
@@ -1699,54 +1580,16 @@ def quantile_normalize_quality(
         .persist()
     )
 
-    def bucket_rank(
-        df: DataFrame, part_cols: list[str], name: str
-    ) -> DataFrame:
-        keys = [F.col(c) for c in part_cols]
-        counts = df.groupBy(*part_cols, "qb").agg(
-            F.count(F.lit(1)).alias("bn")
-        )
-        wmeta = Window.partitionBy(*part_cols).orderBy("qb").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        renamed = counts.select(
-            *[F.col(c).alias(f"__{c}") for c in part_cols],
-            F.col("qb").alias("__qb"),
-            "bn",
-        )
-        offsets = renamed.select(
-            *[f"__{c}" for c in part_cols],
-            "__qb",
-            F.coalesce(
-                F.sum("bn").over(
-                    Window.partitionBy(
-                        *[f"__{c}" for c in part_cols]
-                    )
-                    .orderBy("__qb")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("n_before"),
-        )
-        cond = F.col("qb") == F.col("__qb")
-        for c in part_cols:
-            cond = cond & (F.col(c) == F.col(f"__{c}"))
-        win = Window.partitionBy(*part_cols, "qb").orderBy(
-            "q", "doc_id"
-        )
-        return (
-            df.join(F.broadcast(offsets), cond)
-            .withColumn(
-                name,
-                (
-                    F.col("n_before") + F.row_number().over(win)
-                ).cast("long"),
-            )
-            .drop("__qb", "n_before", *[f"__{c}" for c in part_cols])
-        )
-
-    src_ranked = bucket_rank(scored, ["source"], "r_src")
-    glob_ranked = bucket_rank(scored, [], "r_glob")
+    src_ranked = running_sum(
+        scored,
+        by=["source"],
+        bucket=["qb"],
+        order=["q", "doc_id"],
+        name="r_src",
+    )
+    glob_ranked = running_sum(
+        scored, by=[], bucket=["qb"], order=["q", "doc_id"], name="r_glob"
+    )
     n_glob = scored.agg(F.count(F.lit(1)).alias("n_all"))
     n_src = scored.groupBy(F.col("source").alias("__s")).agg(
         F.count(F.lit(1)).alias("n_s")
@@ -2556,14 +2399,16 @@ def conversion_latency_quantiles(
     """Click→purchase conversion-latency quantiles (round 8): for
     every click, the time to the SAME user's next purchase (the as-of
     forward join shape), then the exact p50/p90/p99 of those
-    latencies in seconds via the two-phase histogram cut — the
-    conversion-funnel SLA numbers, computed exactly rather than with
-    approx_percentile. One summary row.
+    latencies in seconds — the conversion-funnel SLA numbers,
+    computed exactly rather than with approx_percentile. One summary
+    row.
 
     Mechanics: the next-purchase lookup is the union-merge as-of
     (events tagged, one user-keyed window, no inequality join);
-    latencies floor to integer seconds; the quantile locator is the
-    winsorize/percentile machinery with a single global type."""
+    latencies floor to integer seconds; the quantiles are
+    operators/order_stats.lower_quantiles over hour buckets with no
+    group key, so no conversions still gives one row with
+    n_conversions = 0."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
@@ -2599,58 +2444,16 @@ def conversion_latency_quantiles(
         .alias("lat_s"),
         "event_id",
     ).filter(F.col("lat_s") >= 0)
-    obs = lat.withColumn("bkt", F.expr("lat_s div 3600"))
-    hist = obs.groupBy("bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("bn")
+    pct = lower_quantiles(
+        lat.withColumn("bkt", F.expr("lat_s div 3600")),
+        by=[],
+        bucket=["bkt"],
+        order=["lat_s", "event_id"],
+        value="lat_s",
+        cuts={"p50_s": (1, 2), "p90_s": (9, 10), "p99_s": (99, 100)},
     )
-    wb = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select(
-        "bkt",
-        "bn",
-        F.sum("bn").over(wb).alias("cumn"),
-        F.sum("bn").over(Window.partitionBy()).alias("totn"),
-    )
-
-    def cut(num: int, den: int, tag: str) -> DataFrame:
-        locator = (
-            cum.filter(
-                F.lit(den) * F.col("cumn") >= F.lit(num) * F.col("totn")
-            )
-            .agg(F.min(F.struct("bkt", "cumn", "bn", "totn")).alias("m"))
-            .select(
-                F.col("m.bkt").alias("mb"),
-                (F.col("m.cumn") - F.col("m.bn")).alias("n_before"),
-                F.col("m.totn").alias("totn"),
-            )
-        )
-        win = Window.partitionBy("mb").orderBy(
-            "lat_s", "event_id"
-        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return (
-            obs.join(
-                F.broadcast(locator), obs["bkt"] == locator["mb"]
-            )
-            .select(
-                "mb",
-                "lat_s",
-                (
-                    F.col("n_before") + F.count(F.lit(1)).over(win)
-                ).alias("rank"),
-                "totn",
-            )
-            .filter(
-                F.lit(den) * F.col("rank") >= F.lit(num) * F.col("totn")
-            )
-            .agg(F.min("lat_s").alias(tag))
-        )
-
-    n_row = lat.agg(F.count(F.lit(1)).cast("long").alias("n_conversions"))
-    return (
-        n_row.crossJoin(F.broadcast(cut(1, 2, "p50_s")))
-        .crossJoin(F.broadcast(cut(9, 10, "p90_s")))
-        .crossJoin(F.broadcast(cut(99, 100, "p99_s")))
+    return pct.select(
+        F.col("total").alias("n_conversions"), "p50_s", "p90_s", "p99_s"
     )
 
 

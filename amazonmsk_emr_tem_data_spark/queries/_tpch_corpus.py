@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.order_stats import running_sum
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
@@ -802,63 +803,38 @@ def doc_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The global prefix-sum is the interesting distributed part: a naive
     ``Window.orderBy(doc_id)`` with no partition key serializes the
-    whole corpus through one task. Instead the classic two-level scan:
-    (1) fixed-width shards (doc_id // 1000 — deterministic, no
-    sampling-dependent range partitioning, so the output is stable
-    across runs and engines); (2) per-shard token totals — one
-    map-side-combinable agg producing |corpus|/1000 rows — prefix-summed
-    in a single tiny window; (3) shard offsets broadcast back and added
-    to the within-shard running sum, a window PARTITIONED by shard, so
-    every task sees ≤1000 rows. At 100 TB add a third level (shards of
-    shards) — same recurrence, log depth."""
+    whole corpus through one task. Instead it is
+    operators/order_stats.running_sum over fixed-width shards (doc_id
+    // 1000 — deterministic, no sampling-dependent range partitioning,
+    so the output is stable across runs and engines): one
+    map-side-combinable agg produces |corpus|/1000 shard rows and every
+    data task windows ≤1000 rows. At 100 TB add a third level (shards
+    of shards) — same recurrence, log depth."""
     from ..functions.text import token_count
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", token_count("text").alias("n_tokens")
     )
     sharded = docs.withColumn("shard", F.floor(F.col("doc_id") / 1000))
-    shard_tot = sharded.groupBy("shard").agg(
-        F.sum("n_tokens").alias("total")
-    )
-    # Constant partition key = same single-partition plan over the
-    # |corpus|/1000 shard rows, but keeps this benign bounded window
-    # out of the "WindowExec: No Partition Defined" warning channel so
-    # a REAL unpartitioned window can't hide behind an expected
-    # warning. NB pmod(shard, 1) — always 0 — because a literal
-    # partition key gets constant-folded back to an empty spec.
-    w_sh = (
-        Window.partitionBy(F.pmod(F.col("shard"), F.lit(1)))
-        .orderBy("shard")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    shard_off = shard_tot.select(
-        "shard",
-        F.coalesce(F.sum("total").over(w_sh), F.lit(0)).alias("off"),
-    )
-    w_in = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     seq = F.lit(2048)
-    pos = (
-        sharded.join(F.broadcast(shard_off), "shard")
-        .withColumn(
-            "start_token",
-            F.col("off") + F.sum("n_tokens").over(w_in) - F.col("n_tokens"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "start_token",
-            F.floor(F.col("start_token") / seq).alias("pack_id"),
-            (
-                F.floor((F.col("start_token") + F.col("n_tokens") - 1) / seq)
-                > F.floor(F.col("start_token") / seq)
-            ).alias("spans_boundary"),
-        )
+    pos = running_sum(
+        sharded,
+        by=[],
+        bucket=["shard"],
+        order=["doc_id"],
+        name="end_token",
+        weight="n_tokens",
+    ).withColumn("start_token", F.col("end_token") - F.col("n_tokens"))
+    return pos.select(
+        "doc_id",
+        "n_tokens",
+        "start_token",
+        F.floor(F.col("start_token") / seq).alias("pack_id"),
+        (
+            F.floor((F.col("start_token") + F.col("n_tokens") - 1) / seq)
+            > F.floor(F.col("start_token") / seq)
+        ).alias("spans_boundary"),
     )
-    return pos
 
 
 _SEQUENCE_PACKING_SQL = f"""

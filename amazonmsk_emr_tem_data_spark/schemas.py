@@ -80,21 +80,6 @@ def tem_schema(include_index: bool = False, compat: bool = False) -> T.StructTyp
 
 
 # ---------------------------------------------------------------------------
-# A2: kafka envelope (built temDataRead.py:78-79; decoded temReadFromTopic.py:81-83)
-# ---------------------------------------------------------------------------
-
-#: Columns of a Kafka source DataFrame (fixed by Spark's Kafka connector).
-KAFKA_SOURCE_COLS = [
-    "key",
-    "value",
-    "topic",
-    "partition",
-    "offset",
-    "timestamp",
-    "timestampType",
-]
-
-# ---------------------------------------------------------------------------
 # B: driver fixture tables (/root/repo/FIXTURES.md §B) — declared so
 # streaming file sources can read them schema-first (readStream requires
 # an explicit schema).
@@ -108,24 +93,6 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("event_type", T.StringType(), True),
         T.StructField("value", T.DoubleType(), True),
         T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), True),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
     ]
 )
 

@@ -215,12 +215,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_tem_csv(
     spark: SparkSession, path: str, compat: bool = False, drop_index: bool = True
 ) -> DataFrame:

@@ -12,11 +12,15 @@ each run samples fresh shapes.
 from datetime import datetime, timedelta
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from amazonmsk_emr_tem_data_spark.operators.joins import asof_join, range_join
+from amazonmsk_emr_tem_data_spark.operators.order_stats import (
+    lower_quantiles,
+    running_sum,
+)
 from amazonmsk_emr_tem_data_spark.operators.skew import salted_agg, salted_join
 
 BASE = datetime(2024, 1, 1)
@@ -1306,3 +1310,132 @@ def test_textrank_vocab_cap_identity_and_bound(spark, sf_dir):
         .collect()
     }
     assert words <= top50
+
+
+# ---------------------------------------------------------------------------
+# Two-phase order statistics (operators/order_stats.py)
+# ---------------------------------------------------------------------------
+
+# (group, value, weight); the row index is the id that breaks value ties
+_os_rows = st.lists(
+    st.tuples(st.integers(0, 2), st.integers(-30, 30), st.integers(0, 5)),
+    max_size=14,
+)
+# width 1000 puts every value in one bucket; "v div w" truncates, so
+# bucket 0 spans both signs
+_os_width = st.sampled_from([3, 7, 1000])
+_os_weight = st.sampled_from([None, "w"])
+_OS_CUTS = {"p5": (1, 20), "p50": (1, 2), "p95": (19, 20), "p99": (99, 100)}
+# (by, bucket, order, reference group key, reference sort key)
+_OS_SHAPES = [
+    ([], ["bkt"], ["v", "id"], lambda g: (), lambda i, g, v: (v, i)),
+    (["g"], ["bkt"], ["v", "id"], lambda g: (g,), lambda i, g, v: (v, i)),
+    (
+        [],
+        ["g", "bkt"],
+        ["g", "v", "id"],
+        lambda g: (),
+        lambda i, g, v: (g, v, i),
+    ),
+]
+_OS_TIES = [
+    (0, 3, 1), (0, 3, 2), (1, -6, 1), (1, 6, 4), (2, -20, 5), (1, 0, 0)
+]
+# each example runs one multi-stage Spark query
+os_prop = settings(prop, max_examples=8)
+
+
+def _os_frame(spark, rows, width):
+    return spark.createDataFrame(
+        [(i, g, v, w) for i, (g, v, w) in enumerate(rows)],
+        "id long, g long, v long, w long",
+    ).withColumn("bkt", F.expr(f"v div {width}"))
+
+
+def _os_groups(rows, group_key, sort_key):
+    """Sorted-list reference: each group's (id, value, weight) rows in
+    the full order."""
+    groups: dict[tuple, list[tuple[int, int, int]]] = {}
+    for i, (g, v, w) in sorted(
+        enumerate(rows), key=lambda t: sort_key(t[0], t[1][0], t[1][1])
+    ):
+        groups.setdefault(group_key(g), []).append((i, v, w))
+    return groups
+
+
+@os_prop
+@given(
+    rows=_os_rows,
+    width=_os_width,
+    shape=st.sampled_from(range(len(_OS_SHAPES))),
+    weight=_os_weight,
+)
+@example(rows=[], width=7, shape=0, weight=None)
+@example(rows=[(1, -4, 3)], width=7, shape=1, weight="w")
+@example(rows=_OS_TIES, width=7, shape=2, weight=None)
+@example(rows=_OS_TIES, width=7, shape=1, weight="w")
+def test_running_sum_matches_sorted_reference(
+    spark, rows, width, shape, weight
+):
+    by, bucket, order, group_key, sort_key = _OS_SHAPES[shape]
+    df = _os_frame(spark, rows, width)
+    out = running_sum(
+        df, by=by, bucket=bucket, order=order, name="run", weight=weight
+    )
+    assert out.columns == [*df.columns, "run"]
+    want = {}
+    for members in _os_groups(rows, group_key, sort_key).values():
+        run = 0
+        for i, _, w in members:
+            run += 1 if weight is None else w
+            want[i] = run
+    assert {r["id"]: r["run"] for r in out.collect()} == want
+
+
+@os_prop
+@given(
+    rows=_os_rows,
+    width=_os_width,
+    shape=st.sampled_from([0, 1]),
+    weight=_os_weight,
+)
+@example(rows=[], width=7, shape=0, weight="w")
+@example(rows=[(1, -4, 3)], width=7, shape=1, weight=None)
+@example(rows=[(0, 5, 0), (0, -5, 0)], width=1000, shape=0, weight="w")
+@example(rows=_OS_TIES, width=7, shape=1, weight="w")
+@example(rows=_OS_TIES, width=3, shape=0, weight=None)
+def test_lower_quantiles_match_sorted_reference(
+    spark, rows, width, shape, weight
+):
+    """The value must lead the order, so only the value-bucketed shapes
+    apply."""
+    by, bucket, order, group_key, sort_key = _OS_SHAPES[shape]
+    got = {
+        tuple(r[c] for c in by): r.asDict()
+        for r in lower_quantiles(
+            _os_frame(spark, rows, width),
+            by=by,
+            bucket=bucket,
+            order=order,
+            value="v",
+            cuts=_OS_CUTS,
+            weight=weight,
+        ).collect()
+    }
+    groups = _os_groups(rows, group_key, sort_key)
+    if not by and not rows:
+        groups = {(): []}  # a global aggregate still has one row
+    want = {}
+    for key, members in groups.items():
+        ws = [1 if weight is None else w for _, _, w in members]
+        total = sum(ws)
+        row = {**dict(zip(by, key)), "total": total}
+        for tag, (num, den) in _OS_CUTS.items():
+            run, row[tag] = 0, None
+            for (_, v, _), w in zip(members, ws):
+                run += w
+                if den * run >= num * total:
+                    row[tag] = v
+                    break
+        want[key] = row
+    assert got == want

@@ -137,6 +137,7 @@ def test_kmeans_fit_k_row_reduce_bit_identical(spark, sf_dir, monkeypatch):
     collect driver-heavy. int64 sums are exact under any association,
     so BOTH paths must equal the driver-side Python reduce bit for
     bit."""
+    from amazonmsk_emr_tem_data_spark.queries import _analytics
     from amazonmsk_emr_tem_data_spark.queries._analytics import (
         _EMB_DIM,
         _KMEANS_K,
@@ -154,9 +155,8 @@ def test_kmeans_fit_k_row_reduce_bit_identical(spark, sf_dir, monkeypatch):
     got = _kmeans_fit_centroids(emb, rounds=2)
     # force the wide path (k-row spark-side aggregate): any nonzero
     # partition count now exceeds the collect budget
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_COLLECT_MAX_ROWS", "0")
+    monkeypatch.setattr(_analytics, "_KMEANS_COLLECT_MAX_ROWS", 0)
     got_wide = _kmeans_fit_centroids(emb, rounds=2)
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_COLLECT_MAX_ROWS")
     assert got == got_wide  # bit-identical across reduce orders
 
     # driver-side Python-reduce twin (the r13 form)
