@@ -48,12 +48,12 @@ RHO_SUM_CAP = 40
 ALPHA_M2_POW = 0.709 * 4096.0 * 1099511627776.0  # alpha * m^2 * 2^40
 
 
-def fm_register(key: Column, salt: str = "dsk1") -> Column:
+def fm_register(key: Column) -> Column:
     """struct(j, rho) for one key: register index ``j`` from the low 6
     hash bits, ``rho`` = 1-based position of the lowest set bit of the
     remaining 54 bits (the geometric observable every FM-family sketch
     maxes over). Pure codegen'd integer ops + one exact log2."""
-    h = md5_hash64(F.concat_ws("|", F.lit(salt), key.cast("string")))
+    h = md5_hash64(F.concat_ws("|", F.lit("dsk1"), key.cast("string")))
     w = F.shiftright(h, 6)
     rho = F.when(w == 0, F.lit(RHO_MAX)).otherwise(
         F.log2(w.bitwiseAND(-w).cast("double")).cast("long") + 1

@@ -28,6 +28,6 @@ def horizontal_mean(cols: list[str]) -> Column:
     return total / F.lit(len(cols))
 
 
-def with_tem_avg(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def with_tem_avg(df: DataFrame) -> DataFrame:
     """Attach `Tem(Avg)` (temReadFromTopic.py:84 equivalent)."""
-    return df.withColumn(TEM_AVG_COL, horizontal_mean(cols or T_SENSOR_COLS))
+    return df.withColumn(TEM_AVG_COL, horizontal_mean(T_SENSOR_COLS))

@@ -64,8 +64,8 @@ def fingerprint(col: Column | str = "text") -> Column:
     return F.md5(norm_text(col))
 
 
-def stopword_count(col: Column | str = "text", pattern: str = QUALITY_STOPWORDS) -> Column:
-    return F.regexp_count(norm_text(col), F.lit(pattern)).cast("long")
+def stopword_count(col: Column | str = "text") -> Column:
+    return F.regexp_count(norm_text(col), F.lit(QUALITY_STOPWORDS)).cast("long")
 
 
 def punct_count(col: Column | str = "text") -> Column:
@@ -213,12 +213,16 @@ def rolling_hash_arr(toks: Column | str, window: int = 8) -> Column:
     return F.array_min(F.transform(shingles, md5_hash64))
 
 
-def rolling_hash(col: Column | str = "text", window: int = 8) -> Column:
+#: Tokens per shingle of rolling_hash.
+ROLLING_WINDOW = 8
+
+
+def rolling_hash() -> Column:
     """Deterministic 64-bit rolling-style content hash: min over all
     ``window``-token shingle hashes (winnowing-style document sketch).
     Uses the cross-engine md5→int64 hash (see md5_hash64). Convenience
     form; hot paths should stage tokens and use rolling_hash_arr."""
-    return rolling_hash_arr(tokens(col), window)
+    return rolling_hash_arr(tokens("text"), ROLLING_WINDOW)
 
 
 def winnowing_fingerprints(
@@ -266,7 +270,13 @@ def md5_hash64(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def cms_probe_cells(tok: Column, depth: int = 4, width: int = 1024) -> Column:
+#: Rows and buckets per row of the count-min sketch (the SQL twins
+#: of the heavy-hitter queries use the same 4 x 1024).
+CMS_DEPTH = 4
+CMS_WIDTH = 1024
+
+
+def cms_probe_cells(tok: Column) -> Column:
     """The ``depth`` (row, bucket) count-min-sketch cells a token
     hashes into: row r's bucket is md5(r || '|' || token) folded to a
     60-bit int mod ``width`` (non-negative, so pmod == plain % in the
@@ -275,12 +285,12 @@ def cms_probe_cells(tok: Column, depth: int = 4, width: int = 1024) -> Column:
     any partitioning OR micro-batching (bucket sums are algebraic),
     and bit-reproducible by the SQL oracle."""
     return F.transform(
-        F.sequence(F.lit(0), F.lit(depth - 1)),
+        F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)),
         lambda i: F.struct(
             i.alias("r"),
             F.pmod(
                 md5_hash64(F.concat_ws("|", i.cast("string"), tok)),
-                F.lit(width),
+                F.lit(CMS_WIDTH),
             ).alias("b"),
         ),
     )

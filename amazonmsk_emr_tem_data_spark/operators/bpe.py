@@ -86,13 +86,18 @@ def _merge_pair(symbols: Column, a: str, b: str) -> Column:
     )
 
 
+#: Merge rounds a learned BPE vocabulary runs (the queries' SQL twins
+#: unroll the same count).
+N_MERGES = 16
+
+
 def learn_bpe_merges(
-    df: DataFrame, n_merges: int = 16, text_col: str = "text"
+    df: DataFrame, n_merges: int = N_MERGES
 ) -> list[tuple[int, str, str, int]]:
     """Learn up to ``n_merges`` BPE merges from a corpus; returns
     [(round, left, right, pair_freq)] in learned order. Stops early
     when no adjacent pair repeats."""
-    wf = _word_freqs(df, text_col).transform(checkpoint_stage)
+    wf = _word_freqs(df, "text").transform(checkpoint_stage)
     merges: list[tuple[int, str, str, int]] = []
     for r in range(n_merges):
         top = (
@@ -113,11 +118,11 @@ def learn_bpe_merges(
     return merges
 
 
-def bpe_merge_table(df: DataFrame, n_merges: int = 16) -> DataFrame:
+def bpe_merge_table(df: DataFrame) -> DataFrame:
     """The learned merge table as a DataFrame (round, left, right,
     merged, pair_freq) — what a tokenizer build step would persist."""
     spark = df.sparkSession
-    merges = learn_bpe_merges(df, n_merges)
+    merges = learn_bpe_merges(df)
     return spark.createDataFrame(
         [(r, a, b, a + b, n) for (r, a, b, n) in merges],
         "round int, left string, right string, merged string, pair_freq long",
@@ -127,14 +132,12 @@ def bpe_merge_table(df: DataFrame, n_merges: int = 16) -> DataFrame:
 def bpe_segment(
     df: DataFrame,
     merges: list[tuple[int, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Apply a learned merge list to a corpus: per-document subword
     token count (the deployable tokenizer pass — pure array folds,
     map-only, no shuffle)."""
     words = df.select(
-        id_col, F.explode(tokens(text_col)).alias("word")
+        "doc_id", F.explode(tokens("text")).alias("word")
     ).withColumn(
         "symbols",
         F.concat(F.split(F.col("word"), ""), F.array(F.lit("</w>"))),
@@ -144,6 +147,6 @@ def bpe_segment(
         col = _merge_pair(col, a, b)
     return (
         words.withColumn("n_subwords", F.size(col))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("n_subwords").alias("bpe_token_count"))
     )

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.files import checkpoint_stage, ensure_parallelism
-from .similarity import cosine, with_ivf_cell
+from .similarity import KMEANS_ITERS, with_ivf_cell
 
 
 def _normalized(vec_col: str):
@@ -47,17 +47,15 @@ def _normalized(vec_col: str):
 def kmeans_fit(
     embeddings: DataFrame,
     k: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    iters: int = KMEANS_ITERS,
 ) -> list[list[float]]:
     """Full-data distributed spherical k-means; returns k unit-norm
     centroids. Per round: scan-side assignment (broadcast centroids) +
     one (cell, dim) shuffle of partial sums; k×d floats to the driver."""
     df = ensure_parallelism(embeddings).select(
-        id_col, _normalized(vec_col).alias("v")
+        "vec_id", _normalized("embedding").alias("v")
     ).cache()
-    init = df.orderBy(id_col).limit(k).select("v").collect()
+    init = df.orderBy("vec_id").limit(k).select("v").collect()
     centroids = [list(r["v"]) for r in init]
     try:
         for _ in range(iters):
@@ -121,7 +119,6 @@ def kmeans_fit(
 def lloyd_round_partials(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
     with_grid: bool = True,
 ) -> DataFrame:
     """One fused Lloyd round as an Arrow ``mapInPandas`` partial
@@ -182,7 +179,7 @@ def lloyd_round_partials(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             n = X.shape[0]
             ee = np.zeros(n)
             for i in range(dim):
@@ -217,7 +214,7 @@ def lloyd_round_partials(
                         out[f"s{i}"].append(int(gs[i]))
             yield pd.DataFrame(out)
 
-    return embeddings.select(vec_col).mapInPandas(fn, schema)
+    return embeddings.select("embedding").mapInPandas(fn, schema)
 
 
 def _seq_dot(a, b) -> float:
@@ -232,16 +229,14 @@ def _seq_dot(a, b) -> float:
 def assign_cells(
     embeddings: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, cell, unit-norm vector) for every embedding — scan-side
     argmax over broadcast centroid literals."""
     df = ensure_parallelism(embeddings).select(
-        id_col, _normalized(vec_col).alias("v")
+        "vec_id", _normalized("embedding").alias("v")
     )
     return with_ivf_cell(df, centroids, vec_col="v").select(
-        id_col, "ivf_cell", "v"
+        "vec_id", "ivf_cell", "v"
     )
 
 
@@ -249,9 +244,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     n_cells: int = 8,
     threshold: float = 0.95,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup: per-vector (cluster id, keep flag) where duplicates
     (cosine ≥ threshold, same cell) collapse to the min-id survivor.
@@ -266,15 +258,13 @@ def semantic_dedup(
     from .dedup import connected_components
     from .similarity import score_pairs_cosine
 
-    centroids = kmeans_fit(
-        embeddings, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
-    )
+    centroids = kmeans_fit(embeddings, k=n_cells)
     # Eager checkpoint, not cache() (r13, the round's staging pattern):
     # celled feeds both self-join sides, the CC gate aggregate and the
     # final projection — a lazily-cached entry is raced by concurrent
     # consumers, each re-running the normalize+assign pass; the
     # checkpoint also truncates the kmeans-fit lineage.
-    celled = assign_cells(embeddings, centroids, id_col, vec_col).transform(checkpoint_stage)
+    celled = assign_cells(embeddings, centroids).transform(checkpoint_stage)
     a = celled.alias("a")
     b = celled.alias("b")
     # Within-cell pair scoring through the shared Arrow fold scorer
@@ -290,10 +280,10 @@ def semantic_dedup(
             a.join(
                 b,
                 (F.col("a.ivf_cell") == F.col("b.ivf_cell"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+                & (F.col("a.vec_id") < F.col("b.vec_id")),
             ).select(
-                F.col(f"a.{id_col}").alias("doc_a"),
-                F.col(f"b.{id_col}").alias("doc_b"),
+                F.col("a.vec_id").alias("doc_a"),
+                F.col("b.vec_id").alias("doc_b"),
                 F.col("a.v").alias("va"),
                 F.col("b.v").alias("vb"),
             ),
@@ -312,16 +302,16 @@ def semantic_dedup(
     # Arrow scorer for every within-cell pair). The checkpointed
     # relation is the verified near-dup pairs only — two longs per row.
     pairs = pairs.transform(checkpoint_stage)
-    nodes = celled.select(id_col)
-    comp = connected_components(pairs, nodes, id_col=id_col)
+    nodes = celled.select("vec_id")
+    comp = connected_components(pairs, nodes, id_col="vec_id")
     out = (
-        celled.select(id_col, "ivf_cell")
-        .join(comp, id_col)
+        celled.select("vec_id", "ivf_cell")
+        .join(comp, "vec_id")
         .select(
-            id_col,
+            "vec_id",
             "ivf_cell",
             F.col("comp").alias("dup_group"),
-            (F.col(id_col) == F.col("comp")).alias("keep"),
+            (F.col("vec_id") == F.col("comp")).alias("keep"),
         )
     )
     return out
@@ -335,11 +325,14 @@ def _tdiv(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
+#: Power-iteration rounds of the top-eigenvector fit (the SQL twins
+#: unroll the same count).
+POWER_ITERS = 192
+
+
 def top_eigenvector_power(
     spark,
     embeddings: DataFrame,
-    iters: int = 192,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top principal direction of the embedding covariance by power
     iteration (round 10) — the spectral health check run before
@@ -390,7 +383,7 @@ def top_eigenvector_power(
     inside HUGEINT to n ≈ 10⁶ corpus rows per the twin; the Spark
     side is unbounded (Python ints). All OUTPUT columns are bounded
     (ppm ≤ 10⁶, |eig_e6| ≤ 10⁶, var ≤ 4·10¹²) regardless of n."""
-    model = power_model(embeddings, iters, vec_col)
+    model = power_model(embeddings)
     if model is None:
         return spark.createDataFrame(
             [],
@@ -414,8 +407,6 @@ def top_eigenvector_power(
 
 def power_model(
     embeddings: DataFrame,
-    iters: int = 192,
-    vec_col: str = "embedding",
 ) -> dict | None:
     """The Gram pass + power iteration behind
     :func:`top_eigenvector_power`, exposed as reusable MODEL STATE so
@@ -426,7 +417,7 @@ def power_model(
     import numpy as np
     import pandas as pd
 
-    head = embeddings.select(vec_col).first()
+    head = embeddings.select("embedding").first()
     if head is None or head[0] is None:
         # empty corpus: first() returns None — honor the documented
         # "None on an empty corpus" contract instead of TypeError
@@ -441,7 +432,7 @@ def power_model(
             if not len(pdf):
                 continue
             X = np.rint(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
                 * 1_000_000.0
             ).astype(np.int64)
             M += X.T @ X
@@ -464,7 +455,7 @@ def power_model(
                 }
             )
 
-    partials = ensure_parallelism(embeddings).select(vec_col).mapInPandas(
+    partials = ensure_parallelism(embeddings).select("embedding").mapInPandas(
         gram_partials, "j int, k int, m long, s long, c long"
     )
     rows = (
@@ -491,7 +482,7 @@ def power_model(
         for j in range(dim)
     ]
     v = [10 ** 6] * dim
-    for _ in range(iters):
+    for _ in range(POWER_ITERS):
         w = [sum(C[j][k] * v[k] for k in range(dim)) for j in range(dim)]
         mx = max(max(abs(x) for x in w), 1)
         v = [_tdiv(x * 10 ** 6, mx) for x in w]
@@ -513,8 +504,6 @@ def power_model(
 def spectral_residual_rows(
     embeddings: DataFrame,
     model: dict,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-vector spectral decomposition against a :func:`power_model`
     — the scorer half of spectral outlier detection: rows of
@@ -540,28 +529,26 @@ def spectral_residual_rows(
             if not len(pdf):
                 continue
             E = np.rint(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
                 * 1_000_000.0
             ).astype(np.int64)
             c = E - mu[None, :]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
                     "sq_norm": (c * c).sum(axis=1),
                     "proj_dot": (c * v[None, :]).sum(axis=1),
                 }
             )
 
     return ensure_parallelism(embeddings).select(
-        id_col, vec_col
-    ).mapInPandas(fn, f"{id_col} long, sq_norm long, proj_dot long")
+        "vec_id", "embedding"
+    ).mapInPandas(fn, "vec_id long, sq_norm long, proj_dot long")
 
 
 def assign_rows_with_d2(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-ROW nearest-centroid assignment: (id, cluster, d2_e6) — the
     row-level sibling of :func:`lloyd_round_partials` (same IEEE
@@ -584,7 +571,7 @@ def assign_rows_with_d2(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             n = X.shape[0]
             ee = np.zeros(n)
             for i in range(dim):
@@ -602,12 +589,12 @@ def assign_rows_with_d2(
             ).astype(np.int64)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
                     "cluster": ids[cl],
                     "d2_e6": snapped,
                 }
             )
 
     return ensure_parallelism(embeddings).select(
-        id_col, vec_col
-    ).mapInPandas(fn, f"{id_col} long, cluster long, d2_e6 long")
+        "vec_id", "embedding"
+    ).mapInPandas(fn, "vec_id long, cluster long, d2_e6 long")

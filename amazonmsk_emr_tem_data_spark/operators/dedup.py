@@ -42,14 +42,14 @@ from ..sources.files import checkpoint_stage, ensure_parallelism
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup_first(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_first(df: DataFrame) -> DataFrame:
     """Keep the lowest-id document per exact-content fingerprint.
 
     Deterministic (min id), single shuffle on the fingerprint. At scale
     prefer this over ``dropDuplicates`` (arbitrary survivor) for
     reproducible corpus builds.
     """
-    w = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("fingerprint").orderBy(F.col("doc_id").asc())
     return (
         df.withColumn("fingerprint", fingerprint("text"))
         .withColumn("rn", F.row_number().over(w))
@@ -58,7 +58,7 @@ def exact_dedup_first(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def fingerprint_groups(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def fingerprint_groups(df: DataFrame) -> DataFrame:
     """Per-fingerprint group stats (the dedup report: how many copies
     of each distinct content)."""
     return (
@@ -66,7 +66,7 @@ def fingerprint_groups(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
         )
     )
 
@@ -74,6 +74,10 @@ def fingerprint_groups(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # ---------------------------------------------------------------------------
 # shingling (shared by jaccard + minhash)
 # ---------------------------------------------------------------------------
+
+
+#: Word-gram size of the shingle-based similarity operators.
+SHINGLE_K = 3
 
 
 def gram_array(toks: Column | str, k: int = 3) -> Column:
@@ -100,14 +104,14 @@ def gram_array(toks: Column | str, k: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", w)))
 
 
-def shingled(df: DataFrame, id_col: str = "doc_id", k: int = 3) -> DataFrame:
+def shingled(df: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """Shingling is the CPU-dense map of the dedup stack — spread it
     across all cores even when the scan under-splits, and stage the
     token array through its own projection so the gram pass reads a
     materialized array instead of re-tokenizing per position."""
-    staged = ensure_parallelism(df).select(id_col, tokens("text").alias("__toks"))
+    staged = ensure_parallelism(df).select("doc_id", tokens("text").alias("__toks"))
     return staged.select(
-        id_col, F.array_distinct(gram_array("__toks", k)).alias("shingles")
+        "doc_id", F.array_distinct(gram_array("__toks", k)).alias("shingles")
     )
 
 
@@ -285,9 +289,7 @@ def _fanout_cross(
 # ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, threshold: float = 0.6, id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.6) -> DataFrame:
     """All document pairs with word-k-gram Jaccard ≥ threshold. Exact.
 
     Plan: collapse exact dups → explode → self-equi-join on shingle
@@ -296,21 +298,21 @@ def ngram_jaccard_pairs(
     *sharing a shingle*; at 100 TB use minhash_lsh_pairs, which funnels
     only LSH candidates into this verification.
     """
-    groups, reps = _collapse_exact(df, id_col)
+    groups, reps = _collapse_exact(df, "doc_id")
     # eager checkpoint, not cache(): broadcast consumers race a lazy
     # cache and recompute the shingle pass (see _collapse_exact, r13)
-    sh = shingled(reps, id_col, k).transform(checkpoint_stage)
-    sizes = sh.select(id_col, F.size("shingles").alias("n_sh"))
-    ex = _exploded(sh, id_col)
+    sh = shingled(reps).transform(checkpoint_stage)
+    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
+    ex = _exploded(sh, "doc_id")
     a, b = ex.alias("a"), ex.alias("b")
     common = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     rep_pairs = (
         common.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -324,7 +326,7 @@ def ngram_jaccard_pairs(
     within = _within_pairs(
         groups,
         {"n_common": F.col("n_sh"), "jaccard": F.lit(1.0)},
-        per_rep=sizes.select(F.col(id_col).alias("rep"), "n_sh"),
+        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_sh"),
     )
     return within.unionByName(
         _fanout_cross(rep_pairs, groups, ["n_common", "jaccard"])
@@ -335,8 +337,6 @@ def prefix_filter_jaccard_pairs(
     df: DataFrame,
     threshold_num: int = 7,
     threshold_den: int = 10,
-    id_col: str = "doc_id",
-    k: int = 3,
 ) -> DataFrame:
     """Exact set-similarity self-join via prefix filtering — all pairs
     with word-k-gram Jaccard ≥ threshold_num/threshold_den, same output
@@ -365,20 +365,20 @@ def prefix_filter_jaccard_pairs(
     group fan-out. The DuckDB oracle is the brute-force all-pairs
     Jaccard, so driver equality doubles as the recall-1.0 proof.
     """
-    groups, reps = _collapse_exact(df, id_col)
+    groups, reps = _collapse_exact(df, "doc_id")
     # eager checkpoint, not cache(): broadcast consumers race a lazy
     # cache and recompute the shingle pass (see _collapse_exact, r13)
-    sh = shingled(reps, id_col, k).transform(checkpoint_stage)
-    sizes = sh.select(id_col, F.size("shingles").alias("n_sh"))
-    ex = _exploded(sh, id_col)
+    sh = shingled(reps).transform(checkpoint_stage)
+    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
+    ex = _exploded(sh, "doc_id")
     sdf = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-    worder = Window.partitionBy(id_col).orderBy(
+    worder = Window.partitionBy("doc_id").orderBy(
         F.col("sdf").asc(), F.col("shingle").asc()
     )
     ranked = (
         ex.join(sdf, "shingle")
         .withColumn("pos", F.row_number().over(worder))
-        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     )
     # ⌈t·n⌉ = ⌊(num·n + den − 1)/den⌋ exactly (num·n + den − 1 < 2^53,
     # and x/den at that magnitude floors exactly; see queries.py grid
@@ -395,10 +395,10 @@ def prefix_filter_jaccard_pairs(
     # observable contract beats the bounded-window recompute.)
     prefix = ranked.filter(F.col("pos") <= F.col("n_sh") - ceil_tn + 1)
     a = prefix.select(
-        F.col(id_col).alias("doc_a"), "shingle", F.col("n_sh").alias("n_a")
+        F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("n_a")
     )
     b = prefix.select(
-        F.col(id_col).alias("doc_b"), "shingle", F.col("n_sh").alias("n_b")
+        F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("n_b")
     )
     cand = (
         a.join(b, "shingle")
@@ -413,8 +413,8 @@ def prefix_filter_jaccard_pairs(
         .select("doc_a", "doc_b", "n_a", "n_b")
         .distinct()
     )
-    ta = ex.select(F.col(id_col).alias("doc_a"), "shingle")
-    tb = ex.select(F.col(id_col).alias("doc_b"), "shingle")
+    ta = ex.select(F.col("doc_id").alias("doc_a"), "shingle")
+    tb = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
     common = (
         cand.join(ta, "doc_a")
         .join(tb, ["doc_b", "shingle"])
@@ -430,7 +430,7 @@ def prefix_filter_jaccard_pairs(
     within = _within_pairs(
         groups,
         {"n_common": F.col("n_sh"), "jaccard": F.lit(1.0)},
-        per_rep=sizes.select(F.col(id_col).alias("rep"), "n_sh"),
+        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_sh"),
     )
     return within.unionByName(
         _fanout_cross(rep_pairs, groups, ["n_common", "jaccard"])
@@ -441,8 +441,6 @@ def containment_prefix_pairs(
     df: DataFrame,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    id_col: str = "doc_id",
-    k: int = 3,
 ) -> DataFrame:
     """DIRECTED containment similarity join: all ordered pairs
     (doc_a, doc_b) with |shingles(A) ∩ shingles(B)| / |shingles(A)| ≥
@@ -470,33 +468,33 @@ def containment_prefix_pairs(
     exact asymmetric recall; at 100 TB cap df on the PROBE side only
     via a higher threshold, never the index side.
     """
-    groups, reps = _collapse_exact(df, id_col)
+    groups, reps = _collapse_exact(df, "doc_id")
     # eager checkpoint, not cache(): broadcast consumers race a lazy
     # cache and recompute the shingle pass (see _collapse_exact, r13)
-    sh = shingled(reps, id_col, k).transform(checkpoint_stage)
-    sizes = sh.select(id_col, F.size("shingles").alias("n_sh"))
-    ex = _exploded(sh, id_col)
+    sh = shingled(reps).transform(checkpoint_stage)
+    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
+    ex = _exploded(sh, "doc_id")
     sdf = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-    worder = Window.partitionBy(id_col).orderBy(
+    worder = Window.partitionBy("doc_id").orderBy(
         F.col("sdf").asc(), F.col("shingle").asc()
     )
     ranked = (
         ex.join(sdf, "shingle")
         .withColumn("pos", F.row_number().over(worder))
-        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     )
     ceil_tn = F.floor(
         (F.col("n_sh") * threshold_num + threshold_den - 1) / threshold_den
     )
     prefix = ranked.filter(F.col("pos") <= F.col("n_sh") - ceil_tn + 1)
     a = prefix.select(
-        F.col(id_col).alias("doc_a"),
+        F.col("doc_id").alias("doc_a"),
         "shingle",
         F.col("n_sh").alias("n_a"),
         ceil_tn.alias("min_common"),
     )
-    b = ex.select(F.col(id_col).alias("doc_b"), "shingle")
-    b_sizes = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    b = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
+    b_sizes = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     cand = (
         a.join(b, "shingle")
         .filter(F.col("doc_a") != F.col("doc_b"))
@@ -523,8 +521,8 @@ def containment_prefix_pairs(
     cand = cand.repartition(
         sh.sparkSession.sparkContext.defaultParallelism, "doc_a", "doc_b"
     )
-    sh_a = sh.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
+    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     common = (
         cand.join(sh_a, "doc_a")
         .join(sh_b, "doc_b")
@@ -554,7 +552,7 @@ def containment_prefix_pairs(
             "n_a": F.col("n_sh"),
             "containment": F.lit(1.0),
         },
-        per_rep=sizes.select(F.col(id_col).alias("rep"), "n_sh"),
+        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_sh"),
         directed=True,
     )
     fan = _fanout_cross(
@@ -563,9 +561,12 @@ def containment_prefix_pairs(
     return within.unionByName(fan)
 
 
-def winnowed(
-    df: DataFrame, id_col: str = "doc_id", k: int = 8, w: int = 4
-) -> DataFrame:
+#: Shingle size and window length of the winnowing fingerprints.
+WINNOW_K = 8
+WINNOW_W = 4
+
+
+def winnowed(df: DataFrame) -> DataFrame:
     """(id, fp) rows of each document's TRUE winnowing fingerprint set
     (Schleimer/Wilkerson/Aiken): min hash of each sliding window of
     ``w`` consecutive k-token shingle hashes, distinct per doc. Every
@@ -574,35 +575,36 @@ def winnowed(
     window position, measured 17x slower)."""
     from ..functions.text import md5_hash64, tokens
 
-    toks = ensure_parallelism(df).select(id_col, tokens("text").alias("__toks"))
-    grams = toks.select(id_col, gram_array("__toks", k).alias("__grams"))
+    toks = ensure_parallelism(df).select("doc_id", tokens("text").alias("__toks"))
+    grams = toks.select("doc_id", gram_array("__toks", WINNOW_K).alias("__grams"))
     hashes = grams.select(
-        id_col, F.transform("__grams", md5_hash64).alias("__hs")
+        "doc_id", F.transform("__grams", md5_hash64).alias("__hs")
     )
     wins = hashes.select(
-        id_col,
+        "doc_id",
         F.when(
-            F.size("__hs") >= w,
+            F.size("__hs") >= WINNOW_W,
             F.transform(
-                F.sequence(F.lit(0), F.size("__hs") - w),
-                lambda j: F.array_min(F.slice("__hs", j + 1, w)),
+                F.sequence(F.lit(0), F.size("__hs") - WINNOW_W),
+                lambda j: F.array_min(F.slice("__hs", j + 1, WINNOW_W)),
             ),
         )
         .otherwise(F.array(F.array_min("__hs")))
         .alias("__wins"),
     )
     return wins.select(
-        id_col, F.explode(F.array_distinct("__wins")).alias("fp")
+        "doc_id", F.explode(F.array_distinct("__wins")).alias("fp")
     )
+
+
+#: Distinct documents above which a fingerprint or prefix bucket is
+#: dropped as a degenerate feature (see capped_buckets).
+MAX_BUCKET_SIZE = 1000
 
 
 def winnowing_match_pairs(
     df: DataFrame,
     min_shared: int = 2,
-    id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 4,
-    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """MOSS-style local-span match pairs: documents sharing at least
     ``min_shared`` winnowing fingerprints — the detector built on the
@@ -617,11 +619,11 @@ def winnowing_match_pairs(
     (doc_a, doc_b) count agg, identity groups re-expanded at full
     overlap. The brute-force oracle equality doubles as proof the cap
     dropped nothing on the corpus under test."""
-    groups, reps = _collapse_exact(df, id_col)
+    groups, reps = _collapse_exact(df, "doc_id")
     # eager: fps feeds sizes + buckets + verify (broadcast race, r13)
-    fps = winnowed(reps, id_col, k, w).transform(checkpoint_stage)
-    sizes = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp"))
-    buckets = capped_buckets(fps, ["fp"], id_col, max_bucket_size)
+    fps = winnowed(reps).transform(checkpoint_stage)
+    sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
+    buckets = capped_buckets(fps, ["fp"], "doc_id", MAX_BUCKET_SIZE)
     rep_pairs = (
         buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
         .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
@@ -634,7 +636,7 @@ def winnowing_match_pairs(
     within = _within_pairs(
         groups,
         {"n_shared": F.col("n_fp").cast("long")},
-        per_rep=sizes.select(F.col(id_col).alias("rep"), "n_fp"),
+        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_fp"),
     ).filter(F.col("n_shared") >= min_shared)
     return within.unionByName(_fanout_cross(rep_pairs, groups, ["n_shared"]))
 
@@ -642,10 +644,8 @@ def winnowing_match_pairs(
 def fuzzy_edit_verify_pairs(
     df: DataFrame,
     max_dist: int = 40,
-    id_col: str = "doc_id",
     prefix_tokens: int = 8,
     verify_chars: int = 200,
-    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Edit-distance-verified near-dup pairs: block on the first
     ``prefix_tokens`` normalized tokens, then verify each candidate
@@ -672,13 +672,13 @@ def fuzzy_edit_verify_pairs(
     identity groups re-expanded at distance 0. The verify prefix
     never rides the bucket shuffle — it joins back on doc id after
     pair fan-in."""
-    groups, reps = _collapse_exact(df, id_col)
+    groups, reps = _collapse_exact(df, "doc_id")
     from ..functions.text import norm_text
 
     staged = (
-        reps.select(id_col, norm_text("text").alias("__norm"))
+        reps.select("doc_id", norm_text("text").alias("__norm"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             md5_hash64(
                 F.array_join(
                     F.slice(F.split(F.col("__norm"), " "), 1, prefix_tokens),
@@ -692,18 +692,18 @@ def fuzzy_edit_verify_pairs(
         .transform(checkpoint_stage)
     )
     buckets = capped_buckets(
-        staged.select(id_col, "bh"), ["bh"], id_col, max_bucket_size
+        staged.select("doc_id", "bh"), ["bh"], "doc_id", MAX_BUCKET_SIZE
     )
-    pfx = staged.select(id_col, "pfx")
+    pfx = staged.select("doc_id", "pfx")
     rep_pairs = (
         buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .join(
-            pfx.select(F.col(id_col).alias("doc_a"), F.col("pfx").alias("pa")),
+            pfx.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pa")),
             "doc_a",
         )
         .join(
-            pfx.select(F.col(id_col).alias("doc_b"), F.col("pfx").alias("pb")),
+            pfx.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pb")),
             "doc_b",
         )
         .select(
@@ -717,14 +717,16 @@ def fuzzy_edit_verify_pairs(
     return within.unionByName(_fanout_cross(rep_pairs, groups, ["edit_dist"]))
 
 
+#: Gram size of ngram_overlap_decontaminate, and the contaminated
+#: fraction (num/den of a document's grams) at which it flags a document.
+DECONTAM_K = 8
+DECONTAM_FLAG_NUM = 1
+DECONTAM_FLAG_DEN = 5
+
+
 def ngram_overlap_decontaminate(
     docs: DataFrame,
     eval_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    flag_num: int = 1,
-    flag_den: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination: per-document word-k-gram overlap with
     an eval corpus — (doc_id, n_grams, n_contaminated,
@@ -745,18 +747,18 @@ def ngram_overlap_decontaminate(
     def per_gram(df: DataFrame) -> DataFrame:
         # stage the token array so the gram lambda reads a materialized
         # attribute instead of re-tokenizing per position (gram_array)
-        staged = df.select(id_col, tok_arr(text_col).alias("__toks"))
+        staged = df.select("doc_id", tok_arr("text").alias("__toks"))
         w = F.col("__toks")
         grams = F.when(
-            F.size(w) >= k,
+            F.size(w) >= DECONTAM_K,
             F.transform(
-                F.sequence(F.lit(0), F.size(w) - k),
-                lambda i: F.array_join(F.slice(w, i + 1, k), " "),
+                F.sequence(F.lit(0), F.size(w) - DECONTAM_K),
+                lambda i: F.array_join(F.slice(w, i + 1, DECONTAM_K), " "),
             ),
         ).otherwise(F.array(F.array_join(w, " ")))
         return staged.select(
-            id_col, F.explode(F.array_distinct(grams)).alias("gram")
-        ).select(id_col, md5_hash64(F.col("gram")).alias("gh"))
+            "doc_id", F.explode(F.array_distinct(grams)).alias("gram")
+        ).select("doc_id", md5_hash64(F.col("gram")).alias("gh"))
 
     corpus_grams = per_gram(ensure_parallelism(docs))
     eval_grams = per_gram(eval_docs).select("gh").distinct()
@@ -764,21 +766,21 @@ def ngram_overlap_decontaminate(
         F.broadcast(eval_grams.withColumn("hit", F.lit(1))), "gh", "left_outer"
     )
     return (
-        marked.groupBy(id_col)
+        marked.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(F.coalesce("hit", F.lit(0))).alias("n_contaminated"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             "n_contaminated",
             (F.col("n_contaminated") / F.col("n_grams")).alias(
                 "contamination_frac"
             ),
             (
-                F.col("n_contaminated") * flag_den
-                >= F.col("n_grams") * flag_num
+                F.col("n_contaminated") * DECONTAM_FLAG_DEN
+                >= F.col("n_grams") * DECONTAM_FLAG_NUM
             ).alias("is_contaminated"),
         )
     )
@@ -851,9 +853,6 @@ def _minhash_rep_pairs(
     df: DataFrame,
     threshold: float,
     num_hashes: int = MINHASH_NUM_HASHES,
-    id_col: str = "doc_id",
-    k: int = MINHASH_SHINGLE_K,
-    min_collisions: int = MINHASH_MIN_COLLISIONS,
     max_bucket_size: int = MINHASH_MAX_BUCKET_SIZE,
 ):
     """Collapse → LSH → exact-verify at the REPRESENTATIVE level:
@@ -862,14 +861,14 @@ def _minhash_rep_pairs(
     dedup_clusters (which must NOT fan out — connected components over
     rep pairs plus the rep→member map give the same partition without
     ever materializing the copies²-sized member-pair relation)."""
-    groups, reps = _collapse_exact(df, id_col)
+    groups, reps = _collapse_exact(df, "doc_id")
     # Eager localCheckpoint for the same reason as _collapse_exact's
     # groups (r13): sh feeds the sh_a/sh_b verify joins, whose
     # broadcast builds race a lazy cache concurrently and each re-run
     # the tokenize+gram pass (profiled: the ~10 s-CPU shingle stage
     # TWICE per query). Checkpointing materializes the rep shingles
     # once; same footprint the cache held.
-    sh = shingled(reps, id_col, k).transform(checkpoint_stage)
+    sh = shingled(reps, k=MINHASH_SHINGLE_K).transform(checkpoint_stage)
     # LSH banding (1-row bands) over _melted_signatures: bucket on
     # (slot, value) via a single groupBy; id lists materialize only for
     # buckets whose counted membership is within [2, max_bucket_size]
@@ -884,8 +883,8 @@ def _minhash_rep_pairs(
     # those partials, the same failure as NN-Descent's rejected
     # distinct repartition (r13). AQE's byte-derived choice stands
     # for this family.
-    melted = _melted_signatures(sh, id_col, num_hashes)
-    buckets = capped_buckets(melted, ["slot", "val"], id_col, max_bucket_size)
+    melted = _melted_signatures(sh, "doc_id", num_hashes)
+    buckets = capped_buckets(melted, ["slot", "val"], "doc_id", max_bucket_size)
     # Candidate = collides in >= min_collisions of the K slots. One
     # collision admits ~1% of all random pairs on a small corpus vocab;
     # two cuts false candidates ~20x while the miss probability for a
@@ -895,11 +894,11 @@ def _minhash_rep_pairs(
         buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
         .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .count()
-        .filter(F.col("count") >= min_collisions)
+        .filter(F.col("count") >= MINHASH_MIN_COLLISIONS)
         .drop("count")
     )
-    sh_a = sh.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
+    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     # r14, BUILT+MEASURED+REJECTED: pinning this exact-Jaccard verify
     # at cluster width (the containment_prefix_pairs fix) read SLOWER
     # here (2.46 vs 2.18 s, NEW arm at LOWER load) — the
@@ -926,9 +925,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.6,
     num_hashes: int = MINHASH_NUM_HASHES,
-    id_col: str = "doc_id",
-    k: int = MINHASH_SHINGLE_K,
-    min_collisions: int = MINHASH_MIN_COLLISIONS,
     max_bucket_size: int = MINHASH_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Near-dup pairs via exact-dup collapse → MinHash-LSH candidates →
@@ -961,8 +957,7 @@ def minhash_lsh_pairs(
     slots.
     """
     groups, sh, rep_pairs = _minhash_rep_pairs(
-        df, threshold, num_hashes, id_col, k, min_collisions,
-        max_bucket_size,
+        df, threshold, num_hashes, max_bucket_size=max_bucket_size
     )
 
     # Expand distinct-content pairs back to document pairs: identity
@@ -972,7 +967,7 @@ def minhash_lsh_pairs(
         groups,
         {"n_common": F.col("n_sh"), "jaccard": F.lit(1.0)},
         per_rep=sh.select(
-            F.col(id_col).alias("rep"), F.size("shingles").alias("n_sh")
+            F.col("doc_id").alias("rep"), F.size("shingles").alias("n_sh")
         ),
     )
     return within.unionByName(
@@ -984,11 +979,6 @@ def cross_corpus_near_dup(
     new_df: DataFrame,
     corpus_df: DataFrame,
     threshold: float = 0.6,
-    num_hashes: int = 16,
-    id_col: str = "doc_id",
-    k: int = 3,
-    min_collisions: int = 2,
-    max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Best-match near-dup FILTER of a new batch against an existing
     corpus: for every NEW document whose k-shingle Jaccard with some
@@ -1022,12 +1012,12 @@ def cross_corpus_near_dup(
       corpus id) is correct through the collapse because
       _collapse_exact's representative IS its group's min id.
     """
-    groups_n, reps_n = _collapse_exact(new_df, id_col)
-    groups_c, reps_c = _collapse_exact(corpus_df, id_col)
+    groups_n, reps_n = _collapse_exact(new_df, "doc_id")
+    groups_c, reps_c = _collapse_exact(corpus_df, "doc_id")
     # eager: each side feeds several joins whose broadcast builds
     # race a lazy cache and re-shingle (see _collapse_exact, r13)
-    sh_n = shingled(reps_n, id_col, k).transform(checkpoint_stage)
-    sh_c = shingled(reps_c, id_col, k).transform(checkpoint_stage)
+    sh_n = shingled(reps_n, k=MINHASH_SHINGLE_K).transform(checkpoint_stage)
+    sh_c = shingled(reps_c, k=MINHASH_SHINGLE_K).transform(checkpoint_stage)
 
     # exact-content tier: same fingerprint => identical shingle sets
     exact = (
@@ -1035,7 +1025,7 @@ def cross_corpus_near_dup(
         .join(groups_c.select(F.col("rep").alias("corp_rep"), "fp"), "fp")
         .join(
             sh_c.select(
-                F.col(id_col).alias("corp_rep"),
+                F.col("doc_id").alias("corp_rep"),
                 F.size("shingles").alias("n_common"),
             ),
             "corp_rep",
@@ -1043,16 +1033,16 @@ def cross_corpus_near_dup(
         .select("new_rep", "corp_rep", "n_common", F.lit(1.0).alias("jaccard"))
     )
 
-    melt_n = _melted_signatures(sh_n, id_col, num_hashes).withColumnRenamed(
-        id_col, "new_rep"
+    melt_n = _melted_signatures(sh_n, "doc_id", MINHASH_NUM_HASHES).withColumnRenamed(
+        "doc_id", "new_rep"
     )
-    melt_c = _melted_signatures(sh_c, id_col, num_hashes).withColumnRenamed(
-        id_col, "corp_rep"
+    melt_c = _melted_signatures(sh_c, "doc_id", MINHASH_NUM_HASHES).withColumnRenamed(
+        "doc_id", "corp_rep"
     )
     hot = (
         melt_c.groupBy("slot", "val")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_bucket_size)
+        .filter(F.col("n") > MINHASH_MAX_BUCKET_SIZE)
         .select("slot", "val")
     )
     cand = (
@@ -1060,19 +1050,19 @@ def cross_corpus_near_dup(
         .join(hot, ["slot", "val"], "left_anti")
         .groupBy("new_rep", "corp_rep")
         .agg(F.count(F.lit(1)).alias("n_coll"))
-        .filter(F.col("n_coll") >= min_collisions)
+        .filter(F.col("n_coll") >= MINHASH_MIN_COLLISIONS)
         .select("new_rep", "corp_rep")
     )
     verified = (
         cand.join(
             sh_n.select(
-                F.col(id_col).alias("new_rep"), F.col("shingles").alias("sh_a")
+                F.col("doc_id").alias("new_rep"), F.col("shingles").alias("sh_a")
             ),
             "new_rep",
         )
         .join(
             sh_c.select(
-                F.col(id_col).alias("corp_rep"), F.col("shingles").alias("sh_b")
+                F.col("doc_id").alias("corp_rep"), F.col("shingles").alias("sh_b")
             ),
             "corp_rep",
         )
@@ -1096,10 +1086,10 @@ def cross_corpus_near_dup(
         .drop("__rn")
     )
     members_n = groups_n.select(
-        F.col("rep").alias("new_rep"), F.explode("members").alias(id_col)
+        F.col("rep").alias("new_rep"), F.explode("members").alias("doc_id")
     )
     return best.join(members_n, "new_rep").select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("corp_rep").alias("corpus_doc_id"),
         "n_common",
         "jaccard",
@@ -1111,12 +1101,13 @@ def cross_corpus_near_dup(
 # ---------------------------------------------------------------------------
 
 
+#: Width of the SimHash sketch.
+SIMHASH_BITS = 60
+
+
 def simhash_sketch(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-    k: int = 3,
 ) -> DataFrame:
     """60-bit SimHash over each document's distinct word-k-gram
     shingles: bit b of the sketch is 1 iff at least half the shingle
@@ -1134,10 +1125,10 @@ def simhash_sketch(
     array re-scan per row."""
     ex = (
         ensure_parallelism(df)
-        .select(F.col(id_col), tokens(text_col).alias("__toks"))
+        .select(F.col(id_col), tokens("text").alias("__toks"))
         .select(
             F.col(id_col),
-            F.explode(F.array_distinct(gram_array("__toks", k))).alias("token"),
+            F.explode(F.array_distinct(gram_array("__toks", SHINGLE_K))).alias("token"),
         )
         .select(id_col, md5_hash64(F.col("token")).alias("h"))
     )
@@ -1150,12 +1141,12 @@ def simhash_sketch(
         F.count(F.lit(1)).alias("n"),
         *[
             F.expr(f"sum(shiftright(h, {b}) & 1)").alias(f"b{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ],
     )
     sk_sql = " + ".join(
         f"IF(b{b} * 2 >= n, CAST({2 ** b} AS BIGINT), CAST(0 AS BIGINT))"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     return agg.select(id_col, F.expr(sk_sql).alias("sk"))
 
@@ -1163,7 +1154,6 @@ def simhash_sketch(
 def simhash_pairs(
     df: DataFrame,
     max_hamming: int = 6,
-    id_col: str = "doc_id",
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Near-dup pairs within Hamming distance ``max_hamming`` of the
@@ -1181,16 +1171,16 @@ def simhash_pairs(
     an all-identical low-entropy bit range) and would blow the join
     output up quadratically; pairs within the hamming budget still
     surface through their other max_hamming chunks."""
-    groups, reps = _collapse_exact(df, id_col)
+    groups, reps = _collapse_exact(df, "doc_id")
     # cache: the chunk join consumes the sketch THREE times (bucket
     # counts + both self-join sides); uncached, the explode+61-column
     # agg pipeline re-runs for each — measured 2.3x slower at sf0.1.
     # One (id, long) row per doc; eager localCheckpoint (r13) so the
     # three consumers (several of them broadcast builds, which race a
     # lazy cache) read one materialization.
-    sk = simhash_sketch(reps, id_col).transform(checkpoint_stage)
+    sk = simhash_sketch(reps, "doc_id").transform(checkpoint_stage)
     rep_pairs = hamming_chunk_pairs(
-        sk, id_col, "sk", bits=60, max_hamming=max_hamming,
+        sk, "doc_id", "sk", bits=SIMHASH_BITS, max_hamming=max_hamming,
         max_bucket_size=max_bucket_size,
     )
     within = _within_pairs(groups, {"hamming": F.lit(0).cast("int")})
@@ -1320,8 +1310,6 @@ def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
     id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     max_iter: int = 25,
     small_graph_edges: int = 5_000_000,
     small_graph_nodes: int = 2_000_000,
@@ -1377,7 +1365,7 @@ def connected_components(
         stats = pairs.agg(
             F.count(F.lit(1)).alias("n_edges"),
             (
-                F.approx_count_distinct(a_col) + F.approx_count_distinct(b_col)
+                F.approx_count_distinct("doc_a") + F.approx_count_distinct("doc_b")
             ).alias("n_nodes_est"),
         ).first()
         small = (
@@ -1389,7 +1377,7 @@ def connected_components(
     else:
         small = False
     if small:
-        endpoint_comp = _cc_union_find_one_partition(pairs, id_col, a_col, b_col)
+        endpoint_comp = _cc_union_find_one_partition(pairs, id_col, "doc_a", "doc_b")
         return (
             nodes.select(F.col(id_col).alias("node"))
             .join(endpoint_comp, "node", "left_outer")
@@ -1399,9 +1387,9 @@ def connected_components(
             )
         )
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
         .distinct()
         .cache()
@@ -1469,9 +1457,7 @@ def connected_components(
     return labels.select(F.col("node").alias(id_col), "comp")
 
 
-def dedup_clusters(
-    df: DataFrame, threshold: float = 0.6, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, threshold: float = 0.6) -> DataFrame:
     """End-to-end near-dup clustering of a corpus: MinHash-LSH pairs →
     connected components → one row per document with its cluster id,
     cluster size, and whether it is the canonical survivor (min id).
@@ -1500,7 +1486,7 @@ def dedup_clusters(
     # Same candidate-generation params as minhash_lsh_pairs — both
     # take the MINHASH_* module defaults so the clusters query can
     # never drift from the pairs query on a retune.
-    groups, sh, rep_pairs = _minhash_rep_pairs(df, threshold, id_col=id_col)
+    groups, sh, rep_pairs = _minhash_rep_pairs(df, threshold)
     # Eager localCheckpoint instead of cache(): the verified rep-pair
     # relation is tiny (near-dup pairs only), it is re-read by the CC
     # gate agg + every propagation round + the endpoints scan, and —
@@ -1513,31 +1499,31 @@ def dedup_clusters(
     # just materialized all of that, so release it now.
     sh.unpersist()
     endpoints = (
-        pairs.select(F.col("doc_a").alias(id_col))
-        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    rep_comp = connected_components(pairs, endpoints, id_col=id_col)
+    rep_comp = connected_components(pairs, endpoints, id_col="doc_id")
     members = groups.select(
-        F.col("rep"), F.explode("members").alias(id_col)
+        F.col("rep"), F.explode("members").alias("doc_id")
     )
     # comp is referenced twice below (sizes + the final join); a narrow
     # 2-long-column checkpoint shares the scan AND lets the groups
     # cache (from _collapse_exact) be released here instead of leaking
     # into session-lifetime executor storage.
     comp = members.join(
-        rep_comp.withColumnRenamed(id_col, "rep"), "rep", "left_outer"
+        rep_comp.withColumnRenamed("doc_id", "rep"), "rep", "left_outer"
     ).select(
-        id_col, F.coalesce("comp", F.col("rep")).alias("comp")
+        "doc_id", F.coalesce("comp", F.col("rep")).alias("comp")
     ).transform(checkpoint_stage)
     groups.unpersist()
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         comp.join(sizes, "comp")
         .select(
-            id_col,
+            "doc_id",
             F.col("comp").alias("cluster_id"),
             "cluster_size",
-            (F.col(id_col) == F.col("comp")).alias("is_canonical"),
+            (F.col("doc_id") == F.col("comp")).alias("is_canonical"),
         )
     )

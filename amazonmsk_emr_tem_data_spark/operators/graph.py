@@ -33,28 +33,80 @@ from __future__ import annotations
 
 from ..sources.files import checkpoint_stage
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Rank mass carried as units of 1e-12 (total mass == SCALE).
 SCALE = 10**12
 
 
+#: Damping factor d, in percent, and the fixed iteration count of both
+#: PageRank variants (their SQL twins unroll the same count).
+DAMPING_PCT = 85
+N_ITERATIONS = 5
+
+
+def _rank_rounds(
+    edges: DataFrame, ranks: DataFrame, target: Column, n_targets: int
+) -> DataFrame:
+    """The PageRank loop shared by ``pagerank`` and
+    ``personalized_pagerank``: N_ITERATIONS rounds over ``ranks``
+    (``node``, ``rank_micro`` and any carried columns). Each round the
+    teleport mass and the dangling mass return uniformly to the
+    ``n_targets`` nodes where ``target`` holds; every other node gets
+    only its in-contributions. Each round's ranks are checkpointed."""
+    base = (100 - DAMPING_PCT) * SCALE // (100 * n_targets)
+    out_deg = edges.groupBy("src").agg(F.sum("w_edge").alias("w_out"))
+    norm_edges = edges.join(out_deg, "src").cache()
+    carried = [c for c in ranks.columns if c != "rank_micro"]
+    ranks = ranks.transform(checkpoint_stage)
+    for _ in range(N_ITERATIONS):
+        contribs = (
+            norm_edges.join(ranks, norm_edges["src"] == ranks["node"])
+            .select(
+                F.col("dst").alias("node"),
+                F.expr("rank_micro * w_edge div w_out").alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("inc"))
+        )
+        # dangling mass: rank held by nodes with no out-edges, spread
+        # over the targets. 1-row aggregate → broadcast, never a
+        # driver trip.
+        dangling = (
+            ranks.join(out_deg, ranks["node"] == out_deg["src"], "left_anti")
+            .agg(F.coalesce(F.sum("rank_micro"), F.lit(0)).alias("dang"))
+        )
+        ranks = (
+            ranks.select(*carried)
+            .join(contribs, "node", "left_outer")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                *carried,
+                (
+                    F.when(target, F.lit(base)).otherwise(F.lit(0))
+                    + F.expr(f"{DAMPING_PCT} * coalesce(inc, 0L) div 100")
+                    + F.when(
+                        target,
+                        F.expr(
+                            f"{DAMPING_PCT} * dang div (100 * {n_targets})"
+                        ),
+                    ).otherwise(F.lit(0))
+                ).cast("long").alias("rank_micro"),
+            )
+            .transform(checkpoint_stage)
+        )
+    return ranks
+
+
 def pagerank(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "page",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w_edge",
-    damping_pct: int = 85,
-    n_iterations: int = 5,
-    checkpoint: bool = True,
+    edges: DataFrame, nodes: DataFrame, id_col: str = "page"
 ) -> DataFrame:
     """Weighted PageRank with dangling-mass redistribution, fixed
-    iteration count, exact integer arithmetic.
+    iteration count, exact integer arithmetic, over ``(src, dst,
+    w_edge)`` edges.
 
-    Per iteration, with d = damping_pct/100 and N = |nodes|::
+    Per iteration, with d = DAMPING_PCT/100 and N = |nodes|::
 
         contrib(u→v) = rank[u] * w(u,v) // w_out(u)
         rank'[v]     = (1-d)*SCALE // N
@@ -72,52 +124,11 @@ def pagerank(
         return nodes.select(
             F.col(id_col), F.lit(0).cast("long").alias("rank_micro")
         )
-    base = (100 - damping_pct) * SCALE // (100 * n_nodes)
-    out_deg = edges.groupBy(src_col).agg(
-        F.sum(weight_col).alias("w_out")
-    )
-    norm_edges = edges.join(out_deg, src_col).cache()
     ranks = nodes.select(
         F.col(id_col).alias("node"),
         F.lit(SCALE // n_nodes).cast("long").alias("rank_micro"),
     )
-    if checkpoint:
-        ranks = ranks.transform(checkpoint_stage)
-    for _ in range(n_iterations):
-        contribs = (
-            norm_edges.join(ranks, norm_edges[src_col] == ranks["node"])
-            .select(
-                F.col(dst_col).alias("node"),
-                F.expr(f"rank_micro * {weight_col} div w_out").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inc"))
-        )
-        # dangling mass: rank held by nodes with no out-edges, spread
-        # uniformly. 1-row aggregate → broadcast, never a driver trip.
-        dangling = (
-            ranks.join(
-                out_deg, ranks["node"] == out_deg[src_col], "left_anti"
-            )
-            .agg(F.coalesce(F.sum("rank_micro"), F.lit(0)).alias("dang"))
-        )
-        ranks = (
-            ranks.select("node")
-            .join(contribs, "node", "left_outer")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"{damping_pct} * coalesce(inc, 0L) div 100")
-                    + F.expr(
-                        f"{damping_pct} * dang div (100 * {n_nodes})"
-                    )
-                ).cast("long").alias("rank_micro"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.transform(checkpoint_stage)
+    ranks = _rank_rounds(edges, ranks, F.lit(True), n_nodes)
     return ranks.select(F.col("node").alias(id_col), "rank_micro")
 
 
@@ -125,8 +136,6 @@ def kcore(
     undirected_edges: DataFrame,
     k: int = 2,
     rounds: int = 8,
-    a: str = "a",
-    b: str = "b",
 ) -> DataFrame:
     """Bounded-round k-core peeling over a canonical undirected edge
     set (distinct rows with ``a < b``): repeat ``rounds`` times
@@ -159,18 +168,18 @@ def kcore(
     # than |E|. Each round's edge set is eagerly checkpointed (it
     # feeds the degree aggregate AND the next round's semi-joins);
     # the early-exit count then reads materialized partitions.
-    cur = undirected_edges.select(a, b).distinct().transform(checkpoint_stage)
+    cur = undirected_edges.select("a", "b").distinct().transform(checkpoint_stage)
     n_edges = -1
     for _round in range(rounds):
         deg = (
-            cur.select(F.explode(F.array(a, b)).alias("n"))
+            cur.select(F.explode(F.array("a", "b")).alias("n"))
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("d"))
         )
         nodes = deg.filter(F.col("d") >= k).select("n")
         cur = (
-            cur.join(nodes, cur[a] == nodes["n"], "left_semi")
-            .join(nodes, cur[b] == nodes["n"], "left_semi")
+            cur.join(nodes, cur["a"] == nodes["n"], "left_semi")
+            .join(nodes, cur["b"] == nodes["n"], "left_semi")
             .transform(checkpoint_stage)
         )
         # Fixpoint early-exit: an unchanged edge COUNT means an
@@ -188,7 +197,7 @@ def kcore(
                 break
             n_edges = m_next
     return (
-        cur.select(F.explode(F.array(a, b)).alias("n"))
+        cur.select(F.explode(F.array("a", "b")).alias("n"))
         .groupBy("n")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
     )
@@ -198,8 +207,6 @@ def bfs_hops(
     undirected_edges: DataFrame,
     seeds: DataFrame,
     rounds: int = 4,
-    a: str = "a",
-    b: str = "b",
 ) -> DataFrame:
     """Bounded-round multi-source BFS over a canonical undirected edge
     set: every node reachable from ``seeds`` (a one-column ``n``
@@ -216,9 +223,9 @@ def bfs_hops(
     100 TB the frontier semi-join shuffles node IDs only, never edge
     payloads, and the visited set stays a fraction of the node list.
     """
-    edges = undirected_edges.select(a, b).distinct()
+    edges = undirected_edges.select("a", "b").distinct()
     bidir = edges.unionByName(
-        edges.select(F.col(b).alias(a), F.col(a).alias(b))
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).cache()
     # distinct() on seeds too: a duplicated seed row would ride the
     # whole union chain into the output (the anti-join only blocks
@@ -231,8 +238,8 @@ def bfs_hops(
     frontier = dist.select("n")
     for i in range(1, rounds + 1):
         nbrs = (
-            bidir.join(frontier, bidir[a] == frontier["n"], "left_semi")
-            .select(F.col(b).alias("n"))
+            bidir.join(frontier, bidir["a"] == frontier["n"], "left_semi")
+            .select(F.col("b").alias("n"))
             .distinct()
         )
         new = (
@@ -248,8 +255,6 @@ def bfs_hops(
 def label_propagation(
     undirected_edges: DataFrame,
     rounds: int = 4,
-    a: str = "a",
-    b: str = "b",
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007,
     deterministic variant): labels start as node IDs; each round every
@@ -270,12 +275,12 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    edges = undirected_edges.select(a, b).distinct()
+    edges = undirected_edges.select("a", "b").distinct()
     bidir = edges.unionByName(
-        edges.select(F.col(b).alias(a), F.col(a).alias(b))
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).cache()
     labels = (
-        bidir.select(F.col(a).alias("n"))
+        bidir.select(F.col("a").alias("n"))
         .distinct()
         .select("n", F.col("n").alias("lab"))
         .transform(checkpoint_stage)
@@ -285,8 +290,8 @@ def label_propagation(
     )
     for _ in range(rounds):
         votes = (
-            bidir.join(labels, bidir[a] == labels["n"])
-            .select(F.col(b).alias("n"), "lab")
+            bidir.join(labels, bidir["a"] == labels["n"])
+            .select(F.col("b").alias("n"), "lab")
             .groupBy("n", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -300,16 +305,7 @@ def label_propagation(
 
 
 def personalized_pagerank(
-    edges: DataFrame,
-    nodes: DataFrame,
-    seeds: DataFrame,
-    id_col: str = "page",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w_edge",
-    damping_pct: int = 85,
-    n_iterations: int = 5,
-    checkpoint: bool = True,
+    edges: DataFrame, nodes: DataFrame, seeds: DataFrame, id_col: str = "page"
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart): identical to
     ``pagerank`` except BOTH the teleport mass and the dangling mass
@@ -337,11 +333,6 @@ def personalized_pagerank(
             F.lit(0).cast("long").alias("rank_micro"),
             "is_seed",
         )
-    base = (100 - damping_pct) * SCALE // (100 * n_seeds)
-    out_deg = edges.groupBy(src_col).agg(
-        F.sum(weight_col).alias("w_out")
-    )
-    norm_edges = edges.join(out_deg, src_col).cache()
     ranks = flagged.select(
         "node",
         "is_seed",
@@ -350,47 +341,7 @@ def personalized_pagerank(
         .cast("long")
         .alias("rank_micro"),
     )
-    if checkpoint:
-        ranks = ranks.transform(checkpoint_stage)
-    for _ in range(n_iterations):
-        contribs = (
-            norm_edges.join(ranks, norm_edges[src_col] == ranks["node"])
-            .select(
-                F.col(dst_col).alias("node"),
-                F.expr(f"rank_micro * {weight_col} div w_out").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inc"))
-        )
-        dangling = (
-            ranks.join(
-                out_deg, ranks["node"] == out_deg[src_col], "left_anti"
-            )
-            .agg(F.coalesce(F.sum("rank_micro"), F.lit(0)).alias("dang"))
-        )
-        ranks = (
-            ranks.select("node", "is_seed")
-            .join(contribs, "node", "left_outer")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "is_seed",
-                (
-                    F.when(F.col("is_seed"), F.lit(base)).otherwise(
-                        F.lit(0)
-                    )
-                    + F.expr(f"{damping_pct} * coalesce(inc, 0L) div 100")
-                    + F.when(
-                        F.col("is_seed"),
-                        F.expr(
-                            f"{damping_pct} * dang div (100 * {n_seeds})"
-                        ),
-                    ).otherwise(F.lit(0))
-                ).cast("long").alias("rank_micro"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.transform(checkpoint_stage)
+    ranks = _rank_rounds(edges, ranks, F.col("is_seed"), n_seeds)
     return ranks.select(
         F.col("node").alias(id_col), "rank_micro", "is_seed"
     )
@@ -400,8 +351,6 @@ def per_source_harmonic(
     undirected_edges: DataFrame,
     sources: DataFrame,
     rounds: int = 4,
-    a: str = "a",
-    b: str = "b",
 ) -> DataFrame:
     """Bounded-round harmonic centrality for a BOUNDED source set:
     per-source BFS (state keyed (src, n)) for ``rounds`` hops, then
@@ -422,7 +371,7 @@ def per_source_harmonic(
     rounds shuffle only the frontier) + anti-join against visited —
     ≤ |sources|·|nodes| state, node IDs only, never edge payloads;
     lineage truncated per round."""
-    edges = undirected_edges.select(a, b).distinct()
+    edges = undirected_edges.select("a", "b").distinct()
     # Built once, hash-partitioned on the join key, then eagerly
     # localCheckpoint'ed: the checkpoint pins the repartitioning so
     # per-round frontier joins shuffle only the frontier side, and —
@@ -434,9 +383,9 @@ def per_source_harmonic(
     # measured 74-86 s vs this shape's 61-66 s at the 100x fixture.)
     bidir = (
         edges.unionByName(
-            edges.select(F.col(b).alias(a), F.col(a).alias(b))
+            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
-        .repartition(F.col(a))
+        .repartition(F.col("a"))
         .transform(checkpoint_stage)
     )
     seeds = sources.select("n").distinct()
@@ -447,8 +396,8 @@ def per_source_harmonic(
     frontier = reached
     for t in range(1, rounds + 1):
         nxt = (
-            frontier.join(bidir, frontier["node"] == bidir[a])
-            .select("src", F.col(b).alias("node"))
+            frontier.join(bidir, frontier["node"] == bidir["a"])
+            .select("src", F.col("b").alias("node"))
             .distinct()
         )
         new = nxt.join(
@@ -487,8 +436,6 @@ def hyperball_kmv(
     undirected_edges: DataFrame,
     rounds: int = 2,
     k: int = 8,
-    a: str = "a",
-    b: str = "b",
 ) -> DataFrame:
     """HyperBall neighborhood-function sketch (Boldi-Vigna, "In-core
     computation of geometric centralities with HyperBall", 2013) with
@@ -524,12 +471,12 @@ def hyperball_kmv(
 
     from ..functions.text import md5_hash64
 
-    edges = undirected_edges.select(a, b).distinct()
+    edges = undirected_edges.select("a", "b").distinct()
     bidir = edges.unionByName(
-        edges.select(F.col(b).alias(a), F.col(a).alias(b))
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     adj = (
-        bidir.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+        bidir.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .repartition("src")
         .transform(checkpoint_stage)
     )

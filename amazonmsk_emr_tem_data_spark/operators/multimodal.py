@@ -44,17 +44,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def with_binary_payload(
-    df: DataFrame, source_col: str = "text", mime: str = "application/octet-stream"
-) -> DataFrame:
+def with_binary_payload(df: DataFrame) -> DataFrame:
     """Attach a binary payload + typed metadata struct. (Fixtures have
     no real media, so the payload is the UTF-8 encoding of a source
     column — the column *types and plumbing* are the deliverable.)"""
-    payload = F.encode(F.col(source_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.withColumn("payload", payload).withColumn(
         "media_meta",
         F.struct(
-            F.lit(mime).alias("mime"),
+            F.lit("application/octet-stream").alias("mime"),
             F.octet_length(payload).cast("long").alias("byte_len"),
             F.sha2(payload, 256).alias("sha256"),
         ),
@@ -2080,7 +2078,7 @@ _DECODE_SCHEMA = T.StructType(
 )
 
 
-def decode_images(df: DataFrame, id_col: str = "doc_id", fake: bool = True) -> DataFrame:
+def decode_images(df: DataFrame, fake: bool = True) -> DataFrame:
     """Decode binary payloads to image features via an Arrow-batched
     pandas iterator. Each batch stays columnar driver→executor; Python
     touches bytes only inside the vectorized iterator.
@@ -2130,7 +2128,7 @@ def decode_images(df: DataFrame, id_col: str = "doc_id", fake: bool = True) -> D
             feats = [decode_one(p if p is not None else b"") for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "width": [f[0] for f in feats],
                     "height": [f[1] for f in feats],
                     "n_channels": [f[2] for f in feats],
@@ -2138,7 +2136,7 @@ def decode_images(df: DataFrame, id_col: str = "doc_id", fake: bool = True) -> D
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(decode_iter, _DECODE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(decode_iter, _DECODE_SCHEMA)
 
 
 _EMBED_SCHEMA = T.StructType(
@@ -2149,9 +2147,11 @@ _EMBED_SCHEMA = T.StructType(
 )
 
 
-def embed_media(
-    df: DataFrame, dim: int = 16, id_col: str = "doc_id", fake: bool = True
-) -> DataFrame:
+#: Buckets of the stub byte-histogram media embedding.
+MEDIA_EMBED_DIM = 16
+
+
+def embed_media(df: DataFrame) -> DataFrame:
     """Media → embedding vectors via an Arrow-batched pandas iterator —
     the feature-extraction stage between decode and similarity search.
 
@@ -2170,33 +2170,25 @@ def embed_media(
         for pdf in batches:
             vecs = []
             for payload in pdf["payload"]:
-                if not fake:
-                    raise NotImplementedError(
-                        "no media models in this environment; plug in an "
-                        "ONNX/torch encoder here"
-                    )
                 data = payload if payload is not None else b""
-                h = np.zeros(dim, dtype=np.float64)
+                h = np.zeros(MEDIA_EMBED_DIM, dtype=np.float64)
                 if data:
                     arr = np.frombuffer(data, dtype=np.uint8)
-                    h = np.bincount(arr % dim, minlength=dim).astype(np.float64)
+                    h = np.bincount(arr % MEDIA_EMBED_DIM, minlength=MEDIA_EMBED_DIM).astype(np.float64)
                     n = np.linalg.norm(h)
                     if n > 0:
                         h = h / n
                 vecs.append(h.tolist())
             yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), "embedding": vecs}
+                {"doc_id": pdf["doc_id"].astype("int64"), "embedding": vecs}
             )
 
-    return df.select(id_col, "payload").mapInPandas(embed_iter, _EMBED_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(embed_iter, _EMBED_SCHEMA)
 
 
 def media_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.98,
-    dim: int = 16,
-    id_col: str = "doc_id",
-    fake: bool = True,
 ) -> DataFrame:
     """End-to-end multimodal near-dup: payload → embedding
     (Arrow-batched stub encoder) → cosine pair join with exact-dup
@@ -2206,10 +2198,12 @@ def media_near_dup_pairs(
     recall characteristics, not the plan."""
     from .similarity import cosine_near_dup_pairs
 
-    emb = embed_media(df, dim=dim, id_col=id_col, fake=fake)
-    return cosine_near_dup_pairs(
-        emb, threshold=threshold, id_col=id_col, vec_col="embedding"
-    ).withColumnRenamed("vec_a", "doc_a").withColumnRenamed("vec_b", "doc_b")
+    emb = embed_media(df)
+    return (
+        cosine_near_dup_pairs(emb, threshold=threshold, id_col="doc_id")
+        .withColumnRenamed("vec_a", "doc_a")
+        .withColumnRenamed("vec_b", "doc_b")
+    )
 
 
 _AHASH_SCHEMA = T.StructType(
@@ -2220,9 +2214,11 @@ _AHASH_SCHEMA = T.StructType(
 )
 
 
-def ahash_images(
-    df: DataFrame, id_col: str = "doc_id", fake: bool = True, hash_size: int = 8
-) -> DataFrame:
+#: Side of the aHash downsample grid (AHASH_SIZE² bits).
+AHASH_SIZE = 8
+
+
+def ahash_images(df: DataFrame, fake: bool = True) -> DataFrame:
     """64-bit average-hash (aHash) perceptual fingerprint per image:
     decode → channel-mean grayscale → nearest-neighbor 8×8 downsample →
     bit i = pixel_i > mean. The standard cheap perceptual feature for
@@ -2247,21 +2243,21 @@ def ahash_images(
         def ahash_one(payload: bytes) -> int:
             if fake:
                 data = (payload or b"\x00") * (
-                    1 + (hash_size * hash_size) // max(1, len(payload or b"\x00"))
+                    1 + (AHASH_SIZE * AHASH_SIZE) // max(1, len(payload or b"\x00"))
                 )
                 gray = (
                     np.frombuffer(
-                        data[: hash_size * hash_size], dtype=np.uint8
+                        data[: AHASH_SIZE * AHASH_SIZE], dtype=np.uint8
                     )
-                    .reshape(hash_size, hash_size)
+                    .reshape(AHASH_SIZE, AHASH_SIZE)
                     .astype(np.float64)
                 )
             else:
                 arr = decode_any(payload)
                 full = arr.astype(np.float64).mean(axis=2)
                 h, w = full.shape
-                ys = np.minimum((np.arange(hash_size) * h) // hash_size, h - 1)
-                xs = np.minimum((np.arange(hash_size) * w) // hash_size, w - 1)
+                ys = np.minimum((np.arange(AHASH_SIZE) * h) // AHASH_SIZE, h - 1)
+                xs = np.minimum((np.arange(AHASH_SIZE) * w) // AHASH_SIZE, w - 1)
                 gray = full[np.ix_(ys, xs)]
             bits = (gray.reshape(-1) > gray.mean()).astype(np.uint64)
             val = np.uint64(0)
@@ -2272,7 +2268,7 @@ def ahash_images(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "ahash": [
                         ahash_one(p if p is not None else b"")
                         for p in pdf["payload"]
@@ -2280,13 +2276,12 @@ def ahash_images(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(ahash_iter, _AHASH_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(ahash_iter, _AHASH_SCHEMA)
 
 
 def media_phash_near_dup(
     df: DataFrame,
     max_hamming: int = 6,
-    id_col: str = "doc_id",
     fake: bool = True,
 ) -> DataFrame:
     """Perceptual near-dup pairs over image payloads: aHash fingerprint
@@ -2301,9 +2296,9 @@ def media_phash_near_dup(
     # sides), and the self-join broadcast builds race a lazy cache —
     # each re-running the Arrow DECODE+hash pipeline. One long per
     # image, materialized once.
-    sk = ahash_images(df, id_col=id_col, fake=fake).transform(checkpoint_stage)
+    sk = ahash_images(df, fake=fake).transform(checkpoint_stage)
     return hamming_chunk_pairs(
-        sk, id_col, "ahash", bits=64, max_hamming=max_hamming
+        sk, "doc_id", "ahash", bits=64, max_hamming=max_hamming
     )
 
 
@@ -2318,7 +2313,7 @@ _FRAME_SCHEMA = T.StructType(
 
 
 def sample_frames(
-    df: DataFrame, n_frames: int = 4, id_col: str = "doc_id", fake: bool = True
+    df: DataFrame, n_frames: int = 4, fake: bool = True
 ) -> DataFrame:
     """Frame sampling for video payloads: 1 input row → N frame rows.
     Output explosion happens executor-side — the driver never sees
@@ -2407,7 +2402,7 @@ def sample_frames(
 
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 data = payload if payload is not None else b""
                 if not fake:
                     data = bytes(data)
@@ -2485,7 +2480,7 @@ def sample_frames(
                 rows, columns=["doc_id", "frame_idx", "frame_offset_bytes", "frame_sha256"]
             )
 
-    return df.select(id_col, "payload").mapInPandas(frames_iter, _FRAME_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(frames_iter, _FRAME_SCHEMA)
 
 
 _AUDIO_SCHEMA = T.StructType(
@@ -2500,9 +2495,7 @@ _AUDIO_SCHEMA = T.StructType(
 )
 
 
-def decode_audio(
-    df: DataFrame, id_col: str = "doc_id", fake: bool = True
-) -> DataFrame:
+def decode_audio(df: DataFrame, fake: bool = True) -> DataFrame:
     """Decode binary audio payloads to waveform features via the same
     Arrow-batched ``mapInPandas`` shape as decode_images — the audio
     member of the multimodal tier (round 9).
@@ -2549,7 +2542,7 @@ def decode_audio(
             ]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "sample_rate": [f[0] for f in feats],
                     "n_channels": [f[1] for f in feats],
                     "n_samples": [f[2] for f in feats],
@@ -2558,18 +2551,20 @@ def decode_audio(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(audio_iter, _AUDIO_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(audio_iter, _AUDIO_SCHEMA)
+
+
+#: Windows, one bit each, of the audio energy-envelope hash.
+ENVELOPE_WINDOWS = 64
 
 
 def envelope_hash_audio(
     df: DataFrame,
-    id_col: str = "doc_id",
     fake: bool = True,
-    n_windows: int = 64,
 ) -> DataFrame:
     """64-bit energy-envelope fingerprint per audio payload — the
     audio counterpart of the image aHash: decode → mono mix → split
-    into ``n_windows`` equal windows → per-window RMS → bit i =
+    into ENVELOPE_WINDOWS equal windows → per-window RMS → bit i =
     rms_i > mean(rms). Mean-thresholding makes the hash invariant to
     uniform gain (amplitude scaling scales every window and the mean
     alike) and robust to requantization (8-bit vs 16-bit of the same
@@ -2587,22 +2582,22 @@ def envelope_hash_audio(
         def hash_one(payload: bytes) -> int:
             if fake:
                 data = (payload or b"\x00") * (
-                    1 + n_windows // max(1, len(payload or b"\x00"))
+                    1 + ENVELOPE_WINDOWS // max(1, len(payload or b"\x00"))
                 )
                 env = np.frombuffer(
-                    data[:n_windows], dtype=np.uint8
+                    data[:ENVELOPE_WINDOWS], dtype=np.uint8
                 ).astype(np.float64)
             else:
                 _rate, samples = decode(payload)
                 mono = samples.astype(np.float64).mean(axis=1)
                 n = len(mono)
                 if n == 0:
-                    env = np.zeros(n_windows)
+                    env = np.zeros(ENVELOPE_WINDOWS)
                 else:
                     # pad to a multiple so every window is equal-size
-                    pad = (-n) % n_windows
+                    pad = (-n) % ENVELOPE_WINDOWS
                     mono = np.concatenate([mono, np.zeros(pad)])
-                    w = mono.reshape(n_windows, -1)
+                    w = mono.reshape(ENVELOPE_WINDOWS, -1)
                     env = np.sqrt((w * w).mean(axis=1))
             bits = (env > env.mean()).astype(np.uint64)
             val = np.uint64(0)
@@ -2613,7 +2608,7 @@ def envelope_hash_audio(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "envelope_hash": [
                         hash_one(p if p is not None else b"")
                         for p in pdf["payload"]
@@ -2621,7 +2616,7 @@ def envelope_hash_audio(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         env_iter,
         T.StructType(
             [
@@ -2632,10 +2627,12 @@ def envelope_hash_audio(
     )
 
 
+#: Hamming distance within which two audio hashes are near-dups.
+AUDIO_MAX_HAMMING = 6
+
+
 def audio_near_dup_pairs(
     df: DataFrame,
-    max_hamming: int = 6,
-    id_col: str = "doc_id",
     fake: bool = True,
 ) -> DataFrame:
     """Perceptual near-dup pairs over audio payloads: envelope hash →
@@ -2646,9 +2643,7 @@ def audio_near_dup_pairs(
     from .dedup import hamming_chunk_pairs
 
     # eager checkpoint, same rationale as media_phash_near_dup (r13)
-    sk = envelope_hash_audio(
-        df, id_col=id_col, fake=fake
-    ).transform(checkpoint_stage)
+    sk = envelope_hash_audio(df, fake=fake).transform(checkpoint_stage)
     return hamming_chunk_pairs(
-        sk, id_col, "envelope_hash", bits=64, max_hamming=max_hamming
+        sk, "doc_id", "envelope_hash", bits=64, max_hamming=AUDIO_MAX_HAMMING
     )

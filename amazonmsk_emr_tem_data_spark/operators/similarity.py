@@ -2,7 +2,7 @@
 
 Three tiers, trading exactness for scale:
 
-1. **Brute-force cosine top-k** (`cosine_topk`, `knn_join`): exact.
+1. **Brute-force cosine top-k** (`knn_join`): exact.
    The query side is broadcast (it's small by definition), so the fact
    scan never shuffles — per-partition partial top-k, then a final
    k-merge. At 100 TB this is one pass over the corpus per query batch.
@@ -27,6 +27,23 @@ from pyspark.sql.window import Window
 
 from ..functions.text import md5_hash64
 from ..sources.files import checkpoint_stage, ensure_parallelism
+
+#: ANN tuning shared by the operators below and by the SQL twins of the
+#: queries that run them: results per query, query count and PQ
+#: shortlist size, k-means rounds and sample size, IVF cells and
+#: probes, PQ subspaces, centroids per subspace and rounds, and the
+#: anchor cap of hard-negative mining.
+TOP_K = 5
+N_QUERIES = 5
+SHORTLIST_K = 20
+KMEANS_ITERS = 5
+SAMPLE_N = 4096
+IVF_N_CELLS = 8
+IVF_N_PROBE = 3
+PQ_M = 8
+PQ_KSUB = 16
+PQ_ITERS = 3
+MAX_ANCHORS = 64
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -226,46 +243,26 @@ def score_pairs_cosine(
     return src.mapInArrow(fold_cos, out_schema)
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k by cosine against one query vector. One narrow pass
-    (no shuffle until the final k-row sort)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = ensure_parallelism(embeddings).select(
-        id_col, cosine(F.col(vec_col), q).alias("cos_sim")
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
-
-
 def knn_join(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Exact k-NN join: for every query vector, its k nearest corpus
     vectors. The query side is broadcast → the corpus never shuffles;
     ranking windows partition by query."""
     joined = ensure_parallelism(embeddings).crossJoin(F.broadcast(queries)).select(
-        query_id_col,
-        id_col,
-        cosine(F.col(vec_col), F.col(query_vec_col)).alias("cos_sim"),
+        "query_id",
+        "vec_id",
+        cosine(F.col("embedding"), F.col("query_vec")).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
     return (
         joined.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
+        .select("query_id", "vec_id", "cos_sim", "rank")
     )
 
 
@@ -273,7 +270,6 @@ def cosine_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.45,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-space near-dup pairs: all (a < b) with cosine ≥
     threshold. Exact all-pairs — the verification-tier operator; at
@@ -283,10 +279,10 @@ def cosine_near_dup_pairs(
     then runs over distinct vectors only) and re-expanded algebraically,
     so replicated corpora cost O(distinct²), not O(rows²)."""
     groups, reps = _collapse_vectors(
-        ensure_parallelism(embeddings), id_col, vec_col
+        ensure_parallelism(embeddings), id_col, "embedding"
     )
-    a = reps.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("emb_a"))
-    b = reps.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("emb_b"))
+    a = reps.select(F.col(id_col).alias("vec_a"), F.col("embedding").alias("emb_a"))
+    b = reps.select(F.col(id_col).alias("vec_b"), F.col("embedding").alias("emb_b"))
     rep_pairs = (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .withColumn("cos_sim", cosine(F.col("emb_a"), F.col("emb_b")))
@@ -496,11 +492,7 @@ def lsh_ann_join(
     embeddings: DataFrame,
     dim: int,
     threshold: float = 0.45,
-    n_planes: int = 3,
     n_tables: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate near-dup pairs: candidates collide in ≥1 LSH table,
     then are exact-verified (so precision is 1.0; recall is governed by
@@ -513,18 +505,17 @@ def lsh_ann_join(
     verification (within-group pairs collide by construction — an LSH
     table cannot separate equal vectors — so expansion loses nothing)."""
     groups, reps = _collapse_vectors(
-        ensure_parallelism(embeddings), id_col, vec_col
+        ensure_parallelism(embeddings), "vec_id", "embedding"
     )
     # exploded (id, t, bk) rows straight from the Arrow bucketer; the
     # candidate join and dedup move ONLY ids — the r10 shape carried
     # both 64-float vectors through the (t, bk) join and the pair
     # dedup shuffle, dominating shuffle volume
     ex = with_lsh_buckets(
-        reps, dim, n_planes, n_tables, seed, vec_col,
-        keep_cols=[id_col],
+        reps, dim, n_tables=n_tables, keep_cols=["vec_id"]
     )
-    a = ex.select(F.col(id_col).alias("vec_a"), "t", "bk")
-    b = ex.select(F.col(id_col).alias("vec_b"), "t", "bk")
+    a = ex.select(F.col("vec_id").alias("vec_a"), "t", "bk")
+    b = ex.select(F.col("vec_id").alias("vec_b"), "t", "bk")
     candidates = (
         a.join(b, ["t", "bk"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -532,10 +523,10 @@ def lsh_ann_join(
         .dropDuplicates(["vec_a", "vec_b"])
     )
     va = reps.select(
-        F.col(id_col).alias("vec_a"), F.col(vec_col).alias("emb_a")
+        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
     )
     vb = reps.select(
-        F.col(id_col).alias("vec_b"), F.col(vec_col).alias("emb_b")
+        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
     )
     rep_pairs = (
         score_pairs_cosine(
@@ -575,10 +566,6 @@ def int8_quantize(
 def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 8,
-    iters: int = 5,
-    sample_n: int = 4096,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Coarse quantizer training: deterministic Lloyd's k-means on a
     bounded sample, driver-side numpy. This is the standard IVF recipe —
@@ -588,12 +575,12 @@ def kmeans_centroids(
     import numpy as np
 
     sample = (
-        embeddings.orderBy(id_col).limit(sample_n).select(vec_col).toPandas()
+        embeddings.orderBy("vec_id").limit(SAMPLE_N).select("embedding").toPandas()
     )
-    x = np.array([list(v) for v in sample[vec_col]], dtype=np.float64)
+    x = np.array([list(v) for v in sample["embedding"]], dtype=np.float64)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     cent = x[:k].copy()
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         sims = x @ cent.T
         assign = sims.argmax(axis=1)
         for c in range(k):
@@ -718,19 +705,13 @@ def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_cells: int = 8,
-    n_probe_cells: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF ANN: train a k-means coarse quantizer on a sample, assign
-    the corpus to cells scan-side, probe only the ``n_probe_cells``
+    the corpus to cells scan-side, probe only the IVF_N_PROBE
     cells nearest each query, exact-rank within them. The corpus is
     touched once for assignment and once (pruned) for scoring."""
-    centroids = kmeans_centroids(embeddings, k=n_cells, vec_col=vec_col, id_col=id_col)
-    celled = with_ivf_cell(ensure_parallelism(embeddings), centroids, vec_col)
+    centroids = kmeans_centroids(embeddings, k=IVF_N_CELLS)
+    celled = with_ivf_cell(ensure_parallelism(embeddings), centroids)
 
     cent_rows = [(c, [float(x) for x in vec]) for c, vec in enumerate(centroids)]
     cent_df = embeddings.sparkSession.createDataFrame(
@@ -738,27 +719,27 @@ def ivf_topk(
     )
     q_cells = (
         queries.crossJoin(F.broadcast(cent_df))
-        .withColumn("c_sim", cosine(F.col(query_vec_col), F.col("centroid")))
+        .withColumn("c_sim", cosine(F.col("query_vec"), F.col("centroid")))
         .withColumn(
             "c_rank",
             F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(
+                Window.partitionBy("query_id").orderBy(
                     F.col("c_sim").desc(), F.col("ivf_cell").asc()
                 )
             ),
         )
-        .filter(F.col("c_rank") <= n_probe_cells)
-        .select(query_id_col, query_vec_col, "ivf_cell")
+        .filter(F.col("c_rank") <= IVF_N_PROBE)
+        .select("query_id", "query_vec", "ivf_cell")
     )
     cand = celled.join(F.broadcast(q_cells), "ivf_cell")
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
     return (
-        cand.withColumn("cos_sim", cosine(F.col(vec_col), F.col(query_vec_col)))
+        cand.withColumn("cos_sim", cosine(F.col("embedding"), F.col("query_vec")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
+        .select("query_id", "vec_id", "cos_sim", "rank")
     )
 
 
@@ -769,12 +750,9 @@ def ivf_topk(
 
 def pq_train(
     embeddings: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    sample_n: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    m: int = PQ_M,
+    ksub: int = PQ_KSUB,
+    iters: int = PQ_ITERS,
 ) -> list[list[list[float]]]:
     """Product-quantization codebook training: split unit-normalized
     vectors into ``m`` subspaces and run plain-L2 deterministic Lloyd's
@@ -794,9 +772,9 @@ def pq_train(
     import numpy as np
 
     sample = (
-        embeddings.orderBy(id_col).limit(sample_n).select(vec_col).toPandas()
+        embeddings.orderBy("vec_id").limit(SAMPLE_N).select("embedding").toPandas()
     )
-    x = np.array([list(v) for v in sample[vec_col]], dtype=np.float64)
+    x = np.array([list(v) for v in sample["embedding"]], dtype=np.float64)
     # sequential-per-dim norm: matches _UNIT_SQL / the fold in
     # _normalized exactly (np.linalg.norm would pairwise-sum)
     nrm2 = np.zeros(len(x))
@@ -836,8 +814,6 @@ def pq_train(
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Encode each vector as ``m`` nearest-subspace-centroid ids
@@ -883,11 +859,11 @@ def pq_encode(
             row.append(c2)
         c2s.append(row)
     base = ensure_parallelism(embeddings).select(
-        F.col(id_col), *keep, F.col(vec_col).alias("_x")
+        F.col("vec_id"), *keep, F.col("embedding").alias("_x")
     )
     in_fields = {f.name: f for f in base.schema.fields}
     out_schema = T.StructType(
-        [in_fields[id_col]]
+        [in_fields["vec_id"]]
         + [in_fields[c] for c in keep]
         + [
             T.StructField(f"code{j + 1}", T.IntegerType(), True)
@@ -930,7 +906,7 @@ def pq_encode(
                     codes[rows, j] = (
                         key == minv[:, None]
                     ).argmax(axis=1)
-            res = pdf[[id_col, *keep]].copy()
+            res = pdf[["vec_id", *keep]].copy()
             for j in range(m):
                 res[f"code{j + 1}"] = pd.array(
                     [
@@ -946,14 +922,8 @@ def pq_encode(
 
 def pq_adc_topk(
     embeddings: DataFrame,
-    k: int = 5,
-    n_queries: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    sample_n: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = TOP_K,
+    n_queries: int = N_QUERIES,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over the PQ-encoded corpus
     (Jégou et al. 2011): approximate ‖q−x‖² = Σⱼ ‖qⱼ−cⱼ,code_j(x)‖².
@@ -966,12 +936,9 @@ def pq_adc_topk(
     queries broadcast; the per-query partial top-k is a partitioned
     rank window, the same pattern as ivf_topk. At 100 TB the encode
     pass is map-only and the ADC pass never shuffles the corpus."""
-    books = pq_train(
-        embeddings, m=m, ksub=ksub, iters=iters, sample_n=sample_n,
-        id_col=id_col, vec_col=vec_col,
-    )
+    books = pq_train(embeddings)
     dsub = len(books[0][0])
-    enc = pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col)
+    enc = pq_encode(embeddings, books)
     # The classic ADC LUT (Jégou 2011 §IV): per (query, subspace,
     # centroid) squared distances — n_queries × m × ksub doubles of
     # bounded MODEL STATE (like BM25's per-term idf), computed once on
@@ -979,8 +946,8 @@ def pq_adc_topk(
     # m folds over dsub elements to m array lookups + (m−1) adds.
     # Sequential Python sums keep every value bit-identical to the
     # fold/list_dot_product the engines would compute inline.
-    luts = _lut_frame(embeddings, books, n_queries, id_col, vec_col)
-    return _adc_rank(enc.crossJoin(F.broadcast(luts)), m, k, id_col)
+    luts = _lut_frame(embeddings, books, n_queries, "vec_id", "embedding")
+    return _adc_rank(enc.crossJoin(F.broadcast(luts)), PQ_M, k, "vec_id")
 
 
 def _lut_frame(
@@ -1066,19 +1033,11 @@ def _adc_luts(q_rows, books, id_col="vec_id", vec_col="embedding"):
 
 def ivfpq_topk(
     embeddings: DataFrame,
-    k: int = 5,
-    n_queries: int = 5,
-    n_cells: int = 8,
-    n_probe_cells: int = 3,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    sample_n: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = TOP_K,
+    n_queries: int = N_QUERIES,
 ) -> DataFrame:
     """IVF-PQ (IVFADC without residual encoding): the coarse quantizer
-    prunes the corpus to ``n_probe_cells`` cells per query, and PQ
+    prunes the corpus to IVF_N_PROBE cells per query, and PQ
     codes + per-query lookup tables score only the survivors — the
     composition every billion-vector ANN deployment runs (Jégou 2011
     §V; Faiss's IVFx,PQy index family). Codes are computed on the raw
@@ -1092,31 +1051,17 @@ def ivfpq_topk(
     table. At 100 TB the scoring pass reads n_probe/n_cells of the
     encoded (16× narrower) corpus. No corpus shuffle anywhere; the
     top-k window partitions by query."""
-    coarse = kmeans_centroids(
-        embeddings, k=n_cells, vec_col=vec_col, id_col=id_col,
-        sample_n=sample_n,
-    )
-    books = pq_train(
-        embeddings, m=m, ksub=ksub, iters=iters, sample_n=sample_n,
-        id_col=id_col, vec_col=vec_col,
-    )
-    return ivfpq_serve(
-        embeddings, coarse, books, k=k, n_queries=n_queries,
-        n_probe_cells=n_probe_cells, m=m, id_col=id_col,
-        vec_col=vec_col,
-    )
+    coarse = kmeans_centroids(embeddings, k=IVF_N_CELLS)
+    books = pq_train(embeddings)
+    return ivfpq_serve(embeddings, coarse, books, k=k, n_queries=n_queries)
 
 
 def ivfpq_serve(
     embeddings: DataFrame,
     coarse: list[list[float]],
     books: list[list[list[float]]],
-    k: int = 5,
-    n_queries: int = 5,
-    n_probe_cells: int = 3,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = TOP_K,
+    n_queries: int = N_QUERIES,
 ) -> DataFrame:
     """The serve path of :func:`ivfpq_topk`, taking ALREADY-FITTED
     model state (coarse centroids + PQ codebooks) — how the operator
@@ -1124,18 +1069,15 @@ def ivfpq_serve(
     :func:`load_ann_model`) and reused across every serving query,
     instead of refitted per call. Split out in r11 (r10 VERDICT ask
     #4: fit-once/serve-many)."""
-    celled = with_ivf_cell(embeddings, coarse, vec_col)
-    enc = pq_encode(
-        celled, books, id_col=id_col, vec_col=vec_col,
-        keep_cols=["ivf_cell"],
-    )
-    luts = _lut_frame(embeddings, books, n_queries, id_col, vec_col)
+    celled = with_ivf_cell(embeddings, coarse)
+    enc = pq_encode(celled, books, keep_cols=["ivf_cell"])
+    luts = _lut_frame(embeddings, books, n_queries, "vec_id", "embedding")
     cent_df = embeddings.sparkSession.createDataFrame(
         [(c, [float(x) for x in vec]) for c, vec in enumerate(coarse)],
         "ivf_cell int, centroid array<double>",
     )
-    q_vecs = embeddings.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    q_vecs = embeddings.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     probed = (
         q_vecs.crossJoin(F.broadcast(cent_df))
@@ -1148,26 +1090,20 @@ def ivfpq_serve(
                 )
             ),
         )
-        .filter(F.col("c_rank") <= n_probe_cells)
+        .filter(F.col("c_rank") <= IVF_N_PROBE)
         .select("query_id", "ivf_cell")
         # model-state × model-state: without the hint Spark plans a
         # stats-blind SortMergeJoin for these two tiny local frames
         .join(F.broadcast(luts), "query_id")
     )
-    return _adc_rank(enc.join(F.broadcast(probed), "ivf_cell"), m, k, id_col)
+    return _adc_rank(enc.join(F.broadcast(probed), "ivf_cell"), PQ_M, k, "vec_id")
 
 
 def pq_rerank_topk(
     embeddings: DataFrame,
-    k: int = 5,
-    shortlist_k: int = 20,
-    n_queries: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    sample_n: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = TOP_K,
+    shortlist_k: int = SHORTLIST_K,
+    n_queries: int = N_QUERIES,
 ) -> DataFrame:
     """Two-stage retrieval: PQ-ADC shortlist → EXACT cosine rerank —
     the 'refine' stage every production ANN deployment bolts onto a
@@ -1186,37 +1122,32 @@ def pq_rerank_topk(
     list_dot_product, so the composed pipeline stays hash-checkable
     end to end."""
     short = pq_adc_topk(
-        embeddings, k=shortlist_k, n_queries=n_queries, m=m, ksub=ksub,
-        iters=iters, sample_n=sample_n, id_col=id_col, vec_col=vec_col,
-    ).select("query_id", id_col)
+        embeddings, k=shortlist_k, n_queries=n_queries
+    ).select("query_id", "vec_id")
     qv = (
-        embeddings.filter(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        embeddings.filter(F.col("vec_id") < n_queries)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     )
     cand = (
         ensure_parallelism(embeddings)
-        .join(F.broadcast(short), id_col)
+        .join(F.broadcast(short), "vec_id")
         .join(F.broadcast(qv), "query_id")
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
+        F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
     return (
-        cand.withColumn("cos_sim", cosine(F.col(vec_col), F.col("qv")))
+        cand.withColumn("cos_sim", cosine(F.col("embedding"), F.col("qv")))
         .withColumn("rerank", F.row_number().over(w).cast("long"))
         .filter(F.col("rerank") <= k)
-        .select("query_id", id_col, "cos_sim", "rerank")
+        .select("query_id", "vec_id", "cos_sim", "rerank")
     )
 
 
 def hard_negative_mining(
     embeddings: DataFrame,
     anchor_mod: int = 50,
-    max_anchors: int = 64,
     k_neg: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Contrastive-pair mining for embedding-model training (round
     10): for every anchor vector, the single nearest SAME-label
@@ -1225,7 +1156,7 @@ def hard_negative_mining(
     triplet/InfoNCE loss informative — random negatives are too easy).
 
     The anchor set is the deterministic 1/``anchor_mod`` id slice
-    CAPPED at ``max_anchors`` (ids < anchor_mod·max_anchors) — bounded
+    CAPPED at MAX_ANCHORS (ids < anchor_mod·MAX_ANCHORS) — bounded
     by construction, NOT a corpus fraction: the round-10 100× study
     caught the uncapped slice growing to 4000 anchors and turning the
     broadcast cross-score quadratic (anchors × corpus both ∝ n). A
@@ -1239,26 +1170,26 @@ def hard_negative_mining(
     is one corpus pass per anchor batch; for corpus-scale anchor sets
     feed LSH/IVF candidates in place of the cross join."""
     anchors = embeddings.filter(
-        (F.col(id_col) % anchor_mod == 0)
-        & (F.col(id_col) < anchor_mod * max_anchors)
+        (F.col("vec_id") % anchor_mod == 0)
+        & (F.col("vec_id") < anchor_mod * MAX_ANCHORS)
     ).select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(vec_col).alias("anchor_vec"),
-        F.col(label_col).alias("anchor_label"),
+        F.col("vec_id").alias("anchor_id"),
+        F.col("embedding").alias("anchor_vec"),
+        F.col("label").alias("anchor_label"),
     )
     scored = (
         ensure_parallelism(embeddings)
         .crossJoin(F.broadcast(anchors))
-        .filter(F.col(id_col) != F.col("anchor_id"))
+        .filter(F.col("vec_id") != F.col("anchor_id"))
         .select(
             "anchor_id",
             "anchor_label",
-            F.col(id_col).alias("cand_id"),
-            F.col(label_col).alias("cand_label"),
+            F.col("vec_id").alias("cand_id"),
+            F.col("label").alias("cand_label"),
             F.when(
-                F.col(label_col) == F.col("anchor_label"), F.lit("pos")
+                F.col("label") == F.col("anchor_label"), F.lit("pos")
             ).otherwise(F.lit("neg")).alias("role"),
-            cosine(F.col(vec_col), F.col("anchor_vec")).alias("cos_sim"),
+            cosine(F.col("embedding"), F.col("anchor_vec")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("anchor_id", "role").orderBy(
@@ -1406,9 +1337,6 @@ def nn_descent_graph(
     iters: int = 2,
     n_planes: int = 6,
     seed: int = 77,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rev_k: int | None = None,
     prefilter: bool | None = None,
 ) -> DataFrame:
     """NN-Descent k-NN graph construction (Dong et al., WWW'11) — the
@@ -1434,7 +1362,7 @@ def nn_descent_graph(
       256 rows by construction.
 
     Round: take each node's k forward neighbors plus a DETERMINISTIC
-    SAMPLE of ``rev_k`` (default k div 2) of its reverse neighbors —
+    SAMPLE of ``rev_k`` = k div 2 (at least 1) of its reverse neighbors —
     Dong et al. §2.3's ρ-sampling, the paper's own answer to the k²
     candidate blow-up — expand one hop (und ∘ und), exact-score
     candidates with the fold-based cosine (bit-identical to DuckDB),
@@ -1458,13 +1386,13 @@ def nn_descent_graph(
     tests/test_round10.py pins both regimes. That mirrors the
     published behavior (Dong et al. report high recall on real
     datasets, degraded on uniform noise)."""
-    head = embeddings.select(vec_col).first()
+    head = embeddings.select("embedding").first()
     if head is None or head[0] is None:
         # empty corpus (or NULL first vector): the graph is empty —
         # return the documented shape instead of TypeError on
         # first()[0], so callers and the oracle twin agree on 0 rows
         return embeddings.sparkSession.createDataFrame(
-            [], f"{id_col} long, nbr_id long, cos_sim double, rank int"
+            [], "vec_id long, nbr_id long, cos_sim double, rank int"
         )
     dim = len(head[0])
     if prefilter is None:
@@ -1478,7 +1406,7 @@ def nn_descent_graph(
         # the DATA's dimensionality, not the deployment.
         prefilter = dim >= 512
     emb = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("v")
     )
     # r13 (guide §4.1, profiled): the bucket signature formerly ran
     # n_planes interpreted F.aggregate folds per row (CodegenFallback
@@ -1524,10 +1452,10 @@ def nn_descent_graph(
     # raw source instead (scoring parallelism comes from `cand`'s
     # partitioning, not from these build sides).
     va = embeddings.select(
-        F.col(id_col).alias("a"), F.col(vec_col).alias("va")
+        F.col("vec_id").alias("a"), F.col("embedding").alias("va")
     )
     vb = embeddings.select(
-        F.col(id_col).alias("b"), F.col(vec_col).alias("vb")
+        F.col("vec_id").alias("b"), F.col("embedding").alias("vb")
     )
     wr = Window.partitionBy("a").orderBy(
         F.col("cos_sim").desc(), F.col("b").asc()
@@ -1575,8 +1503,7 @@ def nn_descent_graph(
         )
         w_a = Window.partitionBy("a")
 
-    if rev_k is None:
-        rev_k = max(1, k // 2)
+    rev_k = max(1, k // 2)
 
     # Fused per-round staging (r14, r13 VERDICT ask #3): the r13 loop
     # ran TWO eager checkpoint jobs per round — (1) the edge set (it
@@ -1697,7 +1624,7 @@ def nn_descent_graph(
             # output is returned lazily (the caller materializes once)
             staged = _staged(edges.select("a", "b"))
     return edges.select(
-        F.col("a").alias(id_col),
+        F.col("a").alias("vec_id"),
         F.col("b").alias("nbr_id"),
         "cos_sim",
         F.col("rank").cast("int").alias("rank"),

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SALT = "__salt"
+MAX_SALTS = 64
 
 
 def _row_salt(df: DataFrame, n_salts: int) -> Column:
@@ -87,7 +88,7 @@ def choose_n_salts(
     top_key_rows: int,
     n_rows: int,
     shuffle_partitions: int,
-    max_salts: int = 64,
+    max_salts: int = MAX_SALTS,
 ) -> int:
     """Pure decision rule connecting the skew DIAGNOSTIC to the salting
     FIX: spread the hottest key's final-reduce work down to roughly the
@@ -107,8 +108,6 @@ def auto_salt_agg(
     df: DataFrame,
     keys: list[str],
     sums: dict[str, Column],
-    max_salts: int = 64,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Measured-skew-driven salted aggregation: runs the cheap skew
     diagnostic (the key_skew_report shape — ONE map-side-combined
@@ -130,10 +129,9 @@ def auto_salt_agg(
     at 100 TB you run it on the same scan the aggregate reads (or on a
     cached upstream), not a second source read."""
     spark = df.sparkSession
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    shuffle_partitions = int(
+        spark.conf.get("spark.sql.shuffle.partitions", "200")
+    )
     st = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -141,7 +139,7 @@ def auto_salt_agg(
         .collect()[0]
     )
     n_salts = choose_n_salts(
-        st["top_n"] or 0, st["n_rows"] or 0, shuffle_partitions, max_salts
+        st["top_n"] or 0, st["n_rows"] or 0, shuffle_partitions, MAX_SALTS
     )
     if n_salts <= 1:
         return df.groupBy(*keys).agg(
@@ -154,8 +152,6 @@ def auto_salt_join(
     skewed: DataFrame,
     other: DataFrame,
     on: list[str],
-    max_salts: int = 64,
-    shuffle_partitions: int | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Measured-skew-driven salted join — the join-side twin of
@@ -174,10 +170,9 @@ def auto_salt_join(
     not extend to outer joins, so any other ``how`` falls back to the
     plain join."""
     spark = skewed.sparkSession
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    shuffle_partitions = int(
+        spark.conf.get("spark.sql.shuffle.partitions", "200")
+    )
     st = (
         skewed.groupBy(*on)
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -185,7 +180,7 @@ def auto_salt_join(
         .collect()[0]
     )
     n_salts = choose_n_salts(
-        st["top_n"] or 0, st["n_rows"] or 0, shuffle_partitions, max_salts
+        st["top_n"] or 0, st["n_rows"] or 0, shuffle_partitions, MAX_SALTS
     )
     if how != "inner" or n_salts <= 1:
         return skewed.join(other, on, how)

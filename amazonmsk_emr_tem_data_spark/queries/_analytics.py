@@ -8,6 +8,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.graph import N_ITERATIONS
 from ..operators.order_stats import lower_quantiles, running_sum
 from ..sources.files import (
     checkpoint_stage,
@@ -15,6 +16,7 @@ from ..sources.files import (
     load_table,
 )
 from ._core import (
+    _EMB_DIM,
     QueryFn,
     _DISC_PRICE_CENTS_SQL,
     _cents,
@@ -46,6 +48,11 @@ from ._graph_ann import (
 # round-7 session-6b: weighted shortest paths, label-propagation
 # communities, rendezvous resharding, source KL, weighted sampling
 # ---------------------------------------------------------------------------
+
+
+#: Bellman-Ford relaxation rounds of nation_min_latency_paths and its SQL
+#: twin.
+_LATENCY_ROUNDS = 4
 
 
 def nation_min_latency_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,7 +111,7 @@ def nation_min_latency_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = spark.createDataFrame(
         [(0, 0)], "n long, dist long"
     )
-    for _ in range(4):
+    for _ in range(_LATENCY_ROUNDS):
         relaxed = (
             edges.join(
                 F.broadcast(dist), edges["src"] == dist["n"]
@@ -137,9 +144,8 @@ _LATENCY_EDGES_CTES = """delays AS (
 )"""
 
 
-def _latency_sql(rounds: int = 4) -> str:
-    ctes = "".join(
-        f"""
+_LATENCY_ROUND_CTES = "".join(
+    f"""
 , d{i} AS MATERIALIZED (
   SELECT n, MIN(dist) AS dist FROM (
     SELECT n, dist FROM d{i - 1}
@@ -148,14 +154,21 @@ def _latency_sql(rounds: int = 4) -> str:
     FROM edges e JOIN d{i - 1} d ON e.src = d.n
   ) GROUP BY 1
 )"""
-        for i in range(1, rounds + 1)
-    )
-    return f"""
+    for i in range(1, _LATENCY_ROUNDS + 1)
+)
+
+
+_LATENCY_SQL = f"""
 WITH {_LATENCY_EDGES_CTES}, d0 AS MATERIALIZED (
   SELECT CAST(0 AS BIGINT) AS n, CAST(0 AS BIGINT) AS dist
-){ctes}
-SELECT n AS nation, dist FROM d{rounds}
+){_LATENCY_ROUND_CTES}
+SELECT n AS nation, dist FROM d{_LATENCY_ROUNDS}
 """
+
+
+#: Label-propagation rounds of the two community queries and their SQL
+#: twins.
+_LPA_ROUNDS = 4
 
 
 def part_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,7 +191,7 @@ def part_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     ue = _repeat_copurchase_edges(li)
-    return label_propagation(ue, rounds=4).select(
+    return label_propagation(ue, rounds=_LPA_ROUNDS).select(
         F.col("n").alias("part"), F.col("lab").alias("community")
     )
 
@@ -199,12 +212,11 @@ def _lpa_round_sql(i: int) -> str:
 )"""
 
 
-def _lpa_sql(rounds: int = 4) -> str:
-    return f"""
+_LPA_SQL = f"""
 WITH {_BFS_EDGES_CTES}, l0 AS MATERIALIZED (
   SELECT DISTINCT a AS n, a AS lab FROM bidir
-){"".join(_lpa_round_sql(i) for i in range(1, rounds + 1))}
-SELECT n AS part, lab AS community FROM l{rounds}
+){"".join(_lpa_round_sql(i) for i in range(1, _LPA_ROUNDS + 1))}
+SELECT n AS part, lab AS community FROM l{_LPA_ROUNDS}
 """
 
 
@@ -237,7 +249,7 @@ def copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = _repeat_copurchase_edges(li).transform(checkpoint_stage)
-    labels = label_propagation(edges, rounds=4)
+    labels = label_propagation(edges, rounds=_LPA_ROUNDS)
     m_df = edges.agg(F.count(F.lit(1)).cast("long").alias("m"))
     deg = (
         edges.select(F.col("a").alias("n"))
@@ -285,7 +297,7 @@ def copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MODULARITY_SQL = f"""
 WITH {_BFS_EDGES_CTES}, l0 AS MATERIALIZED (
   SELECT DISTINCT a AS n, a AS lab FROM bidir
-){"".join(_lpa_round_sql(i) for i in range(1, 5))}
+){"".join(_lpa_round_sql(i) for i in range(1, _LPA_ROUNDS + 1))}
 , mm AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS m FROM ue
 ), deg AS (
@@ -319,9 +331,7 @@ CROSS JOIN mm
 _HRW_OLD = 16
 
 
-def doc_shard_rebalance(
-    spark: SparkSession, sf_dir: str, old_n: int = _HRW_OLD
-) -> DataFrame:
+def doc_shard_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous (highest-random-weight) resharding audit (r7
     session-6b): every document hashes once per shard candidate and
     lands on its argmax (Thaler & Ravishankar 1998); growing the fleet
@@ -347,8 +357,8 @@ def doc_shard_rebalance(
             )
         )
 
-    arr = F.array(*[score(s) for s in range(old_n + 1)])
-    old = F.slice(arr, 1, old_n)
+    arr = F.array(*[score(s) for s in range(_HRW_OLD + 1)])
+    old = F.slice(arr, 1, _HRW_OLD)
     assigned = docs.select(
         (F.array_position(arr, F.array_max(arr)) - 1).alias("shard"),
         (F.array_position(old, F.array_max(old)) - 1).alias("old_shard"),
@@ -364,21 +374,22 @@ def doc_shard_rebalance(
     )
 
 
-def _hrw_sql(old_n: int = _HRW_OLD) -> str:
-    hashes = ", ".join(
-        _HASH64_SQL.format(
-            x=f"('hrw1' || '|' || '{s}' || '|' || CAST(doc_id AS VARCHAR))"
-        )
-        for s in range(old_n + 1)
+_HRW_HASHES_SQL = ", ".join(
+    _HASH64_SQL.format(
+        x=f"('hrw1' || '|' || '{s}' || '|' || CAST(doc_id AS VARCHAR))"
     )
-    return f"""
+    for s in range(_HRW_OLD + 1)
+)
+
+
+_HRW_SQL = f"""
 WITH arrs AS (
-  SELECT list_value({hashes}) AS arr FROM documents
+  SELECT list_value({_HRW_HASHES_SQL}) AS arr FROM documents
 ), assigned AS (
   SELECT CAST(list_position(arr, list_aggregate(arr, 'max')) - 1
               AS BIGINT) AS shard,
-         CAST(list_position(arr[1:{old_n}],
-                            list_aggregate(arr[1:{old_n}], 'max')) - 1
+         CAST(list_position(arr[1:{_HRW_OLD}],
+                            list_aggregate(arr[1:{_HRW_OLD}], 'max')) - 1
               AS BIGINT) AS old_shard
   FROM arrs
 )
@@ -489,9 +500,11 @@ FROM agg
 """
 
 
-def doc_weighted_sample(
-    spark: SparkSession, sf_dir: str, k: int = 200
-) -> DataFrame:
+#: Sample size of doc_weighted_sample and its SQL twin.
+_WEIGHTED_SAMPLE_K = 200
+
+
+def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement via the
     Efraimidis-Spirakis exponential race (2006) (r7 session-6b): each
     document draws u ∈ (0,1] from its id hash and competes with key
@@ -533,11 +546,10 @@ def doc_weighted_sample(
     )
     return keyed.orderBy(
         F.col("key_micro").asc(), F.col("doc_id").asc()
-    ).limit(k)
+    ).limit(_WEIGHTED_SAMPLE_K)
 
 
-def _weighted_sample_sql(k: int = 200) -> str:
-    return f"""
+_WEIGHTED_SAMPLE_SQL = f"""
 WITH keyed AS (
   SELECT doc_id, source,
          GREATEST(n_chars, 1) AS weight,
@@ -551,7 +563,7 @@ SELECT doc_id, source, CAST(weight AS BIGINT) AS weight,
        (p_micro * 1000000) // weight AS key_micro
 FROM keyed
 ORDER BY key_micro ASC, doc_id ASC
-LIMIT {k}
+LIMIT {_WEIGHTED_SAMPLE_K}
 """
 
 
@@ -562,7 +574,6 @@ LIMIT {k}
 
 _KMEANS_K = 8
 _KMEANS_ROUNDS = 3
-_EMB_DIM = 64
 #: Partial rows per Lloyd round (partitions × k) above which the round
 #: reduce runs as a k-row Spark aggregate instead of a driver collect.
 _KMEANS_COLLECT_MAX_ROWS = 32768
@@ -755,8 +766,7 @@ WITH c0 AS MATERIALIZED (
 )"""
 
 
-def _kmeans_sql(rounds: int = _KMEANS_ROUNDS, k: int = _KMEANS_K) -> str:
-    return _kmeans_chain_sql(rounds, k) + """
+_KMEANS_SQL = _kmeans_chain_sql(_KMEANS_ROUNDS, _KMEANS_K) + """
 SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs,
        CAST(SUM(CAST(round(d2 * 1000000.0) AS BIGINT)) AS DOUBLE)
          / 1000000.0 AS inertia
@@ -764,9 +774,11 @@ FROM afinal GROUP BY cluster
 """
 
 
-def table_checksum_buckets(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 1024
-) -> DataFrame:
+#: Checksum buckets of table_checksum_buckets and its SQL twin.
+_TCB_BUCKETS = 1024
+
+
+def table_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merkle-style bucket-checksum table diff (r7 session-6c): both
     snapshots fold each row to a 60-bit hash of (doc_id, content
     fingerprint), XOR the hashes per doc_id-bucket, and compare ONLY
@@ -801,7 +813,7 @@ def table_checksum_buckets(
         )
         return (
             side.select(
-                (F.col("doc_id") % n_buckets).alias("bucket"),
+                (F.col("doc_id") % _TCB_BUCKETS).alias("bucket"),
                 h.alias("h"),
             )
             .groupBy("bucket")
@@ -855,10 +867,9 @@ _TCB_H = _HASH64_SQL.format(
     f"|| COALESCE({_TCB_FP}, 'null'))"
 )
 
-def _table_checksum_sql(n_buckets: int = 1024) -> str:
-    return f"""
+_TABLE_CHECKSUM_SQL = f"""
 WITH old_side AS (
-  SELECT doc_id % {n_buckets} AS bucket, {_TCB_H} AS h
+  SELECT doc_id % {_TCB_BUCKETS} AS bucket, {_TCB_H} AS h
   FROM documents WHERE doc_id % 20 <> 0
 ), new_docs AS (
   SELECT doc_id,
@@ -867,7 +878,7 @@ WITH old_side AS (
               ELSE text END AS text
   FROM documents WHERE doc_id % 19 <> 0
 ), new_side AS (
-  SELECT doc_id % {n_buckets} AS bucket, {_TCB_H} AS h FROM new_docs
+  SELECT doc_id % {_TCB_BUCKETS} AS bucket, {_TCB_H} AS h FROM new_docs
 ), o AS (
   SELECT bucket, bit_xor(h) AS digest_old,
          CAST(COUNT(*) AS BIGINT) AS n_old
@@ -885,9 +896,11 @@ FROM o FULL OUTER JOIN n ON o.bucket = n.bucket
 """
 
 
-def shard_compaction_plan(
-    spark: SparkSession, sf_dir: str, target_bytes: int = 16384
-) -> DataFrame:
+#: Target bin size of shard_compaction_plan and its SQL twin.
+_COMPACTION_TARGET_BYTES = 16384
+
+
+def shard_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction planner (r7 session-6c): simulated input
     files (doc_id % 199 shards, size = summed n_chars) are packed into
     merged outputs of ~target size by the streaming-compactor rule —
@@ -919,7 +932,7 @@ def shard_compaction_plan(
     ).select(
         "file_id",
         "bytes",
-        F.expr(f"cum_before div {target_bytes}").cast("long").alias("bin"),
+        F.expr(f"cum_before div {_COMPACTION_TARGET_BYTES}").cast("long").alias("bin"),
     )
     return planned.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("n_files"),
@@ -929,8 +942,7 @@ def shard_compaction_plan(
     )
 
 
-def _compaction_sql(target_bytes: int = 16384) -> str:
-    return f"""
+_COMPACTION_SQL = f"""
 WITH files AS (
   SELECT doc_id % 199 AS file_id, CAST(SUM(n_chars) AS BIGINT) AS bytes
   FROM documents GROUP BY 1
@@ -938,7 +950,7 @@ WITH files AS (
   SELECT file_id, bytes,
          (CAST(SUM(bytes) OVER (ORDER BY bytes DESC, file_id ASC
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-          - bytes) // {target_bytes} AS bin
+          - bytes) // {_COMPACTION_TARGET_BYTES} AS bin
   FROM files
 )
 SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_files,
@@ -1435,9 +1447,12 @@ GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 
-def customer_k_anonymity(
-    spark: SparkSession, sf_dir: str, k: int = 5
-) -> DataFrame:
+#: Class size below which customer_k_anonymity (and its SQL twin)
+#: flags a quasi-identifier class.
+_K_ANON_K = 5
+
+
+def customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit of the customer table (r7 session-6e): under
     the quasi-identifier tuple (nation, market segment, account-balance
     hundred-bucket) every equivalence class smaller than k re-identifies
@@ -1471,15 +1486,14 @@ def customer_k_anonymity(
         "c_mktsegment",
         "bal_bucket",
         "class_size",
-        (F.col("class_size") < k).alias("violates_k"),
+        (F.col("class_size") < _K_ANON_K).alias("violates_k"),
         F.expr(
             "class_size * CAST(1000000 AS BIGINT) div n_total"
         ).alias("share_ppm"),
     )
 
 
-def _k_anon_sql(k: int = 5) -> str:
-    return f"""
+_K_ANON_SQL = f"""
 WITH classes AS (
   SELECT c_nationkey, c_mktsegment,
          CAST(floor(CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS DOUBLE)
@@ -1490,7 +1504,7 @@ WITH classes AS (
   SELECT COUNT(*) AS n_total FROM customer
 )
 SELECT c_nationkey, c_mktsegment, bal_bucket, class_size,
-       class_size < {k} AS violates_k,
+       class_size < {_K_ANON_K} AS violates_k,
        (class_size * CAST(1000000 AS BIGINT)) // n_total AS share_ppm
 FROM classes CROSS JOIN tot
 """
@@ -1752,9 +1766,11 @@ QUALIFY rnk <= 3
 # ---------------------------------------------------------------------------
 
 
-def doc_global_sequence(
-    spark: SparkSession, sf_dir: str, bucket_width: int = 512
-) -> DataFrame:
+#: Doc-id bucket width of doc_global_sequence's two-phase offsets.
+_SEQ_BUCKET_WIDTH = 512
+
+
+def doc_global_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable global row numbers over (source, doc_id) order (r7
     session-6f): Spark's row_number() over an unpartitioned window runs
     in ONE task (the classic global-sort trap), and
@@ -1774,7 +1790,7 @@ def doc_global_sequence(
         "doc_id",
         "source",
         F.coalesce("source", F.lit("")).alias("src_key"),
-    ).withColumn("bkt", F.expr(f"doc_id div {bucket_width}"))
+    ).withColumn("bkt", F.expr(f"doc_id div {_SEQ_BUCKET_WIDTH}"))
     return running_sum(
         docs,
         by=[],
@@ -1792,9 +1808,7 @@ FROM documents
 """
 
 
-def activity_anotb_kmv(
-    spark: SparkSession, sf_dir: str, k: int = _KMV_K
-) -> DataFrame:
+def activity_anotb_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV / Theta set DIFFERENCE (r7 session-6f): per type pair the
     estimated audience active in A but never in B (and vice versa) —
     the third Theta-sketch set operation (Dasgupta et al. 2016)
@@ -1808,8 +1822,8 @@ def activity_anotb_kmv(
     same exactly-representable-numerator argument as the overlap
     query; small sketches take the exact branch. Shares
     _kmv_pairs_staged (bottom-k WindowGroupLimit plan and all)."""
-    staged = _kmv_pairs_staged(spark, sf_dir, k)
-    retained = F.slice(F.col("merged"), 1, k)
+    staged = _kmv_pairs_staged(spark, sf_dir, _KMV_K)
+    retained = F.slice(F.col("merged"), 1, _KMV_K)
     j_a = F.size(
         F.array_except(
             F.array_intersect(retained, F.col("sk_a")), F.col("sk_b")
@@ -1820,8 +1834,8 @@ def activity_anotb_kmv(
             F.array_intersect(retained, F.col("sk_b")), F.col("sk_a")
         )
     ).cast("long")
-    exact = F.size("merged") < k
-    numer = F.lit(float((k - 1) * _KMV_DOMAIN))
+    exact = F.size("merged") < _KMV_K
+    numer = F.lit(float((_KMV_K - 1) * _KMV_DOMAIN))
 
     def est(j: Column) -> Column:
         return F.when(exact, j.cast("double")).otherwise(
@@ -1845,26 +1859,27 @@ def activity_anotb_kmv(
     )
 
 
-def _kmv_anotb_sql(k: int = _KMV_K) -> str:
-    est = _kmv_est_union_sql(k)
-    return f"""
-WITH {_kmv_pairs_ctes(k)}, c AS (
-  SELECT *, CAST(least({k}, len(merged)) AS BIGINT) AS kk,
-         CAST(len(list_filter(list_intersect(merged[1:{k}], sk_a),
+_KMV_ANOTB_EST_SQL = _kmv_est_union_sql(_KMV_K)
+
+
+_KMV_ANOTB_SQL = f"""
+WITH {_kmv_pairs_ctes(_KMV_K)}, c AS (
+  SELECT *, CAST(least({_KMV_K}, len(merged)) AS BIGINT) AS kk,
+         CAST(len(list_filter(list_intersect(merged[1:{_KMV_K}], sk_a),
                               x -> NOT list_contains(sk_b, x)))
               AS BIGINT) AS j_a_only,
-         CAST(len(list_filter(list_intersect(merged[1:{k}], sk_b),
+         CAST(len(list_filter(list_intersect(merged[1:{_KMV_K}], sk_b),
                               x -> NOT list_contains(sk_a, x)))
               AS BIGINT) AS j_b_only
   FROM m
 )
 SELECT type_a, type_b, kk, j_a_only, j_b_only,
-       CASE WHEN len(merged) < {k} THEN CAST(j_a_only AS DOUBLE)
+       CASE WHEN len(merged) < {_KMV_K} THEN CAST(j_a_only AS DOUBLE)
             ELSE (CAST(j_a_only AS DOUBLE) / CAST(kk AS DOUBLE))
-                 * {est} END AS est_a_not_b,
-       CASE WHEN len(merged) < {k} THEN CAST(j_b_only AS DOUBLE)
+                 * {_KMV_ANOTB_EST_SQL} END AS est_a_not_b,
+       CASE WHEN len(merged) < {_KMV_K} THEN CAST(j_b_only AS DOUBLE)
             ELSE (CAST(j_b_only AS DOUBLE) / CAST(kk AS DOUBLE))
-                 * {est} END AS est_b_not_a
+                 * {_KMV_ANOTB_EST_SQL} END AS est_b_not_a
 FROM c
 """
 
@@ -1982,10 +1997,13 @@ FROM se
 # ---------------------------------------------------------------------------
 
 
+#: Keywords reported by textrank_keywords and its SQL twin.
+_TEXTRANK_TOP_N = 30
+
+
 def textrank_keywords(
     spark: SparkSession,
     sf_dir: str,
-    top_n: int = 30,
     vocab_cap: int | None = None,
 ) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004) (r7
@@ -2051,13 +2069,12 @@ def textrank_keywords(
         ranks.select(F.col("page").alias("word"), "rank_micro"),
         [F.col("rank_micro").desc(), F.col("word").asc()],
         "rank_micro",
-        top_n,
+        _TEXTRANK_TOP_N,
         "kw_rank",
     )
 
 
-def _textrank_sql(top_n: int = 30) -> str:
-    return f"""
+_TEXTRANK_SQL = f"""
 WITH toks AS (
   SELECT doc_id, generate_subscripts({_TOKS_SQL}, 1) AS pos,
          unnest({_TOKS_SQL}) AS w
@@ -2094,13 +2111,16 @@ SELECT word, rank_micro,
             AS BIGINT) AS kw_rank
 FROM (SELECT page AS word, rank_micro FROM r5)
 ORDER BY rank_micro DESC, word ASC
-LIMIT {top_n}
+LIMIT {_TEXTRANK_TOP_N}
 """
 
 
-def orders_double_billing(
-    spark: SparkSession, sf_dir: str, window_days: int = 3
-) -> DataFrame:
+#: Days between same-customer orders that orders_double_billing and
+#: its SQL twin report.
+_BILLING_WINDOW_DAYS = 3
+
+
+def orders_double_billing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rapid-repeat-order / double-billing audit (r7 session-6g):
     consecutive orders from the same customer ≤ 3 days apart are the
     AP-audit candidate set; within it, an EXACT amount match is the
@@ -2142,7 +2162,7 @@ def orders_double_billing(
         F.lag("od").over(w_same).alias("prev_same_od"),
     ).filter(
         F.col("prev_od").isNotNull()
-        & (F.datediff("od", "prev_od") <= window_days)
+        & (F.datediff("od", "prev_od") <= _BILLING_WINDOW_DAYS)
     )
     return flagged.select(
         "o_custkey",
@@ -2160,7 +2180,7 @@ def orders_double_billing(
         ),
         (
             F.col("prev_same_od").isNotNull()
-            & (F.datediff("od", "prev_same_od") <= window_days)
+            & (F.datediff("od", "prev_same_od") <= _BILLING_WINDOW_DAYS)
         ).alias("exact_dup_in_window"),
         F.expr(
             "least(amount_cents, prev_amount) * CAST(1000000 AS BIGINT)"
@@ -2169,8 +2189,7 @@ def orders_double_billing(
     )
 
 
-def _double_billing_sql(window_days: int = 3) -> str:
-    return f"""
+_DOUBLE_BILLING_SQL = f"""
 WITH o AS (
   SELECT o_custkey, amount_cents, od, o_orderkey,
          lag(od) OVER w AS prev_od,
@@ -2192,18 +2211,20 @@ SELECT o_custkey,
        CAST(amount_cents AS DOUBLE) / 100.0 AS second_amount,
        amount_cents = prev_amount AS exact_amount_dup,
        prev_same_od IS NOT NULL
-         AND date_diff('day', prev_same_od, od) <= {window_days}
+         AND date_diff('day', prev_same_od, od) <= {_BILLING_WINDOW_DAYS}
          AS exact_dup_in_window,
        (LEAST(amount_cents, prev_amount) * CAST(1000000 AS BIGINT))
          // GREATEST(amount_cents, prev_amount) AS amount_ratio_ppm
 FROM o
-WHERE prev_od IS NOT NULL AND date_diff('day', prev_od, od) <= {window_days}
+WHERE prev_od IS NOT NULL AND date_diff('day', prev_od, od) <= {_BILLING_WINDOW_DAYS}
 """
 
 
-def part_abc_classes(
-    spark: SparkSession, sf_dir: str, bucket_cents: int = 10**6
-) -> DataFrame:
+#: Revenue bucket width of part_abc_classes and its SQL twin.
+_ABC_BUCKET_CENTS = 10**6
+
+
+def part_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC (Pareto) inventory classification (r7 session-6g): parts
     ranked by revenue; the first 80% of cumulative revenue is class A,
     the next 15% B, the tail C — the 80/15/5 stocking-policy split.
@@ -2225,7 +2246,7 @@ def part_abc_classes(
     ).withColumn(
         # descending-order-aligned bucket: higher revenue -> smaller
         # bucket id (negated floor-div of NON-NEGATIVE revenue)
-        "bkt", -F.expr(f"rev_units div {bucket_cents}")
+        "bkt", -F.expr(f"rev_units div {_ABC_BUCKET_CENTS}")
     )
     total = rev.agg(F.sum("rev_units").alias("total_units"))
     cum = running_sum(
@@ -2258,14 +2279,13 @@ def part_abc_classes(
     )
 
 
-def _abc_sql(bucket_cents: int = 10**6) -> str:
-    return f"""
+_ABC_SQL = f"""
 WITH rev AS (
   SELECT l_partkey AS part,
          CAST(SUM({_DISC_PRICE_CENTS_SQL}) AS BIGINT) // 100 AS rev_units
   FROM lineitem GROUP BY 1
 ), b AS (
-  SELECT *, -(rev_units // {bucket_cents}) AS bkt FROM rev
+  SELECT *, -(rev_units // {_ABC_BUCKET_CENTS}) AS bkt FROM rev
 ), offs AS (
   SELECT bkt,
          CAST(SUM(brev) OVER (ORDER BY bkt
@@ -2300,9 +2320,13 @@ FROM cum CROSS JOIN tot
 # ---------------------------------------------------------------------------
 
 
-def customer_negative_parts(
-    spark: SparkSession, sf_dir: str, k: int = 4, oversample: int = 12
-) -> DataFrame:
+#: Negatives per customer of customer_negative_parts and its SQL twin,
+#: and the candidate oversampling factor they draw them from.
+_NEG_K = 4
+_NEG_OVERSAMPLE = 12
+
+
+def customer_negative_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for recommender training pairs
     (r7 session-6h): for every customer, k parts they have NEVER
     ordered — the (user, item⁻) half of a contrastive training set.
@@ -2343,7 +2367,7 @@ def customer_negative_parts(
         .select(
             "c_custkey",
             F.explode(
-                F.sequence(F.lit(1), F.lit(oversample))
+                F.sequence(F.lit(1), F.lit(_NEG_OVERSAMPLE))
             ).alias("i"),
             "maxpk",
         )
@@ -2378,7 +2402,7 @@ def customer_negative_parts(
         first_draw.withColumn(
             "sample_rank", F.row_number().over(w).cast("long")
         )
-        .filter(F.col("sample_rank") <= k)
+        .filter(F.col("sample_rank") <= _NEG_K)
         .select(
             "c_custkey",
             F.col("cand").alias("p_partkey"),
@@ -2388,18 +2412,19 @@ def customer_negative_parts(
     )
 
 
-def _negative_parts_sql(k: int = 4, oversample: int = 12) -> str:
-    h = _HASH64_SQL.format(
-        x="('neg1' || '|' || CAST(c_custkey AS VARCHAR) || '|' "
-        "|| CAST(i AS VARCHAR))"
-    )
-    return f"""
+_NEG_HASH_SQL = _HASH64_SQL.format(
+    x="('neg1' || '|' || CAST(c_custkey AS VARCHAR) || '|' "
+    "|| CAST(i AS VARCHAR))"
+)
+
+
+_NEGATIVE_PARTS_SQL = f"""
 WITH maxpk AS (
   SELECT MAX(p_partkey) AS maxpk FROM part
 ), cands AS (
-  SELECT c_custkey, i, ({h} % maxpk) + 1 AS cand
+  SELECT c_custkey, i, ({_NEG_HASH_SQL} % maxpk) + 1 AS cand
   FROM customer CROSS JOIN maxpk
-  CROSS JOIN (SELECT unnest(generate_series(1, {oversample})) AS i)
+  CROSS JOIN (SELECT unnest(generate_series(1, {_NEG_OVERSAMPLE})) AS i)
 ), existing AS (
   SELECT c.* FROM cands c
   WHERE EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = c.cand)
@@ -2419,7 +2444,7 @@ SELECT c_custkey, cand AS p_partkey, CAST(draw AS BIGINT) AS draw,
                                ORDER BY draw, cand) AS BIGINT)
          AS sample_rank
 FROM first_draw
-QUALIFY sample_rank <= {k}
+QUALIFY sample_rank <= {_NEG_K}
 """
 
 
@@ -2492,9 +2517,12 @@ FROM pred GROUP BY 1
 # ---------------------------------------------------------------------------
 
 
-def ppr_part_recommendations(
-    spark: SparkSession, sf_dir: str, top_n: int = 100
-) -> DataFrame:
+#: Recommendations reported by ppr_part_recommendations and its SQL
+#: twin.
+_PPR_TOP_N = 100
+
+
+def ppr_part_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized-PageRank item recommendations (r7 session-6i):
     random walk with restart from the seed catalog (parts ≡ 0 mod 53 —
     the BFS query's seed set) over the repeat-co-purchase graph; the
@@ -2534,7 +2562,7 @@ def ppr_part_recommendations(
         ),
         [F.col("rank_micro").desc(), F.col("part").asc()],
         "rank_micro",
-        top_n,
+        _PPR_TOP_N,
         "rec_rank",
     )
 
@@ -2566,8 +2594,7 @@ def _ppr_iteration_sql(k: int) -> str:
 )"""
 
 
-def _ppr_sql(top_n: int = 100, iterations: int = 5) -> str:
-    return f"""
+_PPR_SQL = f"""
 WITH {_BFS_EDGES_CTES}, edges AS MATERIALIZED (
   SELECT a AS src, b AS dst, 1 AS w_edge FROM bidir
 ), nodes AS (
@@ -2583,14 +2610,39 @@ WITH {_BFS_EDGES_CTES}, edges AS MATERIALIZED (
          CAST(CASE WHEN is_seed THEN 1000000000000 // ns.n
                    ELSE 0 END AS BIGINT) AS rank_micro
   FROM flagged CROSS JOIN ns
-){"".join(_ppr_iteration_sql(k) for k in range(1, iterations + 1))}
+){"".join(_ppr_iteration_sql(k) for k in range(1, N_ITERATIONS + 1))}
 SELECT part, rank_micro, is_seed,
        CAST(row_number() OVER (ORDER BY rank_micro DESC, part ASC)
             AS BIGINT) AS rec_rank
-FROM (SELECT page AS part, rank_micro, is_seed FROM r{iterations})
+FROM (SELECT page AS part, rank_micro, is_seed FROM r{N_ITERATIONS})
 ORDER BY rank_micro DESC, part ASC
-LIMIT {top_n}
+LIMIT {_PPR_TOP_N}
 """
+
+
+def _type_value_quantiles(
+    ev: DataFrame, cuts: dict[str, tuple[int, int]]
+) -> DataFrame:
+    """Exact per-type lower quantiles of event value: the observed
+    (non-NULL) values of ``ev`` on the cent grid, bucketed by $5 and
+    tie-broken by event_id, cut by operators/order_stats.
+    lower_quantiles into one row per event_type with one cents column
+    per ``cuts`` tag. Shared by the imputation, winsorize and
+    percentile queries, whose SQL twins build the same ``obs`` CTE."""
+    obs = ev.filter(F.col("value").isNotNull()).select(
+        "event_type",
+        "event_id",
+        _cents("value").alias("v_cents"),
+        F.expr("CAST(round(value * 100) AS BIGINT) div 500").alias("bkt"),
+    )
+    return lower_quantiles(
+        obs,
+        by=["event_type"],
+        bucket=["bkt"],
+        order=["v_cents", "event_id"],
+        value="v_cents",
+        cuts=cuts,
+    )
 
 
 def event_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2609,20 +2661,9 @@ def event_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull()
     )
-    obs = ev.filter(F.col("value").isNotNull()).select(
-        "event_type",
-        "event_id",
-        _cents("value").alias("v_cents"),
-        F.expr("CAST(round(value * 100) AS BIGINT) div 500").alias("bkt"),
+    medians = _type_value_quantiles(ev, {"med_cents": (1, 2)}).select(
+        F.col("event_type").alias("lt"), "med_cents"
     )
-    medians = lower_quantiles(
-        obs,
-        by=["event_type"],
-        bucket=["bkt"],
-        order=["v_cents", "event_id"],
-        value="v_cents",
-        cuts={"med_cents": (1, 2)},
-    ).select(F.col("event_type").alias("lt"), "med_cents")
     return ev.join(
         F.broadcast(medians), ev["event_type"] == medians["lt"], "left"
     ).select(
@@ -2681,8 +2722,12 @@ FROM ev e LEFT JOIN medians m ON e.event_type = m.lt
 """
 
 
+#: Sample size of neyman_allocation_sample and its SQL twin.
+_NEYMAN_BUDGET = 200
+
+
 def neyman_allocation_sample(
-    spark: SparkSession, sf_dir: str, budget: int = 200
+    spark: SparkSession, sf_dir: str, budget: int = _NEYMAN_BUDGET
 ) -> DataFrame:
     """Neyman-allocated stratified sample (r7 session-6i): a 200-doc
     sample budget split across sources ∝ N_h·σ_h (stratum size ×
@@ -2814,11 +2859,12 @@ def neyman_allocation_sample(
     ).select("source", "doc_id", "pick_rank", "n_alloc")
 
 
-def _neyman_sql(budget: int = 200) -> str:
-    h = _HASH64_SQL.format(
-        x="('ney1' || '|' || CAST(doc_id AS VARCHAR))"
-    )
-    return f"""
+_NEYMAN_HASH_SQL = _HASH64_SQL.format(
+    x="('ney1' || '|' || CAST(doc_id AS VARCHAR))"
+)
+
+
+_NEYMAN_SQL = f"""
 WITH moments AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS nh,
          CAST(SUM(n_chars) AS BIGINT) AS s,
@@ -2837,11 +2883,11 @@ WITH moments AS (
   SELECT CAST(SUM(w_micro) AS BIGINT) AS tw FROM weighted
 ), alloc AS (
   SELECT source, nh,
-         (w_micro * CAST({budget} AS BIGINT)) // tw AS n_base,
-         (w_micro * CAST({budget} AS BIGINT)) % tw AS rem
+         (w_micro * CAST({_NEYMAN_BUDGET} AS BIGINT)) // tw AS n_base,
+         (w_micro * CAST({_NEYMAN_BUDGET} AS BIGINT)) % tw AS rem
   FROM weighted CROSS JOIN tot
 ), leftover AS (
-  SELECT CAST({budget} - SUM(n_base) AS BIGINT) AS leftn FROM alloc
+  SELECT CAST({_NEYMAN_BUDGET} - SUM(n_base) AS BIGINT) AS leftn FROM alloc
 ), capped AS (
   SELECT source, nh, rem,
          LEAST(n_base + CASE WHEN
@@ -2850,7 +2896,7 @@ WITH moments AS (
                nh) AS n_cap
   FROM alloc CROSS JOIN leftover
 ), surplus AS (
-  SELECT CAST({budget} - SUM(n_cap) AS BIGINT) AS surplus FROM capped
+  SELECT CAST({_NEYMAN_BUDGET} - SUM(n_cap) AS BIGINT) AS surplus FROM capped
 ), final_alloc AS (
   SELECT source, nh,
          n_cap + GREATEST(CAST(0 AS BIGINT),
@@ -2863,7 +2909,7 @@ WITH moments AS (
 ), ranked AS (
   SELECT doc_id, source,
          row_number() OVER (PARTITION BY source
-                            ORDER BY {h}, doc_id) AS pick_rank
+                            ORDER BY {_NEYMAN_HASH_SQL}, doc_id) AS pick_rank
   FROM documents WHERE source IS NOT NULL
 )
 SELECT r.source, r.doc_id, CAST(r.pick_rank AS BIGINT) AS pick_rank,
@@ -2890,19 +2936,8 @@ def event_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull()
     )
-    obs = ev.filter(F.col("value").isNotNull()).select(
-        "event_type",
-        "event_id",
-        _cents("value").alias("v_cents"),
-        F.expr("CAST(round(value * 100) AS BIGINT) div 500").alias("bkt"),
-    )
-    cuts = lower_quantiles(
-        obs,
-        by=["event_type"],
-        bucket=["bkt"],
-        order=["v_cents", "event_id"],
-        value="v_cents",
-        cuts={"lo_cents": (1, 20), "hi_cents": (19, 20)},
+    cuts = _type_value_quantiles(
+        ev, {"lo_cents": (1, 20), "hi_cents": (19, 20)}
     ).select(F.col("event_type").alias("lt"), "lo_cents", "hi_cents")
     # GREATEST/LEAST skip NULLs in both engines, so an unguarded clamp
     # would fabricate value_wins = p5 for NULL-valued events; gate on
@@ -3160,15 +3195,15 @@ FROM staged
 
 
 QUERIES: dict[str, tuple[QueryFn, str | None]] = {
-    "nation_min_latency_paths": (nation_min_latency_paths, _latency_sql()),
-    "part_label_communities": (part_label_communities, _lpa_sql()),
+    "nation_min_latency_paths": (nation_min_latency_paths, _LATENCY_SQL),
+    "part_label_communities": (part_label_communities, _LPA_SQL),
     "copurchase_modularity": (copurchase_modularity, _MODULARITY_SQL),
-    "doc_shard_rebalance": (doc_shard_rebalance, _hrw_sql()),
+    "doc_shard_rebalance": (doc_shard_rebalance, _HRW_SQL),
     "source_token_kl": (source_token_kl, _SOURCE_KL_SQL),
-    "doc_weighted_sample": (doc_weighted_sample, _weighted_sample_sql()),
-    "kmeans_lloyd_clusters": (kmeans_lloyd_clusters, _kmeans_sql()),
-    "table_checksum_buckets": (table_checksum_buckets, _table_checksum_sql()),
-    "shard_compaction_plan": (shard_compaction_plan, _compaction_sql()),
+    "doc_weighted_sample": (doc_weighted_sample, _WEIGHTED_SAMPLE_SQL),
+    "kmeans_lloyd_clusters": (kmeans_lloyd_clusters, _KMEANS_SQL),
+    "table_checksum_buckets": (table_checksum_buckets, _TABLE_CHECKSUM_SQL),
+    "shard_compaction_plan": (shard_compaction_plan, _COMPACTION_SQL),
     "event_ewma_chart": (event_ewma_chart, _EWMA_SQL),
     "customer_survival_km": (customer_survival_km, _KM_SQL),
     "user_activity_bitmaps": (user_activity_bitmaps, _BITMAP_SQL),
@@ -3177,7 +3212,7 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         stream_seasonal_baseline_q,
         _STREAM_SEASONAL_SQL,
     ),
-    "customer_k_anonymity": (customer_k_anonymity, _k_anon_sql()),
+    "customer_k_anonymity": (customer_k_anonymity, _K_ANON_SQL),
     "part_stock_balance": (part_stock_balance, _STOCK_SQL),
     "lineitem_weighted_median": (
         lineitem_weighted_median,
@@ -3185,24 +3220,24 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     ),
     "topk_orders_with_ties": (topk_orders_with_ties, _TOPK_TIES_SQL),
     "doc_global_sequence": (doc_global_sequence, _GLOBAL_SEQ_SQL),
-    "activity_anotb_kmv": (activity_anotb_kmv, _kmv_anotb_sql()),
+    "activity_anotb_kmv": (activity_anotb_kmv, _KMV_ANOTB_SQL),
     "welch_t_event_types": (welch_t_event_types, _WELCH_SQL),
-    "textrank_keywords": (textrank_keywords, _textrank_sql()),
-    "orders_double_billing": (orders_double_billing, _double_billing_sql()),
-    "part_abc_classes": (part_abc_classes, _abc_sql()),
+    "textrank_keywords": (textrank_keywords, _TEXTRANK_SQL),
+    "orders_double_billing": (orders_double_billing, _DOUBLE_BILLING_SQL),
+    "part_abc_classes": (part_abc_classes, _ABC_SQL),
     "customer_negative_parts": (
         customer_negative_parts,
-        _negative_parts_sql(),
+        _NEGATIVE_PARTS_SQL,
     ),
     "langid_margin_calibration": (
         langid_margin_calibration,
         _LANGID_CALIBRATION_SQL,
     ),
-    "ppr_part_recommendations": (ppr_part_recommendations, _ppr_sql()),
+    "ppr_part_recommendations": (ppr_part_recommendations, _PPR_SQL),
     "event_value_imputation": (event_value_imputation, _IMPUTATION_SQL),
     "neyman_allocation_sample": (
         neyman_allocation_sample,
-        _neyman_sql(),
+        _NEYMAN_SQL,
     ),
     "event_value_winsorize": (event_value_winsorize, _WINSORIZE_SQL),
     "inter_event_gaps": (inter_event_gaps, _INTER_GAP_SQL),

@@ -95,6 +95,10 @@ def sum_charge() -> Column:
     return F.sum(charge_cents()).cast("double") / F.lit(1000000.0)
 
 
+#: Dimension of the fixture ``embeddings`` vectors, which the SQL twins
+#: unroll over.
+_EMB_DIM = 64
+
 _EP100 = "CAST(round(l_extendedprice*100) AS BIGINT)"
 _DISC_PRICE_CENTS_SQL = f"{_EP100} * (100 - CAST(round(l_discount*100) AS BIGINT))"
 _CHARGE_CENTS_SQL = f"{_DISC_PRICE_CENTS_SQL} * (100 + CAST(round(l_tax*100) AS BIGINT))"

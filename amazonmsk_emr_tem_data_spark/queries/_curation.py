@@ -163,7 +163,11 @@ FROM agg
 """
 
 
-def doc_shuffle_shards(spark: SparkSession, sf_dir: str, n_shards: int = 8) -> DataFrame:
+#: Output shards of doc_shuffle_shards.
+_SHUFFLE_SHARDS = 8
+
+
+def doc_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle into training shards: shard =
     salted-hash(doc_id) mod n_shards; position = rank of the hash
     within the shard. This is the scalable 'shuffled corpus' recipe —
@@ -179,7 +183,7 @@ def doc_shuffle_shards(spark: SparkSession, sf_dir: str, n_shards: int = 8) -> D
     w = Window.partitionBy("shard").orderBy(F.col("h").asc(), F.col("doc_id").asc())
     return (
         docs.select("doc_id", h.alias("h"))
-        .withColumn("shard", F.pmod(F.col("h"), F.lit(n_shards)))
+        .withColumn("shard", F.pmod(F.col("h"), F.lit(_SHUFFLE_SHARDS)))
         .withColumn("pos", F.row_number().over(w).cast("long"))
         .select("doc_id", "shard", "pos")
     )
@@ -245,9 +249,11 @@ _QUALITY_SCORE_SQL = (
 )
 
 
-def doc_quality_selection(
-    spark: SparkSession, sf_dir: str, top_frac: float = 0.2
-) -> DataFrame:
+#: Share of the corpus doc_quality_selection keeps.
+_QUALITY_TOP_FRAC = 0.2
+
+
+def doc_quality_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality selection: keep the top 20% of documents per
     source by composite quality score (ties broken deterministically:
     score desc, doc_id asc) — the FineWeb/DCLM-style 'train on the best
@@ -265,7 +271,7 @@ def doc_quality_selection(
         .withColumn("quality_rank", F.row_number().over(wr).cast("long"))
         .withColumn("n_src", F.count(F.lit(1)).over(w))
         .filter(
-            F.col("quality_rank") <= F.ceil(F.col("n_src") * F.lit(top_frac))
+            F.col("quality_rank") <= F.ceil(F.col("n_src") * F.lit(_QUALITY_TOP_FRAC))
         )
         .select("doc_id", "source", "quality", "quality_rank")
     )
@@ -1019,11 +1025,11 @@ WHERE rank <= {k}
 
 
 _BM25_SQL = _bm25_sql(10)
+#: Terms per document of corpus_tfidf_topterms.
+_TFIDF_TOP_K = 5
 
 
-def corpus_tfidf_topterms(
-    spark: SparkSession, sf_dir: str, k: int = 5
-) -> DataFrame:
+def corpus_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-k TF-IDF terms — the classic keyword-extraction
     / document-signature pass (the unsupervised sibling of BM25: same
     tf/df statistics, document-centric instead of query-centric; feeds
@@ -1112,7 +1118,7 @@ def corpus_tfidf_topterms(
     )
     return (
         scored.withColumn("term_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("term_rank") <= k)
+        .filter(F.col("term_rank") <= _TFIDF_TOP_K)
         .select(
             "doc_id",
             "term",

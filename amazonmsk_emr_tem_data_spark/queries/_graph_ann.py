@@ -6,12 +6,25 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.similarity import (
+    IVF_N_CELLS,
+    IVF_N_PROBE,
+    KMEANS_ITERS,
+    N_QUERIES,
+    PQ_ITERS,
+    PQ_KSUB,
+    PQ_M,
+    SAMPLE_N,
+    SHORTLIST_K,
+    TOP_K,
+)
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
 from ._core import (
+    _EMB_DIM,
     QueryFn,
     _DISC_PRICE_CENTS_SQL,
     _cents,
@@ -139,34 +152,28 @@ def _pq_subspace_chain(j: int, dsub: int, ksub: int, iters: int) -> str:
 
 
 def _pq_adc_sql(
-    k: int = 5,
-    n_queries: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    sample_n: int = 4096,
-    dim: int = 64,
+    k: int = TOP_K,
 ) -> str:
     """DuckDB twin of operators/similarity.pq_adc_topk: m unrolled
     per-subspace L2 k-means chains, corpus encoding, and the ADC
     distance as an explicit left-associated m-term sum (the exact
     order the Spark side adds its fold terms in)."""
-    dsub = dim // m
+    dsub = _EMB_DIM // PQ_M
     parts = [
         f"""WITH n AS (
   SELECT vec_id, {_UNIT_SQL.format(v='embedding')} AS v FROM embeddings
 ), smp AS (
-  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {sample_n}
+  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
 )"""
     ]
-    for j in range(1, m + 1):
-        parts.append(_pq_subspace_chain(j, dsub, ksub, iters))
+    for j in range(1, PQ_M + 1):
+        parts.append(_pq_subspace_chain(j, dsub, PQ_KSUB, PQ_ITERS))
     enc_joins = " ".join(
-        f"JOIN e{j} USING (vec_id)" for j in range(2, m + 1)
+        f"JOIN e{j} USING (vec_id)" for j in range(2, PQ_M + 1)
     )
     book_joins = " ".join(
-        f"JOIN p{j}c{iters} b{j} ON e{j}.code{j} = b{j}.cid"
-        for j in range(1, m + 1)
+        f"JOIN p{j}c{PQ_ITERS} b{j} ON e{j}.code{j} = b{j}.cid"
+        for j in range(1, PQ_M + 1)
     )
     terms = " + ".join(
         _PQ_DIST2_SQL.format(
@@ -174,11 +181,11 @@ def _pq_adc_sql(
             a=f"q.qv[{(j - 1) * dsub + 1}:{j * dsub}]",
             b=f"b{j}.cvec",
         )
-        for j in range(1, m + 1)
+        for j in range(1, PQ_M + 1)
     )
     parts.append(
         f""", qs AS (
-  SELECT vec_id AS query_id, v AS qv FROM n WHERE vec_id < {n_queries}
+  SELECT vec_id AS query_id, v AS qv FROM n WHERE vec_id < {N_QUERIES}
 ), cand AS (
   SELECT q.query_id, e1.vec_id, {terms} AS adist
   FROM qs q, e1 {enc_joins} {book_joins}
@@ -210,42 +217,31 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_topk(load_table(spark, sf_dir, "embeddings"))
 
 
-def _ivfpq_sql(
-    k: int = 5,
-    n_queries: int = 5,
-    n_cells: int = 8,
-    n_probe: int = 3,
-    coarse_iters: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    pq_iters: int = 3,
-    sample_n: int = 4096,
-    dim: int = 64,
-) -> str:
+def _ivfpq_sql() -> str:
     """DuckDB twin of operators/similarity.ivfpq_topk: the spherical
     coarse chain (_kmeans_cte_chain, shared with ivf_topk/semdedup)
     composed with the m per-subspace L2 PQ chains, cell probing, and
     LUT-exact ADC ranking over probed cells only."""
-    dsub = dim // m
+    dsub = _EMB_DIM // PQ_M
     parts = [
         f"""WITH n AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
          {_UNIT_SQL.format(v='embedding')} AS v
   FROM embeddings
 ), smp AS (
-  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {sample_n}
+  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
 )""",
-        _kmeans_cte_chain("smp", n_cells, coarse_iters, dim),
-        f""", af AS ({_ASSIGN_SQL.format(fit_src='n', src=f'c{coarse_iters}')})""",
+        _kmeans_cte_chain("smp", IVF_N_CELLS, KMEANS_ITERS, _EMB_DIM),
+        f""", af AS ({_ASSIGN_SQL.format(fit_src='n', src=f'c{KMEANS_ITERS}')})""",
     ]
-    for j in range(1, m + 1):
-        parts.append(_pq_subspace_chain(j, dsub, ksub, pq_iters))
+    for j in range(1, PQ_M + 1):
+        parts.append(_pq_subspace_chain(j, dsub, PQ_KSUB, PQ_ITERS))
     enc_joins = " ".join(
-        f"JOIN e{j} ON e{j}.vec_id = e1.vec_id" for j in range(2, m + 1)
+        f"JOIN e{j} ON e{j}.vec_id = e1.vec_id" for j in range(2, PQ_M + 1)
     )
     book_joins = " ".join(
-        f"JOIN p{j}c{pq_iters} b{j} ON e{j}.code{j} = b{j}.cid"
-        for j in range(1, m + 1)
+        f"JOIN p{j}c{PQ_ITERS} b{j} ON e{j}.code{j} = b{j}.cid"
+        for j in range(1, PQ_M + 1)
     )
     terms = " + ".join(
         _PQ_DIST2_SQL.format(
@@ -253,20 +249,20 @@ def _ivfpq_sql(
             a=f"q.qv[{(j - 1) * dsub + 1}:{j * dsub}]",
             b=f"b{j}.cvec",
         )
-        for j in range(1, m + 1)
+        for j in range(1, PQ_M + 1)
     )
     parts.append(
         f""", qs AS (
   SELECT vec_id AS query_id, raw AS qraw, v AS qv FROM n
-  WHERE vec_id < {n_queries}
+  WHERE vec_id < {N_QUERIES}
 ), qc AS (
   SELECT query_id, cid FROM (
     SELECT q.query_id, c.cid,
            row_number() OVER (PARTITION BY q.query_id
              ORDER BY {_COS_SQL.format(a='q.qraw', b='c.cvec')} DESC,
                       c.cid ASC) AS rn
-    FROM qs q, c{coarse_iters} c) t
-  WHERE rn <= {n_probe}
+    FROM qs q, c{KMEANS_ITERS} c) t
+  WHERE rn <= {IVF_N_PROBE}
 ), cand AS (
   SELECT q.query_id, e1.vec_id, {terms} AS adist
   FROM qs q
@@ -280,9 +276,12 @@ SELECT query_id, vec_id, adist, CAST(rank AS INT) AS rank FROM (
   SELECT cand.*, row_number() OVER (PARTITION BY query_id
            ORDER BY adist ASC, vec_id ASC) AS rank
   FROM cand) t
-WHERE rank <= {k}"""
+WHERE rank <= {TOP_K}"""
     )
     return "".join(parts)
+
+
+_IVFPQ_SQL = _ivfpq_sql()
 
 
 def tem_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,9 +838,11 @@ FROM grouped
 """
 
 
-def stratified_fixed_k_sample(
-    spark: SparkSession, sf_dir: str, k: int = 10
-) -> DataFrame:
+#: Documents per language of stratified_fixed_k_sample.
+_STRATUM_K = 10
+
+
+def stratified_fixed_k_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-k stratified sampling: precisely min(k, |stratum|)
     documents per language, chosen by deterministic hash order — the
     fixed-budget complement of stratified_sample_docs' rate sampling
@@ -858,7 +859,7 @@ def stratified_fixed_k_sample(
     return (
         docs.select("doc_id", "lang", h.alias("draw"))
         .withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("sample_rank") <= k)
+        .filter(F.col("sample_rank") <= _STRATUM_K)
         .select("doc_id", "lang", "draw", "sample_rank")
     )
 
@@ -878,9 +879,11 @@ WHERE sample_rank <= 10
 """
 
 
-def doc_quality_sort_shards(
-    spark: SparkSession, sf_dir: str, n_shards: int = 8
-) -> DataFrame:
+#: Output shards of doc_quality_sort_shards.
+_SORT_SHARDS = 8
+
+
+def doc_quality_sort_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL sort at scale without a global sort: emit each document's
     sorted-output shard and position for the total order (quality desc,
     doc_id asc) — the layout step that writes quality-ordered training
@@ -921,7 +924,7 @@ def doc_quality_sort_shards(
         .crossJoin(F.broadcast(n_total))
         .select(
             "quality_micro",
-            F.expr(f"before * {n_shards} div n").alias("sort_shard"),
+            F.expr(f"before * {_SORT_SHARDS} div n").alias("sort_shard"),
         )
     )
     ws = Window.partitionBy("sort_shard").orderBy(
@@ -1227,9 +1230,11 @@ GROUP BY g.doc_id
 """
 
 
-def semantic_decontamination(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.4
-) -> DataFrame:
+#: Cosine at or above which semantic_decontamination flags a document.
+_DECONTAM_COS_THRESHOLD = 0.4
+
+
+def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space benchmark decontamination — the semantic
     complement of the n-gram rule in doc_decontamination: a corpus
     vector is contaminated if it is cosine-close to ANY held-out eval
@@ -1263,7 +1268,7 @@ def semantic_decontamination(
     corpus = ensure_parallelism(emb.filter(~is_eval))
     joined = corpus.join(
         F.broadcast(eval_vecs),
-        cosine(F.col("embedding"), F.col("eval_emb")) >= F.lit(threshold),
+        cosine(F.col("embedding"), F.col("eval_emb")) >= F.lit(_DECONTAM_COS_THRESHOLD),
         "left_outer",
     )
     return (
@@ -1515,11 +1520,11 @@ GROUP BY shard_id
 #: that the per-bucket model is trivially bounded driver state (256
 #: rows), large enough that bucket collisions mostly average out.
 _DSIR_BUCKETS = 256
+#: Documents selected by dsir_importance_select and its SQL twin.
+_DSIR_K = 100
 
 
-def dsir_importance_select(
-    spark: SparkSession, sf_dir: str, k: int = 100
-) -> DataFrame:
+def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al.
     2023, arXiv:2302.03169): rank raw-corpus documents by how much
     they look like a target domain, using hashed n-gram features and
@@ -1593,7 +1598,7 @@ def dsir_importance_select(
         weights,
         [F.col("w_micro").desc(), F.col("doc_id").asc()],
         "doc_id",
-        k,
+        _DSIR_K,
         "sel_rank",
     ).select(
         "doc_id",
@@ -1602,8 +1607,7 @@ def dsir_importance_select(
     )
 
 
-def _dsir_sql(k: int = 100) -> str:
-    return f"""
+_DSIR_SQL = f"""
 WITH toks AS (
   SELECT doc_id, lang, unnest({_TOKS_SQL}) AS token FROM documents
 ), bt AS (
@@ -1636,7 +1640,7 @@ FROM (
          CAST(row_number() OVER (ORDER BY w_micro DESC, doc_id ASC)
               AS BIGINT) AS sel_rank
   FROM w) r
-WHERE sel_rank <= {k}
+WHERE sel_rank <= {_DSIR_K}
 """
 
 
@@ -1653,13 +1657,12 @@ def embedding_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_rerank_topk(load_table(spark, sf_dir, "embeddings"))
 
 
-def _pq_rerank_sql(k: int = 5, shortlist_k: int = 20, n_queries: int = 5) -> str:
-    return f"""
+_PQ_RERANK_SQL = f"""
 WITH short AS (
-{_pq_adc_sql(k=shortlist_k)}
+{_pq_adc_sql(k=SHORTLIST_K)}
 ), qv AS (
   SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-  WHERE vec_id < {n_queries}
+  WHERE vec_id < {N_QUERIES}
 ), rer AS (
   SELECT s.query_id, s.vec_id,
          {_COS_SQL.format(a='e.embedding', b='q.qvec')} AS cos_sim
@@ -1672,7 +1675,7 @@ SELECT query_id, vec_id, cos_sim, rerank FROM (
          CAST(row_number() OVER (PARTITION BY query_id
                 ORDER BY cos_sim DESC, vec_id ASC) AS BIGINT) AS rerank
   FROM rer) t
-WHERE rerank <= {k}
+WHERE rerank <= {TOP_K}
 """
 
 
@@ -1850,7 +1853,11 @@ GROUP BY 1, 2
 """
 
 
-def key_skew_report(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+#: Heavy keys reported by key_skew_report and its SQL twin.
+_SKEW_TOP_K = 20
+
+
+def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic: per-customer order counts ranked
     against the uniform expectation — the report that DECIDES whether
     a downstream join needs salting (operators/skew.py) or AQE skew
@@ -1892,13 +1899,12 @@ def key_skew_report(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
         scored,
         [F.col("n_orders").desc(), F.col("o_custkey").asc()],
         "o_custkey",
-        k,
+        _SKEW_TOP_K,
         "heavy_rank",
     ).select("o_custkey", "n_orders", "share_ppm", "skew_micro", "heavy_rank")
 
 
-def _key_skew_sql(k: int = 20) -> str:
-    return f"""
+_KEY_SKEW_SQL = f"""
 WITH per_key AS (
   SELECT o_custkey, COUNT(*) AS n_orders FROM orders GROUP BY o_custkey
 ), tot AS (
@@ -1918,7 +1924,7 @@ FROM (
          CAST(row_number() OVER (ORDER BY n_orders DESC, o_custkey ASC)
               AS BIGINT) AS heavy_rank
   FROM scored) t
-WHERE heavy_rank <= {k}
+WHERE heavy_rank <= {_SKEW_TOP_K}
 """
 
 
@@ -1974,9 +1980,13 @@ def _query_tfidf_ranks(
     ).select("doc_id", "sem_rank")
 
 
-def hybrid_rrf_search(
-    spark: SparkSession, sf_dir: str, k: int = 10, pool: int = 20
-) -> DataFrame:
+#: Fused results of hybrid_rrf_search and its SQL twin, and the depth
+#: of each ranker's list they fuse.
+_RRF_K = 10
+_RRF_POOL = 20
+
+
+def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via Reciprocal Rank Fusion (Cormack et al.
     2009, the fusion every production RAG stack runs over its lexical
     + vector rankers): two independent top-``pool`` rankings of the
@@ -1994,10 +2004,10 @@ def hybrid_rrf_search(
     (per-partition heaps over the posting-list-bounded candidates);
     the fusion's full-outer join and final rank run over ≤ 2·pool
     rows — model-state-sized no matter the corpus."""
-    lex = doc_bm25_search(spark, sf_dir, k=pool).select(
+    lex = doc_bm25_search(spark, sf_dir, k=_RRF_POOL).select(
         "doc_id", F.col("rank").alias("lex_rank")
     )
-    sem = _query_tfidf_ranks(spark, sf_dir, k=pool)
+    sem = _query_tfidf_ranks(spark, sf_dir, k=_RRF_POOL)
     fused = (
         lex.join(sem, "doc_id", "full_outer")
         .select(
@@ -2020,15 +2030,14 @@ def hybrid_rrf_search(
         fused,
         [F.col("rrf_micro").desc(), F.col("doc_id").asc()],
         "doc_id",
-        k,
+        _RRF_K,
         "fused_rank",
     ).select("doc_id", "lex_rank", "sem_rank", "rrf_micro", "fused_rank")
 
 
-def _hybrid_rrf_sql(k: int = 10, pool: int = 20) -> str:
-    return f"""
+_HYBRID_RRF_SQL = f"""
 WITH lex AS (
-{_bm25_sql(pool)}
+{_bm25_sql(_RRF_POOL)}
 ), sem AS (
   SELECT doc_id, sem_rank FROM (
     SELECT doc_id, score_micro,
@@ -2052,7 +2061,7 @@ WITH lex AS (
       GROUP BY t.doc_id
     ) s
   ) r
-  WHERE sem_rank <= {pool}
+  WHERE sem_rank <= {_RRF_POOL}
 ), fused AS (
   SELECT COALESCE(l.doc_id, s.doc_id) AS doc_id,
          l.rank AS lex_rank,
@@ -2066,7 +2075,7 @@ SELECT doc_id, lex_rank, sem_rank, rrf_micro, fused_rank FROM (
          CAST(row_number() OVER (ORDER BY rrf_micro DESC, doc_id ASC)
               AS BIGINT) AS fused_rank
   FROM fused) t
-WHERE fused_rank <= {k}
+WHERE fused_rank <= {_RRF_K}
 """
 
 
@@ -3338,6 +3347,13 @@ GROUP BY qid
 """
 
 
+#: k-core order, peel rounds and kNN edge cap of part_kcore_members and
+#: its SQL twin.
+_KCORE_K = 2
+_KCORE_ROUNDS = 8
+_KCORE_KNN = 50
+
+
 def part_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-core of the repeat-co-purchase graph (r7): parts co-ordered
     in >= 2 distinct orders form an edge; nodes surviving 8 rounds of
@@ -3374,8 +3390,8 @@ def part_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore
 
     li = load_table(spark, sf_dir, "lineitem")
-    ue = _knn_sparsify_edges(_repeat_copurchase_edges_w(li), knn=50)
-    return kcore(ue, k=2, rounds=8).select(
+    ue = _knn_sparsify_edges(_repeat_copurchase_edges_w(li), knn=_KCORE_KNN)
+    return kcore(ue, k=_KCORE_K, rounds=_KCORE_ROUNDS).select(
         F.col("n").alias("part"), "core_degree"
     )
 
@@ -3399,8 +3415,7 @@ def _kcore_round_sql(i: int, k: int) -> str:
 )"""
 
 
-def _kcore_sql(k: int = 2, rounds: int = 8, knn: int = 50) -> str:
-    return f"""
+_KCORE_SQL = f"""
 WITH lp AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
 ), pairs AS (
@@ -3421,21 +3436,21 @@ WITH lp AS (
            row_number() OVER (PARTITION BY src
                               ORDER BY w DESC, dst ASC) AS rk
     FROM bidir
-  ) WHERE rk <= {knn}
+  ) WHERE rk <= {_KCORE_KNN}
 ), ue AS MATERIALIZED (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
   FROM kept
 ), n0 AS MATERIALIZED (
   SELECT DISTINCT n
   FROM (SELECT a AS n FROM ue UNION ALL SELECT b FROM ue)
-){"".join(_kcore_round_sql(i, k) for i in range(1, rounds + 1))}
+){"".join(_kcore_round_sql(i, _KCORE_K) for i in range(1, _KCORE_ROUNDS + 1))}
 SELECT n AS part, CAST(COUNT(*) AS BIGINT) AS core_degree
 FROM (
   SELECT a AS n FROM ue
-  WHERE a IN (SELECT n FROM n{rounds}) AND b IN (SELECT n FROM n{rounds})
+  WHERE a IN (SELECT n FROM n{_KCORE_ROUNDS}) AND b IN (SELECT n FROM n{_KCORE_ROUNDS})
   UNION ALL
   SELECT b FROM ue
-  WHERE a IN (SELECT n FROM n{rounds}) AND b IN (SELECT n FROM n{rounds})
+  WHERE a IN (SELECT n FROM n{_KCORE_ROUNDS}) AND b IN (SELECT n FROM n{_KCORE_ROUNDS})
 )
 GROUP BY 1
 """
@@ -3602,9 +3617,7 @@ def _kmv_pairs_staged(
     )
 
 
-def activity_overlap_kmv(
-    spark: SparkSession, sf_dir: str, k: int = _KMV_K
-) -> DataFrame:
+def activity_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise audience overlap across event types via KMV
     (bottom-k / Theta) distinct sketches (r7 session-6): each type
     keeps only the k smallest 60-bit hashes of its distinct
@@ -3628,12 +3641,12 @@ def activity_overlap_kmv(
     contract); the pairwise stage joins |types| sketch ROWS (k longs
     each), never data. Reference scope: the reference has no sketch
     tier at all (SURVEY §0); this extends §2.5's approx-sketch row."""
-    staged = _kmv_pairs_staged(spark, sf_dir, k).select(
+    staged = _kmv_pairs_staged(spark, sf_dir, _KMV_K).select(
         "*",
         F.size(
             F.array_intersect(
                 F.array_intersect(
-                    F.slice(F.col("merged"), 1, k), F.col("sk_a")
+                    F.slice(F.col("merged"), 1, _KMV_K), F.col("sk_a")
                 ),
                 F.col("sk_b"),
             )
@@ -3641,8 +3654,8 @@ def activity_overlap_kmv(
         .cast("long")
         .alias("j_common"),
     )
-    exact = F.size("merged") < k
-    numer = F.lit(float((k - 1) * _KMV_DOMAIN))
+    exact = F.size("merged") < _KMV_K
+    numer = F.lit(float((_KMV_K - 1) * _KMV_DOMAIN))
     est_union = F.when(
         exact, F.size("merged").cast("double")
     ).otherwise(
@@ -3709,22 +3722,20 @@ def _kmv_est_union_sql(k: int) -> str:
     )
 
 
-def _activity_kmv_sql(k: int = _KMV_K) -> str:
-    est = _kmv_est_union_sql(k)
-    return f"""
-WITH {_kmv_pairs_ctes(k)}, c AS (
-  SELECT *, CAST(least({k}, len(merged)) AS BIGINT) AS kk,
+_ACTIVITY_KMV_SQL = f"""
+WITH {_kmv_pairs_ctes(_KMV_K)}, c AS (
+  SELECT *, CAST(least({_KMV_K}, len(merged)) AS BIGINT) AS kk,
          CAST(len(list_intersect(
-                list_intersect(merged[1:{k}], sk_a), sk_b)) AS BIGINT)
+                list_intersect(merged[1:{_KMV_K}], sk_a), sk_b)) AS BIGINT)
            AS j_common
   FROM m
 )
 SELECT type_a, type_b, sz_a, sz_b, kk, j_common,
-       CASE WHEN len(merged) < {k} THEN CAST(len(merged) AS DOUBLE)
-            ELSE {est} END AS est_union,
-       CASE WHEN len(merged) < {k} THEN CAST(j_common AS DOUBLE)
+       CASE WHEN len(merged) < {_KMV_K} THEN CAST(len(merged) AS DOUBLE)
+            ELSE {_kmv_est_union_sql(_KMV_K)} END AS est_union,
+       CASE WHEN len(merged) < {_KMV_K} THEN CAST(j_common AS DOUBLE)
             ELSE (CAST(j_common AS DOUBLE) / CAST(kk AS DOUBLE))
-                 * {est} END AS est_inter
+                 * {_kmv_est_union_sql(_KMV_K)} END AS est_inter
 FROM c
 """
 
@@ -3791,6 +3802,10 @@ GROUP BY 1, 2
 """
 
 
+#: BFS rounds of part_bfs_hops and its SQL twin.
+_BFS_ROUNDS = 4
+
+
 def part_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distance over the repeat-co-purchase part
     graph (r7 session-6): from the seed set {parts ≡ 0 mod 53} the
@@ -3816,7 +3831,7 @@ def part_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(F.col("a"), F.col("b"))).alias("n")
     ).distinct()
     seeds = nodes.filter(F.col("n") % 53 == 0)
-    return bfs_hops(ue, seeds, rounds=4).select(
+    return bfs_hops(ue, seeds, rounds=_BFS_ROUNDS).select(
         F.col("n").alias("part"), "dist"
     )
 
@@ -3957,19 +3972,20 @@ def _bfs_round_sql(i: int) -> str:
 )"""
 
 
-def _bfs_sql(rounds: int = 4) -> str:
-    hops = "\nUNION ALL\n".join(
-        f"SELECT n, {i} AS d FROM f{i}" for i in range(rounds + 1)
-    )
-    return f"""
+_BFS_HOPS_SQL = "\nUNION ALL\n".join(
+    f"SELECT n, {i} AS d FROM f{i}" for i in range(_BFS_ROUNDS + 1)
+)
+
+
+_BFS_SQL = f"""
 WITH {_BFS_EDGES_CTES}, f0 AS MATERIALIZED (
   SELECT DISTINCT n FROM (
     SELECT a AS n FROM bidir
   ) WHERE n % 53 = 0
 ), v0 AS MATERIALIZED (
   SELECT n FROM f0
-){"".join(_bfs_round_sql(i) for i in range(1, rounds + 1))}
-SELECT n AS part, CAST(d AS BIGINT) AS dist FROM ({hops})
+){"".join(_bfs_round_sql(i) for i in range(1, _BFS_ROUNDS + 1))}
+SELECT n AS part, CAST(d AS BIGINT) AS dist FROM ({_BFS_HOPS_SQL})
 """
 
 
@@ -4070,9 +4086,11 @@ WHERE var > 0
 """
 
 
-def rake_keyword_phrases(
-    spark: SparkSession, sf_dir: str, top_n: int = 50
-) -> DataFrame:
+#: Phrases reported by rake_keyword_phrases.
+_RAKE_TOP_N = 50
+
+
+def rake_keyword_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction over the corpus (r7 session-6): token
     runs between stopword delimiters are candidate phrases; each
     word scores degree/frequency (degree = summed length of the
@@ -4150,7 +4168,7 @@ def rake_keyword_phrases(
             F.col("n_occurrences").desc(),
             F.col("phrase").asc(),
         )
-        .limit(top_n)
+        .limit(_RAKE_TOP_N)
     )
 
 
@@ -4196,7 +4214,7 @@ LIMIT 50
 
 
 QUERIES: dict[str, tuple[QueryFn, str | None]] = {
-    "hybrid_rrf_search": (hybrid_rrf_search, _hybrid_rrf_sql()),
+    "hybrid_rrf_search": (hybrid_rrf_search, _HYBRID_RRF_SQL),
     "bloom_prune_join": (bloom_prune_join, _BLOOM_PRUNE_SQL),
     "part_skyline": (part_skyline, _PART_SKYLINE_SQL),
     "user_distinct_sketch": (user_distinct_sketch, _DISTINCT_SKETCH_SQL),
@@ -4228,11 +4246,11 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         _LANGID_CONFUSION_SQL,
     ),
     "matryoshka_recall_audit": (matryoshka_recall_audit, _MATRYOSHKA_SQL),
-    "part_kcore_members": (part_kcore_members, _kcore_sql()),
+    "part_kcore_members": (part_kcore_members, _KCORE_SQL),
     "segment_spend_gini": (segment_spend_gini, _SPEND_GINI_SQL),
-    "activity_overlap_kmv": (activity_overlap_kmv, _activity_kmv_sql()),
+    "activity_overlap_kmv": (activity_overlap_kmv, _ACTIVITY_KMV_SQL),
     "order_lineitem_ivm": (order_lineitem_ivm, _ORDER_IVM_SQL),
-    "part_bfs_hops": (part_bfs_hops, _bfs_sql()),
+    "part_bfs_hops": (part_bfs_hops, _BFS_SQL),
     "event_seasonal_anomaly": (
         event_seasonal_anomaly,
         _SEASONAL_ANOMALY_SQL,
@@ -4254,7 +4272,7 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         doc_quality_sort_shards,
         _QUALITY_SORT_SHARDS_SQL,
     ),
-    "embedding_ivfpq_topk": (embedding_ivfpq_topk, _ivfpq_sql()),
+    "embedding_ivfpq_topk": (embedding_ivfpq_topk, _IVFPQ_SQL),
     "page_graph_clustering": (page_graph_clustering, _PAGE_CLUSTERING_SQL),
     "user_type_scd2": (user_type_scd2, _SCD2_SQL),
     "stratified_fixed_k_sample": (
@@ -4270,9 +4288,9 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         _STREAM_STATIC_SQL,
     ),
     "zorder_layout_stats": (zorder_layout_stats, _zorder_sql()),
-    "dsir_importance_select": (dsir_importance_select, _dsir_sql()),
-    "embedding_pq_rerank_topk": (embedding_pq_rerank_topk, _pq_rerank_sql()),
+    "dsir_importance_select": (dsir_importance_select, _DSIR_SQL),
+    "embedding_pq_rerank_topk": (embedding_pq_rerank_topk, _PQ_RERANK_SQL),
     "doc_dup_span_removal": (doc_dup_span_removal, _DUP_SPAN_REMOVAL_SQL),
     "orders_incremental_agg": (orders_incremental_agg, _INCR_AGG_SQL),
-    "key_skew_report": (key_skew_report, _key_skew_sql()),
+    "key_skew_report": (key_skew_report, _KEY_SKEW_SQL),
 }

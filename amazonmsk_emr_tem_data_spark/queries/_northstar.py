@@ -1411,7 +1411,7 @@ def doc_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import winnowed
 
     docs = load_table(spark, sf_dir, "documents")
-    return winnowed(docs, "doc_id", k=8, w=4)
+    return winnowed(docs)
 
 
 def winnowing_match_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1591,13 +1591,13 @@ def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (first-4096-by-id sample, first-k init, fixed iterations), so the
     whole probe-and-rank pipeline has an exact DuckDB twin
     (_ivf_topk_sql) — hash-checked, not rows-only."""
-    from ..operators.similarity import ivf_topk
+    from ..operators.similarity import N_QUERIES, TOP_K, ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
+    queries_df = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return ivf_topk(emb, queries_df, k=5)
+    return ivf_topk(emb, queries_df, k=TOP_K)
 
 
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,7 +1670,7 @@ def bpe_vocab_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import bpe_merge_table
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    return bpe_merge_table(docs, n_merges=16)
+    return bpe_merge_table(docs)
 
 
 def doc_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,7 +1685,7 @@ def doc_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import bpe_segment, learn_bpe_merges
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    merges = learn_bpe_merges(docs, n_merges=16)
+    merges = learn_bpe_merges(docs)
     return bpe_segment(docs, merges)
 
 

@@ -7,6 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.clustering import POWER_ITERS
+from ..operators.similarity import IVF_N_CELLS, KMEANS_ITERS, SAMPLE_N
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
@@ -22,7 +24,7 @@ from . import (
     _timeseries,
     _tpch_corpus,
 )
-from ._core import QueryFn
+from ._core import _EMB_DIM, QueryFn
 from ._northstar import (
     _COS_SQL,
     _EMB_NEAR_DUP_SQL,
@@ -35,7 +37,7 @@ from ._curation import (
 )
 from ._graph_ann import (
     _BFS_EDGES_CTES,
-    _ivfpq_sql,
+    _IVFPQ_SQL,
     _repeat_copurchase_edges,
 )
 from ._analytics import (
@@ -179,6 +181,15 @@ WHERE (role = 'neg' AND rank <= 3) OR (role = 'pos' AND rank <= 1)
 """
 
 
+#: Neighbors, refinement rounds, LSH planes and seed of
+#: nn_descent_knn_graph and its SQL twin.
+_NND_K = 6
+_NND_ITERS = 3
+_NND_PLANES = 6
+_NND_SEED = 77
+
+
+
 def nn_descent_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NN-Descent k-NN graph (k=6, 3 refinement rounds, 6-bit LSH +
     block-ring init) — linear-cost graph-ANN construction; see
@@ -188,18 +199,19 @@ def nn_descent_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import nn_descent_graph
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return nn_descent_graph(emb, k=6, iters=3, n_planes=6, seed=77)
+    return nn_descent_graph(
+        emb, k=_NND_K, iters=_NND_ITERS, n_planes=_NND_PLANES, seed=_NND_SEED
+    )
 
 
-def _nn_descent_sql(k: int = 6, iters: int = 3, n_planes: int = 6,
-                    seed: int = 77, dim: int = 64) -> str:
+def _nn_descent_sql() -> str:
     """Unrolled-CTE DuckDB twin of nn_descent_graph: the SAME seeded
     hyperplane literals (repr round-trips doubles exactly, and the
     fold dot product is bit-identical to list_dot_product), the same
     lead-window ring init, and one CTE block per refinement round."""
     from ..operators.similarity import _hyperplanes
 
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(_EMB_DIM, _NND_PLANES, _NND_SEED)
     bits = " + ".join(
         f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]),"
         f" [{', '.join(repr(float(x)) for x in p)}]) >= 0"
@@ -207,9 +219,9 @@ def _nn_descent_sql(k: int = 6, iters: int = 3, n_planes: int = 6,
         for i, p in enumerate(planes)
     )
     lead_cols = ", ".join(
-        f"lead(vec_id, {j}) OVER w AS n{j}" for j in range(1, k + 1)
+        f"lead(vec_id, {j}) OVER w AS n{j}" for j in range(1, _NND_K + 1)
     )
-    unnest_list = ", ".join(f"n{j}" for j in range(1, k + 1))
+    unnest_list = ", ".join(f"n{j}" for j in range(1, _NND_K + 1))
     cos = _COS_SQL.format(a="ea.embedding", b="eb.embedding")
     parts = [
         f"WITH b0 AS MATERIALIZED (SELECT vec_id, ({bits}) AS bk FROM embeddings)",
@@ -226,12 +238,12 @@ def _nn_descent_sql(k: int = 6, iters: int = 3, n_planes: int = 6,
         " UNION SELECT a, b FROM (SELECT a,"
         f" unnest([{unnest_list}]) AS b FROM l0s) WHERE b IS NOT NULL)",
     ]
-    rev_k = max(1, k // 2)
+    rev_k = max(1, _NND_K // 2)
     rev_hash = (
         "CAST(('0x' || substring(md5(CAST(b AS VARCHAR) || '|' ||"
         " CAST(a AS VARCHAR)), 1, 15)) AS BIGINT)"
     )
-    for t in range(1, iters + 1):
+    for t in range(1, _NND_ITERS + 1):
         p = t - 1
         parts += [
             # reverse-neighbor ρ-sampling (Dong et al. §2.3, r11): keep
@@ -262,13 +274,16 @@ def _nn_descent_sql(k: int = 6, iters: int = 3, n_planes: int = 6,
             f"r{t} AS MATERIALIZED (SELECT a, b, cos_sim, ROW_NUMBER() OVER ("
             " PARTITION BY a ORDER BY cos_sim DESC, b ASC) AS rk"
             f" FROM s{t})",
-            f"e{t} AS MATERIALIZED (SELECT a, b FROM r{t} WHERE rk <= {k})",
+            f"e{t} AS MATERIALIZED (SELECT a, b FROM r{t} WHERE rk <= {_NND_K})",
         ]
     return (
         ",\n".join(parts)
         + f"\nSELECT a AS vec_id, b AS nbr_id, cos_sim,"
-        f" CAST(rk AS INT) AS rank FROM r{iters} WHERE rk <= {k}"
+        f" CAST(rk AS INT) AS rank FROM r{_NND_ITERS} WHERE rk <= {_NND_K}"
     )
+
+
+_NN_DESCENT_SQL = _nn_descent_sql()
 
 
 def embedding_top_eigenvector(
@@ -282,7 +297,7 @@ def embedding_top_eigenvector(
     from ..operators.clustering import top_eigenvector_power
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return top_eigenvector_power(spark, emb, iters=192)
+    return top_eigenvector_power(spark, emb)
 
 
 def _eigvec_parts(dim: int = 64, iters: int = 192) -> list[str]:
@@ -323,12 +338,12 @@ def _eigvec_parts(dim: int = 64, iters: int = 192) -> list[str]:
     return parts
 
 
-def _eigvec_sql(dim: int = 64, iters: int = 192) -> str:
-    parts = _eigvec_parts(dim, iters) + [
-        f"wf AS MATERIALIZED (SELECT cc.j, SUM(cc.cv * v{iters}.vv) AS wv"
-        f" FROM cc JOIN v{iters} ON v{iters}.j = cc.k GROUP BY 1)",
+def _eigvec_sql() -> str:
+    parts = _eigvec_parts(_EMB_DIM, POWER_ITERS) + [
+        f"wf AS MATERIALIZED (SELECT cc.j, SUM(cc.cv * v{POWER_ITERS}.vv) AS wv"
+        f" FROM cc JOIN v{POWER_ITERS} ON v{POWER_ITERS}.j = cc.k GROUP BY 1)",
         f"ray AS (SELECT SUM(v.vv * w.wv) AS num,"
-        f" SUM(v.vv * v.vv) AS den FROM v{iters} v"
+        f" SUM(v.vv * v.vv) AS den FROM v{POWER_ITERS} v"
         " JOIN wf w USING (j))",
         "tr AS (SELECT GREATEST(SUM(cv), 1) AS t FROM cc"
         " WHERE j = k)",
@@ -341,10 +356,13 @@ SELECT CAST(v.j AS BIGINT) AS dim_idx, CAST(v.vv AS BIGINT) AS eig_e6,
              * 1000000) // (SELECT t FROM tr) AS BIGINT)
          AS explained_ppm,
        CAST((SELECT t FROM tr) //
-            ((SELECT n FROM cnt) * (SELECT n FROM cnt) * {dim})
+            ((SELECT n FROM cnt) * (SELECT n FROM cnt) * {_EMB_DIM})
             AS BIGINT) AS var_mean_e12
-FROM v{iters} v"""
+FROM v{POWER_ITERS} v"""
     )
+
+
+_EIGVEC_SQL = _eigvec_sql()
 
 
 #: classic UTF-8-decoded-as-latin1 / cp1252 artifact markers plus the
@@ -467,13 +485,10 @@ def kmeans_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_medoids_sql(
-    rounds: int = _KMEANS_ROUNDS, k: int = _KMEANS_K
-) -> str:
-    """Twin: the shared kmeans chain through afinal, then the HALF_UP
-    1e-6 snap and a per-cell arg_min on the padded (d2_e6, vec_id)
-    string key — the same total order as Spark's struct min."""
-    return _kmeans_chain_sql(rounds, k) + """
+#: Twin: the shared kmeans chain through afinal, then the HALF_UP
+#: 1e-6 snap and a per-cell arg_min on the padded (d2_e6, vec_id)
+#: string key — the same total order as Spark's struct min.
+_KMEANS_MEDOIDS_SQL = _kmeans_chain_sql(_KMEANS_ROUNDS, _KMEANS_K) + """
 , ad AS (
   SELECT vec_id, cluster,
          CAST(round(d2 * 1000000.0) AS BIGINT) AS d2_e6
@@ -488,6 +503,11 @@ SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs,
        CAST(SUM(d2_e6) // COUNT(*) AS BIGINT) AS mean_d2_e6
 FROM ad GROUP BY cluster
 """
+
+
+#: Outliers reported by embedding_spectral_outliers and its SQL twin.
+_SPECTRAL_TOP_K = 20
+
 
 
 def embedding_spectral_outliers(
@@ -510,7 +530,7 @@ def embedding_spectral_outliers(
     from ..operators.clustering import power_model, spectral_residual_rows
 
     emb = load_table(spark, sf_dir, "embeddings")
-    model = power_model(emb, iters=192)
+    model = power_model(emb)
     if model is None:
         return spark.createDataFrame(
             [],
@@ -529,7 +549,7 @@ def embedding_spectral_outliers(
     )
     top = scored.orderBy(
         F.col("resid").desc(), F.col("vec_id").asc()
-    ).limit(20)
+    ).limit(_SPECTRAL_TOP_K)
     w = Window.orderBy(F.col("resid").desc(), F.col("vec_id").asc())
     return top.select(
         "vec_id",
@@ -540,13 +560,11 @@ def embedding_spectral_outliers(
     )
 
 
-def _spectral_outliers_sql(
-    dim: int = 64, iters: int = 192, topk: int = 20
-) -> str:
+def _spectral_outliers_sql() -> str:
     """Twin: the shared power-iteration chain, then per-vector centered
     integer folds and the exact HUGEINT residual rank."""
-    parts = _eigvec_parts(dim, iters) + [
-        f"vden AS (SELECT SUM(vv * vv) AS den FROM v{iters})",
+    parts = _eigvec_parts(_EMB_DIM, POWER_ITERS) + [
+        f"vden AS (SELECT SUM(vv * vv) AS den FROM v{POWER_ITERS})",
         "mu AS MATERIALIZED (SELECT dim,"
         " s // (SELECT n FROM cnt) AS m FROM sv)",
         "cvals AS MATERIALIZED (SELECT c.vec_id, c.dim,"
@@ -555,7 +573,7 @@ def _spectral_outliers_sql(
         f"pv AS MATERIALIZED (SELECT cv.vec_id,"
         f" SUM(cv.cv2 * cv.cv2) AS sq_norm,"
         f" SUM(cv.cv2 * v.vv) AS proj FROM cvals cv"
-        f" JOIN v{iters} v ON v.j = cv.dim GROUP BY 1)",
+        f" JOIN v{POWER_ITERS} v ON v.j = cv.dim GROUP BY 1)",
         "sc AS (SELECT vec_id, sq_norm, proj,"
         " sq_norm * (SELECT den FROM vden) - proj * proj AS resid"
         " FROM pv)",
@@ -569,13 +587,19 @@ SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(rank AS INT) AS rank,
        CAST(resid // (SELECT den FROM vden) AS BIGINT) AS resid_e12,
        CAST(sq_norm AS BIGINT) AS sq_norm,
        CAST(proj AS BIGINT) AS proj_dot
-FROM rk WHERE rank <= {topk}"""
+FROM rk WHERE rank <= {_SPECTRAL_TOP_K}"""
     )
 
 
-def customer_l_diversity(
-    spark: SparkSession, sf_dir: str, l_req: int = 3
-) -> DataFrame:
+_SPECTRAL_OUTLIERS_SQL = _spectral_outliers_sql()
+
+
+#: Distinct sensitive values below which customer_l_diversity (and its
+#: SQL twin) flags a class.
+_L_DIVERSITY_L = 3
+
+
+def customer_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit (round-10 session 3) — the companion privacy
     gate to customer_k_anonymity: a quasi-identifier class can be
     k-anonymous yet still leak if everyone in it shares the same
@@ -626,13 +650,12 @@ def customer_l_diversity(
             "n_orders",
             "distinct_sensitive",
             "entropy_micro",
-            (F.col("distinct_sensitive") < l_req).alias("violates_l"),
+            (F.col("distinct_sensitive") < _L_DIVERSITY_L).alias("violates_l"),
         )
     )
 
 
-def _l_diversity_sql(l_req: int = 3) -> str:
-    return f"""
+_L_DIVERSITY_SQL = f"""
 WITH cp AS (
   SELECT c.c_nationkey, c.c_mktsegment, o.o_orderpriority,
          CAST(COUNT(*) AS BIGINT) AS c
@@ -648,7 +671,7 @@ SELECT c_nationkey, c_mktsegment,
        CAST(SUM(CAST(round(
            -(CAST(c AS DOUBLE) / t) * ln(CAST(c AS DOUBLE) / t)
            * 1000000.0) AS BIGINT)) AS BIGINT) AS entropy_micro,
-       COUNT(*) < {l_req} AS violates_l
+       COUNT(*) < {_L_DIVERSITY_L} AS violates_l
 FROM terms GROUP BY 1, 2
 """
 
@@ -789,9 +812,11 @@ FROM daily
 """
 
 
-def session_event_trigrams(
-    spark: SparkSession, sf_dir: str, top_k: int = 30
-) -> DataFrame:
+#: Trigrams reported by session_event_trigrams and its SQL twin.
+_TRIGRAM_TOP_K = 30
+
+
+def session_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential pattern mining one order up from the Markov pair
     matrix (round-10 session 4): the top-30 consecutive event-type
     TRIGRAMS across per-user streams, gap-bounded to 24 hours so a
@@ -848,12 +873,11 @@ def session_event_trigrams(
     )
     return (
         ranked.withColumn("rank", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= _TRIGRAM_TOP_K)
     )
 
 
-def _trigram_sql(top_k: int = 30) -> str:
-    return f"""
+_TRIGRAM_SQL = f"""
 WITH tri AS (
   SELECT t1, t2, t3, CAST(COUNT(*) AS BIGINT) AS n FROM (
     SELECT event_type AS t1,
@@ -876,7 +900,7 @@ FROM (
   SELECT tri.*, ROW_NUMBER() OVER (
     ORDER BY n DESC, t1 ASC, t2 ASC, t3 ASC) AS rank
   FROM tri
-) WHERE rank <= {top_k}
+) WHERE rank <= {_TRIGRAM_TOP_K}
 """
 
 
@@ -957,6 +981,11 @@ FROM j GROUP BY 1, 2
 """
 
 
+#: BFS rounds of the harmonic-centrality query and its SQL twin.
+_HARMONIC_ROUNDS = 4
+
+
+
 def part_harmonic_centrality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -979,10 +1008,10 @@ def part_harmonic_centrality(
         F.explode(F.array(F.col("a"), F.col("b"))).alias("n")
     ).distinct()
     sources = nodes.filter((F.col("n") % 53 == 0) & (F.col("n") < 1696))
-    return per_source_harmonic(ue, sources, rounds=4)
+    return per_source_harmonic(ue, sources, rounds=_HARMONIC_ROUNDS)
 
 
-def _harmonic_sql(rounds: int = 4) -> str:
+def _harmonic_sql() -> str:
     parts = [
         """WITH lp AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -1003,7 +1032,7 @@ def _harmonic_sql(rounds: int = 4) -> str:
   SELECT src, node, CAST(0 AS BIGINT) AS dist FROM f0
 )""",
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, _HARMONIC_ROUNDS + 1):
         p = t - 1
         parts.append(
             f""", nb{t} AS MATERIALIZED (
@@ -1026,10 +1055,13 @@ SELECT s.src,
 FROM (SELECT DISTINCT src FROM f0) s LEFT JOIN (
   SELECT src, CAST(COUNT(*) AS BIGINT) AS n_reached,
          CAST(SUM(1000000 // dist) AS BIGINT) AS harmonic_micro
-  FROM v{rounds} WHERE dist > 0 GROUP BY src
+  FROM v{_HARMONIC_ROUNDS} WHERE dist > 0 GROUP BY src
 ) h ON h.src = s.src"""
     )
     return "".join(parts)
+
+
+_HARMONIC_SQL = _harmonic_sql()
 
 
 
@@ -1099,7 +1131,7 @@ def _persisted_ann_model(
         save_ann_model(
             spark,
             tmp,
-            centroids=kmeans_centroids(emb, k=8),
+            centroids=kmeans_centroids(emb, k=IVF_N_CELLS),
             codebooks=pq_train(emb),
         )
         try:
@@ -1129,6 +1161,12 @@ def ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_serve(emb, model["centroids"], model["codebooks"])
 
 
+#: Hops and KMV register size of copurchase_hyperball and its SQL twin.
+_HYPERBALL_ROUNDS = 2
+_HYPERBALL_K = 8
+
+
+
 def copurchase_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperBall neighborhood-function sketch over the repeat
     co-purchase part graph (r11; the sketch the harmonic-centrality
@@ -1147,12 +1185,12 @@ def copurchase_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     ue = _repeat_copurchase_edges(li)
-    return hyperball_kmv(ue, rounds=2, k=8).select(
+    return hyperball_kmv(ue, rounds=_HYPERBALL_ROUNDS, k=_HYPERBALL_K).select(
         F.col("node").alias("part"), "n_regs", "kmin_max", "est_ball"
     )
 
 
-def _hyperball_sql(rounds: int = 2, k: int = 8) -> str:
+def _hyperball_sql() -> str:
     """Exact-ball twin of copurchase_hyperball: unrolled BFS to
     distance <= rounds, then per-node bottom-k of the shared 60-bit
     md5 grid — equal to the iterative KMV merge by associativity/
@@ -1166,7 +1204,7 @@ def _hyperball_sql(rounds: int = 2, k: int = 8) -> str:
         "nodesq AS MATERIALIZED (SELECT DISTINCT a AS n FROM bidir)",
         "r0 AS MATERIALIZED (SELECT n AS v, n AS w FROM nodesq)",
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, _HYPERBALL_ROUNDS + 1):
         p = t - 1
         parts.append(
             f"r{t} AS MATERIALIZED (SELECT v, w FROM r{p}"
@@ -1175,21 +1213,24 @@ def _hyperball_sql(rounds: int = 2, k: int = 8) -> str:
         )
     parts += [
         f"hashed AS MATERIALIZED (SELECT DISTINCT v, {hb_hash} AS h"
-        f" FROM r{rounds})",
+        f" FROM r{_HYPERBALL_ROUNDS})",
         "ranked AS MATERIALIZED (SELECT v, h, ROW_NUMBER() OVER ("
         "PARTITION BY v ORDER BY h) AS rk FROM hashed)",
-        f"regs AS (SELECT v, h FROM ranked WHERE rk <= {k})",
+        f"regs AS (SELECT v, h FROM ranked WHERE rk <= {_HYPERBALL_K})",
     ]
     return (
         ",\n".join(parts)
         + f"""
 SELECT v AS part, CAST(COUNT(*) AS INT) AS n_regs,
        MAX(h) AS kmin_max,
-       CASE WHEN COUNT(*) < {k} THEN CAST(COUNT(*) AS BIGINT)
-            ELSE CAST({(k - 1) * (1 << 60)} AS BIGINT) // (MAX(h) + 1)
+       CASE WHEN COUNT(*) < {_HYPERBALL_K} THEN CAST(COUNT(*) AS BIGINT)
+            ELSE CAST({(_HYPERBALL_K - 1) * (1 << 60)} AS BIGINT) // (MAX(h) + 1)
        END AS est_ball
 FROM regs GROUP BY v"""
     )
+
+
+_HYPERBALL_SQL = _hyperball_sql()
 
 
 def dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1288,8 +1329,13 @@ GROUP BY 1
 _AES_JMAX = 16
 
 
+#: Sample size of weighted_priority_sample and its SQL twin.
+_AES_N = 100
+
+
+
 def weighted_priority_sample(
-    spark: SparkSession, sf_dir: str, n: int = 100
+    spark: SparkSession, sf_dir: str, n: int = _AES_N
 ) -> DataFrame:
     """Weighted reservoir / priority sampling (Efraimidis-Spirakis
     2006, "Weighted random sampling with a reservoir"): each document
@@ -1359,9 +1405,11 @@ def _aes_key_cols(docs: DataFrame) -> DataFrame:
     ).withColumn("aes_key", key)
 
 
-def stratified_priority_sample(
-    spark: SparkSession, sf_dir: str, per_stratum: int = 8
-) -> DataFrame:
+#: Documents per source of stratified_priority_sample and its SQL twin.
+_AES_PER_STRATUM = 8
+
+
+def stratified_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified A-ES priority sampling: the top-``per_stratum``
     documents PER SOURCE by the same weighted rank key — the curation
     shape for "sample N docs per source/language, favoring long ones"
@@ -1381,14 +1429,14 @@ def stratified_priority_sample(
     return (
         _aes_keyed_docs(spark, sf_dir)
         .withColumn("stratum_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("stratum_rank") <= per_stratum)
+        .filter(F.col("stratum_rank") <= _AES_PER_STRATUM)
         .select(
             "source", "stratum_rank", "doc_id", "n_chars", "aes_key"
         )
     )
 
 
-def _aes_sql(n: int = 100) -> str:
+def _aes_sql() -> str:
     """DuckDB twin of weighted_priority_sample: the same integer CASE
     banding, the same (h+1)/2^60 grid draw, and the same iterated-sqrt
     key — textually nested sqrt(sqrt(...)) so both engines execute the
@@ -1425,14 +1473,17 @@ keyed AS (
 SELECT doc_id, n_chars, w_log2, aes_key
 FROM keyed
 ORDER BY aes_key DESC, doc_id ASC
-LIMIT {n}
+LIMIT {_AES_N}
 """
 
 
-def _stratified_aes_sql(per_stratum: int = 8) -> str:
+_AES_SQL = _aes_sql()
+
+
+def _stratified_aes_sql() -> str:
     """DuckDB twin of stratified_priority_sample: the identical keyed
     CTE (see _aes_sql), ranked per source."""
-    base = _aes_sql()
+    base = _AES_SQL
     keyed_cte = base[: base.index(")\nSELECT")] + ")"
     return f"""{keyed_cte}
 SELECT source,
@@ -1441,8 +1492,11 @@ SELECT source,
             ORDER BY aes_key DESC, doc_id ASC) AS INT) AS stratum_rank,
        doc_id, n_chars, aes_key
 FROM keyed
-QUALIFY stratum_rank <= {per_stratum}
+QUALIFY stratum_rank <= {_AES_PER_STRATUM}
 """
+
+
+_STRATIFIED_AES_SQL = _stratified_aes_sql()
 
 
 def stream_priority_sample_q(
@@ -1512,7 +1566,7 @@ def bbit_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     base = (
-        shingled(docs, "doc_id", 3)
+        shingled(docs)
         .join(F.broadcast(aud_ids), "doc_id", "left_semi")
         .select("doc_id", F.explode("shingles").alias("shingle"))
         .select("doc_id", md5_hash64(F.col("shingle")).alias("bh"))
@@ -1586,7 +1640,7 @@ def bbit_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bbit_sql(k: int = _BBIT_K, threshold: float = _BBIT_THRESHOLD) -> str:
+def _bbit_sql() -> str:
     """DuckDB twin of bbit_minhash_audit: the _JACCARD_PAIRS_SQL
     shingle/pair conventions, the shared md5-grid slot hashes, the
     same clamped-integer estimators."""
@@ -1595,19 +1649,19 @@ def _bbit_sql(k: int = _BBIT_K, threshold: float = _BBIT_THRESHOLD) -> str:
         "MIN("
         + h60.format(x=f"'{i}|' || CAST(bh AS VARCHAR)")
         + f") AS mh{i}"
-        for i in range(k)
+        for i in range(_BBIT_K)
     )
     m_full = " + ".join(
         f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END"
-        for i in range(k)
+        for i in range(_BBIT_K)
     )
     m_b2 = " + ".join(
         f"CASE WHEN (a.mh{i} & 3) = (b.mh{i} & 3) THEN 1 ELSE 0 END"
-        for i in range(k)
+        for i in range(_BBIT_K)
     )
     m_b1 = " + ".join(
         f"CASE WHEN (a.mh{i} & 1) = (b.mh{i} & 1) THEN 1 ELSE 0 END"
-        for i in range(k)
+        for i in range(_BBIT_K)
     )
     return f"""
 WITH toks AS (
@@ -1630,7 +1684,7 @@ WITH toks AS (
   FROM common
   JOIN sizes sa ON doc_a = sa.doc_id
   JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE c / (sa.n + sb.n - c) >= {threshold}
+  WHERE c / (sa.n + sb.n - c) >= {_BBIT_THRESHOLD}
 ), basehash AS (
   SELECT doc_id, {h60.format(x="shingle")} AS bh FROM sh
 ), sig AS (
@@ -1647,11 +1701,14 @@ WITH toks AS (
   JOIN sig b ON b.doc_id = p.doc_b
 )
 SELECT doc_a, doc_b, jaccard, matches_full, matches_b2, matches_b1,
-       1000000 * matches_full // {k} AS est_full_ppm,
-       1000000 * GREATEST(0, 4 * matches_b2 - {k}) // {3 * k} AS est_b2_ppm,
-       1000000 * GREATEST(0, 2 * matches_b1 - {k}) // {k} AS est_b1_ppm
+       1000000 * matches_full // {_BBIT_K} AS est_full_ppm,
+       1000000 * GREATEST(0, 4 * matches_b2 - {_BBIT_K}) // {3 * _BBIT_K} AS est_b2_ppm,
+       1000000 * GREATEST(0, 2 * matches_b1 - {_BBIT_K}) // {_BBIT_K} AS est_b1_ppm
 FROM audited
 """
+
+
+_BBIT_SQL = _bbit_sql()
 
 
 # --- round 13 ---------------------------------------------------------
@@ -1692,13 +1749,7 @@ def stream_ann_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_ingest_sql(
-    k: int = 8,
-    iters: int = 5,
-    sample_n: int = 4096,
-    dim: int = 64,
-    threshold: float = _ANN_INGEST_THRESHOLD,
-) -> str:
+def _ann_ingest_sql() -> str:
     """DuckDB batch twin of stream_ann_ingest_dedup: the shared
     unrolled Lloyd chain (_kmeans_cte_chain — same params as the
     persisted model fit), argmax cell assignment over all vectors,
@@ -1714,22 +1765,25 @@ def _ann_ingest_sql(
          {_UNIT_SQL.format(v='embedding')} AS v
   FROM embeddings
 ), smp AS (
-  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {sample_n}
+  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
 )"""
-        + _kmeans_cte_chain("smp", k, iters, dim)
-        + f""", af AS MATERIALIZED ({_ASSIGN_SQL.format(fit_src='n', src=f'c{iters}')})
+        + _kmeans_cte_chain("smp", IVF_N_CELLS, KMEANS_ITERS, _EMB_DIM)
+        + f""", af AS MATERIALIZED ({_ASSIGN_SQL.format(fit_src='n', src=f'c{KMEANS_ITERS}')})
 , dup AS (
   SELECT DISTINCT b.vec_id
   FROM af a
   JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
   JOIN n na ON na.vec_id = a.vec_id
   JOIN n nb ON nb.vec_id = b.vec_id
-  WHERE {_COS_SQL.format(a='na.raw', b='nb.raw')} >= {threshold}
+  WHERE {_COS_SQL.format(a='na.raw', b='nb.raw')} >= {_ANN_INGEST_THRESHOLD}
 )
 SELECT af.vec_id, CAST(af.cid AS INT) AS ivf_cell,
        d.vec_id IS NULL AS is_canonical
 FROM af LEFT JOIN dup d ON d.vec_id = af.vec_id"""
     )
+
+
+_ANN_INGEST_SQL = _ann_ingest_sql()
 
 
 QUERIES: dict[str, tuple[QueryFn, str | None]] = {
@@ -1739,11 +1793,11 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     ),
     "part_harmonic_centrality": (
         part_harmonic_centrality,
-        _harmonic_sql(),
+        _HARMONIC_SQL,
     ),
     "session_event_trigrams": (
         session_event_trigrams,
-        _trigram_sql(),
+        _TRIGRAM_SQL,
     ),
     "incremental_curation_delta": (
         incremental_curation_delta,
@@ -1751,7 +1805,7 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     ),
     "customer_l_diversity": (
         customer_l_diversity,
-        _l_diversity_sql(),
+        _L_DIVERSITY_SQL,
     ),
     "embedding_label_centroid_drift": (
         embedding_label_centroid_drift,
@@ -1763,44 +1817,44 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     ),
     "kmeans_cluster_medoids": (
         kmeans_cluster_medoids,
-        _kmeans_medoids_sql(),
+        _KMEANS_MEDOIDS_SQL,
     ),
     "embedding_spectral_outliers": (
         embedding_spectral_outliers,
-        _spectral_outliers_sql(),
+        _SPECTRAL_OUTLIERS_SQL,
     ),
     "nn_descent_knn_graph": (
         nn_descent_knn_graph,
-        _nn_descent_sql(),
+        _NN_DESCENT_SQL,
     ),
     "embedding_top_eigenvector": (
         embedding_top_eigenvector,
-        _eigvec_sql(),
+        _EIGVEC_SQL,
     ),
     "doc_mojibake_audit": (doc_mojibake_audit, _MOJIBAKE_SQL),
-    "ivfpq_persisted_topk": (ivfpq_persisted_topk, _ivfpq_sql()),
-    "copurchase_hyperball": (copurchase_hyperball, _hyperball_sql()),
+    "ivfpq_persisted_topk": (ivfpq_persisted_topk, _IVFPQ_SQL),
+    "copurchase_hyperball": (copurchase_hyperball, _HYPERBALL_SQL),
     "dedup_signal_agreement": (
         dedup_signal_agreement,
         _SIGNAL_AGREEMENT_SQL,
     ),
     "weighted_priority_sample": (
         weighted_priority_sample,
-        _aes_sql(),
+        _AES_SQL,
     ),
     "stream_ann_ingest_dedup": (
         stream_ann_ingest_dedup,
-        _ann_ingest_sql(),
+        _ANN_INGEST_SQL,
     ),
     "stratified_priority_sample": (
         stratified_priority_sample,
-        _stratified_aes_sql(),
+        _STRATIFIED_AES_SQL,
     ),
     "stream_priority_sample": (
         stream_priority_sample_q,
-        _aes_sql(),
+        _AES_SQL,
     ),
-    "bbit_minhash_audit": (bbit_minhash_audit, _bbit_sql()),
+    "bbit_minhash_audit": (bbit_minhash_audit, _BBIT_SQL),
 }
 
 

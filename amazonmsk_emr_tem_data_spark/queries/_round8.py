@@ -15,6 +15,7 @@ from ..sources.files import (
     load_table,
 )
 from ._core import QueryFn, _cents, _dsum, _ranked_topk
+from ._analytics import _type_value_quantiles
 from ._northstar import (
     _COS_SQL,
     _EMB_KNN_SQL,
@@ -28,7 +29,7 @@ from ._timeseries import (
     _JACCARD_PAIR_CTES,
 )
 from ._tpch_corpus import (
-    _ivf_topk_sql,
+    _IVF_TOPK_SQL,
 )
 from ._curation import (
     _QUALITY_SCORE_SQL,
@@ -403,9 +404,12 @@ baskets AS (
 )"""
 
 
-def part_copurchase_lift(
-    spark: SparkSession, sf_dir: str, min_count: int = 2
-) -> DataFrame:
+#: Shared orders that make a co-purchase edge in the co-purchase
+#: queries and their SQL twins.
+_COPURCHASE_MIN_COUNT = 2
+
+
+def part_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association on ORDER baskets (round 8): for every
     part pair co-purchased in ≥ min_count orders, support, both
     directional confidences, and lift in exact ppm integer math — the
@@ -424,7 +428,7 @@ def part_copurchase_lift(
     # (order, part) relation), and the order total is a row count —
     # the identical groupBy subtree is planned once and shared via
     # ReusedExchange instead of re-scanning lineitem per aggregate.
-    grouped, pairs = _basket_pairs(spark, sf_dir, min_count)
+    grouped, pairs = _basket_pairs(spark, sf_dir, _COPURCHASE_MIN_COUNT)
     n_orders = grouped.agg(
         F.count(F.lit(1)).cast("long").alias("n_orders")
     )
@@ -455,9 +459,8 @@ def part_copurchase_lift(
     )
 
 
-def _copurchase_lift_sql(min_count: int = 2) -> str:
-    return f"""
-WITH {_BASKET_PAIRS_CTE.format(min_count=min_count)},
+_COPURCHASE_LIFT_SQL = f"""
+WITH {_BASKET_PAIRS_CTE.format(min_count=_COPURCHASE_MIN_COUNT)},
 n_orders AS (
   SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders FROM baskets
 ), per_part AS (
@@ -569,9 +572,12 @@ FROM deltas
 """
 
 
-def bot_regularity_score(
-    spark: SparkSession, sf_dir: str, min_gaps: int = 50
-) -> DataFrame:
+#: Gaps a user needs before bot_regularity_score (and its SQL twin)
+#: scores them.
+_BOT_MIN_GAPS = 50
+
+
+def bot_regularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event regularity per user (round 8): a human's gaps are
     bursty (coefficient of variation ≈ 1, exponential-ish); a cron
     job or bot repeats on a near-constant period (CV ≪ 1). Per user:
@@ -620,17 +626,16 @@ def bot_regularity_score(
             "mean_gap_s"
         ),
         (
-            (F.col("n_gaps") >= F.lit(min_gaps)) & (var4 < s2)
+            (F.col("n_gaps") >= F.lit(_BOT_MIN_GAPS)) & (var4 < s2)
             | (
-                (F.col("n_gaps") >= F.lit(min_gaps))
+                (F.col("n_gaps") >= F.lit(_BOT_MIN_GAPS))
                 & (F.col("s") == 0)
             )
         ).alias("is_bot"),
     )
 
 
-def _bot_regularity_sql(min_gaps: int = 50) -> str:
-    return f"""
+_BOT_REGULARITY_SQL = f"""
 WITH gaps AS (
   SELECT user_id,
          LEAST((epoch_us(ts) - epoch_us(lag(ts) OVER w)) // 1000000,
@@ -646,22 +651,27 @@ WITH gaps AS (
 )
 SELECT user_id, n_gaps,
        CAST(s AS DOUBLE) / n_gaps AS mean_gap_s,
-       (n_gaps >= {min_gaps}
+       (n_gaps >= {_BOT_MIN_GAPS}
         AND 4 * (CAST(n_gaps AS HUGEINT) * ss
                  - CAST(s AS HUGEINT) * s)
             < CAST(s AS HUGEINT) * s)
-       OR (n_gaps >= {min_gaps} AND s = 0) AS is_bot
+       OR (n_gaps >= {_BOT_MIN_GAPS} AND s = 0) AS is_bot
 FROM agg
 """
+
+
+#: Degree above which a part is dropped from the co-purchase graph of
+#: the link-prediction and clustering-coefficient queries and their twins.
+_COPURCHASE_MAX_DEGREE = 1000
+#: Neighbors kept per part and predictions reported by
+#: copurchase_link_prediction and its SQL twin.
+_LINK_KNN = 30
+_LINK_TOP_N = 100
 
 
 def copurchase_link_prediction(
     spark: SparkSession,
     sf_dir: str,
-    min_count: int = 2,
-    max_degree: int = 1000,
-    knn: int = 30,
-    top_n: int = 100,
 ) -> DataFrame:
     """Link prediction on the co-purchase graph (round 8): for part
     pairs NOT yet co-purchased, the Resource Allocation index
@@ -684,7 +694,7 @@ def copurchase_link_prediction(
     as z entirely (≤1 µ-unit per wedge, O(deg²) wedges). Existing
     edges drop via one anti-join; the top-N is
     TakeOrderedAndProject."""
-    _, pairs = _basket_pairs(spark, sf_dir, min_count)
+    _, pairs = _basket_pairs(spark, sf_dir, _COPURCHASE_MIN_COUNT)
     # r13 (guide §2.4, profiled): `pairs` feeds both adj_full union
     # sides AND the existing-edge anti-join, and the kNN window below
     # feeds both wedge self-join sides — without materialization the
@@ -710,11 +720,11 @@ def copurchase_link_prediction(
     )
     adj = (
         adj_full.withColumn("__rk", F.row_number().over(wk))
-        .filter(F.col("__rk") <= knn)
+        .filter(F.col("__rk") <= _LINK_KNN)
         .select("src", "dst")
         .transform(checkpoint_stage)  # see `pairs` note above
     )
-    mids = deg.filter(F.col("dg") <= max_degree)
+    mids = deg.filter(F.col("dg") <= _COPURCHASE_MAX_DEGREE)
     left = adj.select(F.col("dst").alias("a"), F.col("src").alias("z1"))
     right = adj.select(F.col("src").alias("z2"), F.col("dst").alias("b"))
     wedges = (
@@ -746,19 +756,13 @@ def copurchase_link_prediction(
             F.col("part_b").asc(),
         ],
         "part_a",
-        top_n,
+        _LINK_TOP_N,
         "link_rank",
     )
 
 
-def _link_prediction_sql(
-    min_count: int = 2,
-    max_degree: int = 1000,
-    knn: int = 30,
-    top_n: int = 100,
-) -> str:
-    return f"""
-WITH {_BASKET_PAIRS_CTE.format(min_count=min_count)},
+_LINK_PREDICTION_SQL = f"""
+WITH {_BASKET_PAIRS_CTE.format(min_count=_COPURCHASE_MIN_COUNT)},
 adj_full AS (
   SELECT pa AS src, pb AS dst, n_ab FROM pairs
   UNION ALL SELECT pb, pa, n_ab FROM pairs
@@ -771,12 +775,12 @@ adj_full AS (
            row_number() OVER (PARTITION BY src
                               ORDER BY n_ab DESC, dst ASC) AS rk
     FROM adj_full
-  ) WHERE rk <= {knn}
+  ) WHERE rk <= {_LINK_KNN}
 ), wedges AS (
   SELECT l.dst AS a, r.dst AS b, 1000000000000 // d.dg AS ra_part
   FROM adj l
   JOIN adj r ON l.src = r.src AND l.dst < r.dst
-  JOIN deg d ON d.z = l.src AND d.dg <= {max_degree}
+  JOIN deg d ON d.z = l.src AND d.dg <= {_COPURCHASE_MAX_DEGREE}
 ), scored AS (
   SELECT a, b, CAST(SUM(ra_part) AS BIGINT) AS ra_micro,
          CAST(COUNT(*) AS BIGINT) AS n_common
@@ -791,7 +795,7 @@ SELECT a AS part_a, b AS part_b, ra_micro, n_common,
             AS BIGINT) AS link_rank
 FROM scored
 ORDER BY ra_micro DESC, a ASC, b ASC
-LIMIT {top_n}
+LIMIT {_LINK_TOP_N}
 """
 
 
@@ -844,7 +848,7 @@ SELECT e.query_id,
                           THEN 1 ELSE 0 END) // COUNT(*)
             AS BIGINT) AS recall_ppm
 FROM ({_EMB_KNN_SQL}) e
-LEFT JOIN ({_ivf_topk_sql()}) i
+LEFT JOIN ({_IVF_TOPK_SQL}) i
   ON e.query_id = i.query_id AND e.vec_id = i.vec_id
 GROUP BY 1
 """
@@ -1420,21 +1424,8 @@ def event_type_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull() & F.col("value").isNotNull()
     )
-    obs = ev.select(
-        "event_type",
-        "event_id",
-        _cents("value").alias("v_cents"),
-        F.expr("CAST(round(value * 100) AS BIGINT) div 500").alias("bkt"),
-    )
     tags = {"p25": (1, 4), "p50": (1, 2), "p75": (3, 4), "p95": (19, 20)}
-    pct = lower_quantiles(
-        obs,
-        by=["event_type"],
-        bucket=["bkt"],
-        order=["v_cents", "event_id"],
-        value="v_cents",
-        cuts=tags,
-    )
+    pct = _type_value_quantiles(ev, tags)
     return pct.select(
         "event_type",
         *[(F.col(t).cast("double") / F.lit(100.0)).alias(t) for t in tags],
@@ -1652,9 +1643,11 @@ JOIN glob_ranked g
 # ---------------------------------------------------------------------------
 
 
-def phrase_search(
-    spark: SparkSession, sf_dir: str, phrase: str = "table scan"
-) -> DataFrame:
+#: The phrase phrase_search and its SQL twin look up.
+_PHRASE = "table scan"
+
+
+def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional phrase search (round 8): documents containing the
     exact token sequence, with per-doc match positions and count —
     the positional-index query behind quoted search, built from the
@@ -1668,7 +1661,7 @@ def phrase_search(
     not a corpus scan of text."""
     from ..functions.text import tokens
 
-    terms = phrase.split()
+    terms = _PHRASE.split()
     if len(terms) != 2:
         # Not an assert: under `python -O` an assert is stripped and a
         # 3+-token phrase would silently search only the first bigram.
@@ -1696,8 +1689,8 @@ def phrase_search(
     )
 
 
-def _phrase_search_sql(phrase: str = "table scan") -> str:
-    t1, t2 = phrase.split()
+def _phrase_search_sql() -> str:
+    t1, t2 = _PHRASE.split()
     return f"""
 WITH pos AS (
   SELECT doc_id,
@@ -1715,9 +1708,14 @@ GROUP BY 1
 """
 
 
-def session_coherent_sample(
-    spark: SparkSession, sf_dir: str, keep_mod: int = 10
-) -> DataFrame:
+_PHRASE_SEARCH_SQL = _phrase_search_sql()
+
+
+#: 1-in-N sessions kept by session_coherent_sample and its SQL twin.
+_SESSION_KEEP_MOD = 10
+
+
+def session_coherent_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-coherent (all-or-nothing) session sampling (round 8):
     sessionize the event stream, then keep EVERY event of sessions
     whose id-hash lands in the kept residue class — the sampling mode
@@ -1762,7 +1760,7 @@ def session_coherent_sample(
     )
     return (
         seg.withColumn("__h", h)
-        .filter(F.pmod(F.col("__h"), F.lit(keep_mod)) == 0)
+        .filter(F.pmod(F.col("__h"), F.lit(_SESSION_KEEP_MOD)) == 0)
         .select(
             "event_id",
             "user_id",
@@ -1773,7 +1771,7 @@ def session_coherent_sample(
     )
 
 
-def _session_sample_sql(keep_mod: int = 10) -> str:
+def _session_sample_sql() -> str:
     h = _HASH64_SQL.format(
         x="('sess1' || '|' || CAST(user_id AS VARCHAR)"
         " || '|' || CAST(seg AS VARCHAR))"
@@ -1795,13 +1793,19 @@ WITH flagged AS (
 SELECT event_id, user_id, CAST(seg AS BIGINT) AS session_seg, ts,
        event_type
 FROM seg
-WHERE (({h}) % {keep_mod} + {keep_mod}) % {keep_mod} = 0
+WHERE (({h}) % {_SESSION_KEEP_MOD} + {_SESSION_KEEP_MOD}) % {_SESSION_KEEP_MOD} = 0
 """
 
 
-def user_churn_labels(
-    spark: SparkSession, sf_dir: str, horizon_days: int = 7
-) -> DataFrame:
+_SESSION_SAMPLE_SQL = _session_sample_sql()
+
+
+#: Days without activity after which user_churn_labels (and its SQL
+#: twin) labels a user churned.
+_CHURN_HORIZON_DAYS = 7
+
+
+def user_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Churn label + feature prep (round 8): per user, the supervised-
     learning row a retention model trains on — churned = silent for
     the final `horizon_days` of the corpus (label), with the
@@ -1817,7 +1821,7 @@ def user_churn_labels(
     )
     cut = ev.agg(
         F.date_sub(
-            F.to_date(F.max("ts")), horizon_days
+            F.to_date(F.max("ts")), _CHURN_HORIZON_DAYS
         ).alias("cutoff")
     )
     labeled = ev.crossJoin(F.broadcast(cut))
@@ -1849,12 +1853,11 @@ def user_churn_labels(
     )
 
 
-def _churn_sql(horizon_days: int = 7) -> str:
-    return f"""
+_CHURN_SQL = f"""
 WITH ev AS (
   SELECT * FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
 ), cut AS (
-  SELECT CAST(MAX(ts) AS DATE) - INTERVAL {horizon_days} DAY AS cutoff
+  SELECT CAST(MAX(ts) AS DATE) - INTERVAL {_CHURN_HORIZON_DAYS} DAY AS cutoff
   FROM ev
 ), label AS (
   SELECT user_id,
@@ -1879,12 +1882,15 @@ FROM feats f JOIN label l USING (user_id)
 """
 
 
+#: Results, candidates and queries of mmr_diverse_topk and its SQL twin.
+_MMR_K = 5
+_MMR_CANDIDATES = 20
+_MMR_QUERIES = 3
+
+
 def mmr_diverse_topk(
     spark: SparkSession,
     sf_dir: str,
-    k: int = 5,
-    n_candidates: int = 20,
-    n_queries: int = 3,
 ) -> DataFrame:
     """Maximal Marginal Relevance retrieval (Carbonell & Goldstein
     1998) (round 8): top-k results that balance relevance against
@@ -1907,12 +1913,12 @@ def mmr_diverse_topk(
     emb = load_table(spark, sf_dir, "embeddings")
     from ..operators.similarity import knn_join
 
-    queries_df = emb.filter(F.col("vec_id") < n_queries).select(
+    queries_df = emb.filter(F.col("vec_id") < _MMR_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
     cand = (
-        knn_join(emb, queries_df, k=n_candidates)
+        knn_join(emb, queries_df, k=_MMR_CANDIDATES)
         .select("query_id", "vec_id", F.col("cos_sim").alias("rel"))
         .join(emb.select("vec_id", "embedding"), "vec_id")
     )
@@ -1948,7 +1954,7 @@ def mmr_diverse_topk(
             ),
         )
         sel = [first]
-        while len(sel) < k and len(sel) < len(cands):
+        while len(sel) < _MMR_K and len(sel) < len(cands):
             sel_ids = {s[0] for s in sel}
             best = None
             best_key = None
@@ -1982,14 +1988,12 @@ def mmr_diverse_topk(
     )
 
 
-def _mmr_sql(
-    k: int = 5, n_candidates: int = 20, n_queries: int = 3
-) -> str:
+def _mmr_sql() -> str:
     cos_eq = _COS_SQL.format(a="e.embedding", b="q.embedding")
     parts = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding FROM embeddings
-  WHERE vec_id < {n_queries}
+  WHERE vec_id < {_MMR_QUERIES}
 ), cand AS (
   SELECT query_id, vec_id, rel, emb FROM (
     SELECT q.query_id, e.vec_id, {cos_eq} AS rel,
@@ -1997,7 +2001,7 @@ WITH q AS (
            row_number() OVER (PARTITION BY q.query_id
              ORDER BY {cos_eq} DESC NULLS LAST, e.vec_id ASC) AS rn
     FROM embeddings e CROSS JOIN q
-  ) WHERE rn <= {n_candidates}
+  ) WHERE rn <= {_MMR_CANDIDATES}
 ), sims AS (
   SELECT a.query_id, a.vec_id AS va, b.vec_id AS vb,
          {_COS_SQL.format(a="a.emb", b="b.emb")} AS sim
@@ -2011,7 +2015,7 @@ WITH q AS (
     FROM cand) WHERE rn = 1
 )"""
     prev = "selu1"
-    for i in range(2, k + 1):
+    for i in range(2, _MMR_K + 1):
         parts += f""", step{i} AS (
   SELECT query_id, vec_id, rel, CAST({i} AS BIGINT) AS mmr_rank FROM (
     SELECT sc.query_id, sc.vec_id, sc.rel,
@@ -2037,6 +2041,9 @@ WITH q AS (
         f"\nSELECT query_id, vec_id, rel, mmr_rank FROM {prev}"
     )
     return parts
+
+
+_MMR_SQL = _mmr_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -2148,8 +2155,6 @@ FROM m
 def copurchase_clustering_coefficient(
     spark: SparkSession,
     sf_dir: str,
-    min_count: int = 2,
-    max_degree: int = 1000,
 ) -> DataFrame:
     """Local clustering coefficient on the co-purchase graph (round
     8): per part, cc = 2·triangles / (deg·(deg−1)) in exact ppm —
@@ -2167,7 +2172,7 @@ def copurchase_clustering_coefficient(
     graph before this rewrite. deg arithmetic is metadata-sized;
     max_degree only filters the REPORTED rows (a mega-hub's cc is
     noise), never the count."""
-    _, pairs = _basket_pairs(spark, sf_dir, min_count)
+    _, pairs = _basket_pairs(spark, sf_dir, _COPURCHASE_MIN_COUNT)
     adj = pairs.select(
         F.col("pa").alias("src"), F.col("pb").alias("dst")
     ).unionByName(
@@ -2226,7 +2231,7 @@ def copurchase_clustering_coefficient(
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )
     return (
-        deg.filter((F.col("dg") >= 2) & (F.col("dg") <= max_degree))
+        deg.filter((F.col("dg") >= 2) & (F.col("dg") <= _COPURCHASE_MAX_DEGREE))
         .join(per_node, "z", "left")
         .select(
             F.col("z").alias("part"),
@@ -2242,11 +2247,8 @@ def copurchase_clustering_coefficient(
     )
 
 
-def _clustering_coeff_sql(
-    min_count: int = 2, max_degree: int = 1000
-) -> str:
-    return f"""
-WITH {_BASKET_PAIRS_CTE.format(min_count=min_count)},
+_CLUSTERING_COEFF_SQL = f"""
+WITH {_BASKET_PAIRS_CTE.format(min_count=_COPURCHASE_MIN_COUNT)},
 adj AS (
   SELECT pa AS src, pb AS dst FROM pairs
   UNION ALL SELECT pb, pa FROM pairs
@@ -2278,7 +2280,7 @@ SELECT d.z AS part, d.dg AS degree,
        1000000 * 2 * COALESCE(t.n_triangles, 0)
          // (d.dg * (d.dg - 1)) AS cc_ppm
 FROM deg d LEFT JOIN per_node t ON t.z = d.z
-WHERE d.dg >= 2 AND d.dg <= {max_degree}
+WHERE d.dg >= 2 AND d.dg <= {_COPURCHASE_MAX_DEGREE}
 """
 
 
@@ -2621,12 +2623,12 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         _RI_AUDIT_SQL,
     ),
     "customer_rfm_segments": (customer_rfm_segments, _RFM_SQL),
-    "part_copurchase_lift": (part_copurchase_lift, _copurchase_lift_sql()),
+    "part_copurchase_lift": (part_copurchase_lift, _COPURCHASE_LIFT_SQL),
     "open_orders_daily": (open_orders_daily, _OPEN_ORDERS_SQL),
-    "bot_regularity_score": (bot_regularity_score, _bot_regularity_sql()),
+    "bot_regularity_score": (bot_regularity_score, _BOT_REGULARITY_SQL),
     "copurchase_link_prediction": (
         copurchase_link_prediction,
-        _link_prediction_sql(),
+        _LINK_PREDICTION_SQL,
     ),
     "ann_recall_audit": (ann_recall_audit, _ann_recall_sql()),
     "doc_gibberish_filter": (doc_gibberish_filter, _GIBBERISH_SQL),
@@ -2669,20 +2671,20 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
         order_fulfillment_latency,
         _FULFILLMENT_SQL,
     ),
-    "phrase_search": (phrase_search, _phrase_search_sql()),
+    "phrase_search": (phrase_search, _PHRASE_SEARCH_SQL),
     "session_coherent_sample": (
         session_coherent_sample,
-        _session_sample_sql(),
+        _SESSION_SAMPLE_SQL,
     ),
-    "user_churn_labels": (user_churn_labels, _churn_sql()),
-    "mmr_diverse_topk": (mmr_diverse_topk, _mmr_sql()),
+    "user_churn_labels": (user_churn_labels, _CHURN_SQL),
+    "mmr_diverse_topk": (mmr_diverse_topk, _MMR_SQL),
     "discount_quantity_regression": (
         discount_quantity_regression,
         _REGRESSION_SQL,
     ),
     "copurchase_clustering_coefficient": (
         copurchase_clustering_coefficient,
-        _clustering_coeff_sql(),
+        _CLUSTERING_COEFF_SQL,
     ),
     "orders_seasonality_dow": (
         orders_seasonality_dow,

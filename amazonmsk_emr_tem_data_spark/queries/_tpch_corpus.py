@@ -6,13 +6,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.bpe import N_MERGES
 from ..operators.order_stats import running_sum
+from ..operators.similarity import (
+    IVF_N_CELLS,
+    IVF_N_PROBE,
+    KMEANS_ITERS,
+    N_QUERIES,
+    SAMPLE_N,
+    TOP_K,
+)
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
     load_table,
 )
 from ._core import (
+    _EMB_DIM,
     QueryFn,
     _DISC_PRICE_CENTS_SQL,
     _EP100,
@@ -1126,6 +1136,12 @@ GROUP BY 1, 2
 """
 
 
+#: Coarse cells and duplicate cosine threshold of semantic_dedup_q and its
+#: SQL twin.
+_SEMDEDUP_CELLS = 8
+_SEMDEDUP_THRESHOLD = 0.95
+
+
 def semantic_dedup_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means-cluster the embedding
     space (full-data distributed Lloyd's, model-state-only driver
@@ -1139,7 +1155,9 @@ def semantic_dedup_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import semantic_dedup
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup(emb, n_cells=8, threshold=0.95)
+    return semantic_dedup(
+        emb, n_cells=_SEMDEDUP_CELLS, threshold=_SEMDEDUP_THRESHOLD
+    )
 
 
 #: Unit-normalize a DuckDB list column (the _normalized twin).
@@ -1199,9 +1217,7 @@ def _kmeans_cte_chain(fit_src: str, k: int, iters: int, dim: int) -> str:
     return "".join(parts)
 
 
-def _semdedup_sql(
-    k: int = 8, iters: int = 5, dim: int = 64, threshold: float = 0.95
-) -> str:
+def _semdedup_sql() -> str:
     """DuckDB twin of operators/clustering.semantic_dedup: unrolled
     k-means fit over ALL vectors (_kmeans_cte_chain), then the same
     within-cell cosine pair scoring and min-id connected-components
@@ -1210,14 +1226,14 @@ def _semdedup_sql(
         f"""WITH RECURSIVE n AS (
   SELECT vec_id, {_UNIT_SQL.format(v='embedding')} AS v FROM embeddings
 )""",
-        _kmeans_cte_chain("n", k, iters, dim),
+        _kmeans_cte_chain("n", _SEMDEDUP_CELLS, KMEANS_ITERS, _EMB_DIM),
     ]
-    assign = _ASSIGN_SQL.format(fit_src="n", src=f"c{iters}")
+    assign = _ASSIGN_SQL.format(fit_src="n", src=f"c{KMEANS_ITERS}")
     parts.append(
         f""", af AS ({assign}), pr AS (
   SELECT a.vec_id AS pa, b.vec_id AS pb
   FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE {_COS_SQL.format(a='a.v', b='b.v')} >= {threshold}
+  WHERE {_COS_SQL.format(a='a.v', b='b.v')} >= {_SEMDEDUP_THRESHOLD}
 ), edges AS (
   SELECT pa AS a, pb AS b FROM pr UNION SELECT pb AS a, pa AS b FROM pr
 ), reach(node, r) AS (
@@ -1237,15 +1253,7 @@ FROM af f JOIN comp c USING (vec_id)"""
 _SEMDEDUP_SQL = _semdedup_sql()
 
 
-def _ivf_topk_sql(
-    k: int = 5,
-    n_cells: int = 8,
-    n_probe: int = 3,
-    iters: int = 5,
-    sample_n: int = 4096,
-    dim: int = 64,
-    n_queries: int = 5,
-) -> str:
+def _ivf_topk_sql() -> str:
     """DuckDB twin of operators/similarity.ivf_topk as used by
     ivf_topk_q: quantizer fit on the first ``sample_n`` vectors by id
     (_kmeans_cte_chain over the sample CTE), full-corpus cell
@@ -1260,20 +1268,20 @@ def _ivf_topk_sql(
          {_UNIT_SQL.format(v='embedding')} AS v
   FROM embeddings
 ), smp AS (
-  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {sample_n}
+  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
 )""",
-        _kmeans_cte_chain("smp", n_cells, iters, dim),
+        _kmeans_cte_chain("smp", IVF_N_CELLS, KMEANS_ITERS, _EMB_DIM),
     ]
     parts.append(
-        f""", af AS ({_ASSIGN_SQL.format(fit_src='n', src=f'c{iters}')}), qs AS (
-  SELECT vec_id AS query_id, raw AS qraw, v AS qv FROM n WHERE vec_id < {n_queries}
+        f""", af AS ({_ASSIGN_SQL.format(fit_src='n', src=f'c{KMEANS_ITERS}')}), qs AS (
+  SELECT vec_id AS query_id, raw AS qraw, v AS qv FROM n WHERE vec_id < {N_QUERIES}
 ), qc AS (
   SELECT query_id, cid FROM (
     SELECT q.query_id, c.cid,
            row_number() OVER (PARTITION BY q.query_id
              ORDER BY list_dot_product(q.qv, c.cvec) DESC, c.cid ASC) AS rn
-    FROM qs q, c{iters} c) t
-  WHERE rn <= {n_probe}
+    FROM qs q, c{KMEANS_ITERS} c) t
+  WHERE rn <= {IVF_N_PROBE}
 ), cand AS (
   SELECT q.query_id, f.vec_id,
          {_COS_SQL.format(a='r.raw', b='q.qraw')} AS cos_sim
@@ -1286,7 +1294,7 @@ SELECT query_id, vec_id, cos_sim, rank FROM (
   SELECT cand.*, row_number() OVER (PARTITION BY query_id
            ORDER BY cos_sim DESC, vec_id ASC) AS rank
   FROM cand) t
-WHERE rank <= {k}"""
+WHERE rank <= {TOP_K}"""
     )
     return "".join(parts)
 
@@ -1461,27 +1469,27 @@ def _bpe_chain_sql(n_merges: int = 16) -> str:
     return "".join(parts)
 
 
-def _bpe_merges_sql(n_merges: int = 16) -> str:
+def _bpe_merges_sql() -> str:
     """Merge-table finalizer over the shared chain: one row per
     non-empty round."""
     rows = "\nUNION ALL ".join(
         f"SELECT CAST({r - 1} AS INT) AS round, a AS \"left\", b AS \"right\","
         f" a || b AS merged, CAST(n AS BIGINT) AS pair_freq FROM top{r}"
-        for r in range(1, n_merges + 1)
+        for r in range(1, N_MERGES + 1)
     )
-    return f"{_bpe_chain_sql(n_merges)}\n{rows}"
+    return f"{_bpe_chain_sql(N_MERGES)}\n{rows}"
 
 
-def _bpe_segmentation_sql(n_merges: int = 16) -> str:
+def _bpe_segmentation_sql() -> str:
     """Segmentation finalizer: wf{n} already holds every corpus word's
     final symbol list after all learned merges, so the deployable
     tokenizer pass is one word join + a per-document sum."""
-    return f"""{_bpe_chain_sql(n_merges)}
+    return f"""{_bpe_chain_sql(N_MERGES)}
 , dw AS (
   SELECT doc_id, unnest({_TOKS_SQL}) AS word FROM documents
 )
 SELECT dw.doc_id, CAST(sum(len(w.symbols)) AS BIGINT) AS bpe_token_count
-FROM dw JOIN wf{n_merges} w USING (word)
+FROM dw JOIN wf{N_MERGES} w USING (word)
 GROUP BY dw.doc_id"""
 
 

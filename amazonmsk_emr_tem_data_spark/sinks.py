@@ -12,45 +12,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def console_sink(df: DataFrame, num_rows: int = 50, truncate: bool = False) -> None:
-    """K3: batch console sink (temReadFromTopic.py:86-91 used
-    ``write.format("console")``; ``show`` is the idiomatic equivalent)."""
-    df.show(num_rows, truncate=truncate)
+def console_sink(df: DataFrame) -> None:
+    """K3: batch console sink, 50 rows untruncated
+    (temReadFromTopic.py:86-91 used ``write.format("console")``;
+    ``show`` is the idiomatic equivalent)."""
+    df.show(50, truncate=False)
 
 
 def csv_sink(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    sep: str = "|",
-    header: bool = True,
 ) -> None:
     """K5: CSV sink — pipe-delimited with header, like the reference's
     s3a://…/spark_output/tem_calculated write (temReadFromTopic.py:98-101),
     with the mode chained correctly."""
-    df.write.mode(mode).option("header", header).option("sep", sep).csv(path)
+    df.write.mode(mode).option("header", True).option("sep", "|").csv(path)
 
 
-def parquet_sink(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Columnar sink (engine default; the reference had none). At scale,
-    ``partition_by`` on a low-cardinality time/bucket column enables
-    partition pruning for downstream readers."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def parquet_sink(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Columnar sink (engine default; the reference had none)."""
+    df.write.mode(mode).parquet(path)
 
 
 def orc_sink(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """ORC sink (built-in columnar alternative; Hive-ecosystem
     interop). Same partition-pruning story as parquet_sink — at scale
@@ -58,7 +44,7 @@ def orc_sink(
     needs the external spark-avro package, absent here by design —
     gate any future avro_sink behind an import/classpath probe the way
     the media codecs are gated.)"""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
@@ -88,7 +74,6 @@ def kafka_stream_sink(
     topic: str,
     checkpoint_dir: str,
     security: dict[str, str] | None = None,
-    trigger_interval: str | None = None,
     query_name: str = "kafka_stream_sink",
     _format: str = "kafka",
 ):
@@ -107,15 +92,13 @@ def kafka_stream_sink(
     string is the production path
     (tests/test_sinks_sources.py::test_kafka_stream_sink_checkpoint_resume).
     """
-    writer = (
+    return (
         df.writeStream.format(_format)
         .options(**kafka_sink_options(bootstrap_servers, topic, security))
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)
+        .start()
     )
-    if trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def kafka_batch_sink(

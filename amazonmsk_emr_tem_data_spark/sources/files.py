@@ -107,13 +107,20 @@ def _load_table_uncached(spark: SparkSession, path: str) -> DataFrame:
     ns_cols = _nanos_timestamp_cols(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    return _restore_timestamps(spark.read.parquet(path), ns_cols)
+
+
+def _restore_timestamps(df: DataFrame, ns_cols: list[str]) -> DataFrame:
+    """The one timestamp restoration of the batch loader and the
+    streaming file source: ``ns_cols`` (read as long nanos under
+    ``nanosAsLong``) integer-divide to micros, and every TIMESTAMP_NTZ
+    column casts to session-time TIMESTAMP. Micros-precision parquet
+    written without tz metadata surfaces as TIMESTAMP_NTZ, which Spark
+    refuses to cast to numeric (epoch math, window range frames), so
+    every operator sees one timestamp type regardless of who wrote the
+    file."""
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    # Micros-precision parquet written without tz metadata surfaces as
-    # TIMESTAMP_NTZ, which Spark refuses to cast to numeric (epoch math,
-    # window range frames). Normalize to session-time TIMESTAMP so every
-    # operator sees one timestamp type regardless of who wrote the file.
     for f in df.schema.fields:
         if f.dataType.typeName() == "timestamp_ntz":
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
@@ -157,7 +164,7 @@ def checkpoint_stage(df: DataFrame) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Raise a compute-bound stage's partition count to cluster
     parallelism when the upstream scan under-splits (few files / one
     parquet row group — the local-fixture case).
@@ -171,7 +178,7 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     the stage back to one task.
     """
     spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     memo = df.__dict__.setdefault("_graft_ep_memo", {})
     if target in memo:
         return memo[target]
@@ -216,7 +223,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def read_tem_csv(
-    spark: SparkSession, path: str, compat: bool = False, drop_index: bool = True
+    spark: SparkSession, path: str, compat: bool = False
 ) -> DataFrame:
     """S1: schema-first CSV scan of telemetry readings.
 
@@ -233,6 +240,4 @@ def read_tem_csv(
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
         .csv(path)
     )
-    if drop_index:
-        df = df.drop("Unnamed: 0")
-    return df
+    return df.drop("Unnamed: 0")

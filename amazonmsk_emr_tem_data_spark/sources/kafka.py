@@ -52,30 +52,23 @@ def _security_options(security: dict[str, str] | None) -> dict[str, str]:
 def kafka_batch_options(
     bootstrap_servers: str,
     topic: str,
-    starting_offsets: str = "earliest",
-    ending_offsets: str = "latest",
     security: dict[str, str] | None = None,
-    min_partitions: int | None = None,
 ) -> dict[str, str]:
     """The bounded-read option set (temReadFromTopic.py:36-54's
     ``options_read`` dict, with auth as passthrough). Pure builder so
     tests can assert parity with the reference broker-free."""
-    opts = {
+    return {
         "kafka.bootstrap.servers": bootstrap_servers,
         "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        "endingOffsets": ending_offsets,
+        "startingOffsets": "earliest",
+        "endingOffsets": "latest",
         **_security_options(security),
     }
-    if min_partitions:
-        opts["minPartitions"] = str(min_partitions)
-    return opts
 
 
 def kafka_stream_options(
     bootstrap_servers: str,
     topic: str,
-    starting_offsets: str = "earliest",
     security: dict[str, str] | None = None,
     max_offsets_per_trigger: int | None = None,
     min_partitions: int | None = None,
@@ -85,7 +78,7 @@ def kafka_stream_options(
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,
         "subscribe": topic,
-        "startingOffsets": starting_offsets,
+        "startingOffsets": "earliest",
         **_security_options(security),
     }
     if max_offsets_per_trigger:
@@ -99,16 +92,11 @@ def kafka_batch_source(
     spark: SparkSession,
     bootstrap_servers: str,
     topic: str,
-    starting_offsets: str = "earliest",
-    ending_offsets: str = "latest",
     security: dict[str, str] | None = None,
-    min_partitions: int | None = None,
 ) -> DataFrame:
-    """S2: bounded full-topic read (temReadFromTopic.py:36-59)."""
-    opts = kafka_batch_options(
-        bootstrap_servers, topic, starting_offsets, ending_offsets,
-        security, min_partitions,
-    )
+    """S2: bounded full-topic read, earliest to latest
+    (temReadFromTopic.py:36-59)."""
+    opts = kafka_batch_options(bootstrap_servers, topic, security=security)
     return spark.read.format("kafka").options(**opts).load()
 
 
@@ -116,14 +104,9 @@ def kafka_stream_source(
     spark: SparkSession,
     bootstrap_servers: str,
     topic: str,
-    starting_offsets: str = "earliest",
     security: dict[str, str] | None = None,
-    max_offsets_per_trigger: int | None = None,
-    min_partitions: int | None = None,
 ) -> DataFrame:
-    """S3: unbounded streaming read (03_temStreamEveryMin.py:41-64)."""
-    opts = kafka_stream_options(
-        bootstrap_servers, topic, starting_offsets,
-        security, max_offsets_per_trigger, min_partitions,
-    )
+    """S3: unbounded streaming read from earliest
+    (03_temStreamEveryMin.py:41-64)."""
+    opts = kafka_stream_options(bootstrap_servers, topic, security=security)
     return spark.readStream.format("kafka").options(**opts).load()

@@ -32,14 +32,17 @@ def with_replay_index(df: DataFrame, order_cols: list[str]) -> DataFrame:
     return df.withColumn("_replay_idx", F.row_number().over(w) - F.lit(1))
 
 
+#: Rows per second a replay emits.
+REPLAY_ROWS_PER_SECOND = 2
+
+
 def replay_stream(
     spark: SparkSession,
     static_df: DataFrame,
     order_cols: list[str],
-    rows_per_second: float = 2.0,
 ) -> DataFrame:
     """Unbounded stream that emits ``static_df`` rows in ``order_cols``
-    order at ``rows_per_second`` (reference default 2/s,
+    order at REPLAY_ROWS_PER_SECOND (the reference's 2/s,
     04_temincrementaltem.py:19).
 
     Implementation: ``rate`` source ticks at the target rate; each tick's
@@ -50,7 +53,7 @@ def replay_stream(
     indexed = with_replay_index(static_df, order_cols)
     ticks = (
         spark.readStream.format("rate")
-        .option("rowsPerSecond", str(max(1, int(rows_per_second))))
+        .option("rowsPerSecond", str(REPLAY_ROWS_PER_SECOND))
         .load()
         .withColumnRenamed("timestamp", "_emit_ts")
     )

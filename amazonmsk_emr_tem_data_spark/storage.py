@@ -33,18 +33,17 @@ def write_bucketed(
     path: str,
     bucket_cols: list[str],
     n_buckets: int,
-    sort_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as a bucketed (optionally partitioned) parquet table
-    registered as ``table`` in the session catalog."""
-    writer = df.write.mode(mode).format("parquet").option("path", path)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer = writer.bucketBy(n_buckets, *bucket_cols)
-    writer = writer.sortBy(*(sort_cols or bucket_cols))
-    writer.saveAsTable(table)
+    """Write ``df`` as a parquet table bucketed and sorted on
+    ``bucket_cols``, registered as ``table`` in the session catalog."""
+    (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .option("path", path)
+        .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
+        .saveAsTable(table)
+    )
 
 
 def bucketed_join(
@@ -67,13 +66,16 @@ def dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     return int(s.getLength()), int(s.getFileCount())
 
 
+#: Output file size the compactions aim for.
+TARGET_FILE_BYTES = 256 * 1024 * 1024
+
+
 def compact_small_files(
     spark: SparkSession,
     src: str,
     dst: str,
-    target_file_bytes: int = 256 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> tuple[int, int]:
     """Small-files compaction: rewrite a parquet prefix into ~target-
     sized files; returns (files_before, files_after).
@@ -104,7 +106,7 @@ def compact_small_files(
         )
     else:
         out = df.repartition(n_out)
-    out.write.mode(mode).parquet(dst)
+    out.write.mode("overwrite").parquet(dst)
     _, files_after = dir_stats(spark, dst)
     return files_before, files_after
 
@@ -115,8 +117,6 @@ def zorder_compact(
     dst: str,
     zorder_cols: tuple[str, str],
     n_files: int | None = None,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    mode: str = "overwrite",
 ) -> int:
     """Z-order compaction: rewrite a parquet prefix clustered on the
     Morton interleave of TWO keys (Delta/Iceberg ``ZORDER BY``), so
@@ -136,10 +136,7 @@ def zorder_compact(
     """
     from .operators.layout import morton16
 
-    return _curve_compact(
-        spark, src, dst, zorder_cols, morton16, n_files,
-        target_file_bytes, mode,
-    )
+    return _curve_compact(spark, src, dst, zorder_cols, morton16, n_files)
 
 
 def hilbert_compact(
@@ -148,8 +145,6 @@ def hilbert_compact(
     dst: str,
     cluster_cols: tuple[str, str],
     n_files: int | None = None,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    mode: str = "overwrite",
 ) -> int:
     """Hilbert-curve compaction: `zorder_compact` with the Morton
     interleave swapped for the Hilbert index (operators/hilbert.py).
@@ -160,14 +155,11 @@ def hilbert_compact(
     from .operators.hilbert import hilbert16
 
     return _curve_compact(
-        spark, src, dst, cluster_cols, hilbert16, n_files,
-        target_file_bytes, mode,
+        spark, src, dst, cluster_cols, hilbert16, n_files
     )
 
 
-def _curve_compact(
-    spark, src, dst, cols, code_fn, n_files, target_file_bytes, mode
-) -> int:
+def _curve_compact(spark, src, dst, cols, code_fn, n_files) -> int:
     """Shared space-filling-curve rewrite: scale both keys onto the
     16-bit domain, compute the curve code, range-shard + sort on it,
     drop the code column (the Project preserves the partitioning — no
@@ -180,7 +172,7 @@ def _curve_compact(
     df = spark.read.parquet(src)
     if n_files is None:
         total_bytes, _ = dir_stats(spark, src)
-        n_files = max(1, -(-total_bytes // target_file_bytes))
+        n_files = max(1, -(-total_bytes // TARGET_FILE_BYTES))
     # Bounded driver traffic: the key extrema (one row). Minima matter
     # for signed key domains (scale_to_16bit shifts by them — negative
     # scaled values would otherwise mask to the TOP of the 16-bit
@@ -194,7 +186,7 @@ def _curve_compact(
     if mx["ma"] is None or mx["mb"] is None:
         # zero-row source: nothing to cluster — write the empty frame
         # through unchanged (the sibling compact_small_files behavior)
-        df.repartition(1).write.mode(mode).parquet(dst)
+        df.repartition(1).write.mode("overwrite").parquet(dst)
         _, files_after = dir_stats(spark, dst)
         return files_after
     code = code_fn(
@@ -207,6 +199,6 @@ def _curve_compact(
         .sortWithinPartitions("__curve")
         .drop("__curve")
     )
-    out.write.mode(mode).parquet(dst)
+    out.write.mode("overwrite").parquet(dst)
     _, files_after = dir_stats(spark, dst)
     return files_after

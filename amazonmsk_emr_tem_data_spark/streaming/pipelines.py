@@ -67,9 +67,7 @@ def _stream_parquet_table(
     is os.path.isdir — local-filesystem only; an object-store
     deployment (s3:// paths) should root the stream at the shard
     directory explicitly rather than rely on this probe."""
-    import os
-
-    from ..sources.files import _nanos_timestamp_cols
+    from ..sources.files import _nanos_timestamp_cols, _restore_timestamps
 
     path = f"{sf_dir}/{name}.parquet"
     ns_cols = _nanos_timestamp_cols(path)
@@ -81,13 +79,9 @@ def _stream_parquet_table(
         reader = reader.option("pathGlobFilter", f"{name}.parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.parquet(path if os.path.isdir(path) else sf_dir)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    for f_ in df.schema.fields:
-        if f_.dataType.typeName() == "timestamp_ntz":
-            df = df.withColumn(f_.name, F.col(f_.name).cast("timestamp"))
-    return df
+    return _restore_timestamps(
+        reader.parquet(path if os.path.isdir(path) else sf_dir), ns_cols
+    )
 
 
 def events_stream(
@@ -98,16 +92,12 @@ def events_stream(
     return _stream_parquet_table(spark, sf_dir, "events", max_files_per_trigger)
 
 
-def embeddings_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded view of the embeddings table via the parquet file
     source — the streaming stand-in for an embedding feed landing in
     object storage (each new shard of freshly-embedded documents is a
     micro-batch candidate)."""
-    return _stream_parquet_table(
-        spark, sf_dir, "embeddings", max_files_per_trigger
-    )
+    return _stream_parquet_table(spark, sf_dir, "embeddings")
 
 
 def documents_stream(
@@ -188,12 +178,47 @@ def stream_user_distinct_sketch(
     return run_to_memory(regs, output_mode="complete")
 
 
+#: Seconds a bounded (availableNow) drain may run before it is stopped.
+DRAIN_TIMEOUT_S = 300
+
+
+def _await_drain(q) -> None:
+    """Wait for an availableNow query to finish. One that has not
+    finished within DRAIN_TIMEOUT_S is stopped and raises TimeoutError:
+    a partially drained sink would silently truncate every downstream
+    result."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name!r} did not drain within "
+            f"{DRAIN_TIMEOUT_S}s"
+        )
+
+
+def _drain_foreach_batch(
+    stream: DataFrame,
+    handle,
+    name: str,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Drain ``stream`` to completion (availableNow) through
+    ``foreachBatch(handle)`` as the query ``name``, checkpointed under
+    ``checkpoint_dir`` (a fresh temp dir when None)."""
+    q = (
+        stream.writeStream.foreachBatch(handle)
+        .option(
+            "checkpointLocation",
+            checkpoint_dir or tempfile.mkdtemp(prefix=f"ckpt_{name}_"),
+        )
+        .trigger(availableNow=True)
+        .queryName(name)
+        .start()
+    )
+    _await_drain(q)
+
+
 def run_to_memory(
-    result: DataFrame,
-    output_mode: str = "complete",
-    query_name: str | None = None,
-    checkpoint: bool = True,
-    timeout_sec: int = 300,
+    result: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Drain a streaming DataFrame to completion (availableNow) into a
     memory sink and return the materialized result.
@@ -202,34 +227,27 @@ def run_to_memory(
     (it had T3) AND a checkpoint location (it had none → full replay on
     every restart, SURVEY §2.6).
     """
-    name = query_name or f"mem_{uuid.uuid4().hex[:12]}"
-    writer = (
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    q = (
         result.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
         .trigger(availableNow=True)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
+        .start()
     )
-    if checkpoint:
-        writer = writer.option(
-            "checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-        )
-    q = writer.start()
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        # A partially-drained memory table would silently truncate every
-        # downstream result; fail loudly instead.
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {name!r} did not drain within {timeout_sec}s"
-        )
+    _await_drain(q)
     return result.sparkSession.table(name)
+
+
+#: Window and watermark of the hourly streaming aggregates.
+_HOURLY_WINDOW = "1 hour"
+_HOURLY_WATERMARK = "1 hour"
 
 
 def stream_tumbling_agg(
     spark: SparkSession,
     sf_dir: str,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
     output_mode: str = "complete",
 ) -> DataFrame:
     """Event-time tumbling-window aggregation — the operator the
@@ -237,8 +255,8 @@ def stream_tumbling_agg(
     (SURVEY §2.6: 'Absent — event-time windows')."""
     ev = events_stream(spark, sf_dir)
     agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        ev.withWatermark("ts", _HOURLY_WATERMARK)
+        .groupBy(F.window("ts", _HOURLY_WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (F.sum(F.round(F.col("value") * 100).cast("long")).cast("double") / 100.0).alias(
@@ -254,8 +272,6 @@ def stream_tumbling_agg(
 def stream_hourly_ohlc_agg(
     spark: SparkSession,
     sf_dir: str,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Hourly OHLC candles maintained incrementally (round 8): the
     streaming twin of queries.event_value_ohlc. min_by/max_by are
@@ -274,8 +290,8 @@ def stream_hourly_ohlc_agg(
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
     agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        ev.withWatermark("ts", _HOURLY_WATERMARK)
+        .groupBy(F.window("ts", _HOURLY_WINDOW).alias("w"), "event_type")
         .agg(
             F.min_by("value", key).alias("open"),
             F.max("value").alias("high"),
@@ -295,18 +311,21 @@ def stream_hourly_ohlc_agg(
     )
 
 
+#: Window length and slide of stream_sliding_counts.
+_SLIDING_WINDOW = "2 hours"
+_SLIDING_SLIDE = "1 hour"
+
+
 def stream_sliding_counts(
     spark: SparkSession,
     sf_dir: str,
-    window: str = "2 hours",
-    slide: str = "1 hour",
 ) -> DataFrame:
     """Sliding event-time windows (each event lands in window/slide
     overlapping buckets)."""
     ev = events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        .groupBy(F.window("ts", _SLIDING_WINDOW, _SLIDING_SLIDE).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     return run_to_memory(agg).select(
@@ -326,12 +345,15 @@ def stream_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(distinct, output_mode="append")
 
 
+#: How long after a click a purchase still joins it.
+_CLICK_PURCHASE_HORIZON = "1 hour"
+
+
 def stream_stream_click_purchase(
     spark: SparkSession,
     sf_dir: str,
     how: str = "inner",
     watermark: str = "2 hours",
-    horizon: str = "1 hour",
 ) -> DataFrame:
     """Watermarked stream-stream join of clicks to same-user purchases
     within ``horizon`` after the click — the conversion-attribution
@@ -392,7 +414,7 @@ def stream_stream_click_purchase(
         & (purchases["purchase_ts"] > clicks["click_ts"])
         & (
             purchases["purchase_ts"]
-            <= clicks["click_ts"] + F.expr(f"INTERVAL {horizon}")
+            <= clicks["click_ts"] + F.expr(f"INTERVAL {_CLICK_PURCHASE_HORIZON}")
         ),
         "leftOuter" if how == "anti" else how,
     )
@@ -552,17 +574,7 @@ def incremental_ingest_dedup(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch_dedup(batch_df, store_dir)
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_ingest_dedup_")
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName("incremental_ingest_dedup")
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("incremental ingest did not drain in 300s")
+    _drain_foreach_batch(docs, handle, "incremental_ingest_dedup", checkpoint_dir)
 
 
 def _reservoir_read(
@@ -682,10 +694,14 @@ def priority_sample_batch(
     _reservoir_commit(sess, top, store_dir, gen)
 
 
+#: Reservoir size of stream_priority_sample (the batch twin's sample
+#: size).
+_PRIORITY_SAMPLE_N = 100
+
+
 def stream_priority_sample(
     spark: SparkSession,
     sf_dir: str,
-    n: int = 100,
     store_dir: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -708,25 +724,17 @@ def stream_priority_sample(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        priority_sample_batch(batch_df, store, n)
+        priority_sample_batch(batch_df, store, _PRIORITY_SAMPLE_N)
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_prio_sample_")
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName("stream_priority_sample")
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("priority-sample stream did not drain in 300s")
+    _drain_foreach_batch(docs, handle, "stream_priority_sample", checkpoint_dir)
     return read_priority_store(spark, store)
 
 
-def near_ingest_batch(
-    batch_df: DataFrame, store_dir: str, threshold: float = 0.6
-) -> None:
+#: Shingle-Jaccard at or above which near-dedup ingest drops a document.
+_NEAR_DUP_THRESHOLD = 0.6
+
+
+def near_ingest_batch(batch_df: DataFrame, store_dir: str) -> None:
     """Idempotent NEAR-dedup-on-write sink — the full production ingest
     filter (exact tier included, since exact dups are jaccard-1.0 near
     dups): within-batch near-dup clustering keeps one canonical doc per
@@ -745,7 +753,7 @@ def near_ingest_batch(
 
     sess = batch_df.sparkSession
     canon = batch_df.join(
-        dedup_clusters(batch_df, threshold=threshold)
+        dedup_clusters(batch_df, threshold=_NEAR_DUP_THRESHOLD)
         .filter("is_canonical")
         .select("doc_id"),
         "doc_id",
@@ -753,7 +761,7 @@ def near_ingest_batch(
     )
     store = _read_store(sess, store_dir)
     if store is not None:
-        dup = cross_corpus_near_dup(canon, store, threshold=threshold).select(
+        dup = cross_corpus_near_dup(canon, store, threshold=_NEAR_DUP_THRESHOLD).select(
             "doc_id"
         )
         canon = canon.join(dup, "doc_id", "left_anti")
@@ -765,7 +773,6 @@ def incremental_ingest_near_dedup(
     src_dir: str,
     store_dir: str,
     checkpoint_dir: str | None = None,
-    threshold: float = 0.6,
 ) -> None:
     """Streaming corpus ingest with cross-run NEAR-dedup: the
     near-duplicate upgrade of `incremental_ingest_dedup`. ``src_dir``
@@ -779,19 +786,11 @@ def incremental_ingest_near_dedup(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        near_ingest_batch(batch_df, store_dir, threshold=threshold)
+        near_ingest_batch(batch_df, store_dir)
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_ingest_near_")
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName("incremental_ingest_near_dedup")
-        .start()
+    _drain_foreach_batch(
+        docs, handle, "incremental_ingest_near_dedup", checkpoint_dir
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("near-dedup ingest did not drain in 300s")
 
 
 def _ann_cell_matrices(rows) -> dict:
@@ -1076,8 +1075,6 @@ def stream_ann_ingest(
     threshold: float = 0.45,
     store_dir: str | None = None,
     checkpoint_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Streaming ANN ingest near-dedup: embeddings arrive as a stream,
     each micro-batch is cell-assigned via the persisted coarse
@@ -1086,15 +1083,8 @@ def stream_ann_ingest(
     drained state is BIT-IDENTICAL to the batch computation over the
     same corpus — the registry checks this stream against a batch-twin
     DuckDB oracle (the stream_priority_sample pattern), so the
-    mergeability claim is a standing hash proof.
-
-    ``max_files_per_trigger`` bounds the micro-batch (availableNow
-    drains in several batches when the table has several files) —
-    the production shape: the per-batch plan contract assumes
-    MICRO-BATCH-SIZED arrivals on the broadcast side, and a backfill
-    that lands the whole corpus in one batch should be split at the
-    source, not pushed through a corpus-sized broadcast."""
-    emb = embeddings_stream(spark, sf_dir, max_files_per_trigger)
+    mergeability claim is a standing hash proof."""
+    emb = embeddings_stream(spark, sf_dir)
     store = store_dir or os.path.join(
         tempfile.mkdtemp(prefix="store_ann_ingest_"), "store"
     )
@@ -1102,19 +1092,7 @@ def stream_ann_ingest(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         ann_ingest_batch(batch_df, store, centroids, threshold)
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_ann_ingest_")
-    q = (
-        emb.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .queryName("stream_ann_ingest")
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"ANN ingest stream did not drain in {timeout_s}s"
-        )
+    _drain_foreach_batch(emb, handle, "stream_ann_ingest", checkpoint_dir)
     return read_ann_ingest_store(spark, store)
 
 
@@ -1160,29 +1138,20 @@ def fanout_foreach_batch(
         finally:
             batch_df.unpersist()
 
-    q = (
-        ev.writeStream.foreachBatch(handle)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_fanout_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("fanout foreachBatch did not drain in 300s")
+    _drain_foreach_batch(ev, handle, "fanout_foreach_batch", checkpoint_dir)
 
 
-def stream_session_windows(
-    spark: SparkSession, sf_dir: str, gap: str = "30 minutes"
-) -> DataFrame:
+#: Idle gap that closes a session window.
+_SESSION_GAP = "30 minutes"
+
+
+def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows: per-user activity sessions closed by a 30-min
     idle gap (``F.session_window`` — dynamic, data-driven windows)."""
     ev = events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", _SESSION_GAP).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     return run_to_memory(agg).select(

@@ -17,7 +17,6 @@ would serialize the whole stream through one task).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.codec import from_kafka_envelope
@@ -25,23 +24,17 @@ from ..functions.tem import with_tem_avg
 from ..schemas import tem_schema
 
 
-def decode_tem_stream(
-    envelope_stream: DataFrame,
-    schema: T.StructType | None = None,
-    t_cols: list[str] | None = None,
-) -> DataFrame:
+def decode_tem_stream(envelope_stream: DataFrame) -> DataFrame:
     """value-cast → from_json → flatten → `Tem(Avg)` (P3/F2/P4/F3),
     identical semantics for batch and streaming inputs."""
-    decoded = from_kafka_envelope(envelope_stream, schema or tem_schema())
-    return with_tem_avg(decoded, t_cols)
+    decoded = from_kafka_envelope(envelope_stream, tem_schema())
+    return with_tem_avg(decoded)
 
 
 def start_tem_console_query(
     envelope_stream: DataFrame,
     checkpoint_dir: str,
     trigger_interval: str = "1 minute",
-    num_rows: int = 25,
-    query_name: str = "streaming_to_console",
 ) -> StreamingQuery:
     """The reference's sink config (T1–T4: 1-min processing-time
     trigger, append mode, named query, console with numRows=25,
@@ -51,8 +44,8 @@ def start_tem_console_query(
     return (
         result.writeStream.outputMode("append")
         .format("console")
-        .queryName(query_name)
-        .option("numRows", str(num_rows))
+        .queryName("streaming_to_console")
+        .option("numRows", "25")
         .option("truncate", "false")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=trigger_interval)

@@ -166,26 +166,33 @@ def test_dedup_clusters_rep_level_cc_groups_exact_copies(spark):
 def test_dedup_clusters_matches_pairs_params():
     """The clusters query and the pairs query must run identical
     candidate generation (r9 ADVICE): both take their LSH tuning from
-    the MINHASH_* module defaults, so a retune of one can never drift
-    the other. Pin the keyword defaults of both entry points to the
-    shared constants."""
+    the MINHASH_* module constants, so a retune of one can never drift
+    the other. A tuning value that is still a parameter of either entry
+    point defaults to its constant; one that is not reads the constant
+    in the body."""
     import inspect
 
     from amazonmsk_emr_tem_data_spark.operators import dedup as d
 
     expected = {
-        "num_hashes": d.MINHASH_NUM_HASHES,
-        "k": d.MINHASH_SHINGLE_K,
-        "min_collisions": d.MINHASH_MIN_COLLISIONS,
-        "max_bucket_size": d.MINHASH_MAX_BUCKET_SIZE,
+        "num_hashes": "MINHASH_NUM_HASHES",
+        "k": "MINHASH_SHINGLE_K",
+        "min_collisions": "MINHASH_MIN_COLLISIONS",
+        "max_bucket_size": "MINHASH_MAX_BUCKET_SIZE",
     }
+    body = inspect.getsource(d._minhash_rep_pairs).split('"""')[-1]
     for fn in (d.minhash_lsh_pairs, d._minhash_rep_pairs):
         params = inspect.signature(fn).parameters
-        for name, want in expected.items():
-            assert params[name].default == want, (fn.__name__, name)
-    # dedup_clusters must not override any of them positionally
+        for name, const in expected.items():
+            if name in params:
+                assert params[name].default == getattr(d, const), (
+                    fn.__name__, name
+                )
+            else:
+                assert const in body, (fn.__name__, name)
+    # dedup_clusters must not override any of them
     src = inspect.getsource(d.dedup_clusters)
-    assert "_minhash_rep_pairs(df, threshold, id_col=id_col)" in src
+    assert "_minhash_rep_pairs(df, threshold)" in src
 
 
 def test_dedup_clusters_releases_caches(spark):

@@ -116,6 +116,74 @@ def test_query_modules_have_no_unused_imports():
     assert problems == []
 
 
+def test_query_and_operator_defaults_are_set_by_some_call():
+    """Every defaulted parameter of a function in ``queries/`` or
+    ``operators/`` is set by at least one call in the package,
+    ``tests/``, ``scripts/``, ``perfbench/`` or ``__spark_entry__.py``
+    (by position, keyword or ``**``). A default that no call overrides
+    is a constant written as an option. Calls match by callee name,
+    so a same-named function elsewhere counts as a caller."""
+    import ast
+    import pathlib
+    from collections import defaultdict
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "amazonmsk_emr_tem_data_spark"
+    callers = [
+        *pkg.rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        *(root / "scripts").rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+        root / "__spark_entry__.py",
+    ]
+    calls = defaultdict(list)
+    for path in callers:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name is None:
+                continue
+            starred = any(isinstance(a, ast.Starred) for a in node.args)
+            calls[name].append((
+                len(node.args) - starred,
+                starred,
+                {k.arg for k in node.keywords if k.arg},
+                any(k.arg is None for k in node.keywords),
+            ))
+    problems = []
+    for sub in ("queries", "operators"):
+        for path in sorted((pkg / sub).glob("*.py")):
+            tree = ast.parse(path.read_text())
+            methods = {
+                id(f)
+                for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
+                for f in c.body
+            }
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                skip = 1 if id(fn) in methods else 0
+                first = len(pos) - len(a.defaults)
+                defaulted = [(i - skip, p.arg) for i, p in enumerate(pos)
+                             if i >= first]
+                defaulted += [(None, p.arg) for p, d in
+                              zip(a.kwonlyargs, a.kw_defaults) if d]
+                for idx, arg in defaulted:
+                    if not any(
+                        arg in kws or dstar
+                        or (idx is not None and (star or npos > idx))
+                        for npos, star, kws, dstar in calls[fn.name]
+                    ):
+                        problems.append(
+                            f"{sub}/{path.name}:{fn.lineno} {fn.name}({arg})"
+                        )
+    assert problems == []
+
+
 def test_query_tables_partition_the_registry():
     """Each query is declared in exactly one domain module's QUERIES
     table, and REGISTRY is exactly their union."""

@@ -1104,22 +1104,24 @@ def test_region_share_windows_over_aggregate(spark, sf_dir):
 
 
 def test_plans_md_not_stale():
-    """PLANS.md must carry one audit row per registry query — it went
-    stale silently in r7 (6 queries added after the last regen had no
-    rows). Regenerate with scripts/plan_report.py after adding or
-    renaming queries (r7 VERDICT ask #3)."""
+    """PLANS.md must carry one audit row per registry query, in
+    REGISTRY order — it went stale silently in r7 (6 queries added
+    after the last regen had no rows). Regenerate with
+    scripts/plan_report.py after adding or renaming queries (r7
+    VERDICT ask #3)."""
     import os
 
     from amazonmsk_emr_tem_data_spark.queries import REGISTRY
 
     path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    rows = set()
+    order = []
     with open(path) as f:
         for line in f:
             # exact header match: a bare "| query" prefix also swallows
             # the query_cost_attribution DATA row (r10 regression)
             if line.startswith("| ") and not line.startswith("| query |"):
-                rows.add(line.split("|")[1].strip())
+                order.append(line.split("|")[1].strip())
+    rows = set(order)
     reg = set(REGISTRY)
     missing = reg - rows
     extra = rows - reg
@@ -1128,6 +1130,12 @@ def test_plans_md_not_stale():
         f"{sorted(missing)}"
     )
     assert not extra, f"PLANS.md has rows for unknown queries: {sorted(extra)}"
+    # scripts/plan_report.py writes one row per query in REGISTRY order;
+    # rows out of that order were patched in by hand
+    assert order == list(REGISTRY), (
+        "PLANS.md rows are not in REGISTRY order — regenerate it with "
+        "scripts/plan_report.py"
+    )
 
 
 def test_ohlc_single_combined_aggregate(spark, sf_dir):

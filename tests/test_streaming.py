@@ -86,6 +86,27 @@ def test_events_stream_is_streaming_and_typed(spark, sf_dir):
     ] == "timestamp"
 
 
+def test_drain_that_does_not_finish_stops_and_raises(
+    spark, sf_dir, monkeypatch
+):
+    """A bounded drain that outlives DRAIN_TIMEOUT_S stops its query
+    and raises TimeoutError instead of returning a partial result, on
+    both drain paths: the memory sink of run_to_memory and the
+    foreachBatch drain. PySpark rejects a zero wait, so the limit is
+    set to one millisecond, far below a micro-batch's start-up."""
+    from amazonmsk_emr_tem_data_spark.streaming import pipelines
+
+    monkeypatch.setattr(pipelines, "DRAIN_TIMEOUT_S", 0.001)
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match="did not drain"):
+        run_to_memory(events_stream(spark, sf_dir), output_mode="append")
+    with pytest.raises(TimeoutError, match="fanout_foreach_batch"):
+        pipelines.fanout_foreach_batch(
+            spark, sf_dir, tempfile.mkdtemp(prefix="fanout_timeout_")
+        )
+    assert {q.id for q in spark.streams.active} <= before
+
+
 def test_append_mode_withholds_unclosed_windows(spark, sf_dir):
     """Documented semantic: bounded append+watermark run emits only
     windows the final watermark passed — a strict subset of complete."""
