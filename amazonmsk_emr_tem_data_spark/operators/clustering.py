@@ -169,6 +169,7 @@ def lloyd_round_partials(
         [_seq_dot(v, v) for _, v in centroids], dtype=np.float64
     )
     n_grid = dim if with_grid else 0
+    nearest = _nearest_d2_e6_kernel()
     schema = "cluster long, n long, isum long" + "".join(
         f", s{i} long" for i in range(n_grid)
     )
@@ -180,22 +181,7 @@ def lloyd_round_partials(
             if not len(pdf):
                 continue
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = X.shape[0]
-            ee = np.zeros(n)
-            for i in range(dim):
-                ee = ee + X[:, i] * X[:, i]
-            d2 = np.empty((k, n))
-            for c in range(k):
-                acc = np.zeros(n)
-                for i in range(dim):
-                    acc = acc + X[:, i] * C[c, i]
-                d2[c] = (ee - 2.0 * acc) + cc[c]
-            cl = np.argmin(d2, axis=0)
-            d2sel = d2[cl, np.arange(n)]
-            iv = d2sel * 1e6
-            ig = np.where(
-                iv >= 0, np.floor(iv + 0.5), np.ceil(iv - 0.5)
-            ).astype(np.int64)
+            cl, ig = nearest(X, C, cc)
             if with_grid:
                 g = np.floor(X * 1e9 + 0.5).astype(np.int64)
             out = {"cluster": [], "n": [], "isum": []}
@@ -215,6 +201,38 @@ def lloyd_round_partials(
             yield pd.DataFrame(out)
 
     return embeddings.select("embedding").mapInPandas(fn, schema)
+
+
+def _nearest_d2_e6_kernel():
+    """``nearest(X, C, cc) -> (cluster index, HALF_UP 1e-6-grid d²)``
+    of each row of ``X`` against centroid matrix ``C`` with squared
+    norms ``cc``: the IEEE sequence of lloyd_round_partials'
+    bit-exactness contract (left-fold dots, d² = (ee − 2·dot) + cc,
+    first-minimum argmin). A nested function, so cloudpickle ships it
+    by value inside the executor closures that capture it (see
+    multimodal._pure_decoders)."""
+
+    def nearest(X, C, cc):
+        import numpy as np
+
+        n = X.shape[0]
+        k, dim = C.shape
+        ee = np.zeros(n)
+        for i in range(dim):
+            ee = ee + X[:, i] * X[:, i]
+        d2 = np.empty((k, n))
+        for c in range(k):
+            acc = np.zeros(n)
+            for i in range(dim):
+                acc = acc + X[:, i] * C[c, i]
+            d2[c] = (ee - 2.0 * acc) + cc[c]
+        cl = np.argmin(d2, axis=0)
+        sel = d2[cl, np.arange(n)] * 1e6
+        return cl, np.where(
+            sel >= 0, np.floor(sel + 0.5), np.ceil(sel - 0.5)
+        ).astype(np.int64)
+
+    return nearest
 
 
 def _seq_dot(a, b) -> float:
@@ -559,34 +577,19 @@ def assign_rows_with_d2(
     import numpy as np
     import pandas as pd
 
-    k = len(centroids)
-    dim = len(centroids[0][1])
     ids = np.array([c for c, _ in centroids], dtype=np.int64)
     C = np.array([v for _, v in centroids], dtype=np.float64)
     cc = np.array(
         [_seq_dot(v, v) for _, v in centroids], dtype=np.float64
     )
+    nearest = _nearest_d2_e6_kernel()
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = X.shape[0]
-            ee = np.zeros(n)
-            for i in range(dim):
-                ee = ee + X[:, i] * X[:, i]
-            d2 = np.empty((k, n))
-            for c in range(k):
-                acc = np.zeros(n)
-                for i in range(dim):
-                    acc = acc + X[:, i] * C[c, i]
-                d2[c] = (ee - 2.0 * acc) + cc[c]
-            cl = np.argmin(d2, axis=0)
-            sel = d2[cl, np.arange(n)] * 1e6
-            snapped = np.where(
-                sel >= 0, np.floor(sel + 0.5), np.ceil(sel - 0.5)
-            ).astype(np.int64)
+            cl, snapped = nearest(X, C, cc)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import fingerprint, md5_hash64, tokens
+from ..functions.text import fingerprint, md5_hash64, norm_text, tokens
 from ..sources.files import checkpoint_stage, ensure_parallelism
 
 # ---------------------------------------------------------------------------
@@ -115,8 +115,47 @@ def shingled(df: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
-def _exploded(df: DataFrame, id_col: str) -> DataFrame:
-    return df.select(id_col, F.explode("shingles").alias("shingle"))
+def _rep_shingles(reps: DataFrame):
+    """(sh, sizes, ex) of the representatives: their shingle sets, the
+    set sizes (doc_id, n_sh) and one (doc_id, shingle) row per posting.
+    ``sh`` is an eager checkpoint, not cache(): broadcast consumers race
+    a lazy cache and recompute the shingle pass (see _collapse_exact,
+    r13)."""
+    sh = shingled(reps).transform(checkpoint_stage)
+    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
+    ex = sh.select("doc_id", F.explode("shingles").alias("shingle"))
+    return sh, sizes, ex
+
+
+def _rarest_prefix(ex: DataFrame, threshold_num: int, threshold_den: int):
+    """(prefix, ceil_tn) of the prefix-filter joins: each document's
+    postings ranked under the total order (document frequency asc,
+    shingle asc), cut to the n − ⌈t·n⌉ + 1 rarest, with t =
+    threshold_num/threshold_den. ``ceil_tn`` is the ⌈t·n⌉ column
+    (n = ``n_sh``) that the cut used."""
+    sdf = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
+    worder = Window.partitionBy("doc_id").orderBy(
+        F.col("sdf").asc(), F.col("shingle").asc()
+    )
+    ranked = (
+        ex.join(sdf, "shingle")
+        .withColumn("pos", F.row_number().over(worder))
+        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+    )
+    # ⌈t·n⌉ = ⌊(num·n + den − 1)/den⌋ exactly (num·n + den − 1 < 2^53,
+    # and x/den at that magnitude floors exactly; see queries.py grid
+    # rules). Prefix keeps positions 1 .. n − ⌈t·n⌉ + 1.
+    ceil_tn = F.floor(
+        (F.col("n_sh") * threshold_num + threshold_den - 1) / threshold_den
+    )
+    # (r13: an eager checkpoint here — the prefix relation feeds both
+    # self-join sides, so the rank window computes twice — was tried
+    # and REVERTED: materialization hides the prefix-length filter and
+    # the doc-keyed window partitioning from the final physical plan,
+    # which is exactly what test_prefix_filter_verification_is_
+    # candidate_bounded pins as the operator's scale contract. The
+    # observable contract beats the bounded-window recompute.)
+    return ranked.filter(F.col("pos") <= F.col("n_sh") - ceil_tn + 1), ceil_tn
 
 
 # ---------------------------------------------------------------------------
@@ -217,12 +256,12 @@ def _collapse_exact(df: DataFrame, id_col: str):
 def _within_pairs(
     groups: DataFrame,
     extra_cols: dict[str, Column],
-    per_rep: DataFrame | None = None,
-    directed: bool = False,
+    per_rep: DataFrame | None,
+    directed: bool,
 ) -> DataFrame:
     """Identity-group pairs, annotated with ``extra_cols`` (which may
     reference ``per_rep`` columns joined on ``rep``). Undirected
-    (default): every (a < b). ``directed=True``: every ORDERED (a, b)
+    (directed=False): every (a < b). ``directed=True``: every ORDERED (a, b)
     with a != b — for asymmetric metrics like containment, where
     identical contents relate both ways."""
     g = groups.filter(F.size("members") >= 2)
@@ -257,12 +296,12 @@ def _fanout_cross(
     rep_pairs: DataFrame,
     groups: DataFrame,
     carry_cols: list[str],
-    directed: bool = False,
+    directed: bool,
 ) -> DataFrame:
     """Fan representative-level pairs out to all member combinations,
     carrying the representatives' metric columns verbatim (members of a
     group share content, so the metrics transfer exactly). Undirected
-    (default) canonicalizes each member pair to (min, max);
+    (directed=False) canonicalizes each member pair to (min, max);
     ``directed=True`` preserves the rep pair's orientation (asymmetric
     metrics: doc_a's side stays doc_a's)."""
     members = groups.select("rep", F.explode("members").alias("member"))
@@ -284,6 +323,42 @@ def _fanout_cross(
     )
 
 
+def _pairs_over_copies(
+    df: DataFrame,
+    rep_pairs_of,
+    identity: dict[str, Column],
+    directed: bool = False,
+    keep: Column | None = None,
+) -> DataFrame:
+    """The policy every near-dup pair operator shares: collapse exact
+    copies to their min-id representative (_collapse_exact), pair the
+    representatives with ``rep_pairs_of(reps) -> (rep_pairs, per_doc)``,
+    then add each identity group's member pairs and fan the
+    representative pairs out to members (_within_pairs,
+    _fanout_cross). ``identity`` names the metric columns and their
+    value for identical contents; it may read ``per_doc`` columns of
+    the group's representative (``per_doc`` is keyed by doc_id, or
+    None). ``keep`` filters the identity pairs, for operators whose
+    threshold identical contents can miss."""
+    groups, reps = _collapse_exact(df, "doc_id")
+    rep_pairs, per_doc = rep_pairs_of(reps)
+    per_rep = None if per_doc is None else per_doc.withColumnRenamed("doc_id", "rep")
+    within = _within_pairs(groups, identity, per_rep, directed)
+    if keep is not None:
+        within = within.filter(keep)
+    return within.unionByName(
+        _fanout_cross(rep_pairs, groups, list(identity), directed)
+    )
+
+
+def _jaccard_over_copies(df: DataFrame, rep_pairs_of) -> DataFrame:
+    """_pairs_over_copies for the (n_common, jaccard) operators:
+    identical contents share all ``n_sh`` shingles at jaccard 1.0."""
+    return _pairs_over_copies(
+        df, rep_pairs_of, {"n_common": F.col("n_sh"), "jaccard": F.lit(1.0)}
+    )
+
+
 # ---------------------------------------------------------------------------
 # exact n-gram Jaccard similarity join
 # ---------------------------------------------------------------------------
@@ -298,39 +373,30 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.6) -> DataFrame:
     *sharing a shingle*; at 100 TB use minhash_lsh_pairs, which funnels
     only LSH candidates into this verification.
     """
-    groups, reps = _collapse_exact(df, "doc_id")
-    # eager checkpoint, not cache(): broadcast consumers race a lazy
-    # cache and recompute the shingle pass (see _collapse_exact, r13)
-    sh = shingled(reps).transform(checkpoint_stage)
-    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
-    ex = _exploded(sh, "doc_id")
-    a, b = ex.alias("a"), ex.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    rep_pairs = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+    def rep_pairs(reps: DataFrame):
+        _, sizes, ex = _rep_shingles(reps)
+        a, b = ex.alias("a"), ex.alias("b")
+        common = (
+            a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
-    )
-    within = _within_pairs(
-        groups,
-        {"n_common": F.col("n_sh"), "jaccard": F.lit(1.0)},
-        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_sh"),
-    )
-    return within.unionByName(
-        _fanout_cross(rep_pairs, groups, ["n_common", "jaccard"])
-    )
+        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+        pairs = (
+            common.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn(
+                "jaccard",
+                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "n_common", "jaccard")
+        )
+        return pairs, sizes
+
+    return _jaccard_over_copies(df, rep_pairs)
 
 
 def prefix_filter_jaccard_pairs(
@@ -365,76 +431,45 @@ def prefix_filter_jaccard_pairs(
     group fan-out. The DuckDB oracle is the brute-force all-pairs
     Jaccard, so driver equality doubles as the recall-1.0 proof.
     """
-    groups, reps = _collapse_exact(df, "doc_id")
-    # eager checkpoint, not cache(): broadcast consumers race a lazy
-    # cache and recompute the shingle pass (see _collapse_exact, r13)
-    sh = shingled(reps).transform(checkpoint_stage)
-    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
-    ex = _exploded(sh, "doc_id")
-    sdf = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-    worder = Window.partitionBy("doc_id").orderBy(
-        F.col("sdf").asc(), F.col("shingle").asc()
-    )
-    ranked = (
-        ex.join(sdf, "shingle")
-        .withColumn("pos", F.row_number().over(worder))
-        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-    )
-    # ⌈t·n⌉ = ⌊(num·n + den − 1)/den⌋ exactly (num·n + den − 1 < 2^53,
-    # and x/den at that magnitude floors exactly; see queries.py grid
-    # rules). Prefix keeps positions 1 .. n − ⌈t·n⌉ + 1.
-    ceil_tn = F.floor(
-        (F.col("n_sh") * threshold_num + threshold_den - 1) / threshold_den
-    )
-    # (r13: an eager checkpoint here — the prefix relation feeds both
-    # self-join sides, so the rank window computes twice — was tried
-    # and REVERTED: materialization hides the prefix-length filter and
-    # the doc-keyed window partitioning from the final physical plan,
-    # which is exactly what test_prefix_filter_verification_is_
-    # candidate_bounded pins as the operator's scale contract. The
-    # observable contract beats the bounded-window recompute.)
-    prefix = ranked.filter(F.col("pos") <= F.col("n_sh") - ceil_tn + 1)
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("n_a")
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("n_b")
-    )
-    cand = (
-        a.join(b, "shingle")
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            # length filter: J ≥ t ⟹ den·min(n_a,n_b) ≥ num·max(n_a,n_b)
-            & (
-                F.least("n_a", "n_b") * threshold_den
-                >= F.greatest("n_a", "n_b") * threshold_num
-            )
+    def rep_pairs(reps: DataFrame):
+        _, sizes, ex = _rep_shingles(reps)
+        prefix, _ = _rarest_prefix(ex, threshold_num, threshold_den)
+        a = prefix.select(
+            F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("n_a")
         )
-        .select("doc_a", "doc_b", "n_a", "n_b")
-        .distinct()
-    )
-    ta = ex.select(F.col("doc_id").alias("doc_a"), "shingle")
-    tb = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        cand.join(ta, "doc_a")
-        .join(tb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    union_size = F.col("n_a") + F.col("n_b") - F.col("n_common")
-    rep_pairs = (
-        common.filter(F.col("n_common") * threshold_den >= union_size * threshold_num)
-        .withColumn("jaccard", F.col("n_common") / union_size)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
-    )
-    within = _within_pairs(
-        groups,
-        {"n_common": F.col("n_sh"), "jaccard": F.lit(1.0)},
-        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_sh"),
-    )
-    return within.unionByName(
-        _fanout_cross(rep_pairs, groups, ["n_common", "jaccard"])
-    )
+        b = prefix.select(
+            F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("n_b")
+        )
+        cand = (
+            a.join(b, "shingle")
+            .filter(
+                (F.col("doc_a") < F.col("doc_b"))
+                # length filter: J ≥ t ⟹ den·min(n_a,n_b) ≥ num·max(n_a,n_b)
+                & (
+                    F.least("n_a", "n_b") * threshold_den
+                    >= F.greatest("n_a", "n_b") * threshold_num
+                )
+            )
+            .select("doc_a", "doc_b", "n_a", "n_b")
+            .distinct()
+        )
+        ta = ex.select(F.col("doc_id").alias("doc_a"), "shingle")
+        tb = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
+        common = (
+            cand.join(ta, "doc_a")
+            .join(tb, ["doc_b", "shingle"])
+            .groupBy("doc_a", "doc_b", "n_a", "n_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+        )
+        union_size = F.col("n_a") + F.col("n_b") - F.col("n_common")
+        pairs = (
+            common.filter(F.col("n_common") * threshold_den >= union_size * threshold_num)
+            .withColumn("jaccard", F.col("n_common") / union_size)
+            .select("doc_a", "doc_b", "n_common", "jaccard")
+        )
+        return pairs, sizes
+
+    return _jaccard_over_copies(df, rep_pairs)
 
 
 def containment_prefix_pairs(
@@ -468,97 +503,79 @@ def containment_prefix_pairs(
     exact asymmetric recall; at 100 TB cap df on the PROBE side only
     via a higher threshold, never the index side.
     """
-    groups, reps = _collapse_exact(df, "doc_id")
-    # eager checkpoint, not cache(): broadcast consumers race a lazy
-    # cache and recompute the shingle pass (see _collapse_exact, r13)
-    sh = shingled(reps).transform(checkpoint_stage)
-    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
-    ex = _exploded(sh, "doc_id")
-    sdf = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-    worder = Window.partitionBy("doc_id").orderBy(
-        F.col("sdf").asc(), F.col("shingle").asc()
-    )
-    ranked = (
-        ex.join(sdf, "shingle")
-        .withColumn("pos", F.row_number().over(worder))
-        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-    )
-    ceil_tn = F.floor(
-        (F.col("n_sh") * threshold_num + threshold_den - 1) / threshold_den
-    )
-    prefix = ranked.filter(F.col("pos") <= F.col("n_sh") - ceil_tn + 1)
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"),
-        "shingle",
-        F.col("n_sh").alias("n_a"),
-        ceil_tn.alias("min_common"),
-    )
-    b = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
-    b_sizes = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    cand = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .select("doc_a", "doc_b", "n_a", "min_common")
-        .distinct()
-        .join(b_sizes, "doc_b")
-        .filter(F.col("n_b") >= F.col("min_common"))
-        .select("doc_a", "doc_b", "n_a")
-    )
-    # Verification on the shingle ARRAYS (r13, guide §2.3 — shuffle
-    # keys, not postings): the former exploded-postings verify join
-    # shuffled Σ n_a rows per candidate through two exchanges and a
-    # groupBy; array_intersect computes the same distinct-intersection
-    # count in codegen with ONE row per candidate pair (the
-    # minhash-verify shape). Arrays are distinct by construction, so
-    # n_common is identical.
-    # r14 (guide §2.5 byte-undercount, profiled): the verify otherwise
-    # rides the candidate distinct's AQE-coalesced reduce stage (6
-    # tasks, ~6 s of array_intersect CPU at sf0.1 — byte-light rows,
-    # CPU-dense work). One explicit hash repartition of the SURVIVING
-    # candidates (24-byte rows, post-distinct and post-size-filter, so
-    # no map-side partials are displaced) pins the verify at cluster
-    # width for the price of a trivially small exchange.
-    cand = cand.repartition(
-        sh.sparkSession.sparkContext.defaultParallelism, "doc_a", "doc_b"
-    )
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    common = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .select(
+    def rep_pairs(reps: DataFrame):
+        sh, sizes, ex = _rep_shingles(reps)
+        prefix, ceil_tn = _rarest_prefix(ex, threshold_num, threshold_den)
+        a = prefix.select(
+            F.col("doc_id").alias("doc_a"),
+            "shingle",
+            F.col("n_sh").alias("n_a"),
+            ceil_tn.alias("min_common"),
+        )
+        b = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
+        b_sizes = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+        cand = (
+            a.join(b, "shingle")
+            .filter(F.col("doc_a") != F.col("doc_b"))
+            .select("doc_a", "doc_b", "n_a", "min_common")
+            .distinct()
+            .join(b_sizes, "doc_b")
+            .filter(F.col("n_b") >= F.col("min_common"))
+            .select("doc_a", "doc_b", "n_a")
+        )
+        # Verification on the shingle ARRAYS (r13, guide §2.3 — shuffle
+        # keys, not postings): the former exploded-postings verify join
+        # shuffled Σ n_a rows per candidate through two exchanges and a
+        # groupBy; array_intersect computes the same distinct-intersection
+        # count in codegen with ONE row per candidate pair (the
+        # minhash-verify shape). Arrays are distinct by construction, so
+        # n_common is identical.
+        # r14 (guide §2.5 byte-undercount, profiled): the verify otherwise
+        # rides the candidate distinct's AQE-coalesced reduce stage (6
+        # tasks, ~6 s of array_intersect CPU at sf0.1 — byte-light rows,
+        # CPU-dense work). One explicit hash repartition of the SURVIVING
+        # candidates (24-byte rows, post-distinct and post-size-filter, so
+        # no map-side partials are displaced) pins the verify at cluster
+        # width for the price of a trivially small exchange.
+        cand = cand.repartition(
+            sh.sparkSession.sparkContext.defaultParallelism, "doc_a", "doc_b"
+        )
+        sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+        sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+        common = (
+            cand.join(sh_a, "doc_a")
+            .join(sh_b, "doc_b")
+            .select(
+                "doc_a",
+                "doc_b",
+                "n_a",
+                F.size(F.array_intersect("sh_a", "sh_b")).alias("n_common"),
+            )
+        )
+        pairs = common.filter(
+            F.col("n_common") * threshold_den >= F.col("n_a") * threshold_num
+        ).select(
             "doc_a",
             "doc_b",
+            "n_common",
             "n_a",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_common"),
+            (F.col("n_common") / F.col("n_a")).alias("containment"),
         )
-    )
-    rep_pairs = common.filter(
-        F.col("n_common") * threshold_den >= F.col("n_a") * threshold_num
-    ).select(
-        "doc_a",
-        "doc_b",
-        "n_common",
-        "n_a",
-        (F.col("n_common") / F.col("n_a")).alias("containment"),
-    )
+        return pairs, sizes
+
     # identity groups relate both ways (containment is directed and
-    # identical contents contain each other), so both helpers run in
-    # their direction-preserving mode
-    within = _within_pairs(
-        groups,
+    # identical contents contain each other), so the fan-out preserves
+    # direction
+    return _pairs_over_copies(
+        df,
+        rep_pairs,
         {
             "n_common": F.col("n_sh"),
             "n_a": F.col("n_sh"),
             "containment": F.lit(1.0),
         },
-        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_sh"),
         directed=True,
     )
-    fan = _fanout_cross(
-        rep_pairs, groups, ["n_common", "n_a", "containment"], directed=True
-    )
-    return within.unionByName(fan)
 
 
 #: Shingle size and window length of the winnowing fingerprints.
@@ -573,8 +590,6 @@ def winnowed(df: DataFrame) -> DataFrame:
     array is staged through its own projection (see gram_array — the
     single-expression form re-evaluates the shingle-hash tree per
     window position, measured 17x slower)."""
-    from ..functions.text import md5_hash64, tokens
-
     toks = ensure_parallelism(df).select("doc_id", tokens("text").alias("__toks"))
     grams = toks.select("doc_id", gram_array("__toks", WINNOW_K).alias("__grams"))
     hashes = grams.select(
@@ -619,26 +634,28 @@ def winnowing_match_pairs(
     (doc_a, doc_b) count agg, identity groups re-expanded at full
     overlap. The brute-force oracle equality doubles as proof the cap
     dropped nothing on the corpus under test."""
-    groups, reps = _collapse_exact(df, "doc_id")
-    # eager: fps feeds sizes + buckets + verify (broadcast race, r13)
-    fps = winnowed(reps).transform(checkpoint_stage)
-    sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
-    buckets = capped_buckets(fps, ["fp"], "doc_id", MAX_BUCKET_SIZE)
-    rep_pairs = (
-        buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
-        .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    def rep_pairs(reps: DataFrame):
+        # eager: fps feeds sizes + buckets + verify (broadcast race, r13)
+        fps = winnowed(reps).transform(checkpoint_stage)
+        sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
+        buckets = capped_buckets(fps, ["fp"], "doc_id", MAX_BUCKET_SIZE)
+        pairs = (
+            buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
+            .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+            .filter(F.col("n_shared") >= min_shared)
+        )
+        return pairs, sizes
+
     # identity pairs share ALL their fingerprints — but the threshold
     # still applies: a degenerate doc with a single fingerprint (short/
     # empty text) must not pair below min_shared, matching the oracle
-    within = _within_pairs(
-        groups,
+    return _pairs_over_copies(
+        df,
+        rep_pairs,
         {"n_shared": F.col("n_fp").cast("long")},
-        per_rep=sizes.select(F.col("doc_id").alias("rep"), "n_fp"),
-    ).filter(F.col("n_shared") >= min_shared)
-    return within.unionByName(_fanout_cross(rep_pairs, groups, ["n_shared"]))
+        keep=F.col("n_shared") >= min_shared,
+    )
 
 
 def fuzzy_edit_verify_pairs(
@@ -672,49 +689,48 @@ def fuzzy_edit_verify_pairs(
     identity groups re-expanded at distance 0. The verify prefix
     never rides the bucket shuffle — it joins back on doc id after
     pair fan-in."""
-    groups, reps = _collapse_exact(df, "doc_id")
-    from ..functions.text import norm_text
+    def rep_pairs(reps: DataFrame):
+        staged = (
+            reps.select("doc_id", norm_text("text").alias("__norm"))
+            .select(
+                F.col("doc_id"),
+                md5_hash64(
+                    F.array_join(
+                        F.slice(F.split(F.col("__norm"), " "), 1, prefix_tokens),
+                        " ",
+                    )
+                ).alias("bh"),
+                F.substring("__norm", 1, verify_chars).alias("pfx"),
+            )
+            # eager: feeds buckets + both pfx verify joins (broadcast
+            # race with a lazy cache, r13 — see _collapse_exact)
+            .transform(checkpoint_stage)
+        )
+        buckets = capped_buckets(
+            staged.select("doc_id", "bh"), ["bh"], "doc_id", MAX_BUCKET_SIZE
+        )
+        pfx = staged.select("doc_id", "pfx")
+        pairs = (
+            buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
+            .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+            .join(
+                pfx.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pa")),
+                "doc_a",
+            )
+            .join(
+                pfx.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pb")),
+                "doc_b",
+            )
+            .select(
+                "doc_a",
+                "doc_b",
+                F.levenshtein("pa", "pb", max_dist).cast("long").alias("edit_dist"),
+            )
+            .filter(F.col("edit_dist") >= 0)
+        )
+        return pairs, None
 
-    staged = (
-        reps.select("doc_id", norm_text("text").alias("__norm"))
-        .select(
-            F.col("doc_id"),
-            md5_hash64(
-                F.array_join(
-                    F.slice(F.split(F.col("__norm"), " "), 1, prefix_tokens),
-                    " ",
-                )
-            ).alias("bh"),
-            F.substring("__norm", 1, verify_chars).alias("pfx"),
-        )
-        # eager: feeds buckets + both pfx verify joins (broadcast
-        # race with a lazy cache, r13 — see _collapse_exact)
-        .transform(checkpoint_stage)
-    )
-    buckets = capped_buckets(
-        staged.select("doc_id", "bh"), ["bh"], "doc_id", MAX_BUCKET_SIZE
-    )
-    pfx = staged.select("doc_id", "pfx")
-    rep_pairs = (
-        buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .join(
-            pfx.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pa")),
-            "doc_a",
-        )
-        .join(
-            pfx.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.levenshtein("pa", "pb", max_dist).cast("long").alias("edit_dist"),
-        )
-        .filter(F.col("edit_dist") >= 0)
-    )
-    within = _within_pairs(groups, {"edit_dist": F.lit(0).cast("long")})
-    return within.unionByName(_fanout_cross(rep_pairs, groups, ["edit_dist"]))
+    return _pairs_over_copies(df, rep_pairs, {"edit_dist": F.lit(0).cast("long")})
 
 
 #: Gram size of ngram_overlap_decontaminate, and the contaminated
@@ -742,12 +758,10 @@ def ngram_overlap_decontaminate(
     count. Docs shorter than k tokens contribute their whole token
     string as one gram, so short eval questions still decontaminate.
     """
-    from ..functions.text import md5_hash64, tokens as tok_arr
-
     def per_gram(df: DataFrame) -> DataFrame:
         # stage the token array so the gram lambda reads a materialized
         # attribute instead of re-tokenizing per position (gram_array)
-        staged = df.select("doc_id", tok_arr("text").alias("__toks"))
+        staged = df.select("doc_id", tokens("text").alias("__toks"))
         w = F.col("__toks")
         grams = F.when(
             F.size(w) >= DECONTAM_K,
@@ -850,18 +864,17 @@ def _melted_signatures(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame
 
 
 def _minhash_rep_pairs(
-    df: DataFrame,
+    reps: DataFrame,
     threshold: float,
     num_hashes: int = MINHASH_NUM_HASHES,
     max_bucket_size: int = MINHASH_MAX_BUCKET_SIZE,
 ):
-    """Collapse → LSH → exact-verify at the REPRESENTATIVE level:
-    (groups, shingled reps, verified rep pairs). The shared core of
+    """LSH → exact-verify over the exact-copy representatives:
+    (verified rep pairs, per-rep shingle counts). The shared core of
     minhash_lsh_pairs (which fans pairs back out to members) and
     dedup_clusters (which must NOT fan out — connected components over
     rep pairs plus the rep→member map give the same partition without
     ever materializing the copies²-sized member-pair relation)."""
-    groups, reps = _collapse_exact(df, "doc_id")
     # Eager localCheckpoint for the same reason as _collapse_exact's
     # groups (r13): sh feeds the sh_a/sh_b verify joins, whose
     # broadcast builds race a lazy cache concurrently and each re-run
@@ -918,7 +931,7 @@ def _minhash_rep_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
-    return groups, sh, rep_pairs
+    return rep_pairs, sh.select("doc_id", F.size("shingles").alias("n_sh"))
 
 
 def minhash_lsh_pairs(
@@ -956,22 +969,14 @@ def minhash_lsh_pairs(
     signal; recall for real near-dups is preserved by the other K-1
     slots.
     """
-    groups, sh, rep_pairs = _minhash_rep_pairs(
-        df, threshold, num_hashes, max_bucket_size=max_bucket_size
-    )
-
-    # Expand distinct-content pairs back to document pairs: identity
+    # Distinct-content pairs expand back to document pairs: identity
     # groups at jaccard 1.0, representative pairs fanned to members —
     # pure join arithmetic, nothing re-touches text or shingles.
-    within = _within_pairs(
-        groups,
-        {"n_common": F.col("n_sh"), "jaccard": F.lit(1.0)},
-        per_rep=sh.select(
-            F.col("doc_id").alias("rep"), F.size("shingles").alias("n_sh")
+    return _jaccard_over_copies(
+        df,
+        lambda reps: _minhash_rep_pairs(
+            reps, threshold, num_hashes, max_bucket_size=max_bucket_size
         ),
-    )
-    return within.unionByName(
-        _fanout_cross(rep_pairs, groups, ["n_common", "jaccard"])
     )
 
 
@@ -1171,20 +1176,21 @@ def simhash_pairs(
     an all-identical low-entropy bit range) and would blow the join
     output up quadratically; pairs within the hamming budget still
     surface through their other max_hamming chunks."""
-    groups, reps = _collapse_exact(df, "doc_id")
-    # cache: the chunk join consumes the sketch THREE times (bucket
-    # counts + both self-join sides); uncached, the explode+61-column
-    # agg pipeline re-runs for each — measured 2.3x slower at sf0.1.
-    # One (id, long) row per doc; eager localCheckpoint (r13) so the
-    # three consumers (several of them broadcast builds, which race a
-    # lazy cache) read one materialization.
-    sk = simhash_sketch(reps, "doc_id").transform(checkpoint_stage)
-    rep_pairs = hamming_chunk_pairs(
-        sk, "doc_id", "sk", bits=SIMHASH_BITS, max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
-    )
-    within = _within_pairs(groups, {"hamming": F.lit(0).cast("int")})
-    return within.unionByName(_fanout_cross(rep_pairs, groups, ["hamming"]))
+    def rep_pairs(reps: DataFrame):
+        # staged: the chunk join consumes the sketch THREE times (bucket
+        # counts + both self-join sides); unstaged, the explode+61-column
+        # agg pipeline re-runs for each — measured 2.3x slower at sf0.1.
+        # One (id, long) row per doc; eager localCheckpoint (r13) so the
+        # three consumers (several of them broadcast builds, which race a
+        # lazy cache) read one materialization.
+        sk = simhash_sketch(reps, "doc_id").transform(checkpoint_stage)
+        pairs = hamming_chunk_pairs(
+            sk, "doc_id", "sk", bits=SIMHASH_BITS, max_hamming=max_hamming,
+            max_bucket_size=max_bucket_size,
+        )
+        return pairs, None
+
+    return _pairs_over_copies(df, rep_pairs, {"hamming": F.lit(0).cast("int")})
 
 
 def hamming_chunk_pairs(
@@ -1486,7 +1492,8 @@ def dedup_clusters(df: DataFrame, threshold: float = 0.6) -> DataFrame:
     # Same candidate-generation params as minhash_lsh_pairs — both
     # take the MINHASH_* module defaults so the clusters query can
     # never drift from the pairs query on a retune.
-    groups, sh, rep_pairs = _minhash_rep_pairs(df, threshold)
+    groups, reps = _collapse_exact(df, "doc_id")
+    rep_pairs, _ = _minhash_rep_pairs(reps, threshold)
     # Eager localCheckpoint instead of cache(): the verified rep-pair
     # relation is tiny (near-dup pairs only), it is re-read by the CC
     # gate agg + every propagation round + the endpoints scan, and —
@@ -1494,10 +1501,6 @@ def dedup_clusters(df: DataFrame, threshold: float = 0.6) -> DataFrame:
     # by the ContextCleaner when the result goes out of scope, so a
     # dedup_clusters call leaks nothing into session-lifetime storage.
     pairs = rep_pairs.select("doc_a", "doc_b").transform(checkpoint_stage)
-    # sh's cache exists to share the shingle scan across the melted-
-    # signature pass and the two verify joins; the checkpoint above
-    # just materialized all of that, so release it now.
-    sh.unpersist()
     endpoints = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -1508,15 +1511,12 @@ def dedup_clusters(df: DataFrame, threshold: float = 0.6) -> DataFrame:
         F.col("rep"), F.explode("members").alias("doc_id")
     )
     # comp is referenced twice below (sizes + the final join); a narrow
-    # 2-long-column checkpoint shares the scan AND lets the groups
-    # cache (from _collapse_exact) be released here instead of leaking
-    # into session-lifetime executor storage.
+    # 2-long-column checkpoint shares the scan.
     comp = members.join(
         rep_comp.withColumnRenamed("doc_id", "rep"), "rep", "left_outer"
     ).select(
         "doc_id", F.coalesce("comp", F.col("rep")).alias("comp")
     ).transform(checkpoint_stage)
-    groups.unpersist()
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         comp.join(sizes, "comp")

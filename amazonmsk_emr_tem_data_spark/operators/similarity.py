@@ -659,25 +659,16 @@ def with_ivf_cell(
         + [T.StructField("ivf_cell", T.IntegerType(), False)]
     )
 
+    batch_rows = _batch_rows_kernel()
+
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            vals = pdf[vec_col].to_numpy()
-            ok = np.array(
-                [x is not None and len(x) == d for x in vals],
-                dtype=bool,
-            )
+            ok, X, na = batch_rows(pdf[vec_col].to_numpy(), d)
             cell = np.zeros(len(pdf), dtype="int32")
             if ok.any():
-                X = np.stack(
-                    [np.asarray(v) for v in vals[ok]]
-                ).astype(np.float64)
                 n = X.shape[0]
-                aa = np.zeros(n)
-                for i in range(d):
-                    aa = aa + X[:, i] * X[:, i]
-                na = np.sqrt(aa)
                 key = np.full((n, k), -np.inf)
                 for c, cv in enumerate(cents):
                     ab = np.zeros(n)
@@ -701,6 +692,55 @@ def with_ivf_cell(
     return embeddings.mapInPandas(assign, out_schema)
 
 
+def _batch_rows_kernel():
+    """``batch_rows(vals, d) -> (ok, X, norms)`` of one Arrow batch's
+    vector column: the mask of non-NULL length-``d`` vectors, those
+    rows as a float64 matrix, and their left-fold L2 norms (the
+    with_ivf_cell/pq_encode IEEE sequence); X and norms are None when
+    no row is ok. A nested function, so cloudpickle ships it by value
+    inside the executor closures that capture it (see
+    multimodal._pure_decoders)."""
+
+    def batch_rows(vals, d):
+        import numpy as np
+
+        ok = np.array([x is not None and len(x) == d for x in vals], dtype=bool)
+        if not ok.any():
+            return ok, None, None
+        X = np.stack([np.asarray(v) for v in vals[ok]]).astype(np.float64)
+        aa = np.zeros(X.shape[0])
+        for i in range(d):
+            aa = aa + X[:, i] * X[:, i]
+        return ok, X, np.sqrt(aa)
+
+    return batch_rows
+
+
+def _probed_cells(
+    queries: DataFrame, centroids: list[list[float]], vec_col: str
+) -> DataFrame:
+    """Each query's IVF_N_PROBE nearest coarse cells: ``queries`` ×
+    broadcast centroids, ranked per query_id by cosine desc, cell id
+    asc."""
+    cent_df = queries.sparkSession.createDataFrame(
+        [(c, [float(x) for x in vec]) for c, vec in enumerate(centroids)],
+        "ivf_cell int, centroid array<double>",
+    )
+    return (
+        queries.crossJoin(F.broadcast(cent_df))
+        .withColumn("c_sim", cosine(F.col(vec_col), F.col("centroid")))
+        .withColumn(
+            "c_rank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("c_sim").desc(), F.col("ivf_cell").asc()
+                )
+            ),
+        )
+        .filter(F.col("c_rank") <= IVF_N_PROBE)
+    )
+
+
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -713,23 +753,8 @@ def ivf_topk(
     centroids = kmeans_centroids(embeddings, k=IVF_N_CELLS)
     celled = with_ivf_cell(ensure_parallelism(embeddings), centroids)
 
-    cent_rows = [(c, [float(x) for x in vec]) for c, vec in enumerate(centroids)]
-    cent_df = embeddings.sparkSession.createDataFrame(
-        cent_rows, "ivf_cell int, centroid array<double>"
-    )
-    q_cells = (
-        queries.crossJoin(F.broadcast(cent_df))
-        .withColumn("c_sim", cosine(F.col("query_vec"), F.col("centroid")))
-        .withColumn(
-            "c_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("c_sim").desc(), F.col("ivf_cell").asc()
-                )
-            ),
-        )
-        .filter(F.col("c_rank") <= IVF_N_PROBE)
-        .select("query_id", "query_vec", "ivf_cell")
+    q_cells = _probed_cells(queries, centroids, "query_vec").select(
+        "query_id", "query_vec", "ivf_cell"
     )
     cand = celled.join(F.broadcast(q_cells), "ivf_cell")
     w = Window.partitionBy("query_id").orderBy(
@@ -871,25 +896,17 @@ def pq_encode(
         ]
     )
 
+    batch_rows = _batch_rows_kernel()
+
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            vals = pdf["_x"].to_numpy()
-            ok = np.array(
-                [x is not None and len(x) == d for x in vals],
-                dtype=bool,
-            )
+            ok, X, na = batch_rows(pdf["_x"].to_numpy(), d)
             codes = np.full((len(pdf), m), np.nan)
             if ok.any():
-                X = np.stack(
-                    [np.asarray(v) for v in vals[ok]]
-                ).astype(np.float64)
                 n = X.shape[0]
-                aa = np.zeros(n)
-                for i in range(d):
-                    aa = aa + X[:, i] * X[:, i]
-                V = X / np.maximum(np.sqrt(aa), 1e-12)[:, None]
+                V = X / np.maximum(na, 1e-12)[:, None]
                 rows = np.where(ok)[0]
                 for j in range(m):
                     off = j * dsub
@@ -1072,25 +1089,11 @@ def ivfpq_serve(
     celled = with_ivf_cell(embeddings, coarse)
     enc = pq_encode(celled, books, keep_cols=["ivf_cell"])
     luts = _lut_frame(embeddings, books, n_queries, "vec_id", "embedding")
-    cent_df = embeddings.sparkSession.createDataFrame(
-        [(c, [float(x) for x in vec]) for c, vec in enumerate(coarse)],
-        "ivf_cell int, centroid array<double>",
-    )
     q_vecs = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     probed = (
-        q_vecs.crossJoin(F.broadcast(cent_df))
-        .withColumn("c_sim", cosine(F.col("qvec"), F.col("centroid")))
-        .withColumn(
-            "c_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("c_sim").desc(), F.col("ivf_cell").asc()
-                )
-            ),
-        )
-        .filter(F.col("c_rank") <= IVF_N_PROBE)
+        _probed_cells(q_vecs, coarse, "qvec")
         .select("query_id", "ivf_cell")
         # model-state × model-state: without the hint Spark plans a
         # stats-blind SortMergeJoin for these two tiny local frames

@@ -8,7 +8,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.graph import N_ITERATIONS
+from ..operators.graph import DAMPING_PCT, N_ITERATIONS
 from ..operators.order_stats import lower_quantiles, running_sum
 from ..sources.files import (
     checkpoint_stage,
@@ -28,6 +28,7 @@ from ._northstar import (
     _HASH64_SQL,
     _NORM_SQL,
     _TOKS_SQL,
+    _crawl_snapshots,
     _dense_hourly_counts,
 )
 from ._graph_ann import (
@@ -39,7 +40,8 @@ from ._graph_ann import (
     _kmv_est_union_sql,
     _kmv_pairs_ctes,
     _kmv_pairs_staged,
-    _pagerank_iteration_sql,
+    _PAGERANK_ROUNDS_SQL,
+    _rank_flow_sql,
     _repeat_copurchase_edges,
 )
 
@@ -705,12 +707,15 @@ _KM_GRID_MEANS = ", ".join(
 )
 
 
-def _km_round_sql(r: int) -> str:
-    """One assignment (+ argmin window) and one grid-centroid update."""
+def _km_assign_sql(centroids: str, with_embedding: bool) -> str:
+    """Nearest-centroid assignment of every embedding against the
+    ``centroids`` CTE: (vec_id, [embedding,] cluster, d2) by the
+    argmin window (d² ascending, ties to the lowest cluster id)."""
+    emb = "embedding, " if with_embedding else ""
+    e_emb = "e.embedding, " if with_embedding else ""
     return f"""
-, a{r} AS MATERIALIZED (
-  SELECT vec_id, embedding, cluster, d2 FROM (
-    SELECT e.vec_id, e.embedding, c.cluster,
+  SELECT vec_id, {emb}cluster, d2 FROM (
+    SELECT e.vec_id, {e_emb}c.cluster,
            list_dot_product(CAST(e.embedding AS DOUBLE[]),
                             CAST(e.embedding AS DOUBLE[]))
              - 2.0 * list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
@@ -724,9 +729,15 @@ def _km_round_sql(r: int) -> str:
                                           c.cvec)
                                 + list_dot_product(c.cvec, c.cvec)) ASC,
                               c.cluster ASC) AS rn
-    FROM embeddings e CROSS JOIN c{r - 1} c
+    FROM embeddings e CROSS JOIN {centroids} c
   ) WHERE rn = 1
-), c{r} AS MATERIALIZED (
+)"""
+
+
+def _km_round_sql(r: int) -> str:
+    """One assignment (+ argmin window) and one grid-centroid update."""
+    return f"""
+, a{r} AS MATERIALIZED ({_km_assign_sql(f"c{r - 1}", True)}, c{r} AS MATERIALIZED (
   SELECT cluster, n_vecs, [{_KM_GRID_MEANS}] AS cvec FROM (
     SELECT cluster, COUNT(*) AS n_vecs, {_KM_GRID_SUMS}
     FROM a{r} GROUP BY cluster
@@ -745,25 +756,7 @@ WITH c0 AS MATERIALIZED (
   FROM (SELECT vec_id, embedding FROM embeddings
         ORDER BY vec_id ASC LIMIT {k})
 ){"".join(_km_round_sql(r) for r in range(1, rounds + 1))}
-, afinal AS (
-  SELECT vec_id, cluster, d2 FROM (
-    SELECT e.vec_id, c.cluster,
-           list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                            CAST(e.embedding AS DOUBLE[]))
-             - 2.0 * list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-             + list_dot_product(c.cvec, c.cvec) AS d2,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY (list_dot_product(
-                                          CAST(e.embedding AS DOUBLE[]),
-                                          CAST(e.embedding AS DOUBLE[]))
-                                - 2.0 * list_dot_product(
-                                          CAST(e.embedding AS DOUBLE[]),
-                                          c.cvec)
-                                + list_dot_product(c.cvec, c.cvec)) ASC,
-                              c.cluster ASC) AS rn
-    FROM embeddings e CROSS JOIN c{rounds} c
-  ) WHERE rn = 1
-)"""
+, afinal AS ({_km_assign_sql(f"c{rounds}", False)}"""
 
 
 _KMEANS_SQL = _kmeans_chain_sql(_KMEANS_ROUNDS, _KMEANS_K) + """
@@ -823,21 +816,8 @@ def table_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    old = digest(
-        docs.filter(F.col("doc_id") % 20 != 0), fingerprint("text")
-    )
-    new_docs = docs.filter(F.col("doc_id") % 19 != 0).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(F.col("text"), F.lit(" edited")),
-        )
-        .when(
-            F.col("doc_id") % 11 == 0,
-            F.concat(F.col("text"), F.lit("  ")),
-        )
-        .otherwise(F.col("text")),
-    )
+    old_docs, new_docs = _crawl_snapshots(docs)
+    old = digest(old_docs, fingerprint("text"))
     new = digest(new_docs, fingerprint("text"))
     o = old.select(
         "bucket",
@@ -2098,18 +2078,11 @@ WITH toks AS (
   SELECT src, dst, COUNT(*) AS w_edge FROM und GROUP BY 1, 2
 ), nodes AS (
   SELECT DISTINCT w AS page FROM toks2
-), nn AS (
-  SELECT COUNT(*) AS n FROM nodes
-), outd AS (
-  SELECT src, CAST(SUM(w_edge) AS BIGINT) AS w_out FROM edges GROUP BY src
-), r0 AS (
-  SELECT page, CAST(1000000000000 // nn.n AS BIGINT) AS rank_micro
-  FROM nodes CROSS JOIN nn
-){"".join(_pagerank_iteration_sql(k) for k in range(1, 6))}
+){_PAGERANK_ROUNDS_SQL}
 SELECT word, rank_micro,
        CAST(row_number() OVER (ORDER BY rank_micro DESC, word ASC)
             AS BIGINT) AS kw_rank
-FROM (SELECT page AS word, rank_micro FROM r5)
+FROM (SELECT page AS word, rank_micro FROM r{N_ITERATIONS})
 ORDER BY rank_micro DESC, word ASC
 LIMIT {_TEXTRANK_TOP_N}
 """
@@ -2570,24 +2543,14 @@ def ppr_part_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ppr_iteration_sql(k: int) -> str:
     """One unrolled PPR round: pagerank's shape with seed-conditional
     teleport and dangling redistribution."""
-    p = f"r{k - 1}"
-    return f"""
-, i{k} AS (
-  SELECT e.dst AS page,
-         CAST(SUM((r.rank_micro * e.w_edge) // o.w_out) AS BIGINT) AS inc
-  FROM {p} r JOIN edges e ON r.page = e.src JOIN outd o ON e.src = o.src
-  GROUP BY e.dst
-), d{k} AS (
-  SELECT CAST(COALESCE(SUM(r.rank_micro), 0) AS BIGINT) AS dang
-  FROM {p} r LEFT JOIN outd o ON r.page = o.src WHERE o.src IS NULL
-), r{k} AS MATERIALIZED (
+    return _rank_flow_sql(k) + f""", r{k} AS MATERIALIZED (
   SELECT n.page, n.is_seed,
          CAST(CASE WHEN n.is_seed
-                   THEN (15 * 1000000000000) // (100 * ns.n)
+                   THEN ({100 - DAMPING_PCT} * 1000000000000) // (100 * ns.n)
                    ELSE 0 END
-              + (85 * COALESCE(i.inc, 0)) // 100
+              + ({DAMPING_PCT} * COALESCE(i.inc, 0)) // 100
               + CASE WHEN n.is_seed
-                     THEN (85 * d.dang) // (100 * ns.n)
+                     THEN ({DAMPING_PCT} * d.dang) // (100 * ns.n)
                      ELSE 0 END AS BIGINT) AS rank_micro
   FROM flagged n CROSS JOIN ns CROSS JOIN d{k} d
   LEFT JOIN i{k} i ON n.page = i.page
@@ -2678,16 +2641,10 @@ def event_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IMPUTATION_SQL = """
-WITH ev AS (
-  SELECT event_id, event_type, value FROM events
-  WHERE event_type IS NOT NULL
-), obs AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS v_cents,
-         CAST(round(value * 100) AS BIGINT) // 500 AS bkt
-  FROM ev WHERE value IS NOT NULL
-), hist AS (
+#: Per-event-type $5-bucket histogram of the observed value cents
+#: (hist) and its running and total counts (cum), over ``obs``: the
+#: first phase of the oracles' exact lower-quantile cut.
+_VALUE_CUM_CTES = """hist AS (
   SELECT event_type, bkt, CAST(COUNT(*) AS BIGINT) AS bn
   FROM obs GROUP BY 1, 2
 ), cum AS (
@@ -2697,7 +2654,21 @@ WITH ev AS (
            AS BIGINT) AS cumn,
          CAST(SUM(bn) OVER (PARTITION BY event_type) AS BIGINT) AS totn
   FROM hist
-), locator AS (
+)"""
+#: The non-NULL-type events (ev), their observed values (obs), and
+#: _VALUE_CUM_CTES over them.
+_EV_VALUE_CUM_CTES = """ev AS (
+  SELECT event_id, event_type, value FROM events
+  WHERE event_type IS NOT NULL
+), obs AS (
+  SELECT event_type, event_id,
+         CAST(round(value * 100) AS BIGINT) AS v_cents,
+         CAST(round(value * 100) AS BIGINT) // 500 AS bkt
+  FROM ev WHERE value IS NOT NULL
+), """ + _VALUE_CUM_CTES
+
+_IMPUTATION_SQL = f"""
+WITH {_EV_VALUE_CUM_CTES}, locator AS (
   SELECT event_type AS lt, MIN(bkt) AS mb,
          MIN_BY(cumn - bn, bkt) AS n_before, MIN(totn) AS totn
   FROM cum WHERE 2 * cumn >= totn GROUP BY 1
@@ -2966,13 +2937,16 @@ def event_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winsorize_cut_sql(num: int, den: int, tag: str) -> str:
+def _value_cut_sql(num: int, den: int, tag: str, out: str) -> str:
+    """The {tag}_loc and {tag} CTEs: per event type (lt), the exact
+    num/den lower quantile of ``obs`` v_cents cut from ``cum``, as the
+    aggregate ``out``."""
     return f"""{tag}_loc AS (
   SELECT event_type AS lt, MIN(bkt) AS mb,
          MIN_BY(cumn - bn, bkt) AS n_before, MIN(totn) AS totn
   FROM cum WHERE {den} * cumn >= {num} * totn GROUP BY 1
 ), {tag} AS (
-  SELECT lt, MIN(v_cents) AS {tag}_cents FROM (
+  SELECT lt, {out} FROM (
     SELECT o.event_type AS lt, o.v_cents,
            lo.n_before + CAST(COUNT(*) OVER (
                PARTITION BY o.event_type
@@ -2986,26 +2960,12 @@ def _winsorize_cut_sql(num: int, den: int, tag: str) -> str:
 )"""
 
 
+def _winsorize_cut_sql(num: int, den: int, tag: str) -> str:
+    return _value_cut_sql(num, den, tag, f"MIN(v_cents) AS {tag}_cents")
+
+
 _WINSORIZE_SQL = f"""
-WITH ev AS (
-  SELECT event_id, event_type, value FROM events
-  WHERE event_type IS NOT NULL
-), obs AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS v_cents,
-         CAST(round(value * 100) AS BIGINT) // 500 AS bkt
-  FROM ev WHERE value IS NOT NULL
-), hist AS (
-  SELECT event_type, bkt, CAST(COUNT(*) AS BIGINT) AS bn
-  FROM obs GROUP BY 1, 2
-), cum AS (
-  SELECT event_type, bkt, bn,
-         CAST(SUM(bn) OVER (PARTITION BY event_type ORDER BY bkt
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS BIGINT) AS cumn,
-         CAST(SUM(bn) OVER (PARTITION BY event_type) AS BIGINT) AS totn
-  FROM hist
-), {_winsorize_cut_sql(1, 20, "lo")}, {_winsorize_cut_sql(19, 20, "hi")},
+WITH {_EV_VALUE_CUM_CTES}, {_winsorize_cut_sql(1, 20, "lo")}, {_winsorize_cut_sql(19, 20, "hi")},
 cuts AS (
   SELECT lo.lt, lo.lo_cents, hi.hi_cents FROM lo JOIN hi USING (lt)
 )

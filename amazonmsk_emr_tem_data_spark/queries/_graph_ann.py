@@ -6,6 +6,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.graph import DAMPING_PCT, N_ITERATIONS
 from ..operators.similarity import (
     IVF_N_CELLS,
     IVF_N_PROBE,
@@ -46,6 +47,7 @@ from ._timeseries import (
 )
 from ._tpch_corpus import (
     _ASSIGN_SQL,
+    _IVF_SAMPLE_CTES,
     _SPAN_HASH_CTES,
     _UNIT_SQL,
     _kmeans_cte_chain,
@@ -151,52 +153,53 @@ def _pq_subspace_chain(j: int, dsub: int, ksub: int, iters: int) -> str:
     return "".join(parts)
 
 
-def _pq_adc_sql(
-    k: int = TOP_K,
-) -> str:
-    """DuckDB twin of operators/similarity.pq_adc_topk: m unrolled
-    per-subspace L2 k-means chains, corpus encoding, and the ADC
-    distance as an explicit left-associated m-term sum (the exact
-    order the Spark side adds its fold terms in)."""
-    dsub = _EMB_DIM // PQ_M
-    parts = [
-        f"""WITH n AS (
-  SELECT vec_id, {_UNIT_SQL.format(v='embedding')} AS v FROM embeddings
-), smp AS (
-  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
-)"""
-    ]
-    for j in range(1, PQ_M + 1):
-        parts.append(_pq_subspace_chain(j, dsub, PQ_KSUB, PQ_ITERS))
-    enc_joins = " ".join(
-        f"JOIN e{j} USING (vec_id)" for j in range(2, PQ_M + 1)
-    )
-    book_joins = " ".join(
-        f"JOIN p{j}c{PQ_ITERS} b{j} ON e{j}.code{j} = b{j}.cid"
-        for j in range(1, PQ_M + 1)
-    )
-    terms = " + ".join(
-        _PQ_DIST2_SQL.format(
-            n=dsub,
-            a=f"q.qv[{(j - 1) * dsub + 1}:{j * dsub}]",
-            b=f"b{j}.cvec",
-        )
-        for j in range(1, PQ_M + 1)
-    )
-    parts.append(
-        f""", qs AS (
-  SELECT vec_id AS query_id, v AS qv FROM n WHERE vec_id < {N_QUERIES}
-), cand AS (
-  SELECT q.query_id, e1.vec_id, {terms} AS adist
-  FROM qs q, e1 {enc_joins} {book_joins}
+_PQ_DSUB = _EMB_DIM // PQ_M
+#: The PQ_M per-subspace chains of the PQ oracles, and the codebook
+#: joins and the left-associated m-term ADC sum over their codes (the
+#: exact order the Spark side adds its fold terms in).
+_PQ_CHAINS_SQL = "".join(
+    _pq_subspace_chain(j, _PQ_DSUB, PQ_KSUB, PQ_ITERS) for j in range(1, PQ_M + 1)
 )
+_PQ_BOOK_JOINS_SQL = " ".join(
+    f"JOIN p{j}c{PQ_ITERS} b{j} ON e{j}.code{j} = b{j}.cid"
+    for j in range(1, PQ_M + 1)
+)
+_PQ_ADIST_SQL = " + ".join(
+    _PQ_DIST2_SQL.format(
+        n=_PQ_DSUB,
+        a=f"q.qv[{(j - 1) * _PQ_DSUB + 1}:{j * _PQ_DSUB}]",
+        b=f"b{j}.cvec",
+    )
+    for j in range(1, PQ_M + 1)
+)
+#: Per-query ADC top-{k} over the ``cand`` (query_id, vec_id, adist) CTE.
+_ADC_TOPK_SQL = """
 SELECT query_id, vec_id, adist, CAST(rank AS INT) AS rank FROM (
   SELECT cand.*, row_number() OVER (PARTITION BY query_id
            ORDER BY adist ASC, vec_id ASC) AS rank
   FROM cand) t
 WHERE rank <= {k}"""
+
+
+def _pq_adc_sql(
+    k: int = TOP_K,
+) -> str:
+    """DuckDB twin of operators/similarity.pq_adc_topk: m unrolled
+    per-subspace L2 k-means chains, corpus encoding, and the ADC
+    distance sum."""
+    enc_joins = " ".join(
+        f"JOIN e{j} USING (vec_id)" for j in range(2, PQ_M + 1)
     )
-    return "".join(parts)
+    return f"""WITH n AS (
+  SELECT vec_id, {_UNIT_SQL.format(v='embedding')} AS v FROM embeddings
+), smp AS (
+  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
+){_PQ_CHAINS_SQL}, qs AS (
+  SELECT vec_id AS query_id, v AS qv FROM n WHERE vec_id < {N_QUERIES}
+), cand AS (
+  SELECT q.query_id, e1.vec_id, {_PQ_ADIST_SQL} AS adist
+  FROM qs q, e1 {enc_joins} {_PQ_BOOK_JOINS_SQL}
+){_ADC_TOPK_SQL.format(k=k)}"""
 
 
 _PQ_ADC_SQL = _pq_adc_sql()
@@ -222,37 +225,12 @@ def _ivfpq_sql() -> str:
     coarse chain (_kmeans_cte_chain, shared with ivf_topk/semdedup)
     composed with the m per-subspace L2 PQ chains, cell probing, and
     LUT-exact ADC ranking over probed cells only."""
-    dsub = _EMB_DIM // PQ_M
-    parts = [
-        f"""WITH n AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-         {_UNIT_SQL.format(v='embedding')} AS v
-  FROM embeddings
-), smp AS (
-  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
-)""",
-        _kmeans_cte_chain("smp", IVF_N_CELLS, KMEANS_ITERS, _EMB_DIM),
-        f""", af AS ({_ASSIGN_SQL.format(fit_src='n', src=f'c{KMEANS_ITERS}')})""",
-    ]
-    for j in range(1, PQ_M + 1):
-        parts.append(_pq_subspace_chain(j, dsub, PQ_KSUB, PQ_ITERS))
     enc_joins = " ".join(
         f"JOIN e{j} ON e{j}.vec_id = e1.vec_id" for j in range(2, PQ_M + 1)
     )
-    book_joins = " ".join(
-        f"JOIN p{j}c{PQ_ITERS} b{j} ON e{j}.code{j} = b{j}.cid"
-        for j in range(1, PQ_M + 1)
-    )
-    terms = " + ".join(
-        _PQ_DIST2_SQL.format(
-            n=dsub,
-            a=f"q.qv[{(j - 1) * dsub + 1}:{j * dsub}]",
-            b=f"b{j}.cvec",
-        )
-        for j in range(1, PQ_M + 1)
-    )
-    parts.append(
-        f""", qs AS (
+    chain = _kmeans_cte_chain("smp", IVF_N_CELLS, KMEANS_ITERS, _EMB_DIM)
+    assign = _ASSIGN_SQL.format(fit_src="n", src=f"c{KMEANS_ITERS}")
+    return f"""{_IVF_SAMPLE_CTES}{chain}, af AS ({assign}){_PQ_CHAINS_SQL}, qs AS (
   SELECT vec_id AS query_id, raw AS qraw, v AS qv FROM n
   WHERE vec_id < {N_QUERIES}
 ), qc AS (
@@ -264,21 +242,14 @@ def _ivfpq_sql() -> str:
     FROM qs q, c{KMEANS_ITERS} c) t
   WHERE rn <= {IVF_N_PROBE}
 ), cand AS (
-  SELECT q.query_id, e1.vec_id, {terms} AS adist
+  SELECT q.query_id, e1.vec_id, {_PQ_ADIST_SQL} AS adist
   FROM qs q
   JOIN qc ON qc.query_id = q.query_id
   JOIN af ON af.cid = qc.cid
   JOIN e1 ON e1.vec_id = af.vec_id
   {enc_joins}
-  {book_joins}
-)
-SELECT query_id, vec_id, adist, CAST(rank AS INT) AS rank FROM (
-  SELECT cand.*, row_number() OVER (PARTITION BY query_id
-           ORDER BY adist ASC, vec_id ASC) AS rank
-  FROM cand) t
-WHERE rank <= {TOP_K}"""
-    )
-    return "".join(parts)
+  {_PQ_BOOK_JOINS_SQL}
+){_ADC_TOPK_SQL.format(k=TOP_K)}"""
 
 
 _IVFPQ_SQL = _ivfpq_sql()
@@ -726,7 +697,10 @@ def page_graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAGE_CLUSTERING_SQL = """
+#: The page-transition CTEs of the page-graph oracles: each user's
+#: pages (``props.k``) in event order (seq, ps) and their (src, dst)
+#: successions (tr).
+_PAGE_TRANSITION_CTES = """
 WITH seq AS (
   SELECT user_id, ts, event_id,
          TRY_CAST(CASE WHEN props IS NOT NULL AND json_valid(props)
@@ -739,7 +713,9 @@ WITH seq AS (
   SELECT page AS src,
          lead(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
   FROM ps
-), ue AS (
+)"""
+
+_PAGE_CLUSTERING_SQL = _PAGE_TRANSITION_CTES + """, ue AS (
   SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
   FROM tr WHERE dst IS NOT NULL AND dst <> src
 ), deg AS (
@@ -1027,9 +1003,10 @@ def page_rank_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_iteration_sql(k: int) -> str:
-    """One unrolled PageRank round (exact integer twin of
-    operators/graph.pagerank)."""
+def _rank_flow_sql(k: int) -> str:
+    """The inflow (i{k}) and dangling-mass (d{k}) CTEs of rank round k
+    over r{k-1}, ``edges`` and ``outd``: the part of an unrolled round
+    the PageRank and personalized-PageRank oracles share."""
     p = f"r{k - 1}"
     return f"""
 , i{k} AS (
@@ -1040,45 +1017,43 @@ def _pagerank_iteration_sql(k: int) -> str:
 ), d{k} AS (
   SELECT CAST(COALESCE(SUM(r.rank_micro), 0) AS BIGINT) AS dang
   FROM {p} r LEFT JOIN outd o ON r.page = o.src WHERE o.src IS NULL
-), r{k} AS (
+)"""
+
+
+def _pagerank_iteration_sql(k: int) -> str:
+    """One unrolled PageRank round (exact integer twin of
+    operators/graph.pagerank)."""
+    return _rank_flow_sql(k) + f""", r{k} AS (
   SELECT n.page,
-         CAST((15 * 1000000000000) // (100 * nn.n)
-              + (85 * COALESCE(i.inc, 0)) // 100
-              + (85 * d.dang) // (100 * nn.n) AS BIGINT) AS rank_micro
+         CAST(({100 - DAMPING_PCT} * 1000000000000) // (100 * nn.n)
+              + ({DAMPING_PCT} * COALESCE(i.inc, 0)) // 100
+              + ({DAMPING_PCT} * d.dang) // (100 * nn.n) AS BIGINT) AS rank_micro
   FROM nodes n CROSS JOIN nn CROSS JOIN d{k} d LEFT JOIN i{k} i ON n.page = i.page
 )"""
 
 
-_PAGERANK_SQL = f"""
-WITH seq AS (
-  SELECT user_id, ts, event_id,
-         TRY_CAST(CASE WHEN props IS NOT NULL AND json_valid(props)
-                       THEN json_extract_string(props, '$.k') END
-                  AS BIGINT) AS page
-  FROM events
-), ps AS (
-  SELECT * FROM seq WHERE page IS NOT NULL
-), tr AS (
-  SELECT page AS src,
-         lead(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ps
-), edges AS (
-  SELECT src, dst, COUNT(*) AS w_edge FROM tr
-  WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2
-), nodes AS (
-  SELECT DISTINCT page FROM ps
-), nn AS (
+#: Unrolled PageRank over the ``edges`` (src, dst, w_edge) and
+#: ``nodes`` (page) CTEs: uniform start r0, then N_ITERATIONS rounds.
+_PAGERANK_ROUNDS_SQL = """, nn AS (
   SELECT COUNT(*) AS n FROM nodes
 ), outd AS (
   SELECT src, CAST(SUM(w_edge) AS BIGINT) AS w_out FROM edges GROUP BY src
 ), r0 AS (
   SELECT page, CAST(1000000000000 // nn.n AS BIGINT) AS rank_micro
   FROM nodes CROSS JOIN nn
-){"".join(_pagerank_iteration_sql(k) for k in range(1, 6))}
+)""" + "".join(_pagerank_iteration_sql(k) for k in range(1, N_ITERATIONS + 1))
+
+
+_PAGERANK_SQL = f"""{_PAGE_TRANSITION_CTES}, edges AS (
+  SELECT src, dst, COUNT(*) AS w_edge FROM tr
+  WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2
+), nodes AS (
+  SELECT DISTINCT page FROM ps
+){_PAGERANK_ROUNDS_SQL}
 SELECT r.page, r.rank_micro,
        CAST(r.rank_micro AS DOUBLE) / 1000000000000.0 AS rank,
        CAST(COALESCE(o.w_out, 0) AS BIGINT) AS n_out
-FROM r5 r LEFT JOIN outd o ON r.page = o.src
+FROM r{N_ITERATIONS} r LEFT JOIN outd o ON r.page = o.src
 """
 
 
@@ -1431,7 +1406,33 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     code is the sort key of a repartitionByRange write; here it feeds
     the stats audit the writer would report.
     """
-    from ..operators.layout import morton16, scale_to_16bit
+    from ..operators.layout import morton16
+
+    return _curve_shard_stats(spark, sf_dir, morton16)
+
+
+def hilbert_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hilbert-curve layout audit (r7): the same 64-shard min/max
+    statistics report as `zorder_layout_stats`, with the Morton code
+    swapped for the Hilbert index (operators/hilbert.py — the 4-state
+    FSM form, pure BIGINT lookups in codegen). Identical shard count,
+    scaling, and range predicates, so the two queries' pruning columns
+    are directly comparable: the Hilbert curve's adjacent-cell walk
+    has no Morton seam-jumps, so per-shard bounding boxes are tighter
+    and at least as many shards prune (measured in
+    tests/test_layout.py)."""
+    from ..operators.hilbert import hilbert16
+
+    return _curve_shard_stats(spark, sf_dir, hilbert16)
+
+
+def _curve_shard_stats(spark: SparkSession, sf_dir: str, curve) -> DataFrame:
+    """The shard summary of both layout audits: lineitem's (l_partkey,
+    l_suppkey) scaled onto 16 bits, coded by ``curve`` (a 2×16-bit →
+    32-bit space-filling-curve Column function), sharded on the code's
+    top 6 bits, and summarized per shard with min/max stats and the
+    pruning verdict for each key's fixed range."""
+    from ..operators.layout import scale_to_16bit
 
     li = load_table(spark, sf_dir, "lineitem")
     # Bounded driver traffic: the two key maxima (one row).
@@ -1441,7 +1442,7 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor over a correctly-rounded IEEE double division of identical
     # integers — bit-identical across engines (same argument the oracle
     # relies on; no libm involved).
-    z = morton16(
+    code = curve(
         scale_to_16bit(F.col("l_partkey"), mx["mp"]),
         scale_to_16bit(F.col("l_suppkey"), mx["ms"]),
     )
@@ -1449,7 +1450,7 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     slo, shi = _ZORDER_SUPP_RANGE
     return (
         li.select(
-            F.shiftright(z, 26).alias("shard_id"),
+            F.shiftright(code, 26).alias("shard_id"),
             "l_partkey",
             "l_suppkey",
         )
@@ -1478,29 +1479,29 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zorder_sql() -> str:
-    from ..operators.layout import morton16_sql
+#: The 16-bit scaled keys of the layout oracles (scale_to_16bit's SQL).
+_SCALED_PART_SQL = (
+    "CAST(floor(CAST(l_partkey AS BIGINT) * 65536"
+    " / (mp + 1.0)) AS BIGINT)"
+)
+_SCALED_SUPP_SQL = (
+    "CAST(floor(CAST(l_suppkey AS BIGINT) * 65536"
+    " / (ms + 1.0)) AS BIGINT)"
+)
 
+
+def _curve_shard_sql(coded_ctes: str, coded: str) -> str:
+    """DuckDB twin of _curve_shard_stats: the key maxima (mx), the
+    curve's ``coded_ctes``, and the per-shard summary over the
+    (shard_id, l_partkey, l_suppkey) relation ``coded``."""
     plo, phi = _ZORDER_PART_RANGE
     slo, shi = _ZORDER_SUPP_RANGE
-    scaled_p = (
-        "CAST(floor(CAST(l_partkey AS BIGINT) * 65536"
-        " / (mp + 1.0)) AS BIGINT)"
-    )
-    scaled_s = (
-        "CAST(floor(CAST(l_suppkey AS BIGINT) * 65536"
-        " / (ms + 1.0)) AS BIGINT)"
-    )
     return f"""
 WITH mx AS (
   SELECT CAST(MAX(l_partkey) AS BIGINT) AS mp,
          CAST(MAX(l_suppkey) AS BIGINT) AS ms
   FROM lineitem
-), coded AS (
-  SELECT ({morton16_sql(scaled_p, scaled_s)} >> 26) AS shard_id,
-         l_partkey, l_suppkey
-  FROM lineitem CROSS JOIN mx
-)
+){coded_ctes}
 SELECT shard_id,
        COUNT(*) AS n_rows,
        CAST(MIN(l_partkey) AS BIGINT) AS min_part,
@@ -1511,9 +1512,34 @@ SELECT shard_id,
          AS scans_for_part_range,
        (MAX(l_suppkey) >= {slo} AND MIN(l_suppkey) <= {shi})
          AS scans_for_supp_range
-FROM coded
+FROM {coded}
 GROUP BY shard_id
 """
+
+
+def _zorder_sql() -> str:
+    from ..operators.layout import morton16_sql
+
+    morton = morton16_sql(_SCALED_PART_SQL, _SCALED_SUPP_SQL)
+    return _curve_shard_sql(
+        f""", coded AS (
+  SELECT ({morton} >> 26) AS shard_id,
+         l_partkey, l_suppkey
+  FROM lineitem CROSS JOIN mx
+)""",
+        "coded",
+    )
+
+
+def _hilbert_sql() -> str:
+    from ..operators.hilbert import hilbert16_sql
+
+    steps = hilbert16_sql(_SCALED_PART_SQL, _SCALED_SUPP_SQL, "lineitem CROSS JOIN mx")
+    return _curve_shard_sql(
+        ",\n" + steps,
+        """(SELECT (hd >> 26) AS shard_id, l_partkey, l_suppkey
+      FROM hilbert_coded)""",
+    )
 
 
 #: Hashed-feature space size for DSIR importance weights. Small enough
@@ -3035,102 +3061,6 @@ SELECT decile,
        MAX(spend_cents) AS max_spend_cents,
        MIN(spend_cents) AS min_spend_cents
 FROM tiled GROUP BY 1
-"""
-
-
-def hilbert_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve layout audit (r7): the same 64-shard min/max
-    statistics report as `zorder_layout_stats`, with the Morton code
-    swapped for the Hilbert index (operators/hilbert.py — the 4-state
-    FSM form, pure BIGINT lookups in codegen). Identical shard count,
-    scaling, and range predicates, so the two queries' pruning columns
-    are directly comparable: the Hilbert curve's adjacent-cell walk
-    has no Morton seam-jumps, so per-shard bounding boxes are tighter
-    and at least as many shards prune (measured in
-    tests/test_layout.py).
-
-    Scale identical to the Z-order audit: one scan, one 64-group
-    map-side-combined aggregate, a 1-row bounded driver collect for
-    the key maxima; at 100 TB the code is a repartitionByRange sort
-    key."""
-    from ..operators.hilbert import hilbert16
-    from ..operators.layout import scale_to_16bit
-
-    li = load_table(spark, sf_dir, "lineitem")
-    mx = li.agg(
-        F.max("l_partkey").alias("mp"), F.max("l_suppkey").alias("ms")
-    ).collect()[0]
-    hd = hilbert16(
-        scale_to_16bit(F.col("l_partkey"), mx["mp"]),
-        scale_to_16bit(F.col("l_suppkey"), mx["ms"]),
-    )
-    plo, phi = _ZORDER_PART_RANGE
-    slo, shi = _ZORDER_SUPP_RANGE
-    return (
-        li.select(
-            F.shiftright(hd, 26).alias("shard_id"),
-            "l_partkey",
-            "l_suppkey",
-        )
-        .groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("l_partkey").cast("long").alias("min_part"),
-            F.max("l_partkey").cast("long").alias("max_part"),
-            F.min("l_suppkey").cast("long").alias("min_supp"),
-            F.max("l_suppkey").cast("long").alias("max_supp"),
-        )
-        .select(
-            "shard_id",
-            "n_rows",
-            "min_part",
-            "max_part",
-            "min_supp",
-            "max_supp",
-            (
-                (F.col("max_part") >= plo) & (F.col("min_part") <= phi)
-            ).alias("scans_for_part_range"),
-            (
-                (F.col("max_supp") >= slo) & (F.col("min_supp") <= shi)
-            ).alias("scans_for_supp_range"),
-        )
-    )
-
-
-def _hilbert_sql() -> str:
-    from ..operators.hilbert import hilbert16_sql
-
-    plo, phi = _ZORDER_PART_RANGE
-    slo, shi = _ZORDER_SUPP_RANGE
-    scaled_p = (
-        "CAST(floor(CAST(l_partkey AS BIGINT) * 65536"
-        " / (mp + 1.0)) AS BIGINT)"
-    )
-    scaled_s = (
-        "CAST(floor(CAST(l_suppkey AS BIGINT) * 65536"
-        " / (ms + 1.0)) AS BIGINT)"
-    )
-    steps = hilbert16_sql(scaled_p, scaled_s, "lineitem CROSS JOIN mx")
-    return f"""
-WITH mx AS (
-  SELECT CAST(MAX(l_partkey) AS BIGINT) AS mp,
-         CAST(MAX(l_suppkey) AS BIGINT) AS ms
-  FROM lineitem
-),
-{steps}
-SELECT shard_id,
-       COUNT(*) AS n_rows,
-       CAST(MIN(l_partkey) AS BIGINT) AS min_part,
-       CAST(MAX(l_partkey) AS BIGINT) AS max_part,
-       CAST(MIN(l_suppkey) AS BIGINT) AS min_supp,
-       CAST(MAX(l_suppkey) AS BIGINT) AS max_supp,
-       (MAX(l_partkey) >= {plo} AND MIN(l_partkey) <= {phi})
-         AS scans_for_part_range,
-       (MAX(l_suppkey) >= {slo} AND MIN(l_suppkey) <= {shi})
-         AS scans_for_supp_range
-FROM (SELECT (hd >> 26) AS shard_id, l_partkey, l_suppkey
-      FROM hilbert_coded)
-GROUP BY shard_id
 """
 
 

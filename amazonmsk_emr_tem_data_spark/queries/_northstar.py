@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import CMS_DEPTH, CMS_WIDTH
 from ..sources.files import (
     checkpoint_stage,
     ensure_parallelism,
@@ -180,12 +181,11 @@ SELECT doc_id, fingerprint FROM (
 ) WHERE rn = 1
 """
 
-#: Brute-force word-3-gram Jaccard pairs ≥ 0.6 — the oracle for BOTH
-#: the exact similarity join AND the MinHash-LSH path (which must reach
-#: full recall at this threshold: planted dups sit at j ≥ 0.97 and the
-#: K=16 single-row-band miss probability there is (1-j)^16 ≈ 1e-24).
-_JACCARD_PAIRS_SQL = f"""
-WITH toks AS (
+#: Distinct normalized word-3-gram shingles per document (toks, sh) —
+#: the shingling of every shingle-based oracle — then the shingle-set
+#: sizes (sizes) and the shared-shingle counts of each doc_a < doc_b
+#: pair (common).
+_SHINGLE_CTES = f"""toks AS (
   SELECT doc_id, {_TOKS_SQL} AS w FROM documents
 ), sh AS (
   SELECT doc_id, unnest(list_distinct(
@@ -194,21 +194,37 @@ WITH toks AS (
                                     i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
                 ELSE [array_to_string(w, ' ')] END)) AS shingle
   FROM toks
-), sizes AS (
+)"""
+_SHINGLE_SIZE_CTES = _SHINGLE_CTES + """, sizes AS (
   SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), common AS (
+)"""
+_SHINGLE_COMMON_CTES = _SHINGLE_SIZE_CTES + """, common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+
+def _jaccard_pairs_sql(cut: str) -> str:
+    """Brute-force word-3-gram Jaccard pairs (doc_a < doc_b) whose
+    ``cut`` over the shared count c and the set sizes holds."""
+    return f"""
+WITH {_SHINGLE_COMMON_CTES}
 SELECT doc_a, doc_b,
        CAST(c AS BIGINT) AS n_common,
        c / (sa.n + sb.n - c) AS jaccard
 FROM common
 JOIN sizes sa ON doc_a = sa.doc_id
 JOIN sizes sb ON doc_b = sb.doc_id
-WHERE c / (sa.n + sb.n - c) >= 0.6
+WHERE {cut}
 """
+
+
+#: Brute-force word-3-gram Jaccard pairs ≥ 0.6 — the oracle for BOTH
+#: the exact similarity join AND the MinHash-LSH path (which must reach
+#: full recall at this threshold: planted dups sit at j ≥ 0.97 and the
+#: K=16 single-row-band miss probability there is (1-j)^16 ≈ 1e-24).
+_JACCARD_PAIRS_SQL = _jaccard_pairs_sql("c / (sa.n + sb.n - c) >= 0.6")
 
 
 def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,18 +266,7 @@ def cross_corpus_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CROSS_CORPUS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN list_transform(generate_series(1, len(w)-2),
-                                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                ELSE [array_to_string(w, ' ')] END)) AS shingle
-  FROM toks
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), common AS (
+WITH {_SHINGLE_SIZE_CTES}, common AS (
   SELECT n.doc_id AS doc_id, c.doc_id AS corpus_doc_id, COUNT(*) AS cnt
   FROM sh n JOIN sh c ON n.shingle = c.shingle
   WHERE n.doc_id % 2 = 1 AND c.doc_id % 2 = 0
@@ -326,18 +331,7 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: never all-pairs): same distinct word-3-gram shingles, integer
 #: threshold compare, c/n_a division as the only float op.
 _CONTAINMENT_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN list_transform(generate_series(1, len(w)-2),
-                                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                ELSE [array_to_string(w, ' ')] END)) AS shingle
-  FROM toks
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), common AS (
+WITH {_SHINGLE_SIZE_CTES}, common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
   GROUP BY 1, 2
@@ -355,31 +349,7 @@ WHERE 5 * c >= 4 * sa.n
 #: Brute-force word-3-gram Jaccard ≥ 7/10 twin — integer threshold
 #: compare (10·c ≥ 7·union), so no float boundary can disagree with the
 #: Spark side's identical integer filter.
-_PREFIX_JACCARD_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN list_transform(generate_series(1, len(w)-2),
-                                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                ELSE [array_to_string(w, ' ')] END)) AS shingle
-  FROM toks
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       CAST(c AS BIGINT) AS n_common,
-       c / (sa.n + sb.n - c) AS jaccard
-FROM common
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE 10 * c >= 7 * (sa.n + sb.n - c)
-"""
+_PREFIX_JACCARD_SQL = _jaccard_pairs_sql("10 * c >= 7 * (sa.n + sb.n - c)")
 
 
 def simhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,17 +373,8 @@ _SIMHASH_SK_TERMS = " + ".join(
     f"(CASE WHEN b{b}*2 >= n THEN CAST({2**b} AS BIGINT) ELSE 0 END)"
     for b in range(60)
 )
-_SIMHASH_PAIRS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN list_transform(generate_series(1, len(w)-2),
-                                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                ELSE [array_to_string(w, ' ')] END)) AS shingle
-  FROM toks
-), hashed AS (
+#: The per-document sketch (sk) over the shingle CTEs.
+_SIMHASH_SK_CTES = _SHINGLE_CTES + f""", hashed AS (
   SELECT doc_id,
          CAST(('0x' || substring(md5(shingle), 1, 15)) AS BIGINT) AS h
   FROM sh
@@ -423,7 +384,9 @@ WITH toks AS (
   FROM hashed GROUP BY doc_id
 ), sk AS (
   SELECT doc_id, {_SIMHASH_SK_TERMS} AS sk FROM bits
-)
+)"""
+_SIMHASH_PAIRS_SQL = f"""
+WITH {_SIMHASH_SK_CTES}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.sk, b.sk)) AS INT) AS hamming
 FROM sk a JOIN sk b ON a.doc_id < b.doc_id
@@ -474,26 +437,7 @@ def simhash_bit_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SIMHASH_BIT_BIAS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN list_transform(generate_series(1, len(w)-2),
-                                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                ELSE [array_to_string(w, ' ')] END)) AS shingle
-  FROM toks
-), hashed AS (
-  SELECT doc_id,
-         CAST(('0x' || substring(md5(shingle), 1, 15)) AS BIGINT) AS h
-  FROM sh
-), bits AS (
-  SELECT doc_id, COUNT(*) AS n,
-         {_SIMHASH_BIT_SUMS}
-  FROM hashed GROUP BY doc_id
-), sk AS (
-  SELECT doc_id, {_SIMHASH_SK_TERMS} AS sk FROM bits
-), per_bit AS (
+WITH {_SIMHASH_SK_CTES}, per_bit AS (
   SELECT g.b AS bit,
          CAST(SUM((sk >> g.b) & 1) AS BIGINT) AS n_set,
          CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -683,6 +627,26 @@ FROM g JOIN t ON g.source = t.source
 """
 
 
+def _crawl_snapshots(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(old, new) crawl snapshots derived from ``docs``: the old one
+    lacks doc_id % 20 == 0, the new one lacks doc_id % 19 == 0, appends
+    " edited" to every doc_id % 7 == 0 and trailing whitespace to
+    every other doc_id % 11 == 0."""
+    new = docs.filter(F.col("doc_id") % 19 != 0).withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(F.col("text"), F.lit(" edited")),
+        )
+        .when(
+            F.col("doc_id") % 11 == 0,
+            F.concat(F.col("text"), F.lit("  ")),
+        )
+        .otherwise(F.col("text")),
+    )
+    return docs.filter(F.col("doc_id") % 20 != 0), new
+
+
 def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-to-snapshot corpus diff (r7): per-document
     added/removed/changed/unchanged status between two crawl
@@ -708,23 +672,14 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id would remove the shuffle entirely)."""
     from ..functions.text import fingerprint
 
-    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    old = docs.filter(F.col("doc_id") % 20 != 0).select(
+    old, new = _crawl_snapshots(
+        ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    )
+    old = old.select(
         "doc_id", fingerprint("text").alias("old_fp"), F.lit(True).alias("in_old")
     )
-    new = (
-        docs.filter(F.col("doc_id") % 19 != 0)
-        .withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" edited"))
-            )
-            .when(F.col("doc_id") % 11 == 0, F.concat(F.col("text"), F.lit("  ")))
-            .otherwise(F.col("text")),
-        )
-        .select(
-            "doc_id", fingerprint("text").alias("new_fp"), F.lit(True).alias("in_new")
-        )
+    new = new.select(
+        "doc_id", fingerprint("text").alias("new_fp"), F.lit(True).alias("in_new")
     )
     return old.join(new, "doc_id", "full_outer").select(
         "doc_id",
@@ -1345,13 +1300,20 @@ def token_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Row r's bucket of token tok, and the sketch rows (cms_probe_cells'
+#: SQL).
+_CMS_BUCKET_SQL = (
+    _HASH64_SQL.format(x="CAST(r AS VARCHAR) || '|' || tok") + f" % {CMS_WIDTH}"
+)
+_CMS_ROWS_SQL = f"generate_series(0, {CMS_DEPTH - 1}) AS gs(r)"
+
 _CMS_SQL = f"""
 WITH toks AS (
   SELECT unnest({_TOKS_SQL}) AS tok FROM documents
 ), cell AS (
-  SELECT r, {_HASH64_SQL.format(x="CAST(r AS VARCHAR) || '|' || tok")} % 1024 AS b,
+  SELECT r, {_CMS_BUCKET_SQL} AS b,
          CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM toks, generate_series(0, 3) AS gs(r)
+  FROM toks, {_CMS_ROWS_SQL}
   GROUP BY 1, 2
 ), exact AS (
   SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_n FROM toks GROUP BY tok
@@ -1361,8 +1323,8 @@ WITH toks AS (
   FROM exact QUALIFY rnk <= 20
 ), probes AS (
   SELECT tok, exact_n, rnk, r,
-         {_HASH64_SQL.format(x="CAST(r AS VARCHAR) || '|' || tok")} % 1024 AS b
-  FROM top, generate_series(0, 3) AS gs(r)
+         {_CMS_BUCKET_SQL} AS b
+  FROM top, {_CMS_ROWS_SQL}
 )
 SELECT tok, rnk, exact_n, MIN(cnt) AS cms_est,
        MIN(cnt) - exact_n AS overestimate
@@ -1374,17 +1336,14 @@ GROUP BY tok, rnk, exact_n
 #: Batch twin of the STREAMING sketch: the drained complete-mode state
 #: must equal these batch cell sums bit-for-bit (micro-batching
 #: invariance of an algebraic aggregate).
-_STREAM_CMS_SQL = """
+_STREAM_CMS_SQL = f"""
 WITH toks AS (
-  SELECT unnest({toks}) AS tok FROM documents
+  SELECT unnest({_TOKS_SQL}) AS tok FROM documents
 )
-SELECT r, {h} % 1024 AS b, CAST(COUNT(*) AS BIGINT) AS cnt
-FROM toks, generate_series(0, 3) AS gs(r)
+SELECT r, {_CMS_BUCKET_SQL} AS b, CAST(COUNT(*) AS BIGINT) AS cnt
+FROM toks, {_CMS_ROWS_SQL}
 GROUP BY 1, 2
-""".format(
-    toks=_TOKS_SQL,
-    h=_HASH64_SQL.format(x="CAST(r AS VARCHAR) || '|' || tok"),
-)
+"""
 
 
 def doc_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1531,16 +1490,22 @@ LIMIT 10
 """
 
 
+#: Query vectors (vec_id < _KNN_QUERIES) and neighbors per query of
+#: embedding_knn_join_q and its SQL twin.
+_KNN_QUERIES = 5
+_KNN_K = 5
+
+
 def embedding_knn_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact k-NN join: 5 query vectors (vec_id < 5, broadcast) × full
     corpus, top-5 each."""
     from ..operators.similarity import knn_join
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
+    queries_df = emb.filter(F.col("vec_id") < _KNN_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return knn_join(emb, queries_df, k=5)
+    return knn_join(emb, queries_df, k=_KNN_K)
 
 
 _EMB_KNN_SQL = f"""
@@ -1551,16 +1516,22 @@ SELECT query_id, vec_id, cos_sim, CAST(rank AS INT) AS rank FROM (
            PARTITION BY q.vec_id
            ORDER BY {_COS_SQL.format(a='a.embedding', b='q.embedding')} DESC,
                     a.vec_id ASC) AS rank
-  FROM embeddings a, (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q
-) WHERE rank <= 5
+  FROM embeddings a, (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_KNN_QUERIES}) q
+) WHERE rank <= {_KNN_K}
 """
+
+
+#: Cosine threshold of the embedding near-dup pairs and their SQL twin.
+_EMB_NEAR_DUP_COS = 0.45
 
 
 def embedding_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-space near-dup pairs (cosine ≥ 0.45)."""
     from ..operators.similarity import cosine_near_dup_pairs
 
-    return cosine_near_dup_pairs(load_table(spark, sf_dir, "embeddings"), 0.45)
+    return cosine_near_dup_pairs(
+        load_table(spark, sf_dir, "embeddings"), _EMB_NEAR_DUP_COS
+    )
 
 
 _EMB_NEAR_DUP_SQL = f"""
@@ -1568,7 +1539,7 @@ SELECT vec_a, vec_b, cos_sim FROM (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          {_COS_SQL.format(a='a.embedding', b='b.embedding')} AS cos_sim
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-) WHERE cos_sim >= 0.45
+) WHERE cos_sim >= {_EMB_NEAR_DUP_COS}
 """
 
 
@@ -1583,7 +1554,7 @@ def lsh_ann_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_ann_join
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_ann_join(emb, dim=64, threshold=0.45, n_tables=24)
+    return lsh_ann_join(emb, dim=64, threshold=_EMB_NEAR_DUP_COS, n_tables=24)
 
 
 def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,9 +27,11 @@ from . import (
 from ._core import _EMB_DIM, QueryFn
 from ._northstar import (
     _COS_SQL,
+    _EMB_NEAR_DUP_COS,
     _EMB_NEAR_DUP_SQL,
     _JACCARD_PAIRS_SQL,
-    _TOKS_SQL,
+    _SHINGLE_COMMON_CTES,
+    _crawl_snapshots,
 )
 from ._curation import (
     _curation_stage_ctes,
@@ -924,19 +926,7 @@ def incremental_curation_delta(
     ≤ ~15% of the corpus each) reduced to (id, source) first; the
     report is a |sources|·3 combine."""
     docs = load_table(spark, sf_dir, "documents")
-    old_docs = docs.filter(F.col("doc_id") % 20 != 0)
-    new_docs = docs.filter(F.col("doc_id") % 19 != 0).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(F.col("text"), F.lit(" edited")),
-        )
-        .when(
-            F.col("doc_id") % 11 == 0,
-            F.concat(F.col("text"), F.lit("  ")),
-        )
-        .otherwise(F.col("text")),
-    )
+    old_docs, new_docs = _crawl_snapshots(docs)
     *_, clean_old = _curation_stages(spark, sf_dir, docs=old_docs)
     *_, clean_new = _curation_stages(spark, sf_dir, docs=new_docs)
     o = clean_old.select(
@@ -1013,18 +1003,7 @@ def part_harmonic_centrality(
 
 def _harmonic_sql() -> str:
     parts = [
-        """WITH lp AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-), pairs AS (
-  SELECT a.l_partkey AS a, b.l_partkey AS b, COUNT(*) AS w
-  FROM lp a JOIN lp b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-), ue AS MATERIALIZED (
-  SELECT a, b FROM pairs WHERE w >= 2
-), bidir AS MATERIALIZED (
-  SELECT a, b FROM ue UNION ALL SELECT b AS a, a AS b FROM ue
-), f0 AS MATERIALIZED (
+        f"""WITH {_BFS_EDGES_CTES}, f0 AS MATERIALIZED (
   SELECT DISTINCT n AS src, n AS node
   FROM (SELECT a AS n FROM bidir)
   WHERE n % 53 = 0 AND n < 1696
@@ -1256,7 +1235,7 @@ def dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_b").alias("id_b"),
         F.lit(True).alias("text_dup"),
     )
-    ep = cosine_near_dup_pairs(emb, 0.45).select(
+    ep = cosine_near_dup_pairs(emb, _EMB_NEAR_DUP_COS).select(
         F.col("vec_a").alias("id_a"),
         F.col("vec_b").alias("id_b"),
         F.lit(True).alias("emb_dup"),
@@ -1664,22 +1643,7 @@ def _bbit_sql() -> str:
         for i in range(_BBIT_K)
     )
     return f"""
-WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN list_transform(generate_series(1, len(w)-2),
-                                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                ELSE [array_to_string(w, ' ')] END)) AS shingle
-  FROM toks
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
+WITH {_SHINGLE_COMMON_CTES}, pairs AS (
   SELECT doc_a, doc_b, c / (sa.n + sb.n - c) AS jaccard
   FROM common
   JOIN sizes sa ON doc_a = sa.doc_id

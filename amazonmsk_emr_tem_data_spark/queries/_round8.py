@@ -15,7 +15,7 @@ from ..sources.files import (
     load_table,
 )
 from ._core import QueryFn, _cents, _dsum, _ranked_topk
-from ._analytics import _type_value_quantiles
+from ._analytics import _VALUE_CUM_CTES, _type_value_quantiles, _value_cut_sql
 from ._northstar import (
     _COS_SQL,
     _EMB_KNN_SQL,
@@ -132,6 +132,25 @@ GROUP BY 1, 2
 """
 
 
+#: The star schema's FK→PK relationships: (label, child, fk, parent, pk).
+_RI_RELATIONSHIPS = [
+    ("orders.o_custkey -> customer", "orders", "o_custkey",
+     "customer", "c_custkey"),
+    ("lineitem.l_orderkey -> orders", "lineitem", "l_orderkey",
+     "orders", "o_orderkey"),
+    ("lineitem.l_partkey -> part", "lineitem", "l_partkey",
+     "part", "p_partkey"),
+    ("lineitem.l_suppkey -> supplier", "lineitem", "l_suppkey",
+     "supplier", "s_suppkey"),
+    ("customer.c_nationkey -> nation", "customer", "c_nationkey",
+     "nation", "n_nationkey"),
+    ("supplier.s_nationkey -> nation", "supplier", "s_nationkey",
+     "nation", "n_nationkey"),
+    ("nation.n_regionkey -> region", "nation", "n_regionkey",
+     "region", "r_regionkey"),
+]
+
+
 def referential_integrity_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -155,24 +174,8 @@ def referential_integrity_audit(
             "part", "orders", "lineitem",
         ]
     }
-    rels = [
-        ("orders.o_custkey -> customer", "orders", "o_custkey",
-         "customer", "c_custkey"),
-        ("lineitem.l_orderkey -> orders", "lineitem", "l_orderkey",
-         "orders", "o_orderkey"),
-        ("lineitem.l_partkey -> part", "lineitem", "l_partkey",
-         "part", "p_partkey"),
-        ("lineitem.l_suppkey -> supplier", "lineitem", "l_suppkey",
-         "supplier", "s_suppkey"),
-        ("customer.c_nationkey -> nation", "customer", "c_nationkey",
-         "nation", "n_nationkey"),
-        ("supplier.s_nationkey -> nation", "supplier", "s_nationkey",
-         "nation", "n_nationkey"),
-        ("nation.n_regionkey -> region", "nation", "n_regionkey",
-         "region", "r_regionkey"),
-    ]
     parts = []
-    for label, child, fk, parent, pk in rels:
+    for label, child, fk, parent, pk in _RI_RELATIONSHIPS:
         joined = t[child].select(F.col(fk).alias("fk")).join(
             t[parent].select(F.col(pk).alias("pk")).distinct(),
             F.col("fk") == F.col("pk"),
@@ -217,25 +220,7 @@ FROM {child} c LEFT JOIN (SELECT DISTINCT {pk} FROM {parent}) p
 """
 
 
-_RI_AUDIT_SQL = " UNION ALL ".join(
-    _ri_rel_sql(*r)
-    for r in [
-        ("orders.o_custkey -> customer", "orders", "o_custkey",
-         "customer", "c_custkey"),
-        ("lineitem.l_orderkey -> orders", "lineitem", "l_orderkey",
-         "orders", "o_orderkey"),
-        ("lineitem.l_partkey -> part", "lineitem", "l_partkey",
-         "part", "p_partkey"),
-        ("lineitem.l_suppkey -> supplier", "lineitem", "l_suppkey",
-         "supplier", "s_suppkey"),
-        ("customer.c_nationkey -> nation", "customer", "c_nationkey",
-         "nation", "n_nationkey"),
-        ("supplier.s_nationkey -> nation", "supplier", "s_nationkey",
-         "nation", "n_nationkey"),
-        ("nation.n_regionkey -> region", "nation", "n_regionkey",
-         "region", "r_regionkey"),
-    ]
-)
+_RI_AUDIT_SQL = " UNION ALL ".join(_ri_rel_sql(*r) for r in _RI_RELATIONSHIPS)
 
 
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1112,14 +1097,38 @@ def stream_click_purchase_left_join(
     )
 
 
-_STREAM_LEFT_JOIN_SQL = """
-WITH c AS (
+#: The click (c) and purchase (p) streams of the stream-stream join
+#: oracles.
+_STREAM_CP_CTES = """c AS (
   SELECT user_id, event_id AS click_id, ts AS click_ts
   FROM events WHERE event_type = 'click'
 ), p AS (
   SELECT user_id AS p_user, event_id AS purchase_id, ts AS purchase_ts
   FROM events WHERE event_type = 'purchase'
-), wm AS (
+)"""
+#: The purchases that attribute to click c (same user, within the hour
+#: after it), as the body of an EXISTS.
+_CLICK_PURCHASES_SQL = """  SELECT 1 FROM p WHERE p.p_user = c.user_id
+    AND p.purchase_ts > c.click_ts
+    AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
+)"""
+#: The unmatched-click arm: clicks no purchase attributes to, emitted
+#: only once the watermark (wm) proves none can still arrive.
+_EXPIRED_CLICKS_SQL = f"""FROM c CROSS JOIN wm
+WHERE NOT EXISTS (
+{_CLICK_PURCHASES_SQL} AND c.click_ts + INTERVAL 1 HOUR < wm.w
+"""
+#: The matched (click, purchase) pairs, followed by UNION ALL.
+_MATCHED_ARM_SQL = """
+SELECT c.user_id, c.click_id, c.click_ts, p.purchase_id, p.purchase_ts
+FROM c JOIN p
+  ON p.p_user = c.user_id
+ AND p.purchase_ts > c.click_ts
+ AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
+UNION ALL"""
+
+_STREAM_LEFT_JOIN_SQL = f"""
+WITH {_STREAM_CP_CTES}, wm AS (
   -- NULL-PROPAGATING min: if either input saw no data, Spark's global
   -- watermark never advances past epoch 0 and NO unmatched row emits;
   -- LEAST alone would skip the NULL and wrongly emit on a clicks-only
@@ -1128,21 +1137,9 @@ WITH c AS (
                 OR (SELECT MAX(purchase_ts) FROM p) IS NULL THEN NULL
               ELSE LEAST((SELECT MAX(click_ts) FROM c),
                          (SELECT MAX(purchase_ts) FROM p)) END AS w
-)
-SELECT c.user_id, c.click_id, c.click_ts, p.purchase_id, p.purchase_ts
-FROM c JOIN p
-  ON p.p_user = c.user_id
- AND p.purchase_ts > c.click_ts
- AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-UNION ALL
+){_MATCHED_ARM_SQL}
 SELECT c.user_id, c.click_id, c.click_ts, NULL, NULL
-FROM c CROSS JOIN wm
-WHERE NOT EXISTS (
-  SELECT 1 FROM p WHERE p.p_user = c.user_id
-    AND p.purchase_ts > c.click_ts
-    AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-) AND c.click_ts + INTERVAL 1 HOUR < wm.w
-"""
+{_EXPIRED_CLICKS_SQL}"""
 
 
 def stream_click_purchase_right_join(
@@ -1173,20 +1170,11 @@ def stream_click_purchase_semi_join(
     )
 
 
-_STREAM_SEMI_JOIN_SQL = """
-WITH c AS (
-  SELECT user_id, event_id AS click_id, ts AS click_ts
-  FROM events WHERE event_type = 'click'
-), p AS (
-  SELECT user_id AS p_user, event_id AS purchase_id, ts AS purchase_ts
-  FROM events WHERE event_type = 'purchase'
-)
+_STREAM_SEMI_JOIN_SQL = f"""
+WITH {_STREAM_CP_CTES}
 SELECT c.user_id, c.click_id, c.click_ts
 FROM c WHERE EXISTS (
-  SELECT 1 FROM p WHERE p.p_user = c.user_id
-    AND p.purchase_ts > c.click_ts
-    AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-)
+{_CLICK_PURCHASES_SQL}
 """
 
 
@@ -1194,13 +1182,7 @@ FROM c WHERE EXISTS (
 #: NULL-propagating min (r8 review finding: if either input saw no
 #: data, Spark's global watermark never advances and NO outer row
 #: emits; LEAST alone would skip the NULL and wrongly emit).
-_STREAM_WM_CTES = """c AS (
-  SELECT user_id, event_id AS click_id, ts AS click_ts
-  FROM events WHERE event_type = 'click'
-), p AS (
-  SELECT user_id AS p_user, event_id AS purchase_id, ts AS purchase_ts
-  FROM events WHERE event_type = 'purchase'
-), wm AS (
+_STREAM_WM_CTES = _STREAM_CP_CTES + """, wm AS (
   SELECT CASE WHEN (SELECT MAX(click_ts) FROM c) IS NULL
                 OR (SELECT MAX(purchase_ts) FROM p) IS NULL THEN NULL
               ELSE LEAST((SELECT MAX(click_ts) FROM c),
@@ -1209,13 +1191,7 @@ _STREAM_WM_CTES = """c AS (
 
 #: Matched pairs + the unmatched-purchase arm (emitted only past the
 #: watermark). Shared by the right- and full-outer oracles.
-_STREAM_RIGHT_ARMS_SQL = """
-SELECT c.user_id, c.click_id, c.click_ts, p.purchase_id, p.purchase_ts
-FROM c JOIN p
-  ON p.p_user = c.user_id
- AND p.purchase_ts > c.click_ts
- AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-UNION ALL
+_STREAM_RIGHT_ARMS_SQL = _MATCHED_ARM_SQL + """
 SELECT p.p_user, NULL, NULL, p.purchase_id, p.purchase_ts
 FROM p CROSS JOIN wm
 WHERE NOT EXISTS (
@@ -1251,13 +1227,7 @@ WITH {_STREAM_WM_CTES}
 {_STREAM_RIGHT_ARMS_SQL}
 UNION ALL
 SELECT c.user_id, c.click_id, c.click_ts, NULL, NULL
-FROM c CROSS JOIN wm
-WHERE NOT EXISTS (
-  SELECT 1 FROM p WHERE p.p_user = c.user_id
-    AND p.purchase_ts > c.click_ts
-    AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-) AND c.click_ts + INTERVAL 1 HOUR < wm.w
-"""
+{_EXPIRED_CLICKS_SQL}"""
 
 
 def stream_click_purchase_anti_join(
@@ -1280,13 +1250,7 @@ def stream_click_purchase_anti_join(
 _STREAM_ANTI_JOIN_SQL = f"""
 WITH {_STREAM_WM_CTES}
 SELECT c.user_id, c.click_id, c.click_ts
-FROM c CROSS JOIN wm
-WHERE NOT EXISTS (
-  SELECT 1 FROM p WHERE p.p_user = c.user_id
-    AND p.purchase_ts > c.click_ts
-    AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-) AND c.click_ts + INTERVAL 1 HOUR < wm.w
-"""
+{_EXPIRED_CLICKS_SQL}"""
 
 
 def dedup_graph_degree_histogram(
@@ -1433,23 +1397,9 @@ def event_type_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _type_pct_cut_sql(num: int, den: int, tag: str) -> str:
-    return f"""{tag}_loc AS (
-  SELECT event_type AS lt, MIN(bkt) AS mb,
-         MIN_BY(cumn - bn, bkt) AS n_before, MIN(totn) AS totn
-  FROM cum WHERE {den} * cumn >= {num} * totn GROUP BY 1
-), {tag} AS (
-  SELECT lt, CAST(MIN(v_cents) AS DOUBLE) / 100.0 AS {tag} FROM (
-    SELECT o.event_type AS lt, o.v_cents,
-           lo.n_before + CAST(COUNT(*) OVER (
-               PARTITION BY o.event_type
-               ORDER BY o.v_cents, o.event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS BIGINT) AS rank,
-           lo.totn
-    FROM obs o JOIN {tag}_loc lo
-      ON o.event_type = lo.lt AND o.bkt = lo.mb
-  ) WHERE {den} * rank >= {num} * totn GROUP BY 1
-)"""
+    return _value_cut_sql(
+        num, den, tag, f"CAST(MIN(v_cents) AS DOUBLE) / 100.0 AS {tag}"
+    )
 
 
 _TYPE_PERCENTILES_SQL = f"""
@@ -1458,17 +1408,7 @@ WITH obs AS (
          CAST(round(value * 100) AS BIGINT) AS v_cents,
          CAST(round(value * 100) AS BIGINT) // 500 AS bkt
   FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-), hist AS (
-  SELECT event_type, bkt, CAST(COUNT(*) AS BIGINT) AS bn
-  FROM obs GROUP BY 1, 2
-), cum AS (
-  SELECT event_type, bkt, bn,
-         CAST(SUM(bn) OVER (PARTITION BY event_type ORDER BY bkt
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS BIGINT) AS cumn,
-         CAST(SUM(bn) OVER (PARTITION BY event_type) AS BIGINT) AS totn
-  FROM hist
-), {_type_pct_cut_sql(1, 4, "p25")}, {_type_pct_cut_sql(1, 2, "p50")},
+), {_VALUE_CUM_CTES}, {_type_pct_cut_sql(1, 4, "p25")}, {_type_pct_cut_sql(1, 2, "p50")},
 {_type_pct_cut_sql(3, 4, "p75")}, {_type_pct_cut_sql(19, 20, "p95")}
 SELECT p25.lt AS event_type, p25.p25, p50.p50, p75.p75, p95.p95
 FROM p25 JOIN p50 USING (lt) JOIN p75 USING (lt) JOIN p95 USING (lt)

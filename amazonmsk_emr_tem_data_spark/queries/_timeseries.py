@@ -23,6 +23,7 @@ from ._core import (
 from ._northstar import (
     _COS_SQL,
     _HASH64_SQL,
+    _SHINGLE_COMMON_CTES,
     _TOKS_SQL,
 )
 
@@ -874,22 +875,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Exact-Jaccard pair CTEs (3-gram shingles, threshold 0.6) — the
 #: ground-truth near-dup pair relation. Shared by the CC chain below
 #: and the dedup-graph degree-histogram oracle.
-_JACCARD_PAIR_CTES = f"""toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS w FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           CASE WHEN len(w) >= 3
-                THEN list_transform(generate_series(1, len(w)-2),
-                                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                ELSE [array_to_string(w, ' ')] END)) AS shingle
-  FROM toks
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
+_JACCARD_PAIR_CTES = f"""{_SHINGLE_COMMON_CTES}, pairs AS (
   SELECT doc_a, doc_b
   FROM common
   JOIN sizes sa ON doc_a = sa.doc_id

@@ -1253,6 +1253,17 @@ FROM af f JOIN comp c USING (vec_id)"""
 _SEMDEDUP_SQL = _semdedup_sql()
 
 
+#: Raw and unit-normalized vectors (n) and the quantizer fit sample
+#: (smp) of the IVF oracles.
+_IVF_SAMPLE_CTES = f"""WITH n AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
+         {_UNIT_SQL.format(v='embedding')} AS v
+  FROM embeddings
+), smp AS (
+  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
+)"""
+
+
 def _ivf_topk_sql() -> str:
     """DuckDB twin of operators/similarity.ivf_topk as used by
     ivf_topk_q: quantizer fit on the first ``sample_n`` vectors by id
@@ -1263,13 +1274,7 @@ def _ivf_topk_sql() -> str:
     scale-invariant); the reported cos_sim uses the raw embeddings,
     exactly like the Spark side."""
     parts = [
-        f"""WITH n AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-         {_UNIT_SQL.format(v='embedding')} AS v
-  FROM embeddings
-), smp AS (
-  SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {SAMPLE_N}
-)""",
+        _IVF_SAMPLE_CTES,
         _kmeans_cte_chain("smp", IVF_N_CELLS, KMEANS_ITERS, _EMB_DIM),
     ]
     parts.append(

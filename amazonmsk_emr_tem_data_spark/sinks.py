@@ -1,4 +1,4 @@
-"""Sinks: console, CSV, parquet, Kafka (K1–K5).
+"""Sinks: console, CSV, parquet, ORC, Kafka (K1–K5).
 
 Fixes the reference's sink-chain bug: ``temReadFromTopic.py:98-102``
 chains ``.mode("overwrite")`` AFTER ``.csv(...)`` — ``csv()`` returns
@@ -10,6 +10,8 @@ terminal format call, always.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from .sources.kafka import _security_options
 
 
 def console_sink(df: DataFrame) -> None:
@@ -59,13 +61,11 @@ def kafka_sink_options(
     dict so tests can pin it against the reference's ``options_write``
     (temDataRead.py:60-75) without a broker. Bare security keys get the
     ``kafka.`` prefix the DataFrame writer requires."""
-    opts = {
+    return {
         "kafka.bootstrap.servers": bootstrap_servers,
         "topic": topic,
+        **_security_options(security),
     }
-    for k, v in (security or {}).items():
-        opts[k if k.startswith("kafka.") else f"kafka.{k}"] = v
-    return opts
 
 
 def kafka_stream_sink(
@@ -99,21 +99,3 @@ def kafka_stream_sink(
         .queryName(query_name)
         .start()
     )
-
-
-def kafka_batch_sink(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    security: dict[str, str] | None = None,
-) -> None:
-    """K1: whole-DataFrame Kafka produce (temDataRead.py:77-83).
-
-    ``df`` must already be in envelope form (string ``key`` + ``value``
-    columns — see functions/codec.to_kafka_envelope). One distributed
-    ``save()``; contrast with the reference's per-row loop (K2), which is
-    replaced by sources/replay.replay_stream + a streaming Kafka sink.
-    """
-    df.write.format("kafka").options(
-        **kafka_sink_options(bootstrap_servers, topic, security)
-    ).save()

@@ -1,16 +1,18 @@
-"""Kafka sources (S2 batch, S3 streaming).
+"""Kafka source options (S2 batch, S3 streaming).
 
 Re-expresses the reference's bounded and unbounded Kafka reads
 (``/root/reference/pyspark_scripts/temReadFromTopic.py:36-59`` and
-``03_temStreamEveryMin.py:41-64``) as option-builder functions. The
-reference hard-wires SASL_SSL + AWS_MSK_IAM auth inline; here security
-options are an opaque dict passed through, so the same code runs against
-a plaintext local broker, MSK-IAM, or any SASL mechanism.
+``03_temStreamEveryMin.py:41-64``) as option-builder functions: a read
+is ``spark.read.format("kafka").options(**kafka_batch_options(...))``
+(``spark.readStream`` with ``kafka_stream_options`` for the stream).
+The reference hard-wires SASL_SSL + AWS_MSK_IAM auth inline; here
+security options are an opaque dict passed through, so the same options
+run against a plaintext local broker, MSK-IAM, or any SASL mechanism.
 
-No broker exists in the test container: these builders are exercised by
-unit tests up to ``.load()`` plan construction only; the envelope codec
-(functions/codec.py) carries the actual semantics and is fully tested
-broker-free via round-trips.
+The builders are pure dicts, parity-tested against the reference's
+option sets. Reading needs a broker and the spark-sql-kafka package;
+the envelope codec (functions/codec.py) carries the read's semantics
+and is tested broker-free via round-trips.
 
 Scale notes:
 - ``minPartitions`` lets a 1000-executor cluster split topic partitions
@@ -20,8 +22,6 @@ Scale notes:
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def msk_iam_security(
@@ -86,27 +86,3 @@ def kafka_stream_options(
     if min_partitions:
         opts["minPartitions"] = str(min_partitions)
     return opts
-
-
-def kafka_batch_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    security: dict[str, str] | None = None,
-) -> DataFrame:
-    """S2: bounded full-topic read, earliest to latest
-    (temReadFromTopic.py:36-59)."""
-    opts = kafka_batch_options(bootstrap_servers, topic, security=security)
-    return spark.read.format("kafka").options(**opts).load()
-
-
-def kafka_stream_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    security: dict[str, str] | None = None,
-) -> DataFrame:
-    """S3: unbounded streaming read from earliest
-    (03_temStreamEveryMin.py:41-64)."""
-    opts = kafka_stream_options(bootstrap_servers, topic, security=security)
-    return spark.readStream.format("kafka").options(**opts).load()

@@ -23,9 +23,10 @@ Output-mode semantics worth knowing (encoded in the helpers):
   batch aggregation, which is what the oracle-parity queries use.
 
 Scale: the same pipeline definitions run unbounded on a Kafka source
-(sources/kafka.kafka_stream_source) with ``maxOffsetsPerTrigger``
-bounding batch size and a durable ``checkpointLocation`` giving
-exactly-once state recovery — the two knobs the reference left unset.
+(``spark.readStream`` with sources/kafka.kafka_stream_options) with
+``maxOffsetsPerTrigger`` bounding batch size and a durable
+``checkpointLocation`` giving exactly-once state recovery — the two
+knobs the reference left unset.
 """
 
 from __future__ import annotations

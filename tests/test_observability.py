@@ -192,15 +192,14 @@ def test_dedup_clusters_matches_pairs_params():
                 assert const in body, (fn.__name__, name)
     # dedup_clusters must not override any of them
     src = inspect.getsource(d.dedup_clusters)
-    assert "_minhash_rep_pairs(df, threshold)" in src
+    assert "_minhash_rep_pairs(reps, threshold)" in src
 
 
 def test_dedup_clusters_releases_caches(spark):
     """dedup_clusters must leave NOTHING in the session cache manager
     (r9 ADVICE: the shingle cache and the pairs cache leaked into
-    executor storage for the session lifetime). The rep-pair relation
-    is localCheckpoint'ed (ContextCleaner-scoped), the shingle cache
-    is unpersisted after materialization."""
+    executor storage for the session lifetime). The shingle sets and
+    the rep-pair relation are localCheckpoint'ed (ContextCleaner-scoped)."""
     from amazonmsk_emr_tem_data_spark.operators.dedup import dedup_clusters
 
     spark.catalog.clearCache()

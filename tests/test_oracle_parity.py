@@ -184,6 +184,34 @@ def test_query_and_operator_defaults_are_set_by_some_call():
     assert problems == []
 
 
+def test_package_repeats_few_verbatim_blocks():
+    """Few package lines sit in a block of 8 consecutive stripped lines
+    (at least 6 of them code: non-blank, not a ``#`` comment) that
+    occurs in two or more places: a repeated building block is
+    written once and shared. The allowance covers import headers and
+    the JPEG decoder's Huffman refill, inlined in its hot loop on
+    purpose."""
+    import pathlib
+    from collections import defaultdict
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "amazonmsk_emr_tem_data_spark"
+    width = 8
+    where = defaultdict(list)
+    for path in sorted(pkg.rglob("*.py")):
+        lines = [line.strip() for line in path.read_text().splitlines()]
+        for i in range(len(lines) - width + 1):
+            block = tuple(lines[i:i + width])
+            if sum(1 for line in block if line and not line.startswith("#")) >= 6:
+                where[block].append((path, i))
+    covered = {
+        (path, i + j)
+        for places in where.values() if len(places) > 1
+        for path, i in places
+        for j in range(width)
+    }
+    assert len(covered) <= 250
+
+
 def test_query_tables_partition_the_registry():
     """Each query is declared in exactly one domain module's QUERIES
     table, and REGISTRY is exactly their union."""
